@@ -3257,23 +3257,16 @@ def q_complex_search(spark, sf_dir):
             AggQuery(func="sum", field="value", group_by="event_type"),
         ],
     )
-    total = res.total.select(
-        F.lit("total").alias("part"),
-        F.lit("").alias("name"),
-        F.col("total").cast("double").alias("value"),
+    rows = [("total", "", float(res.total_count))]
+    rows += [("hist", None if b is None else str(b), float(c))
+             for b, c in res.histogram_rows]
+    rows += [("count", a["name"], a["value"]) for a in res.agg_buckets[0]]
+    rows += [("sum", a["name"], a["value"]) for a in res.agg_buckets[1]]
+    out = spark.createDataFrame(rows, "part string, name string, value double")
+    return out.withColumn(
+        "value",
+        F.when(F.col("part") == "sum", F.round("value", 3)).otherwise(F.col("value")),
     )
-    hist = res.histogram.select(
-        F.lit("hist").alias("part"),
-        F.col("bucket_ms").cast("string").alias("name"),
-        F.col("cnt").cast("double").alias("value"),
-    )
-    agg0 = res.aggs[0].select(
-        F.lit("count").alias("part"), F.col("name"), F.col("value")
-    )
-    agg1 = res.aggs[1].select(
-        F.lit("sum").alias("part"), F.col("name"), F.round("value", 3).alias("value")
-    )
-    return total.union(hist).union(agg0).union(agg1)
 
 
 def q_agg_notexists_bucket(spark, sf_dir):

@@ -25,12 +25,15 @@ Scale notes:
   merge tree of `seq/qpr.go:417-462` done by Spark; the bounded bucket set
   is finalized driver-side like the reference's proxy merge;
 - :meth:`SearchTable.complex_search` serves docs + total + histogram + N
-  aggregations from ONE cached filtered scan.
+  aggregations from one plan-cached construction: a docs top-k plus ONE
+  fused, branch-tagged aggregate job (nothing is persisted).
 """
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
 import threading
 from collections import OrderedDict
 from dataclasses import dataclass, field as dc_field
@@ -175,13 +178,94 @@ def _local_frame(spark, data, schema, prepared=None) -> DataFrame:
     return spark.createDataFrame(tbl, relaxed)
 
 
+def _parsed_num(tok: Column) -> Column:
+    """The token as a DOUBLE, non-NULL exactly for tokens the reference's
+    parseNum accepts (`frac/processor/aggregator.go:150-157`: ParseFloat
+    AND not NaN/Inf). A bare try_cast is LOOSER — it trims whitespace
+    (token ' 5' would contribute 5.0) and passes 'Infinity'/'nan'
+    spellings through as non-finite doubles that poison sum/min/max/avg
+    in the skip-unparsable default mode (r12 agg-fuzz class of bug; the
+    same Go-decimal guard the range matcher uses). 1e309-style overflows
+    pass the regex but cast to inf — rejected by the finite checks."""
+    raw = tok.try_cast("double")
+    ok = (
+        tok.rlike(_GO_FLOAT_JAVA_RE)
+        & raw.isNotNull()
+        & ~F.isnan(raw)
+        & (raw != F.lit(float("inf")))
+        & (raw != F.lit(float("-inf")))
+    )
+    return F.when(ok, raw)
+
+
+@dataclass
+class _Branch:
+    """One output of a fused aggregate job (:meth:`SearchTable.
+    _fused_build`): ``func`` is "total", "hist" or the agg function."""
+
+    func: str
+    group_by: Optional[str] = None
+    fieldname: Optional[str] = None      # field aggs only
+    quantiles: Tuple[float, ...] = ()
+    exact_quantiles: bool = False
+    timeseries: bool = False
+    field_guard: bool = False
+    strict: bool = False
+
+    @property
+    def names(self) -> List[str]:
+        return _bucket_names(len(self.quantiles), bool(self.group_by))
+
+
+@dataclass
+class _FusedBuilt:
+    """The cacheable product of :meth:`SearchTable._fused_build`: one lazy
+    frame of the (guard-cut) bucket rows of every branch, tagged by branch
+    index ``b``."""
+
+    frame: DataFrame
+    branches: List[_Branch]
+    src: DataFrame                      # filtered rows (field-guard confirm)
+    max_group_tokens: int
+    max_field_tokens: int
+
+
+def _bucket_names(n_quantiles: int, grouped: bool) -> List[str]:
+    """Agg bucket columns, in the order every aggregation path yields."""
+    qs = [f"q{j}" for j in range(n_quantiles)]
+    if qs and grouped:
+        return ["mid_ms", "name", *qs, "not_exists", "value"]
+    return ["mid_ms", "name", *qs, "value", "not_exists"]
+
+
+@functools.lru_cache(maxsize=64)
+def _bucket_schemas(names: Tuple[str, ...]) -> tuple:
+    """:func:`_local_frame_schemas` of a driver-side result frame: the
+    agg bucket columns, ``total`` or ``(bucket_ms, cnt)``. Memoized and
+    shared, so a cached construction prepares no per-object schema
+    state (a py4j schema read + pyarrow conversion cost ~17 ms)."""
+    from pyspark.sql.types import (
+        DoubleType, LongType, StringType, StructField, StructType,
+    )
+
+    types = {"name": StringType(), "value": DoubleType()}
+    return _local_frame_schemas(StructType([
+        StructField(n, types.get(
+            n, DoubleType() if n.startswith("q") else LongType()))
+        for n in names
+    ]))
+
+
+def _bucket_frame(spark, names: Sequence[str], data) -> DataFrame:
+    return _local_frame(spark, data, None, prepared=_bucket_schemas(tuple(names)))
+
+
 @dataclass
 class _AggBuilt:
     """Prepared (lazy) frames + flags for one aggregation shape — the
     cacheable product of :meth:`SearchTable._agg_build`. Holds NO
-    executed state: every action (strict probe, guard collect, persist)
-    belongs to :meth:`SearchTable._agg_execute`, so reusing a cached
-    construction still computes results from parquet on every call."""
+    executed state: every action (strict probe, guard collect) belongs
+    to :meth:`SearchTable._agg_execute`."""
 
     out: DataFrame                    # bucket frame (field aggs keep __ftok)
     post: DataFrame                   # out minus __ftok, bucket-ordered
@@ -194,15 +278,7 @@ class _AggBuilt:
     group_guard: bool
     field_guard: bool
     eager: bool
-    timeseries_guard: bool
-    #: LocalRelation schema state for the EAGER path, computed at build
-    #: time (r18 — a schema read costs a py4j parse, and the pyarrow
-    #: conversion ~17 ms; doing it in _agg_build sets the fields before
-    #: the object is published to the plan cache, so concurrent
-    #: executes never mutate shared state)
-    local_schema: Optional[object] = None
-    local_names: Optional[List[str]] = None
-    local_arrow: Optional[tuple] = None  # (_local_frame_schemas pair)
+    names: List[str]                  # bucket columns (_bucket_names)
 
 
 def validate_agg(aggq: "AggQuery") -> None:
@@ -325,21 +401,21 @@ class SearchTable:
         #: optional (partition_col, bucket_fmt) for time-bucket directory
         #: pruning (set by from_docs(bucket_fmt=...))
         self._partition_hint: Optional[tuple] = None
-        #: bounded FIFO of guard-persisted bucket frames (timeseries
-        #: aggregate() calls with no owning ComplexSearchResult); the lock
-        #: makes append/evict safe from concurrent HTTP handler threads
-        self._guard_cache: List[DataFrame] = []
-        self._guard_cache_lock = threading.Lock()
         #: r17 prepared-plan cache (guide §1.2 "per-task work" applied to
         #: the DRIVER): building a search/aggregate frame costs hundreds
         #: of py4j round trips (~60 ms a search, ~200 ms an aggregate,
         #: measured); a repeated query re-uses the constructed LAZY frame
-        #: — the prepared-statement shape every engine has. EXECUTION is
-        #: never cached: collect() on a cached frame re-runs the scan from
-        #: parquet every time. Only plans whose construction is
-        #: side-effect-free are cached (scan-route searches, non-persisted
-        #: aggregates); invalidated by :meth:`clear_width_cache` /
-        #: :meth:`attach_index` (the "store changed" signals).
+        #: — the prepared-statement shape every engine has — and with it
+        #: the analyzed/optimized/codegen'd QueryExecution. Re-executing
+        #: one frame re-runs its result stage; Spark also reuses the
+        #: frame's already-written shuffle output instead of rescanning,
+        #: which is sound because a table's file listing is a fixed
+        #: snapshot (the server builds a new table when the store's
+        #: generation moves). Only plans whose construction is
+        #: side-effect-free are cached (scan-route searches, totals,
+        #: aggregates, complex searches); invalidated by
+        #: :meth:`clear_width_cache` / :meth:`attach_index` (the "store
+        #: changed" signals).
         self._plan_cache: "OrderedDict[tuple, tuple]" = OrderedDict()
         self._plan_cache_lock = threading.Lock()
         #: invalidation epoch (r18): bumped by clear_width_cache() under
@@ -1035,47 +1111,31 @@ class SearchTable:
         # prepared-plan cache: only when index routing is fully off — a
         # routed two_phase frame embeds an EXECUTED phase-1 id page and a
         # cached scan route could pin a decision the width TTL would
-        # revisit; the un-indexed scan plan has neither concern. The
-        # cached object is a lazy frame: every collect re-scans parquet.
+        # revisit; the un-indexed scan plan has neither concern (and can
+        # never route: _route_two_phase needs an index)
         cacheable = self._index is None and self._two_phase_min_bytes is None
-        key = (
-            "search", q, from_ms, to_ms, size, offset, order,
-            tuple(dedup_cols) if dedup_cols is not None else None,
-            tuple(self.default_dedup) if self.default_dedup else None,
-            dialect or self.dialect,
-        )
-        epoch = None
-        if cacheable:
-            with self._plan_cache_lock:
-                hit = self._plan_cache.get(key)
-                if hit is not None:
-                    self._plan_cache.move_to_end(key)
-                    self.route = "scan"
-                    return hit[0]
-                epoch = self._plan_cache_epoch
-        routed = self._route_two_phase(
+        routed = None if cacheable else self._route_two_phase(
             q, from_ms, to_ms, size, offset, order, dedup_cols, dialect
         )
         if routed is not None:
             self.route = "two_phase"
             return routed
         self.route = "scan"
-        df, pipes = self._filtered(q, from_ms, to_ms, dedup_cols, dialect)
-        df = self._paginate(df, size, offset, order)
-        df = self.apply_pipes(self._public(df), pipes)
-        if cacheable:
-            with self._plan_cache_lock:
-                # insert only if no attach_index()/clear_width_cache()
-                # fired since the epoch was captured (and the table is
-                # STILL index-free): a plan built against superseded
-                # state must never outlive the invalidation
-                if (self._plan_cache_epoch == epoch
-                        and self._index is None
-                        and self._two_phase_min_bytes is None):
-                    self._plan_cache[key] = (df,)
-                    while len(self._plan_cache) > self._PLAN_CACHE_CAP:
-                        self._plan_cache.popitem(last=False)
-        return df
+
+        def build() -> DataFrame:
+            df, pipes = self._filtered(q, from_ms, to_ms, dedup_cols, dialect)
+            df = self._paginate(df, size, offset, order)
+            return self.apply_pipes(self._public(df), pipes)
+
+        if not cacheable:
+            return build()
+        key = (
+            "search", q, from_ms, to_ms, size, offset, order,
+            tuple(dedup_cols) if dedup_cols is not None else None,
+            tuple(self.default_dedup) if self.default_dedup else None,
+            dialect or self.dialect,
+        )
+        return self._cached_plan(key, build)
 
     def avg_doc_bytes(self, sample_files: int = 16) -> Optional[float]:
         """Average stored bytes per document — compressed parquet file
@@ -1540,9 +1600,18 @@ class SearchTable:
         dialect: Optional[str] = None,
     ) -> DataFrame:
         """`with_total` — match count independent of size
-        (reference `frac/processor/search.go:95-116`)."""
-        df, _ = self._filtered(q, from_ms, to_ms, dialect=dialect)
-        return df.agg(F.count(F.lit(1)).alias("total"))
+        (reference `frac/processor/search.go:95-116`). The lazy frame is
+        plan-cached like :meth:`aggregate`."""
+        key = (
+            "total", q, from_ms, to_ms, dialect or self.dialect,
+            tuple(self.default_dedup) if self.default_dedup else None,
+        )
+
+        def build() -> DataFrame:
+            df, _ = self._filtered(q, from_ms, to_ms, dialect=dialect)
+            return df.agg(F.count(F.lit(1)).alias("total"))
+
+        return self._cached_plan(key, build)
 
     def fetch(self, ids_df: DataFrame, id_cols: Sequence[str]) -> DataFrame:
         """Fetch-by-ID as a broadcast left-semi join (reference
@@ -1698,12 +1767,12 @@ class SearchTable:
         return df.withColumn(out, F.explode_outer(spec.tokens()))
 
     def last_agg_plan_df(self) -> Optional[DataFrame]:
-        """The DataFrame whose plan the last EAGER aggregate executed.
+        """The DataFrame whose plan the last guarded aggregate executed.
 
-        Guarded non-timeseries aggregates run in-job and return a
-        LocalRelation whose plan says nothing about the work done; this
-        accessor exposes the probe frame for plan diagnostics. None if no
-        eager aggregate has run. CAVEAT: this is the LAST probe only —
+        Guarded aggregates run in-job and return a LocalRelation whose
+        plan says nothing about the work done; this accessor exposes the
+        probe frame (timeseries shapes: the fused frame) for plan
+        diagnostics. None if no guarded aggregate has run. CAVEAT: this is the LAST probe only —
         a caller that ran multiple aggregates sees one of them; plan
         pinning must use :meth:`drain_agg_plan_dfs` instead."""
         return getattr(self, "_last_agg_plan_df", None)
@@ -1731,6 +1800,43 @@ class SearchTable:
             out = getattr(self, "_agg_plan_dfs", [])
             self._agg_plan_dfs = []
         return out
+
+    def _cached_plan(self, key: tuple, build):
+        """The prepared-plan cache: the cached construction for ``key``,
+        else ``build()``'s. A fresh construction is inserted only if no
+        invalidation (:meth:`clear_width_cache`, :meth:`attach_index`)
+        fired while it was built — a plan embedding a superseded posting
+        semi-join must never outlive the invalidation."""
+        with self._plan_cache_lock:
+            hit = self._plan_cache.get(key)
+            if hit is not None:
+                self._plan_cache.move_to_end(key)
+                return hit[0]
+            epoch = self._plan_cache_epoch
+        built = build()
+        with self._plan_cache_lock:
+            if self._plan_cache_epoch == epoch:
+                self._plan_cache[key] = (built,)
+                while len(self._plan_cache) > self._PLAN_CACHE_CAP:
+                    self._plan_cache.popitem(last=False)
+        return built
+
+    @staticmethod
+    def _agg_key(aggq: AggQuery) -> tuple:
+        return (
+            aggq.func.lower(), aggq.field, aggq.group_by,
+            tuple(aggq.quantiles or ()), aggq.interval_ms,
+            bool(aggq.exact_quantiles),
+        )
+
+    def _note_agg_plan(self, frame: DataFrame) -> None:
+        """Record the frame an aggregate executed behind its LocalRelation
+        result (see :meth:`drain_agg_plan_dfs`)."""
+        self._last_agg_plan_df = frame
+        with self._agg_plan_lock:
+            buf = getattr(self, "_agg_plan_dfs", [])
+            buf.append(frame)
+            self._agg_plan_dfs = buf[-self._AGG_PLAN_BUFFER_CAP:]
 
     def aggregate(
         self,
@@ -1768,60 +1874,43 @@ class SearchTable:
         (`seq/qpr.go:216-253`).
         """
         key = (
-            "agg", q, from_ms, to_ms,
-            aggq.func.lower(), aggq.field, aggq.group_by,
-            tuple(aggq.quantiles or ()), aggq.interval_ms,
-            bool(aggq.exact_quantiles),
+            "agg", q, from_ms, to_ms, *self._agg_key(aggq),
             max_group_tokens, strict, enforce_guard, ordered,
             max_field_tokens, dialect or self.dialect,
             tuple(self.default_dedup) if self.default_dedup else None,
         )
-        built = None
-        with self._plan_cache_lock:
-            hit = self._plan_cache.get(key)
-            if hit is not None:
-                self._plan_cache.move_to_end(key)
-                built = hit[0]
-            epoch = self._plan_cache_epoch
-        if built is None:
+        # a guarded TIMESERIES agg is not bounded by the group guard (bins
+        # x groups rows), so it runs as a one-branch fused job whose
+        # guard cut bounds what reaches the driver; every other shape is
+        # the eager/lazy _agg_build path
+        func = aggq.func.lower()
+        grouped = bool(
+            aggq.group_by or (func in ("count", "unique") and aggq.field)
+        )
+        field_guarded = func not in ("count", "unique") and max_field_tokens > 0
+        fused = enforce_guard and bool(aggq.interval_ms) and (
+            grouped or field_guarded
+        )
+
+        def build():
             df, _ = self._filtered(q, from_ms, to_ms, dialect=dialect)
-            built = self._agg_build(
+            if fused:
+                return self._fused_build(
+                    df, False, None, [aggq], strict, max_group_tokens,
+                    max_field_tokens,
+                )
+            return self._agg_build(
                 df, aggq, max_group_tokens, strict, enforce_guard,
                 ordered, max_field_tokens,
             )
-            # the timeseries-guard path persists per call (FIFO-owned);
-            # caching its construction would alias persist bookkeeping
-            # across calls — leave it uncached. The epoch guard keeps a
-            # plan built across a concurrent attach_index() (whose
-            # embedded posting semi-join is already stale) out of the
-            # cache — see clear_width_cache()
-            if not built.timeseries_guard:
-                with self._plan_cache_lock:
-                    if self._plan_cache_epoch == epoch:
-                        self._plan_cache[key] = (built,)
-                        while len(self._plan_cache) > self._PLAN_CACHE_CAP:
-                            self._plan_cache.popitem(last=False)
-        return self._agg_execute(built, max_group_tokens, max_field_tokens, ordered)
 
-    def _aggregate_on(
-        self,
-        df: DataFrame,
-        aggq: AggQuery,
-        max_group_tokens: int = AGG_MAX_GROUP_TOKENS,
-        strict: bool = False,
-        enforce_guard: bool = True,
-        ordered: bool = True,
-        persisted_sink: Optional[List[DataFrame]] = None,
-        max_field_tokens: int = AGG_MAX_FIELD_TOKENS,
-    ) -> DataFrame:
-        built = self._agg_build(
-            df, aggq, max_group_tokens, strict, enforce_guard, ordered,
-            max_field_tokens,
-        )
-        return self._agg_execute(
-            built, max_group_tokens, max_field_tokens, ordered,
-            persisted_sink=persisted_sink,
-        )
+        built = self._cached_plan(key, build)
+        if fused:
+            self._note_agg_plan(built.frame)
+            (data,) = self._fused_execute(built, ordered)
+            return _bucket_frame(
+                built.frame.sparkSession, built.branches[0].names, data)
+        return self._agg_execute(built, max_group_tokens, max_field_tokens, ordered)
 
     def _agg_build(
         self,
@@ -1906,24 +1995,7 @@ class SearchTable:
             if fieldname is None:
                 raise ValueError(f"agg func {func!r} requires a field")
             df = self._field_scalar_or_explode(df, fieldname, "__fieldtok")
-            # __val is non-NULL exactly for tokens the reference's parseNum
-            # accepts (`frac/processor/aggregator.go:150-157`: ParseFloat
-            # AND not NaN/Inf). A bare try_cast is LOOSER — it trims
-            # whitespace (token ' 5' would contribute 5.0) and passes
-            # 'Infinity'/'nan' spellings through as non-finite doubles that
-            # poison sum/min/max/avg in the skip-unparsable default mode
-            # (r12 agg-fuzz class of bug; the same Go-decimal guard the
-            # range matcher uses). 1e309-style overflows pass the regex but
-            # cast to inf — rejected by the finite checks.
-            raw = F.col("__fieldtok").try_cast("double")
-            ok = (
-                F.col("__fieldtok").rlike(_GO_FLOAT_JAVA_RE)
-                & raw.isNotNull()
-                & ~F.isnan(raw)
-                & (raw != F.lit(float("inf")))
-                & (raw != F.lit(float("-inf")))
-            )
-            df = df.withColumn("__val", F.when(ok, raw))
+            df = df.withColumn("__val", _parsed_num(F.col("__fieldtok")))
             if strict:
                 # fail the aggregation on the first unparsable token
                 # (`frac/processor/aggregator.go:128-133`: parseNum errors
@@ -2007,7 +2079,6 @@ class SearchTable:
         group_guard = enforce_guard and group_by is not None
         field_guard = enforce_guard and is_field_agg and max_field_tokens > 0
         eager = (group_guard or field_guard) and not aggq.interval_ms
-        timeseries_guard = (group_guard or field_guard) and bool(aggq.interval_ms)
         probe = None
         if eager:
             # group guard BOUNDS the bucket set; limit(cap+2) keeps the
@@ -2024,15 +2095,6 @@ class SearchTable:
         post = dropped
         if ordered:
             post = self.order_buckets(post, func)
-        local_schema = local_names = local_arrow = None
-        if eager:
-            # the eager path rebuilds its result as a LocalRelation —
-            # prepare the schema state HERE so a cached construction
-            # never pays the py4j schema parse + pyarrow conversion per
-            # execute, and concurrent executes share immutable state
-            local_schema = dropped.schema
-            local_names = [fld.name for fld in local_schema.fields]
-            local_arrow = _local_frame_schemas(local_schema)
         return _AggBuilt(
             out=out,
             post=post,
@@ -2045,10 +2107,10 @@ class SearchTable:
             group_guard=group_guard,
             field_guard=field_guard,
             eager=eager,
-            timeseries_guard=timeseries_guard,
-            local_schema=local_schema,
-            local_names=local_names,
-            local_arrow=local_arrow,
+            names=_bucket_names(
+                len(aggq.quantiles) if func == "quantile" else 0,
+                group_by is not None,
+            ),
         )
 
     def _agg_execute(
@@ -2057,7 +2119,6 @@ class SearchTable:
         max_group_tokens: int,
         max_field_tokens: int,
         ordered: bool,
-        persisted_sink: Optional[List[DataFrame]] = None,
     ) -> DataFrame:
         """Run one aggregation from its prepared frames — every Spark
         ACTION of the aggregate path lives here, so a cached construction
@@ -2083,11 +2144,7 @@ class SearchTable:
             # the returned LocalRelation hides the executed plan; keep the
             # probe frame so diagnostics (bench.py plan-digest pinning) can
             # fingerprint what actually ran
-            self._last_agg_plan_df = probe
-            with self._agg_plan_lock:
-                buf = getattr(self, "_agg_plan_dfs", [])
-                buf.append(probe)
-                self._agg_plan_dfs = buf[-self._AGG_PLAN_BUFFER_CAP:]
+            self._note_agg_plan(probe)
             rows = probe.collect()
             real_groups = sum(1 for r in rows if r["name"] != "_not_exists")
             if built.group_guard and real_groups > max_group_tokens:
@@ -2108,78 +2165,11 @@ class SearchTable:
             # Python (`_bucket_sort_key` mirrors `bucket_order_cols`
             # exactly, property-tested) because orderBy on a LocalRelation
             # still pays a range-partitioning sampling job.
-            names = built.local_names
+            names = built.names
             data = [tuple(r[nm] for nm in names) for r in rows]
             if ordered:
                 data.sort(key=self._bucket_sort_key(func, names))
-            return _local_frame(
-                out.sparkSession, data, built.local_schema,
-                prepared=built.local_arrow,
-            )
-        if built.timeseries_guard:
-            # Timeseries guarded agg: bins x groups rows are NOT bounded by
-            # the group guard (which counts distinct group tokens), so stay
-            # lazy/distributed. Persist so the guard action and the caller's
-            # collect share ONE aggregation run — the cache plays the role of
-            # the reference proxy's materialized bucket merge
-            # (`seq/qpr.go:199-254`) without a driver round-trip. The
-            # persisted frame is handed to ``persisted_sink`` so the owner
-            # (e.g. ComplexSearchResult.unpersist) can release it.
-            out = out.persist()
-            if persisted_sink is not None:
-                persisted_sink.append(out)
-            else:
-                # direct aggregate() calls have no owner to release the
-                # cache: keep a small FIFO per table so repeated requests
-                # don't accumulate persisted frames for the session's life.
-                # The lock guards concurrent HTTP handler threads: without
-                # it one request could evict (unpersist) a frame another
-                # request is still collecting from. That eviction is NOT
-                # just a recompute: Spark's CacheManager dedupes entries
-                # by canonicalized plan, and dropping blocks under an
-                # in-flight collect fails the task ("Block rdd_N_M does
-                # not exist") — fatal under local mode's single-attempt
-                # tasks. The server's _retry_transient replays such
-                # requests once (soak-verified); library callers invoking
-                # aggregate() directly should expect one retryable error
-                # under identical-plan concurrency.
-                with self._guard_cache_lock:
-                    self._guard_cache.append(out)
-                    evicted = (
-                        self._guard_cache.pop(0)
-                        if len(self._guard_cache) > 8
-                        else None
-                    )
-                if evicted is not None:
-                    evicted.unpersist()
-            stat_cols = [
-                F.count(F.lit(1)).alias("__rows"),
-                # exclude the synthetic `_not_exists` bucket — the guard
-                # counts real group tokens (same rule as the eager path)
-                F.count_distinct(
-                    F.when(F.col("name") != "_not_exists", F.col("name"))
-                ).alias("__groups"),
-            ]
-            if built.field_guard:
-                stat_cols.append(F.sum("__ftok").alias("__ftoks"))
-            stats = out.agg(*stat_cols).head()
-            if built.group_guard:
-                # the guard counts distinct group tokens, not bins x groups
-                n = stats["__groups"]
-                if n > max_group_tokens:
-                    out.unpersist()
-                    raise TooManyUniqValuesError(
-                        f"group_by {built.group_by!r} has {n} unique tokens > "
-                        f"{max_group_tokens}"
-                    )
-            if built.field_guard and (stats["__ftoks"] or 0) > max_field_tokens:
-                try:
-                    self._confirm_field_guard(
-                        built.src, built.fieldname, max_field_tokens
-                    )
-                except TooManyUniqValuesError:
-                    out.unpersist()
-                    raise
+            return _bucket_frame(out.sparkSession, names, data)
         return built.post
 
     @staticmethod
@@ -2328,20 +2318,22 @@ class SearchTable:
         with_total: bool = False,
         hist_interval_ms: Optional[int] = None,
         aggs: Sequence[AggQuery] = (),
-        cache: bool = True,
         strict: bool = False,
         dialect: Optional[str] = None,
     ) -> "ComplexSearchResult":
-        """One request → docs + total + histogram + N aggregations from a
-        SINGLE filtered scan (reference `proxyapi/grpc_complex_search.go:
-        14-60`; the store evaluates all of them in one pass over the eval
-        tree, `frac/processor/search.go:71-85,196-204`).
+        """One request → docs + total + histogram + N aggregations
+        (reference `proxyapi/grpc_complex_search.go:14-60`; the store
+        feeds all of them from one pass over the eval tree,
+        `frac/processor/search.go:71-85,196-204`).
 
-        The filtered frame is cached once and every branch reuses it — the
-        Spark translation of "iterate LIDs once, feed total, histogram and
-        every aggregator". At 100 TB this turns k+3 scans into one scan +
-        k+3 cheap cached passes. Call :meth:`ComplexSearchResult.unpersist`
-        when done.
+        ONE plan-cached construction (keyed on every request field,
+        dialect and dedup, like :meth:`aggregate`) holds the lazy docs
+        top-k and a fused aggregate computing total, histogram and every
+        aggregation in a single job (:meth:`_fused_build`). The fused job
+        runs here, its guards (the module limits ``AGG_MAX_GROUP_TOKENS``
+        and ``AGG_MAX_FIELD_TOKENS``) are checked on the driver and its
+        results come back as driver-side values; ``docs`` stays lazy.
+        Nothing is persisted, so there is nothing to release.
 
         Validation mirrors `grpc_complex_search.go:20-22`: at least one of
         docs (size>0), with_total, histogram or aggs must be requested.
@@ -2351,72 +2343,243 @@ class SearchTable:
                 "complex search requires size > 0, with_total, a histogram "
                 "interval or at least one aggregation"
             )
-        base, pipes = self._filtered(q, from_ms, to_ms, dialect=dialect)
-        if cache:
-            base = base.persist()
-        # everything between persist() and the ComplexSearchResult handoff
-        # runs under one try: a malformed agg (validate_agg raising inside
-        # _aggregate_on) must release the cached scan AND any earlier
-        # aggs' guard-persisted frames — before this, each bad request
-        # pinned one cached frame in executor storage until restart
-        agg_bases: List[DataFrame] = []
-        try:
-            docs = None
+        key = (
+            "complex", q, from_ms, to_ms, size, offset, order,
+            bool(with_total), hist_interval_ms,
+            tuple(self._agg_key(aq) for aq in aggs), strict,
+            dialect or self.dialect,
+            tuple(self.default_dedup) if self.default_dedup else None,
+        )
+
+        def build() -> tuple:
+            base, pipes = self._filtered(q, from_ms, to_ms, dialect=dialect)
+            docs = fused = None
             if size:
                 docs = self.apply_pipes(
                     self._public(self._paginate(base, size, offset, order)),
                     pipes,
                 )
-            total = (
-                base.agg(F.count(F.lit(1)).alias("total"))
-                if with_total
-                else None
-            )
-            hist = None
-            if hist_interval_ms:
-                ts_ms = F.unix_millis(F.col(self.ts_col))
-                bucket = (ts_ms - ts_ms % F.lit(hist_interval_ms)).alias(
-                    "bucket_ms"
+            if with_total or hist_interval_ms or aggs:
+                fused = self._fused_build(
+                    base, with_total, hist_interval_ms, aggs, strict,
+                    AGG_MAX_GROUP_TOKENS, AGG_MAX_FIELD_TOKENS,
                 )
-                hist = base.groupBy(bucket).agg(F.count(F.lit(1)).alias("cnt"))
-            agg_results = [
-                self._aggregate_on(
-                    base, aq, strict=strict, persisted_sink=agg_bases
-                )
-                for aq in aggs
-            ]
-        except BaseException:
-            if cache:
-                base.unpersist()
-            for frame in agg_bases:
-                frame.unpersist()
-            raise
-        return ComplexSearchResult(
-            docs=docs,
-            total=total,
-            histogram=hist,
-            aggs=agg_results,
-            _base=base,
-            _agg_bases=agg_bases,
-        )
+            return docs, fused
+
+        docs, fused = self._cached_plan(key, build)
+        res = ComplexSearchResult(docs)
+        if fused is None:
+            return res
+        for br, out in zip(fused.branches, self._fused_execute(fused)):
+            if br.func == "total":
+                res.total_count = out
+            elif br.func == "hist":
+                res.histogram_rows = out
+            else:
+                res.agg_buckets.append([dict(zip(br.names, t)) for t in out])
+        return res
+
+    def _fused_build(
+        self,
+        df: DataFrame,
+        with_total: bool,
+        hist_interval_ms: Optional[int],
+        aggs: Sequence[AggQuery],
+        strict: bool,
+        max_group_tokens: int,
+        max_field_tokens: int,
+    ) -> _FusedBuilt:
+        """Total, histogram and every aggregation as ONE branch-tagged
+        aggregate over ``df``: each row becomes one ``(b, mid, grp, tok)``
+        struct per bucket contribution to branch ``b`` (token arrays via
+        ``transform``, explode_outer style: a NULL or empty array yields
+        one NULL token), inlined and grouped once on ``(b, mid, grp)``.
+
+        Bucket sets match :meth:`_agg_build`'s row for row. A count
+        branch keeps missing-group docs as ``grp`` NULL / mid NULL — the
+        legacy ``_not_exists`` bucket, apart from a REAL token of that
+        spelling; unique and grouped field aggs drop missing-group rows
+        (strict mode keeps them so their unparsable tokens still fail);
+        an ungrouped field agg drops missing-field rows.
+
+        Group guards bound the shipped rows in the same job: a per-branch
+        ``dense_rank`` of the real group names keeps cap+1 of them at most
+        (``_not_exists`` never counts), the exact count rides along as a
+        window max. The field guard's HLL and strict mode's unparsable
+        sample are columns of the same aggregate. No job runs here."""
+        from pyspark.sql import Window
+
+        null_l = F.lit(None).cast("long")
+        null_s = F.lit(None).cast("string")
+        ts_ms = F.unix_millis(F.col(self.ts_col))
+
+        def row(b, mid=null_l, grp=null_s, tok=null_s) -> Column:
+            return F.struct(F.lit(b).alias("b"), mid.alias("mid"),
+                            grp.alias("grp"), tok.alias("tok"))
+
+        def each(fieldname: str, fn) -> Column:
+            spec = self.resolver.resolve(fieldname)
+            if spec.scalar is not None:
+                return F.array(fn(spec.scalar()))
+            t = spec.tokens()
+            return F.transform(
+                F.when(F.size(t) > 0, t).otherwise(F.array(null_s)), fn)
+
+        branches: List[_Branch] = []
+        parts: List[Column] = []
+        drop_grp: List[int] = []   # branches without a missing-group bucket
+        drop_tok: List[int] = []   # branches without a missing-field bucket
+        if with_total:
+            branches.append(_Branch("total"))
+            parts.append(F.array(row(0)))
+        if hist_interval_ms:
+            parts.append(F.array(row(
+                len(branches), ts_ms - ts_ms % F.lit(hist_interval_ms))))
+            branches.append(_Branch("hist"))
+        for aq in aggs:
+            validate_agg(aq)
+            b, func = len(branches), aq.func.lower()
+            group_by, fieldname = aq.group_by, aq.field
+            if func in ("count", "unique"):  # field: legacy group alias
+                group_by, fieldname = group_by or fieldname, None
+            is_field = fieldname is not None
+            mid = (ts_ms - ts_ms % F.lit(aq.interval_ms) if aq.interval_ms
+                   else null_l)
+            if not is_field:
+                parts.append(each(
+                    group_by, lambda g: row(b, F.when(g.isNotNull(), mid), g)))
+                if func == "unique":
+                    drop_grp.append(b)
+            elif group_by is not None:
+                parts.append(F.flatten(each(group_by, lambda g: each(
+                    fieldname, lambda f: row(b, mid, g, f)))))
+                if not strict:
+                    drop_grp.append(b)
+            else:
+                parts.append(each(fieldname, lambda f: row(b, mid, tok=f)))
+                drop_tok.append(b)
+            branches.append(_Branch(
+                func, group_by, fieldname,
+                tuple(aq.quantiles) if func == "quantile" else (),
+                bool(aq.exact_quantiles), bool(aq.interval_ms),
+                is_field and max_field_tokens > 0, strict and is_field,
+            ))
+
+        ex = df.select(F.inline(
+            F.concat(*parts) if len(parts) > 1 else parts[0]))
+        bcol, grp, tok = F.col("b"), F.col("grp"), F.col("tok")
+        drops = [bcol.isin(ids) & c.isNull()
+                 for ids, c in ((drop_grp, grp), (drop_tok, tok)) if ids]
+        if drops:
+            ex = ex.filter(~functools.reduce(operator.or_, drops))
+        fields = [(i, br) for i, br in enumerate(branches) if br.fieldname]
+        cols = [F.count(F.lit(1)).alias("cnt")]
+        if fields:
+            ex = ex.withColumn("val", _parsed_num(tok))
+            val = F.col("val")
+            cols.append(F.count(val).alias("n"))
+            funcs = {br.func for _, br in fields}
+            cols += [fn(val).alias(name) for name, fn in (
+                ("sum", F.sum), ("min", F.min), ("max", F.max), ("avg", F.avg)
+            ) if name in funcs]
+            for i, br in fields:
+                pct = F.percentile if br.exact_quantiles else F.percentile_approx
+                cols += [pct(F.when(bcol == i, val), float(qv)).alias(f"q{i}_{j}")
+                         for j, qv in enumerate(br.quantiles)]
+            guarded = [i for i, br in fields if br.field_guard]
+            if guarded:
+                cols.append(F.approx_count_distinct(
+                    F.when(bcol.isin(guarded), tok)).alias("ftok"))
+            cols.append(F.count(F.when(tok.isNull(), F.lit(1))).alias("ne"))
+            if strict:
+                cols.append(F.max(F.when(tok.isNotNull() & val.isNull(), tok))
+                            .alias("bad"))
+        out = ex.groupBy("b", "mid", "grp").agg(*cols)
+        cut = [i for i, br in enumerate(branches) if br.group_by]
+        if cut:
+            isne = grp.isNull() | (grp == "_not_exists")
+            whole = Window.partitionBy("b")
+            out = out.withColumn(
+                "rank", F.dense_rank().over(whole.orderBy(isne, grp)))
+            out = out.withColumn(
+                "ngroups", F.max(F.when(~isne, F.col("rank"))).over(whole))
+            if fields and strict:  # the sample must survive the cut
+                out = out.withColumn("bad", F.max("bad").over(whole))
+            out = out.filter(isne | (F.col("rank") <= max_group_tokens + 1)
+                             | ~bcol.isin(cut))
+        return _FusedBuilt(out, branches, df, max_group_tokens, max_field_tokens)
+
+    def _fused_execute(self, fused: _FusedBuilt, ordered: bool = True) -> list:
+        """Run the fused job (ONE collect) and split it per branch: the
+        total, ``(bucket_ms, cnt)`` histogram rows, and per agg its bucket
+        tuples in ``_Branch.names`` order. Guards are checked per branch in
+        request order with the eager path's rules and messages: strict
+        parse, then the group guard, then the field guard (whose confirm
+        pass runs only on a breach)."""
+        per: List[list] = [[] for _ in fused.branches]
+        for r in fused.frame.collect():
+            per[r["b"]].append(r)
+        out: list = []
+        nan, cap = float("nan"), fused.max_group_tokens
+        for b, (br, rows) in enumerate(zip(fused.branches, per)):
+            if br.func == "total":
+                out.append(rows[0]["cnt"] if rows else 0)
+                continue
+            if br.func == "hist":
+                # a NULL timestamp is its own bucket, ordered first
+                out.append(sorted(
+                    ((r["mid"], r["cnt"]) for r in rows),
+                    key=lambda t: (t[0] is not None, t[0] or 0)))
+                continue
+            bad = max((r["bad"] for r in rows
+                       if br.strict and r["bad"] is not None), default=None)
+            if bad is not None:
+                raise AggParseError(f"parse errors reached, last_value={bad!r}")
+            if br.group_by and rows and (rows[0]["ngroups"] or 0) > cap:
+                n = rows[0]["ngroups"]
+                if not br.timeseries:  # the eager path counts every bucket
+                    n += sum(1 for r in rows if r["grp"] == "_not_exists"
+                             or (r["grp"] is None and not br.fieldname))
+                raise TooManyUniqValuesError(
+                    f"group_by {br.group_by!r} has {n} unique tokens > {cap}")
+            if br.fieldname and br.group_by:
+                rows = [r for r in rows if r["grp"] is not None]
+            if br.field_guard and (sum(r["ftok"] or 0 for r in rows)
+                                   > fused.max_field_tokens):
+                self._confirm_field_guard(
+                    self._field_scalar_or_explode(
+                        fused.src, br.fieldname, "__fieldtok"),
+                    br.fieldname, fused.max_field_tokens)
+            data = []
+            for r in rows:
+                name = r["grp"]
+                qs = [r[f"q{b}_{j}"] for j in range(len(br.quantiles))]
+                if br.func == "count":
+                    name = "_not_exists" if name is None else name
+                    value, ne = float(r["cnt"]), 0
+                elif br.func == "unique":
+                    value, ne = 0.0, 0
+                else:
+                    value = nan if r["n"] == 0 else (qs[0] if qs else r[br.func])
+                    ne = r["ne"] if br.group_by else 0
+                tail = (ne, value) if qs and br.group_by else (value, ne)
+                data.append((r["mid"], name, *qs, *tail))
+            if ordered:
+                data.sort(key=self._bucket_sort_key(br.func, br.names))
+            out.append(data)
+        return out
 
 
 @dataclass
 class ComplexSearchResult:
-    """Branches of one ComplexSearch request, all from one cached scan."""
+    """Branches of one ComplexSearch request. ``docs`` is the lazy top-k;
+    total, histogram and aggregations came from one fused job and are
+    held driver-side: ``histogram_rows`` as ascending ``(bucket_ms,
+    cnt)``, ``agg_buckets`` as one list of bucket dicts per agg in
+    reference bucket order (the columns of :meth:`SearchTable.aggregate`).
+    Unrequested branches stay ``None``/empty."""
 
     docs: Optional[DataFrame]
-    total: Optional[DataFrame]
-    histogram: Optional[DataFrame]
-    aggs: List[DataFrame]
-    _base: DataFrame
-    _agg_bases: List[DataFrame] = dc_field(default_factory=list)
-
-    def unpersist(self) -> None:
-        """Release the cached scan AND every guard-persisted bucket frame
-        (each group-by agg persists its bucket set for the cardinality
-        guard; without this a server ComplexSearch with aggs would leak one
-        cached frame per request until session restart)."""
-        self._base.unpersist()
-        for frame in self._agg_bases:
-            frame.unpersist()
+    total_count: Optional[int] = None
+    histogram_rows: Optional[List[Tuple[Optional[int], int]]] = None
+    agg_buckets: List[List[Dict[str, object]]] = dc_field(default_factory=list)

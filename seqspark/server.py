@@ -786,21 +786,10 @@ class SeqSparkServer:
     #: throws java.nio NoSuchFileException (NOT a FileNotFoundException
     #: subclass) wrapped as FAILED_READ_FILE — transient by construction:
     #: the same query replanned sees the post-swap listing.
-    #: "Block rdd_N_M does not exist": Spark's CacheManager keys cached
-    #: plans by their canonicalized form, so two concurrent requests with
-    #: an IDENTICAL query share ONE cache entry — the first request's
-    #: unpersist() (ComplexSearchResult release, guard-FIFO eviction) can
-    #: drop blocks out from under the other's in-flight collect. A real
-    #: cluster absorbs this at the task layer (retry recomputes without
-    #: the cache); local[...] runs single-attempt tasks, so the request-
-    #: level retry plays that role. Surfaced by the burn-in soak: 1
-    #: failed async search in ~2300 ops under concurrent identical '*'
-    #: complex searches.
     _TRANSIENT_READ = (
         "FAILED_READ_FILE",
         "FileNotFoundException",
         "NoSuchFileException",
-        "Block rdd_",
     )
 
     #: bounded replan attempts: a missing-file failure after a FRESH
@@ -1393,7 +1382,8 @@ class SeqSparkServer:
         ``{"query", "from_ms", "to_ms", "size", "with_total",
         "hist_interval_ms", "aggs": [{"func", "field", "group_by",
         "quantiles", "interval_ms"}]}`` → docs + total + histogram +
-        agg buckets, all from one cached scan."""
+        agg buckets: the docs top-k plus one fused aggregate job, both
+        from the table's plan cache (:meth:`SearchTable.complex_search`)."""
         from .engine import AggQuery
 
         self._check_fractions(req)
@@ -1420,35 +1410,30 @@ class SeqSparkServer:
             aggs=aggs,
             dialect=req.get("dialect"),
         )
-        try:
-            out: dict = {}
-            if res.docs is not None:
-                out["docs"] = [
-                    {"mid": r["mid"], "rid": r["rid"], "data": r["raw"]}
-                    for r in res.docs.select("mid", "rid", "raw").collect()
-                ]
-            if res.total is not None:
-                out["total"] = res.total.collect()[0]["total"]
-            if res.histogram is not None:
-                out["histogram"] = {
-                    str(r["bucket_ms"]): r["cnt"] for r in res.histogram.collect()
-                }
-            out["aggs"] = [
-                [
-                    {k: (None if v != v else v) if isinstance(v, float) else v
-                     for k, v in r.asDict().items()}
-                    for r in adf.collect()
-                ]
-                for adf in res.aggs
+        out: dict = {}
+        if res.docs is not None:
+            out["docs"] = [
+                {"mid": r["mid"], "rid": r["rid"], "data": r["raw"]}
+                for r in res.docs.select("mid", "rid", "raw").collect()
             ]
-            if req.get("explain"):
-                out["explain"] = self._explain_of(st, req)
-            if st.partial:
-                out["partial_response"] = True
-                self._count("partial_responses_total")
-            return out
-        finally:
-            res.unpersist()
+        if res.total_count is not None:
+            out["total"] = res.total_count
+        if res.histogram_rows is not None:
+            out["histogram"] = {str(b): c for b, c in res.histogram_rows}
+        out["aggs"] = [
+            [
+                {k: (None if v != v else v) if isinstance(v, float) else v
+                 for k, v in bucket.items()}
+                for bucket in buckets
+            ]
+            for buckets in res.agg_buckets
+        ]
+        if req.get("explain"):
+            out["explain"] = self._explain_of(st, req)
+        if st.partial:
+            out["partial_response"] = True
+            self._count("partial_responses_total")
+        return out
 
     def fetch(self, req: dict) -> dict:
         return self._retry_transient(lambda: self._fetch_impl(req))

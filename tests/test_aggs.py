@@ -178,10 +178,9 @@ def test_agg_scalar_fast_path_respects_token_cap(spark):
     assert big not in got
 
 
-def test_complex_search_agg_error_releases_cache(spark, events_table):
-    """A malformed agg raising mid-request must release the persisted base
-    scan (and earlier aggs' frames) — each bad request used to pin one
-    cached frame until session restart."""
+def test_complex_search_agg_error_persists_nothing(spark, events_table):
+    """A malformed agg fails the request with ValueError and leaves no
+    persisted RDD behind (the complex path persists nothing at all)."""
     import pytest
 
     from seqspark import AggQuery

@@ -166,17 +166,14 @@ def test_complex_search_single_scan(events):
             AggQuery(func="avg", field="value", group_by="event_type"),
         ],
     )
-    try:
-        total = res.total.collect()[0]["total"]
-        assert total == st.total("event_type:click").collect()[0]["total"]
-        assert res.docs.count() == 10
-        assert res.histogram.agg(F.sum("cnt")).collect()[0][0] == total
-        counts = {r["name"]: r["value"] for r in res.aggs[0].collect()}
-        assert counts == {"click": float(total)}
-        avg = res.aggs[1].collect()[0]
-        assert avg["name"] == "click" and avg["value"] > 0
-    finally:
-        res.unpersist()
+    total = res.total_count
+    assert total == st.total("event_type:click").collect()[0]["total"]
+    assert res.docs.count() == 10
+    assert sum(c for _, c in res.histogram_rows) == total
+    counts = {r["name"]: r["value"] for r in res.agg_buckets[0]}
+    assert counts == {"click": float(total)}
+    avg = res.agg_buckets[1][0]
+    assert avg["name"] == "click" and avg["value"] > 0
 
 
 def test_complex_search_requires_something(events):
@@ -465,32 +462,33 @@ def test_bucket_sort_key_matches_order_buckets(spark):
         assert py_order == spark_order, f"divergence for func={func}"
 
 
-def test_complex_search_unpersists_agg_frames(events):
+def test_complex_search_persists_nothing(spark, events):
+    # complex_search answers total, histogram and every agg (timeseries
+    # included) from one fused job: no persisted RDD appears, and the
+    # driver-side results need no release
     st = SearchTable.from_typed(
         events, EVENTS_MAPPING, ts_col="ts", rid_col="event_id"
     )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
     res = st.complex_search(
+        size=5,
         with_total=True,
+        hist_interval_ms=3_600_000,
         aggs=[
-            # non-timeseries: guard checked eagerly on the bounded bucket
-            # set, nothing persisted
             AggQuery(func="sum", field="value", group_by="event_type"),
             AggQuery(func="count", field="event_type"),
-            # timeseries: bins × groups rows — guard stays lazy, frame
-            # persisted and owned by the result
             AggQuery(
                 func="sum", field="value", group_by="event_type",
                 interval_ms=3_600_000,
             ),
         ],
     )
-    for agg in res.aggs:
-        agg.collect()
-    assert len(res._agg_bases) == 1  # only the timeseries agg persists
-    assert all(f.storageLevel.useMemory for f in res._agg_bases)
-    res.unpersist()
-    assert not res._base.storageLevel.useMemory
-    assert all(not f.storageLevel.useMemory for f in res._agg_bases)
+    res.docs.collect()
+    assert len(res.agg_buckets) == 3
+    assert jsc.getPersistentRDDs().size() == before
+    assert not hasattr(res, "unpersist")
+
 
 def test_agg_field_token_guard(events):
     # `--agg-max-field-tokens` (`cmd/seq-db/flags.go:67`,

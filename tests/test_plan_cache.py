@@ -135,18 +135,19 @@ def test_cached_pages_disjoint(spark, order):
 
 
 def test_agg_built_schema_state_set_at_build(spark):
-    # r18: the eager path's LocalRelation schema state is computed in
-    # _agg_build, BEFORE the object is published to the plan cache —
-    # concurrent executes share immutable state instead of racing a
-    # lazy memo write
+    # r18: the eager path's LocalRelation schema is fixed at build, BEFORE
+    # the object is published to the plan cache — the bucket columns sit
+    # on the construction and the schema pair comes from the shared
+    # `_bucket_schemas` memo, so concurrent executes mutate nothing
+    from seqspark.engine import _bucket_schemas
+
     st = _table(spark)
     aq = AggQuery(func="count", group_by="grp")
-    st.aggregate(aq).collect()
+    out = st.aggregate(aq)
     (built,) = [v[0] for k, v in st._plan_cache.items() if k[0] == "agg"]
     assert built.eager
-    assert built.local_schema is not None
-    assert built.local_names is not None
-    assert built.local_arrow is not None
+    assert built.names == out.columns
+    assert _bucket_schemas(tuple(built.names))[0] == out.schema
 
 
 def test_concurrent_aggregate_execute(spark):

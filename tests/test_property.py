@@ -1722,64 +1722,59 @@ def test_complex_search_differential(diff_rig, spec):
         q, from_ms=f_ms, to_ms=t_ms, size=size, offset=offset, order=order,
         with_total=True, hist_interval_ms=hist_iv, aggs=aggqs,
     )
-    try:
-        # the shared time window, applied to every oracle replay via a
-        # temp view (the agg SQL builder reads the filter from the spec)
-        conds = []
-        if f_ms is not None:
-            conds += [f"ts_ms >= {f_ms}", f"ts_ms <= {t_ms}"]
-        con.execute(
-            "CREATE OR REPLACE TEMP VIEW cfuzz AS SELECT * FROM diffdocs"
-            + (f" WHERE {' AND '.join(conds)}" if conds else "")
+    # the shared time window, applied to every oracle replay via a
+    # temp view (the agg SQL builder reads the filter from the spec)
+    conds = []
+    if f_ms is not None:
+        conds += [f"ts_ms >= {f_ms}", f"ts_ms <= {t_ms}"]
+    con.execute(
+        "CREATE OR REPLACE TEMP VIEW cfuzz AS SELECT * FROM diffdocs"
+        + (f" WHERE {' AND '.join(conds)}" if conds else "")
+    )
+
+    # docs page (size=0 means "no docs" in complex, like the proxy)
+    rows_full = []
+    want_ids = []
+    if size > 0:
+        rows_full = res.docs.select(
+            "id", *_COMPLEX_PIPE_FIELDS).collect()
+        got_ids = [r["id"] for r in rows_full]
+        want_ids = _duck_page_ids(
+            con, (filt, (f_ms, t_ms), order, size, offset))
+        assert got_ids == want_ids, (q, order, size, offset)
+
+    # total
+    where = _duck_expr(filt)
+    want_total = con.execute(
+        f"SELECT count(*) FROM cfuzz WHERE {where}").fetchone()[0]
+    assert res.total_count == want_total, q
+
+    # histogram
+    if hist_iv is not None:
+        got_hist = res.histogram_rows  # ascending already
+        want_hist = sorted(con.execute(
+            f"SELECT ts_ms - ts_ms % {hist_iv}, count(*) FROM cfuzz "
+            f"WHERE {where} GROUP BY 1").fetchall())
+        assert got_hist == want_hist, (q, hist_iv)
+
+    # every aggregation, all from the SAME fused job
+    for a_spec, buckets in zip(agg_specs, res.agg_buckets):
+        got = _norm_bucket_rows(
+            (r["mid_ms"], r["name"], r["value"], r["not_exists"])
+            for r in buckets
         )
-
-        # docs page (size=0 means "no docs" in complex, like the proxy)
-        rows_full = []
-        want_ids = []
-        if size > 0:
-            rows_full = res.docs.select(
-                "id", *_COMPLEX_PIPE_FIELDS).collect()
-            got_ids = [r["id"] for r in rows_full]
-            want_ids = _duck_page_ids(
-                con, (filt, (f_ms, t_ms), order, size, offset))
-            assert got_ids == want_ids, (q, order, size, offset)
-
-        # total
-        where = _duck_expr(filt)
-        want_total = con.execute(
-            f"SELECT count(*) FROM cfuzz WHERE {where}").fetchone()[0]
-        assert res.total.head()["total"] == want_total, q
-
-        # histogram
-        if hist_iv is not None:
-            got_hist = sorted(
-                (r["bucket_ms"], r["cnt"]) for r in res.histogram.collect()
-            )
-            want_hist = sorted(con.execute(
-                f"SELECT ts_ms - ts_ms % {hist_iv}, count(*) FROM cfuzz "
-                f"WHERE {where} GROUP BY 1").fetchall())
-            assert got_hist == want_hist, (q, hist_iv)
-
-        # every aggregation, all fed by the SAME cached scan
-        for a_spec, adf in zip(agg_specs, res.aggs):
-            got = _norm_bucket_rows(
-                (r["mid_ms"], r["name"], r["value"], r["not_exists"])
-                for r in adf.collect()
-            )
-            want = _norm_bucket_rows(con.execute(
-                _duck_agg_sql(a_spec).replace("FROM diffdocs", "FROM cfuzz")
-            ).fetchall())
-            assert len(got) == len(want), (q, a_spec, len(got), len(want))
-            for g, w in zip(got, want):
-                assert g[0] == w[0] and g[1] == w[1] and g[3] == w[3], (
-                    q, a_spec, g, w)
-                if isinstance(g[2], str) or isinstance(w[2], str):
-                    assert g[2] == w[2], (q, a_spec, g, w)
-                else:
-                    assert math.isclose(g[2], w[2], rel_tol=1e-9,
-                                        abs_tol=1e-9), (q, a_spec, g, w)
-    finally:
-        res.unpersist()
+        want = _norm_bucket_rows(con.execute(
+            _duck_agg_sql(a_spec).replace("FROM diffdocs", "FROM cfuzz")
+        ).fetchall())
+        assert len(got) == len(want), (q, a_spec, len(got), len(want))
+        for g, w in zip(got, want):
+            assert g[0] == w[0] and g[1] == w[1] and g[3] == w[3], (
+                q, a_spec, g, w)
+            if isinstance(g[2], str) or isinstance(w[2], str):
+                assert g[2] == w[2], (q, a_spec, g, w)
+            else:
+                assert math.isclose(g[2], w[2], rel_tol=1e-9,
+                                    abs_tol=1e-9), (q, a_spec, g, w)
 
     # fields pipe: projects the returned docs to EXACTLY the named
     # columns, perturbing neither filtering, ordering nor the total
@@ -1789,14 +1784,11 @@ def test_complex_search_differential(diff_rig, spec):
             from_ms=f_ms, to_ms=t_ms, size=size, offset=offset,
             order=order, with_total=True, hist_interval_ms=None, aggs=[],
         )
-        try:
-            rows = piped.docs.collect()
-            assert set(rows[0].asDict().keys()) == set(pipe) if rows \
-                else len(want_ids) == 0, (q, pipe)
-            assert len(rows) == len(rows_full), (q, pipe)
-            for got_r, full_r in zip(rows, rows_full):
-                for c in pipe:
-                    assert got_r[c] == full_r[c], (q, pipe, c)
-            assert piped.total.head()["total"] == want_total, (q, pipe)
-        finally:
-            piped.unpersist()
+        rows = piped.docs.collect()
+        assert set(rows[0].asDict().keys()) == set(pipe) if rows \
+            else len(want_ids) == 0, (q, pipe)
+        assert len(rows) == len(rows_full), (q, pipe)
+        for got_r, full_r in zip(rows, rows_full):
+            for c in pipe:
+                assert got_r[c] == full_r[c], (q, pipe, c)
+        assert piped.total_count == want_total, (q, pipe)

@@ -1078,23 +1078,6 @@ def test_retry_transient_semantics(server):
 
     assert server._retry_transient(flaky) == "ok" and calls["n"] == 2
 
-    # cached-block eviction (CacheManager plan-dedup: a concurrent
-    # identical request's unpersist drops the shared entry mid-collect)
-    # is transient: the retry recomputes without the cache — found by
-    # the burn-in soak under concurrent identical complex searches
-    calls["n"] = 0
-
-    def evicted():
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise RuntimeError(
-                "org.apache.spark.SparkException: Block rdd_15529_3 "
-                "does not exist"
-            )
-        return "ok"
-
-    assert server._retry_transient(evicted) == "ok" and calls["n"] == 2
-
     # sustained-maintenance shape: several attempts collide with swaps
     # before one lands — the bounded loop absorbs up to
     # _TRANSIENT_ATTEMPTS-1 collisions
@@ -1132,6 +1115,52 @@ def test_retry_transient_semantics(server):
         server._retry_transient(count_real)
     assert calls["n"] == 1  # non-transient: no second attempt
 
+
+
+def test_complex_persists_nothing_under_identical_concurrency(spark, server):
+    """/complex persists no RDD (the fused job needs no cache), so
+    concurrent identical requests cannot evict each other's blocks: four
+    threads sending the same body at once all get the same answer on the
+    first attempt, and the persisted-RDD count never moves."""
+    import threading
+
+    _post(server, "/_bulk", BULK)
+    body = json.dumps({
+        "query": "*", "size": 2, "with_total": True,
+        "hist_interval_ms": 3600_000,
+        "aggs": [{"func": "count", "field": "service"},
+                 {"func": "count", "field": "service",
+                  "interval_ms": 3600_000}],
+    }).encode()
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    attempts = []
+    impl = server._complex_impl
+
+    def counted(req):
+        attempts.append(1)
+        return impl(req)
+
+    server._complex_impl = counted
+    try:
+        first = _post(server, "/complex", body)
+        assert first[0] == 200 and first[1]["total"] == 2
+        answers = []
+        threads = [
+            threading.Thread(target=lambda: answers.append(
+                _post(server, "/complex", body)))
+            for _ in range(4)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        del server._complex_impl
+    assert answers == [first] * 4
+    assert len(attempts) == 5  # no transient retry taken
+    assert jsc.getPersistentRDDs().size() == before
 
 def _flaky_rig(spark, tmp_path, n_docs=6):
     """Server with n_docs spread over hours; returns (srv, expected rows)."""
