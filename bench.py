@@ -209,11 +209,11 @@ def main() -> None:
         return [st.aggregate(AggQuery(func="count", field="event_type"))]
 
     def d5():
-        # guarded aggs run eagerly and return a LocalRelation — digest the
-        # plans the engine actually executed, not the local result frame.
-        # drain-before / drain-after so EVERY probe the query ran is
-        # fingerprinted (a multi-agg query would otherwise silently pin
-        # only its last aggregate)
+        # aggregate() runs its fused job and returns a LocalRelation —
+        # digest the plans the engine actually executed, not the local
+        # result frame. drain-before / drain-after so EVERY aggregate the
+        # query ran is fingerprinted (a multi-agg query would otherwise
+        # silently pin only its last one)
         st.drain_agg_plan_dfs()
         b5()
         return st.drain_agg_plan_dfs()

@@ -135,49 +135,6 @@ class AggQuery:
     exact_quantiles: bool = False
 
 
-def _local_frame_schemas(schema) -> tuple:
-    """(relaxed StructType, matching pyarrow schema) for a LocalRelation
-    build — split out (r18) so repeated executions of one cached
-    aggregate shape prepare these once at build time (~17 ms of
-    conversion per call otherwise) instead of per execution."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructField, StructType
-
-    # relax nullability: collected rows may hold NULLs in fields Catalyst
-    # inferred non-nullable (codegen would read them unchecked otherwise)
-    relaxed = StructType(
-        [StructField(f.name, f.dataType, True, f.metadata) for f in schema.fields]
-    )
-    return relaxed, to_arrow_schema(relaxed)
-
-
-def _local_frame(spark, data, schema, prepared=None) -> DataFrame:
-    """Build a JVM-side LocalRelation (`LocalTableScan`) from driver rows.
-
-    A tuples-based ``createDataFrame`` routes through a pickled Python RDD
-    whose every action pays one Python-worker round-trip per partition
-    (~0.2–0.4 s for a 30-row frame on local[32]); a pyarrow Table embeds
-    the rows in the plan itself, so downstream collects are pure JVM
-    (~0.03 s). pyarrow (unlike the pandas conversion path) also preserves
-    the null-vs-NaN distinction exactly: ``float('nan')`` stays a DOUBLE
-    value, ``None`` stays SQL NULL — both occur in bucket frames (NaN =
-    zero parsed samples, NULL = quantile columns of NotExists-only
-    buckets). ``prepared`` takes the pre-computed
-    :func:`_local_frame_schemas` pair for callers on a hot path.
-    """
-    import pyarrow as pa
-
-    relaxed, aschema = (
-        prepared if prepared is not None else _local_frame_schemas(schema)
-    )
-    cols = list(zip(*data)) if data else [[] for _ in relaxed.fields]
-    tbl = pa.Table.from_arrays(
-        [pa.array(list(c), type=f.type) for c, f in zip(cols, aschema)],
-        schema=aschema,
-    )
-    return spark.createDataFrame(tbl, relaxed)
-
-
 def _parsed_num(tok: Column) -> Column:
     """The token as a DOUBLE, non-NULL exactly for tokens the reference's
     parseNum accepts (`frac/processor/aggregator.go:150-157`: ParseFloat
@@ -240,45 +197,47 @@ def _bucket_names(n_quantiles: int, grouped: bool) -> List[str]:
 
 @functools.lru_cache(maxsize=64)
 def _bucket_schemas(names: Tuple[str, ...]) -> tuple:
-    """:func:`_local_frame_schemas` of a driver-side result frame: the
-    agg bucket columns, ``total`` or ``(bucket_ms, cnt)``. Memoized and
-    shared, so a cached construction prepares no per-object schema
-    state (a py4j schema read + pyarrow conversion cost ~17 ms)."""
+    """(StructType, matching pyarrow schema) of a bucket frame with the
+    columns ``names``, every field nullable (bucket rows hold NULL mid,
+    name and quantile cells). Memoized and shared, so a cached
+    construction prepares no per-object schema state (a py4j schema read
+    + pyarrow conversion cost ~17 ms)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import (
         DoubleType, LongType, StringType, StructField, StructType,
     )
 
     types = {"name": StringType(), "value": DoubleType()}
-    return _local_frame_schemas(StructType([
+    schema = StructType([
         StructField(n, types.get(
             n, DoubleType() if n.startswith("q") else LongType()))
         for n in names
-    ]))
+    ])
+    return schema, to_arrow_schema(schema)
 
 
 def _bucket_frame(spark, names: Sequence[str], data) -> DataFrame:
-    return _local_frame(spark, data, None, prepared=_bucket_schemas(tuple(names)))
+    """Driver-side bucket tuples as a JVM-side LocalRelation
+    (`LocalTableScan`).
 
+    A tuples-based ``createDataFrame`` routes through a pickled Python RDD
+    whose every action pays one Python-worker round-trip per partition
+    (~0.2–0.4 s for a 30-row frame on local[32]); a pyarrow Table embeds
+    the rows in the plan itself, so downstream collects are pure JVM
+    (~0.03 s). pyarrow (unlike the pandas conversion path) also preserves
+    the null-vs-NaN distinction exactly: ``float('nan')`` stays a DOUBLE
+    value, ``None`` stays SQL NULL — both occur in bucket frames (NaN =
+    zero parsed samples, NULL = quantile columns of NotExists-only
+    buckets)."""
+    import pyarrow as pa
 
-@dataclass
-class _AggBuilt:
-    """Prepared (lazy) frames + flags for one aggregation shape — the
-    cacheable product of :meth:`SearchTable._agg_build`. Holds NO
-    executed state: every action (strict probe, guard collect) belongs
-    to :meth:`SearchTable._agg_execute`."""
-
-    out: DataFrame                    # bucket frame (field aggs keep __ftok)
-    post: DataFrame                   # out minus __ftok, bucket-ordered
-    probe: Optional[DataFrame]        # eager guard path: limit-capped probe
-    bad: Optional[DataFrame]          # strict mode: unparsable-token frame
-    src: DataFrame                    # pre-agg frame (field-guard confirm)
-    func: str
-    group_by: Optional[str]
-    fieldname: Optional[str]
-    group_guard: bool
-    field_guard: bool
-    eager: bool
-    names: List[str]                  # bucket columns (_bucket_names)
+    schema, aschema = _bucket_schemas(tuple(names))
+    cols = list(zip(*data)) if data else [[] for _ in names]
+    tbl = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, aschema)],
+        schema=aschema,
+    )
+    return spark.createDataFrame(tbl, schema)
 
 
 def validate_agg(aggq: "AggQuery") -> None:
@@ -1766,18 +1725,7 @@ class SearchTable:
             return df.withColumn(out, spec.scalar())
         return df.withColumn(out, F.explode_outer(spec.tokens()))
 
-    def last_agg_plan_df(self) -> Optional[DataFrame]:
-        """The DataFrame whose plan the last guarded aggregate executed.
-
-        Guarded aggregates run in-job and return a LocalRelation whose
-        plan says nothing about the work done; this accessor exposes the
-        probe frame (timeseries shapes: the fused frame) for plan
-        diagnostics. None if no guarded aggregate has run. CAVEAT: this is the LAST probe only —
-        a caller that ran multiple aggregates sees one of them; plan
-        pinning must use :meth:`drain_agg_plan_dfs` instead."""
-        return getattr(self, "_last_agg_plan_df", None)
-
-    #: bounded probe buffer: a long-running server that never drains must
+    #: bounded plan buffer: a long-running server that never drains must
     #: not accumulate DataFrame handles without bound
     _AGG_PLAN_BUFFER_CAP = 32
     #: prepared-plan cache entries per table (search + aggregate shapes);
@@ -1785,17 +1733,17 @@ class SearchTable:
     _PLAN_CACHE_CAP = 64
     #: class-level lock: append (aggregate) and drain race under the
     #: server's concurrent searchers — an unsynchronized read-modify-write
-    #: could resurrect drained probes or drop fresh ones. Shared across
+    #: could resurrect drained frames or drop fresh ones. Shared across
     #: instances; the critical sections are tiny list ops.
     _agg_plan_lock = threading.Lock()
 
     def drain_agg_plan_dfs(self) -> List[DataFrame]:
-        """ALL probe frames executed by eager aggregates since the last
+        """ALL fused frames :meth:`aggregate` executed since the last
         drain, oldest first — and resets the buffer. bench.py drains
         around each agg bench query so a multi-aggregate query
-        fingerprints EVERY executed probe plan, not silently just the
-        last one. The buffer keeps the most recent 32 probes; a server
-        that never drains stays bounded."""
+        fingerprints EVERY executed plan, not silently just the last
+        one. The buffer keeps the most recent 32 frames; a server that
+        never drains stays bounded."""
         with self._agg_plan_lock:
             out = getattr(self, "_agg_plan_dfs", [])
             self._agg_plan_dfs = []
@@ -1832,7 +1780,6 @@ class SearchTable:
     def _note_agg_plan(self, frame: DataFrame) -> None:
         """Record the frame an aggregate executed behind its LocalRelation
         result (see :meth:`drain_agg_plan_dfs`)."""
-        self._last_agg_plan_df = frame
         with self._agg_plan_lock:
             buf = getattr(self, "_agg_plan_dfs", [])
             buf.append(frame)
@@ -1844,11 +1791,7 @@ class SearchTable:
         q: str = "*",
         from_ms: Optional[int] = None,
         to_ms: Optional[int] = None,
-        max_group_tokens: int = AGG_MAX_GROUP_TOKENS,
         strict: bool = False,
-        enforce_guard: bool = True,
-        ordered: bool = True,
-        max_field_tokens: int = AGG_MAX_FIELD_TOKENS,
         dialect: Optional[str] = None,
     ) -> DataFrame:
         """One aggregation over the filtered set (reference
@@ -1867,317 +1810,30 @@ class SearchTable:
         (`aggregator.go:150-157`); the default skips unparsable tokens
         (cheaper at scale; both modes pinned in tests).
 
-        ``enforce_guard=True`` applies the ErrTooManyUniqValues guard
-        (`frac/processor/eval_tree.go:78-85`) on the aggregated bucket set.
-
-        ``ordered=True`` returns buckets in the reference order
-        (`seq/qpr.go:216-253`).
+        This is the ``size=0, aggs=(aggq,)`` case of
+        :meth:`complex_search`: the same plan-cached construction and
+        fused job. Its ErrTooManyUniqValues guards
+        (`frac/processor/eval_tree.go:78-85`) use the module limits
+        ``AGG_MAX_GROUP_TOKENS`` and ``AGG_MAX_FIELD_TOKENS``, read when
+        the construction is built. The buckets come back in the reference
+        order (`seq/qpr.go:216-253`) as a LocalRelation.
         """
-        key = (
-            "agg", q, from_ms, to_ms, *self._agg_key(aggq),
-            max_group_tokens, strict, enforce_guard, ordered,
-            max_field_tokens, dialect or self.dialect,
-            tuple(self.default_dedup) if self.default_dedup else None,
+        _, fused = self._complex_plan(
+            q, from_ms, to_ms, 0, 0, "desc", False, None, (aggq,), strict,
+            dialect,
         )
-        # a guarded TIMESERIES agg is not bounded by the group guard (bins
-        # x groups rows), so it runs as a one-branch fused job whose
-        # guard cut bounds what reaches the driver; every other shape is
-        # the eager/lazy _agg_build path
-        func = aggq.func.lower()
-        grouped = bool(
-            aggq.group_by or (func in ("count", "unique") and aggq.field)
-        )
-        field_guarded = func not in ("count", "unique") and max_field_tokens > 0
-        fused = enforce_guard and bool(aggq.interval_ms) and (
-            grouped or field_guarded
-        )
-
-        def build():
-            df, _ = self._filtered(q, from_ms, to_ms, dialect=dialect)
-            if fused:
-                return self._fused_build(
-                    df, False, None, [aggq], strict, max_group_tokens,
-                    max_field_tokens,
-                )
-            return self._agg_build(
-                df, aggq, max_group_tokens, strict, enforce_guard,
-                ordered, max_field_tokens,
-            )
-
-        built = self._cached_plan(key, build)
-        if fused:
-            self._note_agg_plan(built.frame)
-            (data,) = self._fused_execute(built, ordered)
-            return _bucket_frame(
-                built.frame.sparkSession, built.branches[0].names, data)
-        return self._agg_execute(built, max_group_tokens, max_field_tokens, ordered)
-
-    def _agg_build(
-        self,
-        df: DataFrame,
-        aggq: AggQuery,
-        max_group_tokens: int,
-        strict: bool,
-        enforce_guard: bool,
-        ordered: bool,
-        max_field_tokens: int,
-    ) -> "_AggBuilt":
-        """Construct every LAZY frame one aggregation needs — the
-        expensive py4j half of :meth:`aggregate`, split from execution
-        (r17) so repeated identical requests reuse the prepared plans.
-        No Spark job runs here; :meth:`_agg_execute` owns every action."""
-        validate_agg(aggq)
-        func = aggq.func.lower()
-        group_by = aggq.group_by
-        fieldname = aggq.field
-        if func in ("count", "unique") and group_by is None:
-            group_by, fieldname = fieldname, None  # legacy alias
-
-        if aggq.interval_ms:
-            ts_ms = F.unix_millis(F.col(self.ts_col))
-            df = df.withColumn("__mid", ts_ms - ts_ms % F.lit(aggq.interval_ms))
-        else:
-            df = df.withColumn("__mid", F.lit(None).cast("long"))
-
-        if group_by is not None:
-            df = self._field_scalar_or_explode(df, group_by, "__group")
-        else:
-            df = df.withColumn("__group", F.lit(None).cast("string"))
-
-        zero = F.lit(0).cast("long")
-        bad = None
-        if func == "count":
-            if group_by is None:
-                out = (
-                    df.groupBy("__mid", "__group")
-                    .agg(F.count(F.lit(1)).cast("double").alias("value"))
-                    .withColumn("not_exists", zero)
-                )
-            else:
-                # legacy `_not_exists` bucket (docs whose group token is
-                # missing, `frac/processor/aggregator.go:219-227`) folded
-                # into the SAME aggregation pass (r17, guide §2.4): the
-                # union shape this replaced scanned the corpus twice and
-                # paid two exchanges; mapping missing rows to the
-                # synthetic bucket key pre-shuffle yields identical rows
-                # from one scan + one exchange. __missing keeps a REAL
-                # group token spelled "_not_exists" in its own bucket,
-                # exactly as the union kept it a separate row.
-                missing = F.col("__group").isNull()
-                out = (
-                    df.select(
-                        F.when(missing, F.lit(None).cast("long"))
-                        .otherwise(F.col("__mid"))
-                        .alias("__mid"),
-                        F.when(missing, F.lit("_not_exists"))
-                        .otherwise(F.col("__group"))
-                        .alias("__group"),
-                        missing.alias("__missing"),
-                    )
-                    .groupBy("__mid", "__group", "__missing")
-                    .agg(F.count(F.lit(1)).cast("double").alias("value"))
-                    .drop("__missing")
-                    .withColumn("not_exists", zero)
-                )
-        elif func == "unique":
-            # distinct group tokens as buckets, value 0 (the reference's
-            # unique buckets carry empty sample containers,
-            # `aggregator.go:236-283` + `seq/qpr.go:263-264`); the distinct
-            # count the API exposes = number of buckets
-            out = (
-                df.filter(F.col("__group").isNotNull())
-                .select("__mid", "__group")
-                .distinct()
-                .withColumn("value", F.lit(0.0))
-                .withColumn("not_exists", zero)
-            )
-        else:
-            if fieldname is None:
-                raise ValueError(f"agg func {func!r} requires a field")
-            df = self._field_scalar_or_explode(df, fieldname, "__fieldtok")
-            df = df.withColumn("__val", _parsed_num(F.col("__fieldtok")))
-            if strict:
-                # fail the aggregation on the first unparsable token
-                # (`frac/processor/aggregator.go:128-133`: parseNum errors
-                # PROPAGATE — the reference always fails; here opt-in) —
-                # one extra pruned pass over the filtered set, executed by
-                # _agg_execute before the aggregation runs
-                bad = df.filter(
-                    F.col("__fieldtok").isNotNull() & F.col("__val").isNull()
-                ).select("__fieldtok")
-            has_field = F.col("__fieldtok").isNotNull()
-            # Single-pass bucket accounting: with group_by, keep the
-            # missing-field rows IN the aggregation — every value expr runs
-            # on __val, which is NULL exactly when the field token is
-            # missing (nulls are skipped by sum/min/max/avg/percentile/
-            # count/HLL), so the agg results are unchanged and a
-            # count(missing) column yields the per-bucket NotExists
-            # (`frac/processor/aggregator.go:83-87`) with NO second
-            # aggregation and NO full-outer join — one shuffle total.
-            if group_by is not None:
-                base = df.filter(F.col("__group").isNotNull())
-                ne_cols = [
-                    F.count(F.when(~has_field, F.lit(1))).alias("not_exists")
-                ]
-            else:
-                base = df.filter(has_field)
-                ne_cols = []
-            agg_exprs = {
-                "sum": F.sum("__val"),
-                "min": F.min("__val"),
-                "max": F.max("__val"),
-                "avg": F.avg("__val"),
-            }
-            n_samples = F.count("__val").alias("__n")
-            # per-bucket approx-distinct of the raw field tokens: summed
-            # over buckets it upper-bounds the GLOBAL distinct-token count,
-            # so the `--agg-max-field-tokens` guard rides the same
-            # aggregation job (`frac/processor/eval_tree.go:78-85`,
-            # MaxFieldTokens); only a sum past the limit triggers a real
-            # second pass to confirm. Measured r17: the HLL is an
-            # ImperativeAggregate, so it keeps the agg operator out of
-            # whole-stage codegen (~+40-100 ms on a 100k-row job) — still
-            # far cheaper than the second full pass it replaces, and at
-            # scale the scan dominates
-            ftok = F.approx_count_distinct("__fieldtok").alias("__ftok")
-            if func in agg_exprs:
-                out = base.groupBy("__mid", "__group").agg(
-                    agg_exprs[func].alias("value"), n_samples, ftok, *ne_cols
-                )
-            elif func == "quantile":
-                qs = list(aggq.quantiles)
-                if not qs:
-                    raise ValueError("quantile agg requires quantiles")
-                pct = F.percentile if aggq.exact_quantiles else F.percentile_approx
-                qcols = [
-                    pct("__val", float(qv)).alias(f"q{i}") for i, qv in enumerate(qs)
-                ]
-                out = base.groupBy("__mid", "__group").agg(
-                    *qcols, n_samples, ftok, *ne_cols
-                )
-                out = out.withColumn("value", F.col("q0"))
-            else:
-                raise ValueError(f"unknown agg func {func!r}")
-            # buckets with rows but zero parsed samples -> NaN
-            # (`seq/qpr.go:288-290`)
-            out = out.withColumn(
-                "value",
-                F.when(F.col("__n") == 0, F.lit(float("nan"))).otherwise(
-                    F.col("value")
-                ),
-            ).drop("__n")
-            if group_by is None:
-                out = out.withColumn("not_exists", zero)
-            # with group_by, not_exists was computed inside the single
-            # aggregation pass above; groups that only have missing-field
-            # docs still get a bucket (their __n is 0 -> value NaN)
-
-        out = out.withColumnRenamed("__mid", "mid_ms").withColumnRenamed(
-            "__group", "name"
-        )
-        is_field_agg = func not in ("count", "unique")
-        group_guard = enforce_guard and group_by is not None
-        field_guard = enforce_guard and is_field_agg and max_field_tokens > 0
-        eager = (group_guard or field_guard) and not aggq.interval_ms
-        probe = None
-        if eager:
-            # group guard BOUNDS the bucket set; limit(cap+2) keeps the
-            # failure path bounded too (a runaway group collects at most
-            # cap+2 rows before the error, never the full bucket set).
-            # +2, not +1: the synthetic `_not_exists` bucket (count aggs,
-            # missing-field docs) rides along and must NOT count toward
-            # the group-token guard — the reference guard counts unique
-            # group TOKENS (`eval_tree.go:78-85`), and a field with
-            # exactly max_group_tokens values plus missing docs would
-            # otherwise fail spuriously
-            probe = out.limit(max_group_tokens + 2) if group_guard else out
-        dropped = out.drop("__ftok")
-        post = dropped
-        if ordered:
-            post = self.order_buckets(post, func)
-        return _AggBuilt(
-            out=out,
-            post=post,
-            probe=probe,
-            bad=bad,
-            src=df,
-            func=func,
-            group_by=group_by,
-            fieldname=fieldname,
-            group_guard=group_guard,
-            field_guard=field_guard,
-            eager=eager,
-            names=_bucket_names(
-                len(aggq.quantiles) if func == "quantile" else 0,
-                group_by is not None,
-            ),
-        )
-
-    def _agg_execute(
-        self,
-        built: "_AggBuilt",
-        max_group_tokens: int,
-        max_field_tokens: int,
-        ordered: bool,
-    ) -> DataFrame:
-        """Run one aggregation from its prepared frames — every Spark
-        ACTION of the aggregate path lives here, so a cached construction
-        still computes from parquet on every call."""
-        if built.bad is not None:
-            sample = built.bad.head(1)
-            if sample:
-                raise AggParseError(
-                    f"parse errors reached, last_value={sample[0][0]!r}"
-                )
-        out = built.out
-        func = built.func
-        if built.eager:
-            # Non-timeseries guarded agg: the group guard BOUNDS the bucket
-            # set (<= max_group_tokens rows; a single bucket without
-            # group_by), so materialize the buckets driver-side in the ONE
-            # job the caller would run anyway and check both guards on the
-            # collected rows — no persist, no second job, no cache
-            # bookkeeping. This is the reference-proxy shape: buckets merge
-            # on the coordinator (`seq/qpr.go:199-254`) before the guard
-            # verdict (`frac/processor/eval_tree.go:78-85`).
-            probe = built.probe
-            # the returned LocalRelation hides the executed plan; keep the
-            # probe frame so diagnostics (bench.py plan-digest pinning) can
-            # fingerprint what actually ran
-            self._note_agg_plan(probe)
-            rows = probe.collect()
-            real_groups = sum(1 for r in rows if r["name"] != "_not_exists")
-            if built.group_guard and real_groups > max_group_tokens:
-                n = out.count()  # failure path only: exact n for the message
-                raise TooManyUniqValuesError(
-                    f"group_by {built.group_by!r} has {n} unique tokens > "
-                    f"{max_group_tokens}"
-                )
-            if built.field_guard and (
-                sum(r["__ftok"] or 0 for r in rows) > max_field_tokens
-            ):
-                self._confirm_field_guard(
-                    built.src, built.fieldname, max_field_tokens
-                )
-            # rebuild as a JVM-side LocalRelation: the caller's collect (and
-            # any downstream op) then reads <= guard-cap rows without
-            # re-running the aggregation. Ordering happens driver-side in
-            # Python (`_bucket_sort_key` mirrors `bucket_order_cols`
-            # exactly, property-tested) because orderBy on a LocalRelation
-            # still pays a range-partitioning sampling job.
-            names = built.names
-            data = [tuple(r[nm] for nm in names) for r in rows]
-            if ordered:
-                data.sort(key=self._bucket_sort_key(func, names))
-            return _bucket_frame(out.sparkSession, names, data)
-        return built.post
+        # the LocalRelation hides the executed plan: keep the fused frame
+        # so diagnostics (bench.py plan-digest pinning) can fingerprint it
+        self._note_agg_plan(fused.frame)
+        (data,) = self._fused_execute(fused)
+        return _bucket_frame(
+            fused.frame.sparkSession, fused.branches[0].names, data)
 
     @staticmethod
     def _confirm_field_guard(df, fieldname, max_field_tokens) -> None:
         """The per-bucket __ftok sum is only an UPPER bound on the global
         distinct count (a token may occur in many buckets) — confirm with
-        one real pass before failing the request. Shared by the eager and
-        timeseries guard paths (it was duplicated verbatim before)."""
+        one real pass before failing the request."""
         n_f = df.agg(
             F.approx_count_distinct("__fieldtok").alias("n")
         ).head()["n"]
@@ -2190,9 +1846,8 @@ class SearchTable:
     @staticmethod
     def _bucket_sort_key(func: str, cols: Sequence[str]):
         """Python mirror of :meth:`bucket_order_cols` for driver-side
-        ordering of guard-bounded bucket rows (eager non-timeseries path).
-        Property-tested against the Spark exprs in
-        ``test_bucket_sort_key_matches_order_buckets``."""
+        ordering of the fused job's bucket rows. Property-tested against
+        the Spark exprs in ``test_bucket_sort_key_matches_order_buckets``."""
         i_mid = cols.index("mid_ms")
         i_name = cols.index("name")
         i_val = cols.index("value")
@@ -2243,10 +1898,6 @@ class SearchTable:
         # default: value DESC → NaN sorts LAST
         return [mid, flag.asc(), eff.desc(), name]
 
-    @classmethod
-    def order_buckets(cls, buckets: DataFrame, func: str) -> DataFrame:
-        return buckets.orderBy(*cls.bucket_order_cols(func))
-
     def agg_not_exists(
         self,
         aggq: AggQuery,
@@ -2285,26 +1936,6 @@ class SearchTable:
                 miss = df.filter(F.col("__fieldtok").isNull())
         return miss.agg(F.count(F.lit(1)).alias("not_exists"))
 
-    def agg_guard(
-        self,
-        group_by: str,
-        q: str = "*",
-        limit: int = AGG_MAX_GROUP_TOKENS,
-        dialect: Optional[str] = None,
-    ) -> None:
-        """Pre-flight cardinality guard (reference
-        `frac/processor/eval_tree.go:78-85` ErrTooManyUniqValues) —
-        approx_count_distinct keeps it one cheap pass. :meth:`aggregate`
-        additionally enforces the exact guard on its bucket output."""
-        df, _ = self._filtered(q, dialect=dialect)
-        spec = self.resolver.resolve(group_by)
-        col = spec.scalar() if spec.scalar is not None else F.explode(spec.tokens())
-        n = df.select(col.alias("g")).agg(F.approx_count_distinct("g").alias("n")).head()[0]
-        if n > limit:
-            raise TooManyUniqValuesError(
-                f"group_by {group_by!r} has ~{n} unique tokens > {limit}"
-            )
-
     # ---------------------------------------------------------- ComplexSearch
 
     def complex_search(
@@ -2326,10 +1957,10 @@ class SearchTable:
         feeds all of them from one pass over the eval tree,
         `frac/processor/search.go:71-85,196-204`).
 
-        ONE plan-cached construction (keyed on every request field,
-        dialect and dedup, like :meth:`aggregate`) holds the lazy docs
-        top-k and a fused aggregate computing total, histogram and every
-        aggregation in a single job (:meth:`_fused_build`). The fused job
+        ONE plan-cached construction (:meth:`_complex_plan`, which
+        :meth:`aggregate` shares) holds the lazy docs top-k and a fused
+        aggregate computing total, histogram and every aggregation in a
+        single job (:meth:`_fused_build`). The fused job
         runs here, its guards (the module limits ``AGG_MAX_GROUP_TOKENS``
         and ``AGG_MAX_FIELD_TOKENS``) are checked on the driver and its
         results come back as driver-side values; ``docs`` stays lazy.
@@ -2343,6 +1974,30 @@ class SearchTable:
                 "complex search requires size > 0, with_total, a histogram "
                 "interval or at least one aggregation"
             )
+        docs, fused = self._complex_plan(
+            q, from_ms, to_ms, size, offset, order, with_total,
+            hist_interval_ms, aggs, strict, dialect,
+        )
+        res = ComplexSearchResult(docs)
+        if fused is None:
+            return res
+        for br, out in zip(fused.branches, self._fused_execute(fused)):
+            if br.func == "total":
+                res.total_count = out
+            elif br.func == "hist":
+                res.histogram_rows = out
+            else:
+                res.agg_buckets.append([dict(zip(br.names, t)) for t in out])
+        return res
+
+    def _complex_plan(
+        self, q, from_ms, to_ms, size, offset, order, with_total,
+        hist_interval_ms, aggs, strict, dialect,
+    ) -> tuple:
+        """The plan-cached ``(docs, fused)`` construction of one complex
+        request, keyed on every request field, dialect and dedup: the lazy
+        docs top-k (``None`` when ``size`` is 0) and :meth:`_fused_build`'s
+        aggregate (``None`` without total, histogram or aggs)."""
         key = (
             "complex", q, from_ms, to_ms, size, offset, order,
             bool(with_total), hist_interval_ms,
@@ -2361,23 +2016,10 @@ class SearchTable:
                 )
             if with_total or hist_interval_ms or aggs:
                 fused = self._fused_build(
-                    base, with_total, hist_interval_ms, aggs, strict,
-                    AGG_MAX_GROUP_TOKENS, AGG_MAX_FIELD_TOKENS,
-                )
+                    base, with_total, hist_interval_ms, aggs, strict)
             return docs, fused
 
-        docs, fused = self._cached_plan(key, build)
-        res = ComplexSearchResult(docs)
-        if fused is None:
-            return res
-        for br, out in zip(fused.branches, self._fused_execute(fused)):
-            if br.func == "total":
-                res.total_count = out
-            elif br.func == "hist":
-                res.histogram_rows = out
-            else:
-                res.agg_buckets.append([dict(zip(br.names, t)) for t in out])
-        return res
+        return self._cached_plan(key, build)
 
     def _fused_build(
         self,
@@ -2386,8 +2028,6 @@ class SearchTable:
         hist_interval_ms: Optional[int],
         aggs: Sequence[AggQuery],
         strict: bool,
-        max_group_tokens: int,
-        max_field_tokens: int,
     ) -> _FusedBuilt:
         """Total, histogram and every aggregation as ONE branch-tagged
         aggregate over ``df``: each row becomes one ``(b, mid, grp, tok)``
@@ -2395,19 +2035,24 @@ class SearchTable:
         ``transform``, explode_outer style: a NULL or empty array yields
         one NULL token), inlined and grouped once on ``(b, mid, grp)``.
 
-        Bucket sets match :meth:`_agg_build`'s row for row. A count
+        The bucket rules (`frac/processor/aggregator.go:77-283`): a count
         branch keeps missing-group docs as ``grp`` NULL / mid NULL — the
         legacy ``_not_exists`` bucket, apart from a REAL token of that
         spelling; unique and grouped field aggs drop missing-group rows
         (strict mode keeps them so their unparsable tokens still fail);
         an ungrouped field agg drops missing-field rows.
 
-        Group guards bound the shipped rows in the same job: a per-branch
-        ``dense_rank`` of the real group names keeps cap+1 of them at most
-        (``_not_exists`` never counts), the exact count rides along as a
-        window max. The field guard's HLL and strict mode's unparsable
-        sample are columns of the same aggregate. No job runs here."""
+        Guards use the module limits ``AGG_MAX_GROUP_TOKENS`` and
+        ``AGG_MAX_FIELD_TOKENS`` as they are now. Group guards bound the
+        shipped rows in the same job: a per-branch ``dense_rank`` of the
+        real group names keeps cap+1 of them at most (``_not_exists``
+        never counts), the exact count rides along as a window max. The
+        field guard's HLL and strict mode's unparsable sample are columns
+        of the same aggregate. No job runs here."""
         from pyspark.sql import Window
+
+        max_group_tokens = AGG_MAX_GROUP_TOKENS
+        max_field_tokens = AGG_MAX_FIELD_TOKENS
 
         null_l = F.lit(None).cast("long")
         null_s = F.lit(None).cast("string")
@@ -2509,11 +2154,11 @@ class SearchTable:
                              | ~bcol.isin(cut))
         return _FusedBuilt(out, branches, df, max_group_tokens, max_field_tokens)
 
-    def _fused_execute(self, fused: _FusedBuilt, ordered: bool = True) -> list:
+    def _fused_execute(self, fused: _FusedBuilt) -> list:
         """Run the fused job (ONE collect) and split it per branch: the
         total, ``(bucket_ms, cnt)`` histogram rows, and per agg its bucket
-        tuples in ``_Branch.names`` order. Guards are checked per branch in
-        request order with the eager path's rules and messages: strict
+        tuples in ``_Branch.names`` order, sorted in the reference bucket
+        order. Guards are checked per branch in request order: strict
         parse, then the group guard, then the field guard (whose confirm
         pass runs only on a breach)."""
         per: List[list] = [[] for _ in fused.branches]
@@ -2537,7 +2182,7 @@ class SearchTable:
                 raise AggParseError(f"parse errors reached, last_value={bad!r}")
             if br.group_by and rows and (rows[0]["ngroups"] or 0) > cap:
                 n = rows[0]["ngroups"]
-                if not br.timeseries:  # the eager path counts every bucket
+                if not br.timeseries:  # n counts `_not_exists` buckets too
                     n += sum(1 for r in rows if r["grp"] == "_not_exists"
                              or (r["grp"] is None and not br.fieldname))
                 raise TooManyUniqValuesError(
@@ -2564,8 +2209,7 @@ class SearchTable:
                     ne = r["ne"] if br.group_by else 0
                 tail = (ne, value) if qs and br.group_by else (value, ne)
                 data.append((r["mid"], name, *qs, *tail))
-            if ordered:
-                data.sort(key=self._bucket_sort_key(br.func, br.names))
+            data.sort(key=self._bucket_sort_key(br.func, br.names))
             out.append(data)
         return out
 

@@ -52,6 +52,30 @@ def events_table(events):
     )
 
 
+@pytest.fixture
+def caps(monkeypatch):
+    """Sets the aggregation guard limits: the module constants
+    ``AGG_MAX_GROUP_TOKENS``/``AGG_MAX_FIELD_TOKENS``, which
+    complex_search and aggregate read when they build a construction.
+    The plan-cache key does not carry them, so every table touched is
+    cleared on the way in and out."""
+    from seqspark import engine
+
+    group0, field0 = engine.AGG_MAX_GROUP_TOKENS, engine.AGG_MAX_FIELD_TOKENS
+    tables = []
+
+    def set_caps(st, group=group0, field=field0):
+        monkeypatch.setattr(engine, "AGG_MAX_GROUP_TOKENS", group)
+        monkeypatch.setattr(engine, "AGG_MAX_FIELD_TOKENS", field)
+        st.clear_width_cache()
+        tables.append(st)
+
+    yield set_caps
+    monkeypatch.undo()
+    for st in tables:
+        st.clear_width_cache()
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

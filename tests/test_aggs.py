@@ -115,19 +115,9 @@ def test_with_total(events_table, duck):
     assert got == want
 
 
-def test_agg_guard(events_table):
-    import pytest
-
-    from seqspark import TooManyUniqValuesError
-
-    events_table.agg_guard("event_type")  # 5 groups, fine
-    with pytest.raises(TooManyUniqValuesError):
-        events_table.agg_guard("event_id", limit=10)
-
-
-def test_group_guard_ignores_not_exists_bucket(spark):
+def test_group_guard_ignores_not_exists_bucket(spark, caps):
     """The group-cardinality guard counts REAL group tokens: a field with
-    exactly max_group_tokens values plus missing-field docs (which add
+    exactly AGG_MAX_GROUP_TOKENS values plus missing-field docs (which add
     the synthetic `_not_exists` bucket) must pass, not fail by one."""
     import pytest
 
@@ -143,18 +133,18 @@ def test_group_guard_ignores_not_exists_bucket(spark):
         ts_col="ts", rid_col="event_id",
     )
     # 3 real groups + _not_exists: cap of exactly 3 must pass...
-    out = st.aggregate(AggQuery(func="count", field="grp"), max_group_tokens=3)
+    caps(st, group=3)
+    out = st.aggregate(AggQuery(func="count", field="grp"))
     names = {r["name"] for r in out.collect()}
     assert names == {"g0", "g1", "g2", "_not_exists"}
     # ...and the timeseries path agrees
     out_ts = st.aggregate(
-        AggQuery(func="count", field="grp", interval_ms=60_000),
-        max_group_tokens=3,
-    )
+        AggQuery(func="count", field="grp", interval_ms=60_000))
     assert out_ts.count() >= 4
     # a cap of 2 still fails (3 real groups)
+    caps(st, group=2)
     with pytest.raises(TooManyUniqValuesError):
-        st.aggregate(AggQuery(func="count", field="grp"), max_group_tokens=2)
+        st.aggregate(AggQuery(func="count", field="grp"))
 
 
 def test_agg_scalar_fast_path_respects_token_cap(spark):
@@ -196,10 +186,10 @@ def test_complex_search_agg_error_persists_nothing(spark, events_table):
 
 
 def test_drain_agg_plan_dfs_captures_every_probe(events_table):
-    # bench plan pinning must fingerprint EVERY eager probe a query ran:
-    # two aggregates between drains -> two probe frames, oldest first,
-    # and the drain resets the buffer (r10 verdict: last_agg_plan_df
-    # alone would silently half-pin a multi-agg bench query)
+    # bench plan pinning must fingerprint EVERY aggregate a query ran:
+    # two aggregates between drains -> two executed frames, oldest
+    # first, and the drain resets the buffer (r10 verdict: keeping only
+    # the last frame would silently half-pin a multi-agg bench query)
     events_table.drain_agg_plan_dfs()
     events_table.aggregate(AggQuery(func="count", field="event_type"))
     events_table.aggregate(
@@ -210,5 +200,3 @@ def test_drain_agg_plan_dfs_captures_every_probe(events_table):
     plans = [p._jdf.queryExecution().executedPlan().toString() for p in probes]
     assert all("LocalTableScan" not in pl for pl in plans)
     assert events_table.drain_agg_plan_dfs() == []
-    # last_agg_plan_df still points at the most recent probe
-    assert events_table.last_agg_plan_df() is probes[-1]

@@ -1,12 +1,14 @@
 """complex_search as one plan-cached construction: a docs top-k plus ONE
 fused, branch-tagged aggregate job.
 
-Differential: every branch of a complex request must equal the
-standalone total(), histogram() and aggregate() answers on the same
-inputs — on a plain typed table (scalar keyword specs) and on an ingested
-document table with an attached inverted index (token-array specs, the
-path the indexed ingest store takes). Plus the guards riding the fused
-job, the plan-cache reuse and the Spark job budget of a request."""
+Differential: every aggregation branch of a complex request must equal a
+plain-Python model of the reference bucket rules over the same documents,
+and every branch must equal the standalone total(), histogram() and
+aggregate() answers on the same inputs — on a plain typed table (scalar
+keyword specs) and on an ingested document table with an attached
+inverted index (token-array specs, the path the indexed ingest store
+takes). Plus the guards riding the fused job, the plan-cache reuse and
+the Spark job budget of a request."""
 
 from __future__ import annotations
 
@@ -25,7 +27,6 @@ from seqspark import (
     SearchTable,
     TooManyUniqValuesError,
 )
-from seqspark import engine
 from seqspark.index import build_inverted_index
 from seqspark.ingest import ingest_docs
 
@@ -48,15 +49,14 @@ def _docs(n=48):
 
 
 MAPPING = {"svc": "keyword", "v": "keyword", "msg": "text", "id": "keyword"}
-GROUP_CAP, FIELD_CAP = engine.AGG_MAX_GROUP_TOKENS, engine.AGG_MAX_FIELD_TOKENS
+# the plain table's extra row: a typed table may hold a NULL timestamp
+NULL_TS_DOC = {"id": 48, "svc": "pay", "v": "4", "msg": "beta", "ms": None}
 
 
 @pytest.fixture(scope="module")
 def plain(spark):
     rows = [(d["id"], d.get("svc"), d.get("v"), d.get("msg"), d["ms"])
-            for d in _docs()]
-    # a typed table may hold a NULL timestamp: its own histogram bucket
-    rows.append((len(rows), "pay", "4", "beta", None))
+            for d in _docs() + [NULL_TS_DOC]]
     df = spark.createDataFrame(
         rows, "id long, svc string, v string, msg string, ms long"
     ).withColumn("ts", F.timestamp_millis("ms")).drop("ms")
@@ -93,6 +93,91 @@ def _canon(rows):
         return v
 
     return sorted((tuple(cell(v) for v in r) for r in rows), key=repr)
+
+
+# --- a plain-Python model of the reference aggregation rules
+# (`frac/processor/aggregator.go:77-283`, finalize `seq/qpr.go:199-314`),
+# independent of any Spark construction
+
+
+def _toks(d, fieldname):
+    v = d.get(fieldname)
+    if v is None:
+        return []
+    return v.split() if fieldname == "msg" else [v]
+
+
+def _num(tok):
+    """parseNum: a finite Go float, else no sample."""
+    try:
+        x = float(tok)
+    except ValueError:
+        return None
+    return x if math.isfinite(x) else None
+
+
+def _percentile(xs, q):
+    """Exact linear-interpolation percentile (Spark ``percentile``)."""
+    xs = sorted(xs)
+    pos = q * (len(xs) - 1)
+    lo, hi = math.floor(pos), math.ceil(pos)
+    return xs[lo] if lo == hi else (hi - pos) * xs[lo] + (pos - lo) * xs[hi]
+
+
+def _model_docs(which, q, from_ms, to_ms):
+    docs = _docs() + ([NULL_TS_DOC] if which == "plain" else [])
+    match = {
+        "*": lambda d: True,
+        "svc:auth or svc:pay": lambda d: d.get("svc") in ("auth", "pay"),
+        "msg:alpha": lambda d: "alpha" in _toks(d, "msg"),
+    }[q]
+    return [d for d in docs if match(d) and (from_ms is None or (
+        d["ms"] is not None and from_ms <= d["ms"] <= to_ms))]
+
+
+def _model(docs, aq):
+    """One aggregation's bucket tuples, in aggregate()'s column order."""
+    func, group, field = aq.func, aq.group_by, aq.field
+    if func in ("count", "unique"):  # field: legacy group alias
+        group, field = group or field, None
+    qs = list(aq.quantiles) if func == "quantile" else []
+    buckets = {}  # (mid, name, legacy?) -> [docs, samples, not_exists]
+
+    def bucket(mid, name, legacy=False):
+        return buckets.setdefault((mid, name, legacy), [0, [], 0])
+
+    for d in docs:
+        mid = None
+        if aq.interval_ms and d["ms"] is not None:
+            mid = d["ms"] - d["ms"] % aq.interval_ms
+        groups = _toks(d, group) if group else [None]
+        if field is None:
+            if not groups and func == "count":  # the legacy bucket
+                bucket(None, "_not_exists", True)[0] += 1
+            for g in groups:
+                bucket(mid, g)[0] += 1
+            continue
+        for g in groups:  # a doc without a group token has no bucket
+            for tok in _toks(d, field) or [None]:
+                if tok is None:  # missing field: per-bucket not_exists
+                    if group:
+                        bucket(mid, g)[2] += 1
+                    continue
+                x = _num(tok)
+                bucket(mid, g)[1].extend([] if x is None else [x])
+    aggs = {"sum": sum, "min": min, "max": max,
+            "avg": lambda xs: sum(xs) / len(xs),
+            "quantile": lambda xs: _percentile(xs, qs[0])}
+    out = []
+    for (mid, name, _), (n, xs, ne) in buckets.items():
+        if func in ("count", "unique"):
+            value = float(n) if func == "count" else 0.0
+        else:
+            value = aggs[func](xs) if xs else float("nan")
+        qv = [_percentile(xs, qq) if xs else None for qq in qs]
+        tail = (ne, value) if qs and group else (value, ne)
+        out.append((mid, name, *qv, *tail))
+    return out
 
 
 # every func; grouped and ungrouped, with and without an interval, over
@@ -135,16 +220,21 @@ def test_complex_branches_equal_standalone(request, which, q, from_ms, to_ms):
     if which == "plain" and from_ms is None:
         assert hist[0] == (None, 1)
     assert len(res.docs.collect()) == min(5, total)
+    docs = _model_docs(which, q, from_ms, to_ms)
+    assert total == len(docs)
     for aq, buckets in zip(AGGS, res.agg_buckets):
         got = [tuple(b.values()) for b in buckets]
-        # the unguarded lazy path is an independent reference for every
-        # shape; the default aggregate() must agree as well
-        ref = st.aggregate(aq, q, enforce_guard=False, **win)
+        # the plain-Python model is the independent reference for every
+        # shape; aggregate(), its own one-agg construction, must agree
+        # too, so no branch of the fused job leaks into another
+        assert _canon(got) == _canon(_model(docs, aq)), aq
+        ref = st.aggregate(aq, q, **win)
         assert _canon(got) == _canon(ref.collect()), aq
-        if q == "*":
-            assert _canon(got) == _canon(st.aggregate(aq).collect()), aq
         assert all(list(b) == ref.columns for b in buckets), aq
     if q == "*":
+        # NaN buckets: rows whose field tokens never parse
+        assert any(isinstance(b["value"], float) and math.isnan(b["value"])
+                   for bs in res.agg_buckets for b in bs)
         # missing-group docs: the legacy bucket AND the real token
         names = [b["name"] for b in res.agg_buckets[0]]
         assert names.count("_not_exists") == 2
@@ -169,29 +259,13 @@ def test_complex_bucket_order_matches_aggregate(request, which):
     st = request.getfixturevalue(which)
     res = st.complex_search(aggs=AGGS)
     for aq, buckets in zip(AGGS, res.agg_buckets):
-        want = st.aggregate(aq, enforce_guard=False).collect()
+        # the Spark-side reference order, not the driver-side sort key
+        # both paths share
+        want = st.aggregate(aq).orderBy(
+            *SearchTable.bucket_order_cols(aq.func)).collect()
         assert [_canon([b.values()]) for b in buckets] == [
             _canon([r]) for r in want
         ], aq
-
-
-@pytest.fixture
-def caps(monkeypatch):
-    """Sets complex_search's guard limits, the module constants it reads
-    when it builds a construction. The plan-cache key does not carry
-    them, so every table touched is cleared on the way in and out."""
-    tables = []
-
-    def set_caps(st, group=GROUP_CAP, field=FIELD_CAP):
-        monkeypatch.setattr(engine, "AGG_MAX_GROUP_TOKENS", group)
-        monkeypatch.setattr(engine, "AGG_MAX_FIELD_TOKENS", field)
-        st.clear_width_cache()
-        tables.append(st)
-
-    yield set_caps
-    monkeypatch.undo()
-    for st in tables:
-        st.clear_width_cache()
 
 
 @pytest.mark.parametrize("which", ["plain", "indexed"])
@@ -204,35 +278,31 @@ def test_complex_guards_match_aggregate(request, which, caps):
         return type(e.value), str(e.value)
 
     cases = [
-        (AggQuery(func="count", field="msg"), dict(max_group_tokens=2)),
+        (AggQuery(func="count", field="msg"), dict(group=2)),
         (AggQuery(func="count", field="msg", interval_ms=60_000),
-         dict(max_group_tokens=2)),
-        (AggQuery(func="sum", field="v", group_by="svc"),
-         dict(max_group_tokens=1)),
-        (AggQuery(func="min", field="v", group_by="svc"),
-         dict(max_field_tokens=2)),
-        (AggQuery(func="avg", field="v", interval_ms=60_000),
-         dict(max_field_tokens=2)),
+         dict(group=2)),
+        (AggQuery(func="sum", field="v", group_by="svc"), dict(group=1)),
+        (AggQuery(func="min", field="v", group_by="svc"), dict(field=2)),
+        (AggQuery(func="avg", field="v", interval_ms=60_000), dict(field=2)),
         (AggQuery(func="sum", field="v", group_by="svc"), dict(strict=True)),
         (AggQuery(func="max", field="v", interval_ms=60_000),
          dict(strict=True)),
     ]
     for aq, kw in cases:
-        caps(st, kw.get("max_group_tokens", GROUP_CAP),
-             kw.get("max_field_tokens", FIELD_CAP))
-        want = err(lambda: st.aggregate(aq, **kw))
+        strict = kw.pop("strict", False)
+        caps(st, **kw)
+        want = err(lambda: st.aggregate(aq, strict=strict))
         got = err(lambda: st.complex_search(
-            with_total=True, aggs=[aq], strict=kw.get("strict", False)))
+            with_total=True, aggs=[aq], strict=strict))
         assert got == want, (aq, kw)
-    # the messages are the eager path's: the guarded timeseries shape of
-    # aggregate() runs as a one-branch fused job and keeps them
+    # the reference messages, timeseries shapes included
+    caps(st, group=2)
     with pytest.raises(TooManyUniqValuesError,
                        match=r"^group_by 'msg' has \d+ unique tokens > 2$"):
-        st.aggregate(AggQuery(func="count", field="msg", interval_ms=60_000),
-                     max_group_tokens=2)
+        st.aggregate(AggQuery(func="count", field="msg", interval_ms=60_000))
+    caps(st, field=2)
     with pytest.raises(TooManyUniqValuesError, match="--agg-max-field-tokens"):
-        st.aggregate(AggQuery(func="avg", field="v", interval_ms=60_000),
-                     max_field_tokens=2)
+        st.aggregate(AggQuery(func="avg", field="v", interval_ms=60_000))
     # `_not_exists` never counts toward the group guard: svc has exactly
     # two real groups plus the legacy bucket and a real `_not_exists`
     caps(st, group=2)
@@ -240,9 +310,7 @@ def test_complex_guards_match_aggregate(request, which, caps):
     assert {b["name"] for b in res.agg_buckets[0]} == {
         "auth", "pay", "_not_exists"}
     assert st.aggregate(
-        AggQuery(func="count", field="svc", interval_ms=60_000),
-        max_group_tokens=2,
-    ).count() > 0
+        AggQuery(func="count", field="svc", interval_ms=60_000)).count() > 0
     # a strict request over parsable tokens only passes
     st.complex_search(
         "svc:auth and not v:oops", aggs=[AggQuery(func="sum", field="v")],
@@ -258,15 +326,16 @@ def test_group_guard_failure_ships_bounded_rows(plain, caps):
     caps(plain, group=5)
     with pytest.raises(TooManyUniqValuesError, match=f"has {n} unique"):
         plain.complex_search(aggs=[ids])
-    # the same cut bounds aggregate()'s guarded timeseries shape
+    # the same cut bounds aggregate()'s, timeseries shapes included
     with pytest.raises(TooManyUniqValuesError, match=f"has {n} unique"):
-        plain.aggregate(AggQuery(func="count", field="id", interval_ms=60_000),
-                        max_group_tokens=5)
-    built = {k[0]: v[0] for k, v in plain._plan_cache.items()}
+        plain.aggregate(ids)
+    with pytest.raises(TooManyUniqValuesError, match=f"has {n} unique"):
+        plain.aggregate(AggQuery(func="count", field="id", interval_ms=60_000))
+    built = [v[0] for k, v in plain._plan_cache.items() if k[0] == "complex"]
     # the guard cut keeps cap+1 real groups: a failure never ships the
     # whole bucket set to the driver
-    assert built["complex"][1].frame.count() == 6
-    assert built["agg"].frame.count() == 6
+    assert len(built) == 2
+    assert [fused.frame.count() for _, fused in built] == [6, 6]
 
 
 def _jobs(spark, fn):

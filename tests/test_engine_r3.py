@@ -268,12 +268,13 @@ def test_agg_bucket_ordering(events):
     assert names == sorted(names)
 
 
-def test_agg_guard_enforced_inside_aggregate(events):
+def test_agg_guard_enforced_inside_aggregate(events, caps):
     st = SearchTable.from_typed(events, EVENTS_MAPPING, ts_col="ts", rid_col="event_id")
+    caps(st, group=5)
     with pytest.raises(TooManyUniqValuesError):
-        st.aggregate(AggQuery(func="count", field="user_id"), max_group_tokens=5)
+        st.aggregate(AggQuery(func="count", field="user_id"))
     # under the limit passes
-    st.aggregate(AggQuery(func="count", field="event_type"), max_group_tokens=5)
+    st.aggregate(AggQuery(func="count", field="event_type"))
 
 
 def test_agg_request_validation(events):
@@ -426,15 +427,17 @@ def test_bucket_order_nan_below_neg_infinity(spark):
     ]
     df = spark.createDataFrame(rows, "mid_ms long, name string, value double")
     # default: value DESC → pos, -inf, then the NaN group last (name asc)
-    names = [r["name"] for r in SearchTable.order_buckets(df, "sum").collect()]
+    names = [r["name"] for r in
+             df.orderBy(*SearchTable.bucket_order_cols("sum")).collect()]
     assert names == ["pos", "neg", "nana", "nanb"]
     # min: value ASC → NaN group FIRST (below -inf), then -inf, then pos
-    names = [r["name"] for r in SearchTable.order_buckets(df, "min").collect()]
+    names = [r["name"] for r in
+             df.orderBy(*SearchTable.bucket_order_cols("min")).collect()]
     assert names == ["nana", "nanb", "neg", "pos"]
 
 
 def test_bucket_sort_key_matches_order_buckets(spark):
-    """The eager guard path sorts buckets driver-side with
+    """The fused aggregate sorts buckets driver-side with
     `_bucket_sort_key`; it must order EXACTLY like the Spark-side
     `bucket_order_cols` (`seq/qpr.go:216-253` sortBuckets) for every
     func, including the NaN-below--Inf and NULL edge cases."""
@@ -455,7 +458,8 @@ def test_bucket_sort_key_matches_order_buckets(spark):
         return (r["mid_ms"], r["name"], "nan" if v is not None and math.isnan(v) else v)
 
     for func in ("sum", "min", "quantile", "count"):
-        spark_order = [canon(r) for r in SearchTable.order_buckets(df, func).collect()]
+        spark_order = [canon(r) for r in
+                       df.orderBy(*SearchTable.bucket_order_cols(func)).collect()]
         key = SearchTable._bucket_sort_key(func, ["mid_ms", "name", "value"])
         py_order = [canon(Row(mid_ms=m, name=n, value=v)) for m, n, v in
                     sorted(rows, key=key)]
@@ -490,25 +494,26 @@ def test_complex_search_persists_nothing(spark, events):
     assert not hasattr(res, "unpersist")
 
 
-def test_agg_field_token_guard(events):
+def test_agg_field_token_guard(events, caps):
     # `--agg-max-field-tokens` (`cmd/seq-db/flags.go:67`,
     # `frac/processor/eval_tree.go:78-85` MaxFieldTokens): a field agg over
     # a high-cardinality token column fails fast instead of running unbounded
     st = SearchTable.from_typed(
         events, EVENTS_MAPPING, ts_col="ts", rid_col="event_id"
     )
+    caps(st, field=5)
     with pytest.raises(TooManyUniqValuesError, match="agg-max-field-tokens"):
         st.aggregate(
-            AggQuery(func="min", field="user_id", group_by="event_type"),
-            max_field_tokens=5,
-        )
+            AggQuery(func="min", field="user_id", group_by="event_type"))
     # no-group field agg is guarded too
     with pytest.raises(TooManyUniqValuesError):
-        st.aggregate(AggQuery(func="sum", field="user_id"), max_field_tokens=5)
+        st.aggregate(AggQuery(func="sum", field="user_id"))
     # 0 disables the limit (reference flag semantics)
-    st.aggregate(AggQuery(func="sum", field="user_id"), max_field_tokens=0)
+    caps(st, field=0)
+    st.aggregate(AggQuery(func="sum", field="user_id"))
     # count/unique use the GROUP guard only, never the field guard
-    st.aggregate(AggQuery(func="count", field="event_type"), max_field_tokens=1)
+    caps(st, field=1)
+    st.aggregate(AggQuery(func="count", field="event_type"))
 
 def test_max_token_size_exposed_through_from_typed(spark):
     # reference bench runs `--max-token-size=1024`

@@ -72,8 +72,9 @@ def test_aggregate_cache_reexecutes_per_call(spark):
 
 def test_count_group_not_exists_single_scan_plan(spark):
     st = _table(spark)
+    st.drain_agg_plan_dfs()
     st.aggregate(AggQuery(func="count", field="grp"))
-    probe = st.last_agg_plan_df()
+    (probe,) = st.drain_agg_plan_dfs()
     jvm = spark._jvm
     plan = probe._jdf.queryExecution().explainString(
         jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
@@ -135,19 +136,21 @@ def test_cached_pages_disjoint(spark, order):
 
 
 def test_agg_built_schema_state_set_at_build(spark):
-    # r18: the eager path's LocalRelation schema is fixed at build, BEFORE
-    # the object is published to the plan cache — the bucket columns sit
-    # on the construction and the schema pair comes from the shared
+    # r18: the LocalRelation schema is fixed at build, BEFORE the object
+    # is published to the plan cache — the bucket columns sit on the
+    # construction's branch and the schema pair comes from the shared
     # `_bucket_schemas` memo, so concurrent executes mutate nothing
     from seqspark.engine import _bucket_schemas
 
     st = _table(spark)
     aq = AggQuery(func="count", group_by="grp")
     out = st.aggregate(aq)
-    (built,) = [v[0] for k, v in st._plan_cache.items() if k[0] == "agg"]
-    assert built.eager
-    assert built.names == out.columns
-    assert _bucket_schemas(tuple(built.names))[0] == out.schema
+    (built,) = [v[0] for k, v in st._plan_cache.items() if k[0] == "complex"]
+    docs, fused = built
+    assert docs is None
+    names = fused.branches[0].names
+    assert names == out.columns
+    assert _bucket_schemas(tuple(names))[0] == out.schema
 
 
 def test_concurrent_aggregate_execute(spark):
@@ -185,16 +188,16 @@ def test_plan_cache_epoch_blocks_stale_insert(spark):
     # cache insert must win — the plan built against superseded state
     # never enters the cache
     st = _table(spark)
-    orig_build = st._agg_build
+    orig_build = st._fused_build
 
     def build_then_invalidate(*a, **kw):
         built = orig_build(*a, **kw)
         st.clear_width_cache()  # concurrent attach_index analog
         return built
 
-    st._agg_build = build_then_invalidate
+    st._fused_build = build_then_invalidate
     st.aggregate(AggQuery(func="count", group_by="grp")).collect()
-    st._agg_build = orig_build
+    st._fused_build = orig_build
     assert not st._plan_cache, "stale-epoch plan must not be cached"
     # and the same request afterwards caches normally again
     st.aggregate(AggQuery(func="count", group_by="grp")).collect()

@@ -1383,27 +1383,44 @@ def test_legacy_differential_spark_vs_duckdb(diff_rig, specs):
 # semantics — explode_outer group/field tokens, parseNum-gated values
 # (the precomputed _nums arrays ARE the parseNum model), per-bucket
 # not_exists, the legacy `_not_exists` count bucket, NaN for buckets with
-# zero parsed samples, and interval binning.
+# zero parsed samples, interval binning and the exact quantile (value = q0;
+# Spark `percentile` and DuckDB `quantile_cont` share linear interpolation).
 
 _AGG_GROUP_FIELDS = ["service", "code", "msg", "msg.keyword", "код", "n", "url"]
 _AGG_VALUE_FIELDS = ["code", "n", "msg"]
 
 
-@st.composite
-def _agg_spec(draw):
+def _draw_agg(draw, filt):
+    """One ``("agg", func, field, group, interval, filt, quantile)``."""
     func = draw(st.sampled_from(["count", "unique", "sum", "min", "max",
-                                 "avg"]))
-    filt = draw(st.one_of(st.just(("all",)), _diff_leaf))
+                                 "avg", "quantile"]))
     if func in ("count", "unique"):
         # unique forbids interval (reference parity)
         interval = None if func == "unique" else draw(
             st.sampled_from([None, 60_000]))
         group = draw(st.sampled_from(_AGG_GROUP_FIELDS))
-        return ("agg", func, None, group, interval, filt)
+        return ("agg", func, None, group, interval, filt, None)
     field = draw(st.sampled_from(_AGG_VALUE_FIELDS))
     group = draw(st.sampled_from(_AGG_GROUP_FIELDS + [None]))
     interval = draw(st.sampled_from([None, 60_000]))
-    return ("agg", func, field, group, interval, filt)
+    qv = draw(st.sampled_from([0.0, 0.25, 0.5, 0.9, 1.0])) \
+        if func == "quantile" else None
+    return ("agg", func, field, group, interval, filt, qv)
+
+
+@st.composite
+def _agg_spec(draw):
+    return _draw_agg(draw, draw(st.one_of(st.just(("all",)), _diff_leaf)))
+
+
+def _agg_query(spec):
+    from seqspark import AggQuery
+
+    _, func, field, group_by, interval, _filt, qv = spec
+    return AggQuery(
+        func=func, field=field, group_by=group_by, interval_ms=interval,
+        quantiles=() if qv is None else (qv,), exact_quantiles=True,
+    )
 
 
 def _duck_outer(col: str) -> str:
@@ -1422,7 +1439,7 @@ def _duck_outer_num(col: str) -> str:
 
 
 def _duck_agg_sql(spec) -> str:
-    _, func, field, group_by, interval, filt = spec
+    _, func, field, group_by, interval, filt, qv = spec
     where = _duck_expr(filt)
     mid = f"(ts_ms - ts_ms % {interval})" if interval else "NULL::BIGINT"
     if func in ("count", "unique"):
@@ -1448,7 +1465,7 @@ def _duck_agg_sql(spec) -> str:
         )
     ftoks, fnums = _DIFF_COLS[field]
     agg = {"sum": "sum(val)", "min": "min(val)", "max": "max(val)",
-           "avg": "avg(val)"}[func]
+           "avg": "avg(val)", "quantile": f"quantile_cont(val, {qv})"}[func]
     if group_by is not None:
         gtoks = _DIFF_COLS[group_by][0]
         g = (
@@ -1497,18 +1514,12 @@ def test_agg_differential_spark_vs_duckdb(diff_rig, specs):
     (func, field, group_by, interval, filter) shapes."""
     import math
 
-    from seqspark import AggQuery
-
     table, con, _ = diff_rig
     for spec in specs:
-        _, func, field, group_by, interval, filt = spec
-        aggq = AggQuery(
-            func=func, field=field, group_by=group_by,
-            interval_ms=interval,
-        )
+        filt = spec[5]
         got = _norm_bucket_rows(
             (r["mid_ms"], r["name"], r["value"], r["not_exists"])
-            for r in table.aggregate(aggq, q=_render(filt)).collect()
+            for r in table.aggregate(_agg_query(spec), q=_render(filt)).collect()
         )
         want = _norm_bucket_rows(con.execute(_duck_agg_sql(spec)).fetchall())
         assert len(got) == len(want), (spec, _render(filt), len(got),
@@ -1680,22 +1691,7 @@ def _complex_spec(draw):
     offset = draw(st.sampled_from([0, 3]))
     hist_interval = draw(st.sampled_from([None, 1000, 60_000]))
     n_aggs = draw(st.integers(1, 3))
-    aggs = []
-    for _ in range(n_aggs):
-        func = draw(st.sampled_from(
-            ["count", "unique", "sum", "min", "max", "avg"]))
-        if func in ("count", "unique"):
-            interval = None if func == "unique" else draw(
-                st.sampled_from([None, 60_000]))
-            aggs.append(("agg", func, None,
-                         draw(st.sampled_from(_AGG_GROUP_FIELDS)),
-                         interval, filt))
-        else:
-            aggs.append((
-                "agg", func, draw(st.sampled_from(_AGG_VALUE_FIELDS)),
-                draw(st.sampled_from(_AGG_GROUP_FIELDS + [None])),
-                draw(st.sampled_from([None, 60_000])), filt,
-            ))
+    aggs = [_draw_agg(draw, filt) for _ in range(n_aggs)]
     pipe = draw(st.one_of(
         st.none(),
         st.lists(st.sampled_from(_COMPLEX_PIPE_FIELDS), min_size=1,
@@ -1709,18 +1705,13 @@ def _complex_spec(draw):
 def test_complex_search_differential(diff_rig, spec):
     import math
 
-    from seqspark import AggQuery
-
     table, con, _ = diff_rig
     filt, (f_ms, t_ms), order, size, offset, hist_iv, agg_specs, pipe = spec
     q = _render(filt)
-    aggqs = [
-        AggQuery(func=a[1], field=a[2], group_by=a[3], interval_ms=a[4])
-        for a in agg_specs
-    ]
     res = table.complex_search(
         q, from_ms=f_ms, to_ms=t_ms, size=size, offset=offset, order=order,
-        with_total=True, hist_interval_ms=hist_iv, aggs=aggqs,
+        with_total=True, hist_interval_ms=hist_iv,
+        aggs=[_agg_query(a) for a in agg_specs],
     )
     # the shared time window, applied to every oracle replay via a
     # temp view (the agg SQL builder reads the filter from the spec)

@@ -142,11 +142,12 @@ def query_set(st, lineitem, window=None):
 def digest_set(st, lineitem, window):
     """Same query shapes as :func:`query_set`, as digest-frame builders
     (lists of DataFrames whose canonicalized physical plans get hashed).
-    The agg queries drain the engine's eager-probe buffer so EVERY
-    executed probe plan is fingerprinted (bench.py's d5/d6 pattern)."""
+    The agg queries drain the engine's buffer of executed aggregate
+    frames so EVERY executed plan is fingerprinted (bench.py's d5/d6
+    pattern)."""
     f, t = window
 
-    def agg_probe(aggq):
+    def agg_plans(aggq):
         st.drain_agg_plan_dfs()
         st.aggregate(aggq)
         return st.drain_agg_plan_dfs()
@@ -162,10 +163,10 @@ def digest_set(st, lineitem, window):
             )
         ],
         "q4_range": lambda: [st.search("value:[50, 100)", size=5000)],
-        "q5_agg_count": lambda: agg_probe(
+        "q5_agg_count": lambda: agg_plans(
             AggQuery(func="count", field="event_type")
         ),
-        "q6_agg_min_group": lambda: agg_probe(
+        "q6_agg_min_group": lambda: agg_plans(
             AggQuery(func="min", field="value", group_by="event_type")
         ),
         "q7_pricing": lambda: [
