@@ -31,6 +31,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import copy
 import functools
 import math
 import operator
@@ -302,6 +303,14 @@ class SearchTable:
     - :meth:`from_docs` — an ingested document store produced by
       :mod:`seqspark.ingest`: fields live in extracted columns + a
       ``tokens`` map column.
+
+    A table is a snapshot: its frame's file listing is fixed when the
+    table is built (:meth:`from_store` reads one
+    :class:`~seqspark.store.StoreSnapshot`), and nothing mutates a
+    published table — :meth:`attach_index` returns a new one. That is
+    what makes the prepared-plan cache (:meth:`_cached_plan`) sound,
+    shuffle-output reuse on a cache hit included. A changed store means
+    a new table, not an invalidated one.
     """
 
     def __init__(
@@ -328,25 +337,11 @@ class SearchTable:
         #: `proxy/bulk/indexer.go:162-167`; duplicates collapse at read like
         #: `seq/qpr.go:465-487`)
         self.default_dedup: Optional[Sequence[str]] = None
-        #: True when the table was built from a degraded store read (cold
-        #: tier down): results are served from what's reachable and the
-        #: transports mark the response PARTIAL_RESPONSE
-        self.partial = False
         #: optional inverted-index routing (attach_index)
         self._index: Optional[tuple] = None
         #: width-aware two-phase routing threshold (attach_index
         #: two_phase_min_doc_bytes); None = routing off
         self._two_phase_min_bytes: Optional[int] = None
-        #: which plan served the LAST search() call — "two_phase" or
-        #: "scan"; observability for transports/explain (None before
-        #: any search). Backed by a thread-local (r18): the server
-        #: shares ONE memoized table across request handler threads,
-        #: and each must read the route of ITS OWN search, not whichever
-        #: ran last globally (see the `route` property below)
-        self._route_local = threading.local()
-        #: memoized avg_doc_bytes() — () = not yet computed; a server
-        #: fronting many requests may pre-seed this from its own cache
-        self._avg_doc_bytes_cache: tuple = ()
         #: two_phase_search conf ownership (r17 knob): when True (the
         #: default) the operator raises the SESSION-global
         #: ``spark.sql.parquet.pushdown.inFilterThreshold`` to cover its
@@ -360,31 +355,36 @@ class SearchTable:
         #: optional (partition_col, bucket_fmt) for time-bucket directory
         #: pruning (set by from_docs(bucket_fmt=...))
         self._partition_hint: Optional[tuple] = None
+        self._init_caches()
+
+    def _init_caches(self) -> None:
+        """State a table derives lazily from its frame, index and store
+        listing. None of it is ever invalidated: a table's listing is a
+        fixed snapshot (:meth:`from_store`), and :meth:`attach_index`
+        returns a NEW table with fresh state."""
+        #: which plan served the LAST search() call — "two_phase" or
+        #: "scan"; observability for transports/explain (None before
+        #: any search). Backed by a thread-local (r18): the server
+        #: shares ONE memoized table across request handler threads,
+        #: and each must read the route of ITS OWN search, not whichever
+        #: ran last globally (see the `route` property below)
+        self._route_local = threading.local()
+        #: memoized avg_doc_bytes() — () = not yet sampled
+        self._avg_doc_bytes_cache: tuple = ()
+        self._width_lock = threading.Lock()
         #: r17 prepared-plan cache (guide §1.2 "per-task work" applied to
         #: the DRIVER): building a search/aggregate frame costs hundreds
         #: of py4j round trips (~60 ms a search, ~200 ms an aggregate,
         #: measured); a repeated query re-uses the constructed LAZY frame
         #: — the prepared-statement shape every engine has — and with it
-        #: the analyzed/optimized/codegen'd QueryExecution. Re-executing
-        #: one frame re-runs its result stage; Spark also reuses the
-        #: frame's already-written shuffle output instead of rescanning,
-        #: which is sound because a table's file listing is a fixed
-        #: snapshot (the server builds a new table when the store's
-        #: generation moves). Only plans whose construction is
-        #: side-effect-free are cached (scan-route searches, totals,
-        #: aggregates, complex searches); invalidated by
-        #: :meth:`clear_width_cache` / :meth:`attach_index` (the "store
-        #: changed" signals).
+        #: the analyzed/optimized/codegen'd QueryExecution. Only plans
+        #: whose construction is side-effect-free are cached (scan-route
+        #: searches, totals, aggregates, complex searches); see
+        #: :meth:`_cached_plan` for why reuse is sound.
         self._plan_cache: "OrderedDict[tuple, tuple]" = OrderedDict()
         self._plan_cache_lock = threading.Lock()
-        #: invalidation epoch (r18): bumped by clear_width_cache() under
-        #: the lock. Builders capture it before constructing a plan and
-        #: insert only if it is unchanged — without this, an
-        #: attach_index() firing between build and insert would leave a
-        #: plan built against the OLD index cached indefinitely (for
-        #: aggregates, an embedded stale posting semi-join could silently
-        #: exclude docs added by the refresh)
-        self._plan_cache_epoch = 0
+        #: fused frames aggregate() executed (drain_agg_plan_dfs)
+        self._agg_plan_dfs: List[DataFrame] = []
 
     @property
     def route(self) -> Optional[str]:
@@ -452,8 +452,14 @@ class SearchTable:
         BASELINE.md §r15). Any precondition failure falls back silently
         to the scan plan; results are identical either way. ``None``
         (default) disables routing.
+
+        Returns a NEW table with an empty plan cache and width memo; the
+        receiver is left untouched (its cached plans embed its own
+        routing), so callers chain on the return value.
         """
-        self._index = (
+        new = copy.copy(self)
+        new._init_caches()
+        new._index = (
             index_df,
             set(fields),
             tuple(id_cols),
@@ -461,24 +467,8 @@ class SearchTable:
             max_selectivity,
             broadcast_max_docs,
         )
-        self._two_phase_min_bytes = two_phase_min_doc_bytes
-        # a (re)attach is the library user's "the store changed" signal
-        # (the server re-attaches after refresh_index): drop the memoized
-        # doc width so routing decisions track the current store rather
-        # than the first-ever sample (the server additionally TTLs this)
-        self.clear_width_cache()
-        return self
-
-    def clear_width_cache(self) -> None:
-        """Invalidate the memoized :meth:`avg_doc_bytes` sample AND the
-        prepared-plan cache. Called automatically by :meth:`attach_index`;
-        long-lived library holders of a table over a growing/compacting
-        store can also call it directly (the server layer instead
-        re-samples on a 30 s TTL)."""
-        self._avg_doc_bytes_cache = ()
-        with self._plan_cache_lock:
-            self._plan_cache.clear()
-            self._plan_cache_epoch += 1
+        new._two_phase_min_bytes = two_phase_min_doc_bytes
+        return new
 
     def _index_leaf(self, node) -> Optional[tuple]:
         """(field, exact_token_or_None, prefix, like_pattern_or_None) when
@@ -737,22 +727,17 @@ class SearchTable:
     @classmethod
     def from_store(cls, store, mapping: Mapping, **kw) -> "SearchTable":
         """Open a :class:`seqspark.store.DocStore` (or
-        :class:`~seqspark.store.TieredStore`) for search, wiring the
+        :class:`~seqspark.store.TieredStore`) for search — or a
+        :class:`~seqspark.store.StoreSnapshot` already taken of one, as
+        the server passes its request's. The table reads exactly that
+        snapshot: hot-only when it is partial (cold tier down). Wires the
         store's ``bucket_fmt`` so request time ranges prune whole bucket
-        directories (PartitionFilters). Before round 7 only
-        ``store.search_table`` passed the hint — the HTTP/gRPC server
-        built its table through here and silently scanned every bucket's
-        footers on time-ranged queries."""
-        kw.setdefault("bucket_fmt", store.bucket_fmt)
-        if hasattr(store, "read_with_status"):
-            # tiered store: a down cold tier degrades to hot-only results
-            # marked partial (the reference's PARTIAL_RESPONSE semantics)
-            df, partial = store.read_with_status()
-        else:
-            df, partial = store.read(), False
-        st = cls.from_docs(df, mapping, **kw)
-        st.partial = partial
-        return st
+        directories (PartitionFilters)."""
+        from .store import StoreSnapshot
+
+        snap = store if isinstance(store, StoreSnapshot) else store.snapshot()
+        kw.setdefault("bucket_fmt", snap.store.bucket_fmt)
+        return cls.from_docs(snap.read(), mapping, **kw)
 
     @classmethod
     def from_docs(
@@ -1068,10 +1053,9 @@ class SearchTable:
         if size is not None and size > MAX_SEARCH_DOCS:
             raise ValueError(f"size {size} exceeds max-search-docs {MAX_SEARCH_DOCS}")
         # prepared-plan cache: only when index routing is fully off — a
-        # routed two_phase frame embeds an EXECUTED phase-1 id page and a
-        # cached scan route could pin a decision the width TTL would
-        # revisit; the un-indexed scan plan has neither concern (and can
-        # never route: _route_two_phase needs an index)
+        # routed two_phase frame embeds an EXECUTED phase-1 id page; the
+        # un-indexed scan plan does not (and can never route:
+        # _route_two_phase needs an index)
         cacheable = self._index is None and self._two_phase_min_bytes is None
         routed = None if cacheable else self._route_two_phase(
             q, from_ms, to_ms, size, offset, order, dedup_cols, dialect
@@ -1104,10 +1088,15 @@ class SearchTable:
         same channel as DocStore's footer row counts): ZERO Spark jobs,
         works on any Hadoop filesystem. ``None`` when the frame is not
         file-backed (nothing to sample) or the metadata read fails —
-        callers must treat that as "width unknown", never as narrow."""
-        if self._avg_doc_bytes_cache:
+        callers must treat that as "width unknown", never as narrow.
+        Sampled at most once per table: its file listing is fixed."""
+        with self._width_lock:
+            if not self._avg_doc_bytes_cache:
+                self._avg_doc_bytes_cache = (
+                    self._sample_doc_bytes(sample_files),)
             return self._avg_doc_bytes_cache[0]
-        value: Optional[float] = None
+
+    def _sample_doc_bytes(self, sample_files: int) -> Optional[float]:
         try:
             files = [f for f in self.df.inputFiles()
                      if f.endswith(".parquet")]
@@ -1131,11 +1120,10 @@ class SearchTable:
                     finally:
                         reader.close()
                 if total_r:
-                    value = total_b / total_r
+                    return total_b / total_r
         except Exception:
-            value = None
-        self._avg_doc_bytes_cache = (value,)
-        return value
+            pass
+        return None
 
     def _route_two_phase(
         self,
@@ -1729,7 +1717,7 @@ class SearchTable:
     #: not accumulate DataFrame handles without bound
     _AGG_PLAN_BUFFER_CAP = 32
     #: prepared-plan cache entries per table (search + aggregate shapes);
-    #: LRU-evicted, cleared by clear_width_cache()/attach_index()
+    #: LRU-evicted, never invalidated
     _PLAN_CACHE_CAP = 64
     #: class-level lock: append (aggregate) and drain race under the
     #: server's concurrent searchers — an unsynchronized read-modify-write
@@ -1745,28 +1733,31 @@ class SearchTable:
         one. The buffer keeps the most recent 32 frames; a server that
         never drains stays bounded."""
         with self._agg_plan_lock:
-            out = getattr(self, "_agg_plan_dfs", [])
+            out = self._agg_plan_dfs
             self._agg_plan_dfs = []
         return out
 
     def _cached_plan(self, key: tuple, build):
         """The prepared-plan cache: the cached construction for ``key``,
-        else ``build()``'s. A fresh construction is inserted only if no
-        invalidation (:meth:`clear_width_cache`, :meth:`attach_index`)
-        fired while it was built — a plan embedding a superseded posting
-        semi-join must never outlive the invalidation."""
+        else ``build()``'s.
+
+        A table's file listing is fixed when it is built (Spark fixes a
+        DataFrame's file index at analysis; the server builds one table
+        per store snapshot), so a cached frame reads exactly what a fresh
+        construction would. That is also why re-executing a cached frame
+        may reuse its already-written shuffle output instead of
+        rescanning. Nothing mutates a published table — a changed store
+        or index yields a NEW table — so an entry never goes stale."""
         with self._plan_cache_lock:
             hit = self._plan_cache.get(key)
             if hit is not None:
                 self._plan_cache.move_to_end(key)
                 return hit[0]
-            epoch = self._plan_cache_epoch
         built = build()
         with self._plan_cache_lock:
-            if self._plan_cache_epoch == epoch:
-                self._plan_cache[key] = (built,)
-                while len(self._plan_cache) > self._PLAN_CACHE_CAP:
-                    self._plan_cache.popitem(last=False)
+            self._plan_cache[key] = (built,)
+            while len(self._plan_cache) > self._PLAN_CACHE_CAP:
+                self._plan_cache.popitem(last=False)
         return built
 
     @staticmethod
@@ -1781,7 +1772,7 @@ class SearchTable:
         """Record the frame an aggregate executed behind its LocalRelation
         result (see :meth:`drain_agg_plan_dfs`)."""
         with self._agg_plan_lock:
-            buf = getattr(self, "_agg_plan_dfs", [])
+            buf = self._agg_plan_dfs
             buf.append(frame)
             self._agg_plan_dfs = buf[-self._AGG_PLAN_BUFFER_CAP:]
 

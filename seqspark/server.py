@@ -48,7 +48,7 @@ from .engine import SearchTable
 from .ingest import make_ingest_transform
 from .mapping import Mapping
 from .ratelimit import RateLimiter, fetch_key, search_key
-from .store import DocStore
+from .store import DocStore, StoreSnapshot
 from .streaming import AsyncSearcher
 
 #: reference `consts/consts.go:50` IngestorMaxInflightBulks
@@ -176,12 +176,11 @@ class SeqSparkServer:
         # transport — HTTP here, gRPC + the gateway through this core
         # (the reference's wire architecture IS search→fetch,
         # `proxy/search/ingestor.go:140-151`). The width signal is a
-        # driver-side footer read, memoized below with a short TTL: a
-        # stale width only flips a plan heuristic, never a result.
+        # driver-side footer read, sampled once per table: a stale width
+        # only flips a plan heuristic, never a result.
         self._store_index = index
         self._two_phase_min_doc_bytes = two_phase_min_doc_bytes
-        self._width_cache: Optional[tuple] = None  # (expires_mono, value)
-        #: generation-keyed SearchTable memo: (key, mapping, table) —
+        #: snapshot-keyed SearchTable memo: (key, mapping, table) —
         #: see :meth:`_table`. Tuple assignment is atomic under the GIL;
         #: two racing builders both build lazy state and one wins.
         self._st_memo: Optional[tuple] = None
@@ -238,7 +237,10 @@ class SeqSparkServer:
                 if self.path == "/":
                     return self._json(200, outer._banner)
                 if self.path == "/status":
-                    return self._json(200, outer.status())
+                    try:
+                        return self._json(200, outer.status())
+                    except Exception as e:  # a failed read: report it
+                        return self._json(500, {"error": str(e)})
                 if self.path == "/mappings" or self.path.startswith(
                     "/async-search/"
                 ):
@@ -775,10 +777,24 @@ class SeqSparkServer:
 
         threading.Thread(target=run, daemon=True).start()
 
-    def _check_fractions(self, req: dict) -> None:
-        self.store.check_fraction_hits(
+    def _snapshot(self, req: dict) -> StoreSnapshot:
+        """The request's one store snapshot, admitted against
+        `--search-fraction-limit` on its own listing."""
+        snap = self.store.snapshot()
+        snap.check_fraction_hits(
             req.get("from_ms"), req.get("to_ms"), self._max_fraction_hits
         )
+        return snap
+
+    def _flag_partial(self, out: dict, snap: StoreSnapshot) -> dict:
+        """Mark a response served from a partial snapshot (cold tier
+        down): it carries what was reachable, flagged like the
+        reference's proxy marking a store error
+        (`grpc_complex_search.go:54`)."""
+        if snap.partial:
+            out["partial_response"] = True
+            self._count("partial_responses_total")
+        return out
 
     #: exception markers for reads that raced a compaction swap or
     #: retention delete mid-task. ignoreMissingFiles covers clean
@@ -848,7 +864,6 @@ class SeqSparkServer:
         never holds the result set. Both transports build on this: the
         HTTP surface JSON-encodes each row, the gRPC surface
         protobuf-encodes — neither pays the other's serialization."""
-        self._check_fractions(req)
         size = req.get("size")
         size = None if size is None else int(size)
         offset = self._int_or(req, "offset", 0)
@@ -869,8 +884,8 @@ class SeqSparkServer:
         # FileNotFoundException at plan-build time (r13 stress catch) —
         # transient by construction, exactly like a mid-task read race.
         def _first_plan():
-            st0 = self._table()
-            if st0.partial:
+            snap = self._snapshot(req)
+            if snap.partial:
                 # search degrades to partial results; an EXPORT is a
                 # completeness contract (backup/ETL) — a drain that would
                 # silently omit the entire cold history must fail loudly
@@ -878,7 +893,7 @@ class SeqSparkServer:
                     "export requires the full store: cold tier unreachable "
                     "(search still serves partial results)"
                 )
-            return st0.search(
+            return self._table(snap).search(
                 q, size=size, offset=offset, order=order, **kw
             ).select("mid", "rid", "raw")
 
@@ -911,8 +926,8 @@ class SeqSparkServer:
                         # the NEXT swap (a bucket dir is briefly absent
                         # between compaction's two renames, r13 stress
                         # catch) and must count as a stall, not escape
-                        st = self._table()
-                        if st.partial:
+                        snap = self.store.snapshot()
+                        if snap.partial:
                             # cold tier went dark MID-DRAIN: resuming
                             # would silently omit its rows — abort (the
                             # missing end sentinel / stream error marks
@@ -922,6 +937,7 @@ class SeqSparkServer:
                                 "export aborted: cold tier became "
                                 "unreachable mid-drain"
                             )
+                        st = self._table(snap)
                         if cursor is None:
                             docs = st.search(
                                 q, size=size, offset=offset, order=order,
@@ -1248,49 +1264,41 @@ class SeqSparkServer:
         if my_exc is not None:
             raise my_exc
 
-    def _table(self) -> SearchTable:
-        """The serving SearchTable, memoized on the store's MUTATION
-        GENERATION (r18). Building one costs ~100+ ms of file listing +
-        py4j per request, and the per-request rebuild also meant the
-        engine's prepared-plan cache never engaged on the serving path
-        (a fresh instance each time). The store bumps its generation
-        after every visible mutation — append, compact swap, retention
-        drop, tier rotation, cold-tier reachability flip — so a hit
-        serves exactly the file listing a fresh build would pin, and a
-        bulk acked before this request is ALWAYS visible (its append
-        bumped the generation before returning). Also keyed on mapping
-        identity (live mapping reloads swap the object) and the index
-        arm state (append staleness disarms; refresh_index re-arms).
-        Request-local state stays request-local: ``st.route`` is
+    def _table(self, snap: Optional[StoreSnapshot] = None) -> SearchTable:
+        """The serving SearchTable for ``snap`` (default: a snapshot taken
+        now), memoized on (snapshot key, mapping identity, index arm
+        state). Building one costs ~100+ ms of file listing + py4j, and a
+        per-request rebuild would also keep the engine's prepared-plan
+        cache from ever engaging (a fresh instance each time). The key
+        moves with every visible mutation (the store bumps its generation
+        after append, compact swap, retention drop and tier rotation, so a
+        bulk acked before this request is ALWAYS visible), with cold-tier
+        reachability (the snapshot probes it), with live mapping reloads
+        (a new object) and with the index arm state (append staleness
+        disarms; refresh_index re-arms). A hit serves exactly the listing
+        a fresh build would read. Request-local state stays request-local:
+        ``partial`` comes from the request's snapshot, ``st.route`` is
         thread-local in the engine, and a transient read failure
         invalidates the memo before the replan (:meth:`_retry_transient`)
         so external/raced file changes can never pin a stale listing."""
-        gen = self.store.generation
+        if snap is None:
+            snap = self.store.snapshot()
         armed = (self._store_index is not None
                  and self._index_fresh_seq == self._index_append_seq)
-        key = (gen, armed, self._index_fresh_seq if armed else None)
+        key = (snap.key, armed, self._index_fresh_seq if armed else None)
         m = self.mapping
         cached = self._st_memo
         if cached is not None and cached[0] == key and cached[1] is m:
-            st = cached[2]
-        else:
-            st = SearchTable.from_store(
-                self.store, m, case_sensitive=self._case_sensitive
-            )
-            if armed:
-                st = self._store_index.attach_to(
-                    st,
-                    two_phase_min_doc_bytes=self._two_phase_min_doc_bytes,
-                )
-            self._st_memo = (key, m, st)
+            return cached[2]
+        st = SearchTable.from_store(
+            snap, m, case_sensitive=self._case_sensitive
+        )
         if armed:
-            now = time.monotonic()
-            if self._width_cache is None or self._width_cache[0] < now:
-                # force a fresh sample on TTL expiry: the memoized
-                # table's own width memo would otherwise answer forever
-                st._avg_doc_bytes_cache = ()
-                self._width_cache = (now + 30.0, st.avg_doc_bytes())
-            st._avg_doc_bytes_cache = (self._width_cache[1],)
+            st = self._store_index.attach_to(
+                st,
+                two_phase_min_doc_bytes=self._two_phase_min_doc_bytes,
+            )
+        self._st_memo = (key, m, st)
         return st
 
     def _invalidate_table(self) -> None:
@@ -1315,15 +1323,14 @@ class SeqSparkServer:
         # full-index rebuild per pass
         self._store_index.refresh_stale()
         self._index_fresh_seq = seq
-        self._width_cache = None
         return self._index_fresh_seq == self._index_append_seq
 
     def search(self, req: dict) -> dict:
         return self._retry_transient(lambda: self._search_impl(req))
 
     def _search_impl(self, req: dict) -> dict:
-        self._check_fractions(req)
-        st = self._table()
+        snap = self._snapshot(req)
+        st = self._table(snap)
         docs = st.search(
             req.get("query", "*"),
             from_ms=req.get("from_ms"),
@@ -1350,13 +1357,7 @@ class SeqSparkServer:
             ).collect()[0]["total"]
         if req.get("explain"):
             out["explain"] = self._explain_of(st, req)
-        if st.partial:
-            # degraded store read (cold tier down): results carry what
-            # was reachable, flagged like the reference's proxy marking
-            # a store error (`grpc_complex_search.go:54`)
-            out["partial_response"] = True
-            self._count("partial_responses_total")
-        return out
+        return self._flag_partial(out, snap)
 
     @staticmethod
     def _explain_of(st: SearchTable, req: dict) -> str:
@@ -1386,8 +1387,8 @@ class SeqSparkServer:
         from the table's plan cache (:meth:`SearchTable.complex_search`)."""
         from .engine import AggQuery
 
-        self._check_fractions(req)
-        st = self._table()
+        snap = self._snapshot(req)
+        st = self._table(snap)
         aggs = [
             AggQuery(
                 func=a["func"],
@@ -1430,10 +1431,7 @@ class SeqSparkServer:
         ]
         if req.get("explain"):
             out["explain"] = self._explain_of(st, req)
-        if st.partial:
-            out["partial_response"] = True
-            self._count("partial_responses_total")
-        return out
+        return self._flag_partial(out, snap)
 
     def fetch(self, req: dict) -> dict:
         return self._retry_transient(lambda: self._fetch_impl(req))
@@ -1446,7 +1444,8 @@ class SeqSparkServer:
         default, block-list with ``"except": true``)."""
         from .seqql.ast import PipeFields
 
-        st = self._table()
+        snap = self.store.snapshot()
+        st = self._table(snap)
         ids = req.get("ids", [])
         spark = self.spark
         ids_df = spark.createDataFrame(
@@ -1464,19 +1463,20 @@ class SeqSparkServer:
                 for r in docs.collect()
             ]
         }
-        if st.partial:
-            # a fetched id whose doc lives in the dark cold tier is
-            # missing from the result — mark it, like search
-            out["partial_response"] = True
-            self._count("partial_responses_total")
-        return out
+        # a fetched id whose doc lives in the dark cold tier is missing
+        # from the result — mark it, like search
+        return self._flag_partial(out, snap)
 
     def status(self) -> dict:
-        try:
-            return self._table().status()
-        except Exception:  # empty store has no parquet yet
-            return {"docs": 0, "oldest_ms": None, "newest_ms": None,
-                    "fields": {}}
+        """Doc count + time bounds of the request's snapshot (an empty
+        store reads as an empty frame: ``docs: 0``). A transient read
+        race with maintenance replans; any other failure propagates
+        rather than reporting a non-empty store as empty."""
+        def run():
+            snap = self.store.snapshot()
+            return self._flag_partial(self._table(snap).status(), snap)
+
+        return self._retry_transient(run)
 
     # --------------------------------------------------------- async search
 

@@ -21,12 +21,14 @@ S3/GCS object stores — where a 100 TB store actually lives. No ``os.*`` /
 
 from __future__ import annotations
 
+import functools
 import json
 import logging
 import os
 import threading
 from contextlib import contextmanager
-from typing import Optional
+from dataclasses import dataclass, field
+from typing import Callable, Optional
 
 logger = logging.getLogger(__name__)
 
@@ -239,24 +241,63 @@ class TooManyFractionsHit(ValueError):
     an unbounded time range from fanning a search over the whole store."""
 
 
-def _filter_buckets_in_range(buckets, label_of, from_ms, to_ms):
-    """Shared range filter for both store kinds: partitions whose label
-    overlaps [from_ms, to_ms], lexicographic on monotone labels."""
-    if from_ms is not None:
-        lo = label_of(from_ms)
-        buckets = [b for b in buckets if b >= lo]
-    if to_ms is not None:
-        hi = label_of(to_ms)
-        buckets = [b for b in buckets if b <= hi]
-    return buckets
+@dataclass(frozen=True)
+class StoreSnapshot:
+    """The store state one request reads, fixed when the request starts —
+    seq-db picks a search's sealed fraction list once per request
+    (`fracmanager/searcher.go:88-97`). Everything store-dependent a
+    request serves (fraction admission, the memoized table, the
+    PARTIAL_RESPONSE flag) derives from ONE snapshot:
 
+    - ``key``: the store's in-process mutation generation plus
+      ``partial``. Equal keys mean equal serving state, so a table
+      built from one snapshot serves any request whose snapshot has the
+      same key;
+    - ``buckets``: the owned bucket labels (sorted), from the root LIST;
+    - ``partial``: the cold tier failed this snapshot's LIST probe, so
+      :meth:`read` serves the hot window only.
 
-def _check_fraction_hits(n: int, max_fraction_hits: int) -> None:
-    if max_fraction_hits > 0 and n > max_fraction_hits:
-        raise TooManyFractionsHit(
-            f"too many fractions hit ({n} > {max_fraction_hits}), "
-            "try decreasing query time range"
-        )
+    The generation observes only writers in this process: one process
+    owns a store (see ``_GENERATIONS``)."""
+
+    store: object
+    key: tuple
+    buckets: tuple
+    partial: bool
+    #: the frame this snapshot lists (hot-only when partial)
+    read: Callable[[], DataFrame] = field(repr=False, compare=False)
+
+    def buckets_in_range(
+        self, from_ms: Optional[int], to_ms: Optional[int]
+    ) -> list[str]:
+        """Buckets a time window can touch — a driver-side metadata
+        filter (lexicographic compare on monotone labels, zero Spark
+        jobs), the `FilterInRange` of `fracmanager/searcher.go:89`."""
+        out = list(self.buckets)
+        if from_ms is not None:
+            lo = self.store._bucket_label(from_ms)
+            out = [b for b in out if b >= lo]
+        if to_ms is not None:
+            hi = self.store._bucket_label(to_ms)
+            out = [b for b in out if b <= hi]
+        return out
+
+    def check_fraction_hits(
+        self,
+        from_ms: Optional[int],
+        to_ms: Optional[int],
+        max_fraction_hits: int,
+    ) -> None:
+        """`--search-fraction-limit` (default 6000, `cmd/seq-db/flags.go:
+        61`): refuse a search whose window overlaps more buckets than the
+        limit (0 disables), with the reference's exact remedy message."""
+        if max_fraction_hits > 0:
+            n = len(self.buckets_in_range(from_ms, to_ms))
+            if n > max_fraction_hits:
+                raise TooManyFractionsHit(
+                    f"too many fractions hit ({n} > {max_fraction_hits}), "
+                    "try decreasing query time range"
+                )
 
 
 #: java date_format pattern -> strftime, for the four monotone shapes
@@ -593,12 +634,10 @@ class DocStore:
         """A :class:`~seqspark.engine.SearchTable` over this store with
         time-bucket partition pruning wired (the store knows its own
         ``bucket_fmt``, so request time ranges prune whole bucket
-        directories)."""
+        directories) — :meth:`SearchTable.from_store` over a snapshot."""
         from .engine import SearchTable
 
-        return SearchTable.from_docs(
-            self.read(), mapping, bucket_fmt=self.bucket_fmt, **kwargs
-        )
+        return SearchTable.from_store(self, mapping, **kwargs)
 
     # ---------------------------------------------------- bucket-pruned page
 
@@ -681,29 +720,13 @@ class DocStore:
         t = _dt.datetime.fromtimestamp(ms / 1000.0, tz=tz)
         return t.strftime(_FMT_TO_STRFTIME[self.bucket_fmt])
 
-    def buckets_in_range(
-        self, from_ms: Optional[int], to_ms: Optional[int]
-    ) -> list[str]:
-        """Partitions a time window can touch — a driver-side metadata
-        filter (listing + lexicographic compare, zero Spark jobs), the
-        `FilterInRange` of `fracmanager/searcher.go:89`."""
-        return _filter_buckets_in_range(
-            self.partitions(), self._bucket_label, from_ms, to_ms
-        )
-
-    def check_fraction_hits(
-        self,
-        from_ms: Optional[int],
-        to_ms: Optional[int],
-        max_fraction_hits: int,
-    ) -> None:
-        """`--search-fraction-limit` (default 6000, `cmd/seq-db/flags.go:
-        61`): refuse a search whose window overlaps more partitions than
-        the limit, with the reference's exact remedy message."""
-        if max_fraction_hits > 0:
-            _check_fraction_hits(
-                len(self.buckets_in_range(from_ms, to_ms)), max_fraction_hits
-            )
+    def snapshot(self) -> StoreSnapshot:
+        """One request's view of the store (:class:`StoreSnapshot`): the
+        generation, then the root LIST. Reading the generation FIRST
+        means the listing is never older than its key."""
+        key = (self.generation, False)
+        return StoreSnapshot(self, key, tuple(self.partitions()), False,
+                             self.read)
 
     # ------------------------------------------------------------- retention
 
@@ -864,9 +887,11 @@ class TieredStore:
         self.spark = hot.spark
         #: server-facing attributes so a TieredStore drops into
         #: SeqSparkServer/SeqProxyGrpc anywhere a DocStore does: the async
-        #: job dir and metadata live with the hot tier
+        #: job dir and metadata live with the hot tier; both tiers share
+        #: bucket_fmt and timezone, so the hot tier's labeler applies
         self.bucket_fmt = hot.bucket_fmt
         self.path = hot.path
+        self._bucket_label = hot._bucket_label
         #: rotation tombstones: buckets hot retention has dropped. A
         #: shipper writing an old timestamp AFTER rotation re-creates the
         #: bucket in hot with only the post-rotation rows — but cold's
@@ -876,26 +901,14 @@ class TieredStore:
         #: from reads (found by the tiered burn-in).
         raw = hot._fs.read_text(hot._fs.path(self.ROTATED_FILE))
         self._rotated: set = set(json.loads(raw)) if raw else set()
-        #: last observed cold-tier reachability; a TRANSITION (up→down or
-        #: down→up) changes what read_with_status serves (full vs
-        #: partial hot-only), so it must invalidate memoized tables like
-        #: any other mutation — observed by partitions(), which the
-        #: server's per-request fraction check already calls
-        self._cold_reachable = True
 
     @property
     def generation(self) -> int:
         """Mutation generation across both tiers (each tier's shared
         per-path counter; sums of monotone counters are monotone).
-        Tombstone updates and cold-reachability flips bump the hot/cold
-        counters respectively, so every state change that affects
-        :meth:`read_with_status` moves this value."""
+        Tombstone updates bump the hot counter. Cold reachability is not
+        a mutation: :meth:`snapshot` probes it per request."""
         return _generation(self.hot.path) + _generation(self.cold.path)
-
-    def _note_cold_reachability(self, reachable: bool) -> None:
-        if self._cold_reachable != reachable:
-            self._cold_reachable = reachable
-            _bump_generation(self.cold.path)
 
     def _persist_rotated(self) -> None:
         self.hot._fs.write_text(
@@ -914,58 +927,57 @@ class TieredStore:
         self.cold.append(df, ts_col)
 
     def read(self) -> DataFrame:
-        return self.read_with_status()[0]
+        return self.snapshot().read()
 
-    def read_with_status(self) -> tuple:
-        """(frame, partial): union of (all hot partitions) + (cold
-        partitions the hot tier does NOT hold). Ownership is by bucket
-        MEMBERSHIP, not a `< oldest_hot` threshold: a late-arriving old
-        doc (within the ingest drift allowance) can create a hot bucket
-        OLDER than buckets hot retention already dropped, and a threshold
-        would then silently exclude those retained-away buckets from BOTH
-        tiers. The isin literal list still prunes cold's partition
-        listing (hot holds a bounded recent window, so the list stays
-        small).
+    def snapshot(self) -> StoreSnapshot:
+        """One request's view of both tiers: the generation, the hot
+        LIST, then an EXPLICIT cold-tier LIST probe. Owned buckets are
+        the union of hot's and the cold-only tail (:meth:`_read_owned`).
 
-        ``partial`` is True when the COLD tier is unreachable (remote
-        long-term storage down): the hot tier's window still serves, and
-        the caller surfaces the degradation as the reference's
+        ``partial`` is True when the cold LIST fails (remote long-term
+        storage down): the snapshot reads the hot window only, and the
+        caller surfaces the degradation as the reference's
         PARTIAL_RESPONSE ("some of the seq-stores returned an error",
         `seq_proxy_api.proto` ErrorCode) instead of failing every query
-        against the healthy recent window.
-
-        Detection is at PLAN time (listing/schema read) — the common
-        shape of a down filesystem. A partial outage where LIST works
-        but reads fail at task execution surfaces as a query error, not
-        a partial result (classifying executor-side causes would need
-        task-failure introspection)."""
+        against the healthy recent window. The hot side must list
+        cleanly — its failure propagates. Detection is at LIST time, the
+        common shape of a down filesystem; a partial outage where LIST
+        works but reads fail surfaces as a query error, not a partial
+        result."""
+        gen = self.generation
         hot_parts = self.hot.partitions()
         try:
-            out = self._read_owned(hot_parts), False
-            self._note_cold_reachability(True)
-            return out
+            cold_parts = self.cold.partitions()
         except Exception:
-            # distinguish "cold tier down" from any other failure: the
-            # hot side must list cleanly for the degraded path to apply
-            try:
-                self.cold.partitions()
-            except Exception:
-                logger.warning(
-                    "cold tier at %s unreachable; serving hot-only "
-                    "(partial)", self.cold.path,
-                )
-                self._note_cold_reachability(False)
-                return self.hot.read(), True
-            raise
+            logger.warning(
+                "cold tier at %s unreachable; serving hot-only (partial)",
+                self.cold.path,
+            )
+            return StoreSnapshot(self, (gen, True), tuple(hot_parts), True,
+                                 self.hot.read)
+        hot_set = set(hot_parts)
+        owned = sorted([b for b in cold_parts if b not in hot_set] + hot_parts)
+        return StoreSnapshot(
+            self, (gen, False), tuple(owned), False,
+            functools.partial(self._read_owned, hot_parts, bool(cold_parts)),
+        )
 
-    def _read_owned(self, hot_parts) -> DataFrame:
+    def _read_owned(self, hot_parts: list, cold_listed: bool) -> DataFrame:
+        """Union of (all hot partitions) + (cold partitions the hot tier
+        does NOT hold). Ownership is by bucket MEMBERSHIP, not a
+        `< oldest_hot` threshold: a late-arriving old doc (within the
+        ingest drift allowance) can create a hot bucket OLDER than
+        buckets hot retention already dropped, and a threshold would then
+        silently exclude those retained-away buckets from BOTH tiers. The
+        isin literal list still prunes cold's partition listing (hot
+        holds a bounded recent window, so the list stays small)."""
         # ownership: hot's buckets MINUS rotation tombstones — a bucket
         # hot once dropped is served by cold even if late/cycling writes
         # re-created a (partial) hot copy
         owned_hot = [b for b in hot_parts if b not in self._rotated]
         if not owned_hot:
             return self.cold.read()
-        if not self.cold.partitions():
+        if not cold_listed:
             # symmetric short-circuit: an emptied cold tier (regulatory
             # cold_min_bucket deletes) reads as the synthetic empty-store
             # frame, whose fixed schema cannot union with a hot tier that
@@ -989,63 +1001,16 @@ class TieredStore:
             raise
 
     def partitions(self) -> list[str]:
-        hot_parts = self.hot.partitions()
-        try:
-            cold_parts = self.cold.partitions()
-            self._note_cold_reachability(True)
-        except Exception:
-            # cold tier unreachable: admission checks and bucket math run
-            # on the reachable window (read_with_status marks the
-            # degradation on the response path). The reachability flip
-            # bumps the generation so a memoized full-store table is
-            # rebuilt (degraded, partial) instead of erroring on every
-            # read of the dark tier's files
-            logger.warning(
-                "cold tier at %s unreachable; partitions() serving "
-                "hot-only", self.cold.path,
-            )
-            self._note_cold_reachability(False)
-            return sorted(hot_parts)
-        hot_set = set(hot_parts)
-        cold_only = [b for b in cold_parts if b not in hot_set]
-        return sorted(cold_only + hot_parts)
+        """Owned buckets across both tiers; hot-only while the cold tier
+        is unreachable (admission and bucket math run on the reachable
+        window)."""
+        return list(self.snapshot().buckets)
 
-    def buckets_in_range(
-        self, from_ms: Optional[int], to_ms: Optional[int]
-    ) -> list[str]:
-        """Owned partitions a time window can touch (hot labels + the
-        cold-only tail) — same driver-side metadata filter as
-        :meth:`DocStore.buckets_in_range` (both tiers share bucket_fmt
-        and timezone, so the hot tier's labeler applies)."""
-        return _filter_buckets_in_range(
-            self.partitions(), self.hot._bucket_label, from_ms, to_ms
-        )
-
-    def check_fraction_hits(
-        self,
-        from_ms: Optional[int],
-        to_ms: Optional[int],
-        max_fraction_hits: int,
-    ) -> None:
-        """`--search-fraction-limit` across BOTH tiers' owned buckets."""
-        if max_fraction_hits > 0:
-            _check_fraction_hits(
-                len(self.buckets_in_range(from_ms, to_ms)), max_fraction_hits
-            )
-
-    def search_table(self, mapping, **kwargs):
-        """A SearchTable over the tiered union (hot + cold-only tail),
-        with time-bucket pruning wired — mirrors
-        :meth:`DocStore.search_table`."""
-        from .engine import SearchTable
-
-        return SearchTable.from_docs(
-            self.read(), mapping, bucket_fmt=self.bucket_fmt, **kwargs
-        )
+    search_table = DocStore.search_table
 
     def owner_store(self, bucket: str) -> DocStore:
         """The tier whose copy of ``bucket`` is AUTHORITATIVE for reads
-        (exactly :meth:`read_with_status`'s ownership rule): cold for
+        (exactly :meth:`_read_owned`'s ownership rule): cold for
         tombstoned (rotated) buckets — a late append can re-create them
         in hot with only post-rotation rows — else hot while it holds
         the bucket, else cold. `StoreIndex` resolves per-bucket data

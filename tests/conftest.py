@@ -67,13 +67,13 @@ def caps(monkeypatch):
     def set_caps(st, group=group0, field=field0):
         monkeypatch.setattr(engine, "AGG_MAX_GROUP_TOKENS", group)
         monkeypatch.setattr(engine, "AGG_MAX_FIELD_TOKENS", field)
-        st.clear_width_cache()
+        st._plan_cache.clear()
         tables.append(st)
 
     yield set_caps
     monkeypatch.undo()
     for st in tables:
-        st.clear_width_cache()
+        st._plan_cache.clear()
 
 
 @pytest.fixture(scope="session")

@@ -359,7 +359,7 @@ def test_complex_reuses_cached_construction_and_job_budget(spark, plain):
         builds.append(1)
         return orig(*a, **kw)
 
-    plain.clear_width_cache()
+    plain._plan_cache.clear()
     plain._fused_build = counting
     try:
         kw = dict(with_total=True, hist_interval_ms=60_000, aggs=AGGS[:6])
@@ -383,14 +383,6 @@ def test_complex_reuses_cached_construction_and_job_budget(spark, plain):
         assert len(builds) == 2
     finally:
         del plain._fused_build
-
-
-def test_complex_plan_cache_respects_epoch(plain):
-    aggs = [AggQuery(func="count", field="svc")]
-    plain.complex_search(with_total=True, aggs=aggs)
-    assert any(k[0] == "complex" for k in plain._plan_cache)
-    plain.clear_width_cache()
-    assert not any(k[0] == "complex" for k in plain._plan_cache)
 
 
 def test_total_uses_plan_cache(plain):

@@ -432,7 +432,7 @@ def test_fraction_hits_guard(rig, spark):
     `parseProxyError`); a narrow window still works."""
     core, _, _ = rig
     # the rig's docs span 3 hourly buckets (10:00/11:00/12:00)
-    assert len(core.store.buckets_in_range(None, None)) == 4 or True
+    assert len(core.store.snapshot().buckets_in_range(None, None)) == 4 or True
     capped = SeqSparkServer(
         spark, core.store, MAPPING, allowed_drift_ms=BIG,
         future_drift_ms=BIG, max_fraction_hits=1,

@@ -698,7 +698,7 @@ def test_two_phase_conf_ownership_knob(spark, tmp_path):
     """r17 (ADVICE): ``own_in_filter_threshold = False`` opts out of the
     sticky session-conf raise — results identical, conf untouched — for
     deployments that manage the In threshold themselves. Also pins that
-    attach_index() invalidates the memoized avg_doc_bytes sample."""
+    attach_index() returns a new table that samples avg_doc_bytes anew."""
     from seqspark import SearchTable
 
     rows = [(1_700_000_000_000 + i * 1000, i,
@@ -726,11 +726,13 @@ def test_two_phase_conf_ownership_knob(spark, tmp_path):
         assert out.count() == 15
     finally:
         spark.conf.set(thr, old)
-    # attach_index clears the width memo (library-user staleness hook)
-    st._avg_doc_bytes_cache = (123.0,)
-    st.attach_index(idx, ["text"], ["mid", "rid"])
-    assert st._avg_doc_bytes_cache == ()
-    assert st.avg_doc_bytes() is not None  # re-samples from footers
+    # a re-attach is a new table with its own width memo; the receiver
+    # keeps its sample
+    width = st.avg_doc_bytes()
+    st2 = st.attach_index(idx, ["text"], ["mid", "rid"])
+    assert st2 is not st and st2._avg_doc_bytes_cache == ()
+    assert st2.avg_doc_bytes() == width  # re-samples from footers
+    assert st._avg_doc_bytes_cache == (width,)
 
 
 def test_incremental_refresh_rebuilds_only_stale_buckets(spark, tmp_path):

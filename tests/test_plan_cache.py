@@ -2,9 +2,10 @@
 single-pass count+group_by `_not_exists` fold.
 
 The cache must be a pure plan-construction memo — identical results,
-same lazy object back, execution recomputed per call — and must be
-invalidated by the "store changed" signals. The count fold must produce
-the exact row set the old union shape produced, from ONE scan."""
+same lazy object back, execution recomputed per call. It is never
+invalidated: a new index means a new table with its own cache. The
+count fold must produce the exact row set the old union shape
+produced, from ONE scan."""
 
 from __future__ import annotations
 
@@ -45,11 +46,18 @@ def test_search_plan_cache_hits_and_matches(spark):
     assert [r["event_id"] for r in df3.collect()] == [4, 2]
 
 
-def test_search_plan_cache_cleared_by_width_cache(spark):
+def test_attach_index_returns_new_table_with_empty_cache(spark):
     st = _table(spark)
     df1 = st.search("grp:b")
-    st.clear_width_cache()
-    assert st.search("grp:b") is not df1, "invalidation must drop entries"
+    cached = dict(st._plan_cache)
+    idx = spark.createDataFrame([("b", 5)], "token string, event_id long")
+    routed = st.attach_index(idx, ["grp"], ["event_id"])
+    assert routed is not st
+    assert not routed._plan_cache and routed._index is not None
+    # the receiver is untouched: same routing, same cached frames
+    assert st._index is None
+    assert st._plan_cache == cached
+    assert st.search("grp:b") is df1
 
 
 def test_search_plan_cache_lru_bound(spark):
@@ -181,24 +189,3 @@ def test_concurrent_aggregate_execute(spark):
         t.join()
     assert not errors
     assert all(r == expected for r in results)
-
-
-def test_plan_cache_epoch_blocks_stale_insert(spark):
-    # r18 (advice): a clear_width_cache() firing between plan build and
-    # cache insert must win — the plan built against superseded state
-    # never enters the cache
-    st = _table(spark)
-    orig_build = st._fused_build
-
-    def build_then_invalidate(*a, **kw):
-        built = orig_build(*a, **kw)
-        st.clear_width_cache()  # concurrent attach_index analog
-        return built
-
-    st._fused_build = build_then_invalidate
-    st.aggregate(AggQuery(func="count", group_by="grp")).collect()
-    st._fused_build = orig_build
-    assert not st._plan_cache, "stale-epoch plan must not be cached"
-    # and the same request afterwards caches normally again
-    st.aggregate(AggQuery(func="count", group_by="grp")).collect()
-    assert st._plan_cache

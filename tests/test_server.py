@@ -1215,7 +1215,6 @@ def test_export_resumes_after_transient_read_failure(spark, tmp_path,
     class FlakyTable:
         def __init__(self, real):
             self._real = real
-            self.partial = False
 
         def search(self, *a, **k):
             searches["n"] += 1
@@ -1228,7 +1227,8 @@ def test_export_resumes_after_transient_read_failure(spark, tmp_path,
             searches["after"] = (a, k)
             return self._real.search_after(*a, **k)
 
-    monkeypatch.setattr(srv, "_table", lambda: FlakyTable(real_table()))
+    monkeypatch.setattr(srv, "_table",
+                        lambda snap=None: FlakyTable(real_table(snap)))
     got = list(srv.export_docs({"query": "*", "order": "asc"}))
     assert got == expected  # ordered, complete, no dup/loss
     assert "after" in searches  # resumed with the keyset cursor
@@ -1246,7 +1246,6 @@ def test_export_resume_respects_size_budget(spark, tmp_path, monkeypatch):
     class FlakyTable:
         def __init__(self, real):
             self._real = real
-            self.partial = False
 
         def search(self, *a, **k):
             searches["n"] += 1
@@ -1257,7 +1256,8 @@ def test_export_resume_respects_size_budget(spark, tmp_path, monkeypatch):
             searches["after"] = k
             return self._real.search_after(*a, **k)
 
-    monkeypatch.setattr(srv, "_table", lambda: FlakyTable(real_table()))
+    monkeypatch.setattr(srv, "_table",
+                        lambda snap=None: FlakyTable(real_table(snap)))
     got = list(srv.export_docs({"query": "*", "order": "asc", "size": 5}))
     assert got == expected[:5]
     assert searches["after"]["size"] == 2  # 5 requested - 3 yielded
@@ -1275,7 +1275,6 @@ def test_export_gives_up_without_progress(spark, tmp_path, monkeypatch):
     class AlwaysFlaky:
         def __init__(self, real):
             self._real = real
-            self.partial = False
 
         def search(self, *a, **k):
             return _FlakyDF(self._real.search(*a, **k), 0)
@@ -1283,7 +1282,8 @@ def test_export_gives_up_without_progress(spark, tmp_path, monkeypatch):
         def search_after(self, *a, **k):
             return _FlakyDF(self._real.search_after(*a, **k), 0)
 
-    monkeypatch.setattr(srv, "_table", lambda: AlwaysFlaky(real_table()))
+    monkeypatch.setattr(srv, "_table",
+                        lambda snap=None: AlwaysFlaky(real_table(snap)))
     with pytest.raises(RuntimeError, match="FAILED_READ_FILE"):
         list(srv.export_docs({"query": "*", "order": "asc"}))
 
@@ -1306,7 +1306,6 @@ def test_export_survives_compaction_burst_at_one_cursor(spark, tmp_path,
     class BurstFlaky:
         def __init__(self, real):
             self._real = real
-            self.partial = False
 
         def _wrap(self, df):
             if burst["left"] > 0:
@@ -1320,7 +1319,8 @@ def test_export_survives_compaction_burst_at_one_cursor(spark, tmp_path,
         def search_after(self, *a, **k):
             return self._wrap(self._real.search_after(*a, **k))
 
-    monkeypatch.setattr(srv, "_table", lambda: BurstFlaky(real_table()))
+    monkeypatch.setattr(srv, "_table",
+                        lambda snap=None: BurstFlaky(real_table(snap)))
     got = list(srv.export_docs({"query": "*", "order": "asc"}))
     assert got == expected  # complete, ordered, no dup/loss
     assert burst["left"] == 0
@@ -1369,7 +1369,6 @@ def test_export_resume_exhaustive_fail_points(spark, tmp_path, monkeypatch):
     class Flaky:
         def __init__(self, real):
             self._real = real
-            self.partial = False
 
         def _wrap(self, df):
             if state["fails"]:
@@ -1382,7 +1381,8 @@ def test_export_resume_exhaustive_fail_points(spark, tmp_path, monkeypatch):
         def search_after(self, *a, **k):
             return self._wrap(self._real.search_after(*a, **k))
 
-    monkeypatch.setattr(srv, "_table", lambda: Flaky(real_table()))
+    monkeypatch.setattr(srv, "_table",
+                        lambda snap=None: Flaky(real_table(snap)))
     # single failure after k rows, for every k (k=n never fires: clean)
     for k in range(n + 1):
         state["fails"] = [k]

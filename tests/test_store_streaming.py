@@ -664,9 +664,10 @@ def test_stream_dedup_within_watermark(spark, tmp):
 
 
 def test_fraction_hits_guard_store_level(spark, tmp):
-    """buckets_in_range is a driver-side metadata filter matching what
-    date_format wrote; check_fraction_hits enforces --search-fraction-limit
-    with the reference's remedy message (`fracmanager/searcher.go:88-97`)."""
+    """A snapshot's buckets_in_range is a driver-side metadata filter
+    matching what date_format wrote; check_fraction_hits enforces
+    --search-fraction-limit with the reference's remedy message
+    (`fracmanager/searcher.go:88-97`)."""
     from seqspark.store import TooManyFractionsHit
 
     store = streamed_store(spark, tmp)
@@ -676,13 +677,14 @@ def test_fraction_hits_guard_store_level(spark, tmp):
     import datetime as dt
 
     t0 = int(dt.datetime(2024, 1, 2, 1, 0, tzinfo=dt.timezone.utc).timestamp() * 1000)
-    assert store.buckets_in_range(t0, t0 + 3599_000) == ["2024-01-02-01"]
+    snap = store.snapshot()
+    assert snap.buckets_in_range(t0, t0 + 3599_000) == ["2024-01-02-01"]
     # open-ended bounds
-    assert store.buckets_in_range(t0, None) == [p for p in parts if p >= "2024-01-02-01"]
-    store.check_fraction_hits(t0, t0 + 3599_000, 1)  # within limit: no raise
+    assert snap.buckets_in_range(t0, None) == [p for p in parts if p >= "2024-01-02-01"]
+    snap.check_fraction_hits(t0, t0 + 3599_000, 1)  # within limit: no raise
     with pytest.raises(TooManyFractionsHit, match="try decreasing"):
-        store.check_fraction_hits(None, None, 8)
-    store.check_fraction_hits(None, None, 0)  # 0 disables, like the flag
+        snap.check_fraction_hits(None, None, 8)
+    snap.check_fraction_hits(None, None, 0)  # 0 disables, like the flag
 
 
 def test_stream_ingest_with_dedup_watermark(spark, tmp):
@@ -766,8 +768,8 @@ def test_server_over_tiered_store(spark, tmp):
         assert search_total() == len(DOCS)
         # fraction guard counts owned buckets across both tiers
         with pytest.raises(TooManyFractionsHit):
-            tiered.check_fraction_hits(None, None, 3)
-        assert len(tiered.buckets_in_range(None, None)) == 9
+            tiered.snapshot().check_fraction_hits(None, None, 3)
+        assert len(tiered.snapshot().buckets_in_range(None, None)) == 9
     finally:
         srv.stop()
 

@@ -1,17 +1,23 @@
-"""Store mutation generations + the server's generation-keyed SearchTable
-memo (r18): the serving layer reuses one table across requests and
-rebuilds exactly when the store changed — append, compact, retention,
-rotation, index arm/disarm, cold-tier reachability. Freshness is the
-invariant: a bulk acked before a request must be visible to it."""
+"""Store snapshots + the server's snapshot-keyed SearchTable memo: each
+request takes one store snapshot (mutation generation, bucket listing,
+cold-tier reachability) and the serving layer reuses one table across
+requests with equal snapshot keys, rebuilding exactly when the store
+changed — append, compact, retention, rotation, index arm/disarm,
+cold-tier reachability. Freshness is the invariant: a bulk acked before
+a request must be visible to it, and a response is partial exactly when
+its own snapshot found the cold tier dark."""
 
+import importlib
+import inspect
 import json
 import os
+import sys
 import threading
 
 import pytest
 from pyspark.sql import functions as F
 
-from seqspark import Mapping
+from seqspark import Mapping, SearchTable
 from seqspark.ingest import ingest_docs
 from seqspark.server import SeqSparkServer
 from seqspark.store import DocStore, TieredStore
@@ -153,3 +159,178 @@ def test_route_is_thread_local(spark, tmp):
     t.join()
     assert seen["route"] is None
     assert st.route == "scan"
+
+
+def _server(spark, tmp, store, **kw):
+    return SeqSparkServer(
+        spark, store, MAPPING, allowed_drift_ms=BIG, future_drift_ms=BIG,
+        async_dir=os.path.join(tmp, "async"), **kw,
+    )
+
+
+def _rotated_tiered(spark, tmp):
+    """A tiered store whose hot window (2 docs) is smaller than the full
+    history (3 docs): hour 1 was rotated out of hot."""
+    hot = DocStore(spark, os.path.join(tmp, "hot"))
+    cold = DocStore(spark, os.path.join(tmp, "cold"))
+    tiered = TieredStore(hot, cold)
+    tiered.append(_docs_df(spark, [_doc(1, h) for h in (1, 2, 3)]))
+    assert tiered.maintain(hot_min_bucket="2024-01-01-02")["hot_dropped"]
+    return tiered, cold
+
+
+def _darken(monkeypatch, cold):
+    def dark(*a, **k):
+        raise IOError("cold storage unreachable")
+
+    monkeypatch.setattr(cold, "partitions", dark)
+    monkeypatch.setattr(cold, "read", dark)
+
+
+def _ids(core):
+    return [[d["mid"], d["rid"]] for d in core.search({"query": "*"})["docs"]]
+
+
+def test_cold_tier_going_dark_after_memo_hit_is_partial(spark, tmp,
+                                                        monkeypatch):
+    """A memoized full-store table must not serve a request whose own
+    snapshot finds the cold tier dark, even with the fraction check off
+    (limit 0 lists nothing on its own)."""
+    tiered, cold = _rotated_tiered(spark, tmp)
+    core = _server(spark, tmp, tiered, max_fraction_hits=0)
+    full = core.search({"query": "*", "with_total": True})
+    assert full["total"] == 3 and "partial_response" not in full
+    ids = _ids(core)
+    assert "partial_response" not in core.complex(
+        {"query": "*", "with_total": True})
+    _darken(monkeypatch, cold)
+    out = core.search({"query": "*", "with_total": True})
+    assert out.get("partial_response") is True
+    assert out["total"] == 2 and len(out["docs"]) == 2  # the hot window
+    cx = core.complex({"query": "*", "size": 5, "with_total": True})
+    assert cx.get("partial_response") is True
+    assert cx["total"] == 2
+    got = core.fetch({"ids": ids})
+    assert got.get("partial_response") is True
+    assert len(got["docs"]) == 2  # the rotated doc lives in the dark tier
+    core._httpd.server_close()
+
+
+def test_cold_tier_recovery_serves_full_store(spark, tmp, monkeypatch):
+    """Starting dark, requests are partial; once the cold tier answers
+    again the next request reads the full store, unflagged."""
+    tiered, cold = _rotated_tiered(spark, tmp)
+    core = _server(spark, tmp, tiered, max_fraction_hits=0)
+    _darken(monkeypatch, cold)
+    for _ in range(2):  # the dark period outlasts one request
+        out = core.search({"query": "*", "with_total": True})
+        assert out.get("partial_response") is True and out["total"] == 2
+    monkeypatch.undo()
+    out = core.search({"query": "*", "with_total": True})
+    assert "partial_response" not in out
+    assert out["total"] == 3
+    core._httpd.server_close()
+
+
+def test_status_replans_transient_read_failure(spark, tmp, monkeypatch):
+    """A status read racing a compaction swap replans and reports the
+    real count, never ``docs: 0`` for a non-empty store."""
+    store = DocStore(spark, os.path.join(tmp, "store"))
+    store.append(_docs_df(spark, [_doc(1, 1), _doc(1, 2)]))
+    core = _server(spark, tmp, store)
+    real = SearchTable.status
+    calls = {"n": 0}
+
+    def flaky(self):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            raise RuntimeError("FAILED_READ_FILE: raced a compaction swap")
+        return real(self)
+
+    monkeypatch.setattr(SearchTable, "status", flaky)
+    assert core.status()["docs"] == 2
+    assert calls["n"] == 2
+    core._httpd.server_close()
+
+
+def test_status_of_empty_store(spark, tmp):
+    core = _server(spark, tmp, DocStore(spark, os.path.join(tmp, "empty")))
+    out = core.status()
+    assert out["docs"] == 0 and out["oldest_ms"] is None
+    core._httpd.server_close()
+
+
+def _count_calls(monkeypatch, obj, name):
+    calls = []
+    real = getattr(obj, name)
+
+    def counted(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(obj, name, counted)
+    return calls
+
+
+def test_memo_hit_lists_each_tier_once(spark, tmp, monkeypatch):
+    """One request = one snapshot = one root LIST per tier: a memo-hit
+    /search lists a DocStore once and a tiered store's hot and cold tiers
+    once each (the fraction check reads the snapshot's listing)."""
+    store = DocStore(spark, os.path.join(tmp, "store"))
+    store.append(_docs_df(spark, [_doc(1, 1)]))
+    core = _server(spark, tmp, store)
+    core.search({"query": "*"})  # builds and memoizes the table
+    listed = _count_calls(monkeypatch, store, "partitions")
+    core.search({"query": "*"})
+    assert len(listed) == 1
+    core._httpd.server_close()
+
+    tiered, _ = _rotated_tiered(spark, os.path.join(tmp, "t"))
+    core = _server(spark, tmp, tiered)
+    core.search({"query": "*"})
+    hot = _count_calls(monkeypatch, tiered.hot, "partitions")
+    cold = _count_calls(monkeypatch, tiered.cold, "partitions")
+    core.search({"query": "*"})
+    assert (len(hot), len(cold)) == (1, 1)
+    core._httpd.server_close()
+
+
+def test_memo_miss_builds_through_from_store_once(spark, tmp, monkeypatch):
+    """The perf harness counts table builds on SearchTable.from_store: a
+    memo miss goes through it exactly once, a hit not at all."""
+    store = DocStore(spark, os.path.join(tmp, "store"))
+    store.append(_docs_df(spark, [_doc(1, 1)]))
+    core = _server(spark, tmp, store)
+    builds = []
+    real = SearchTable.from_store.__func__
+
+    def counted(cls, *a, **k):
+        builds.append(1)
+        return real(cls, *a, **k)
+
+    monkeypatch.setattr(SearchTable, "from_store", classmethod(counted))
+    core.search({"query": "*"})
+    assert len(builds) == 1
+    core.search({"query": "*"})
+    assert len(builds) == 1
+    core._httpd.server_close()
+
+
+def test_perfbench_patch_points_resolve():
+    """Every name the perf harness wraps still exists where it looks."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(root, "perfbench"))
+    try:
+        from traced_server import TARGETS
+    finally:
+        sys.path.pop(0)
+    for points in TARGETS.values():
+        for point in points:
+            mod_name, _, path = point.partition(":")
+            owner = importlib.import_module(mod_name)
+            *outer, attr = path.split(".")
+            for part in outer:
+                owner = getattr(owner, part)
+            assert callable(getattr(owner, attr)), point
+    raw = inspect.getattr_static(SearchTable, "from_store")
+    assert isinstance(raw, classmethod)

@@ -257,7 +257,7 @@ def test_cold_tier_down_serves_partial_response(spark, tmp_path, monkeypatch):
     tiered = TieredStore(hot, cold)
     tiered.append(ingest_frame(spark))
     n = len(DOCS)
-    assert tiered.read_with_status()[1] is False  # healthy: not partial
+    assert tiered.snapshot().partial is False  # healthy: not partial
 
     def dark(*a, **k):
         raise IOError("cold storage unreachable")
@@ -265,9 +265,9 @@ def test_cold_tier_down_serves_partial_response(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(cold, "partitions", dark)
     monkeypatch.setattr(cold, "read", dark)
 
-    df, partial = tiered.read_with_status()
-    assert partial is True
-    assert df.count() == n  # hot still holds everything (no rotation yet)
+    snap = tiered.snapshot()
+    assert snap.partial is True
+    assert snap.read().count() == n  # hot holds everything (no rotation yet)
     assert tiered.partitions()  # admission path tolerates the dark tier
 
     srv = SeqSparkServer(spark, tiered, MAPPING,

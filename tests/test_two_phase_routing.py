@@ -340,7 +340,7 @@ def test_cli_index_flag_end_to_end(spark, tmp_path):
 
 def test_tiered_store_index_follows_ownership(spark, tmp_path):
     """r16: a StoreIndex over a TieredStore indexes each bucket's
-    AUTHORITATIVE copy (read_with_status's ownership rule). The killer
+    AUTHORITATIVE copy (`_read_owned`'s ownership rule). The killer
     case is the tombstone-recreate: after rotation drops a hot bucket, a
     late append re-creates it in hot with ONLY the new rows while cold
     holds everything — the index must build from cold, or pre-rotation
