@@ -156,6 +156,11 @@ def _parsed_num(tok: Column) -> Column:
     return F.when(ok, raw)
 
 
+def _project(df: DataFrame, columns: Optional[Sequence[str]]) -> DataFrame:
+    """``df`` narrowed to ``columns``; ``None`` keeps every column."""
+    return df if columns is None else df.select(*columns)
+
+
 @dataclass
 class _Branch:
     """One output of a fused aggregate job (:meth:`SearchTable.
@@ -379,8 +384,12 @@ class SearchTable:
         #: — the prepared-statement shape every engine has — and with it
         #: the analyzed/optimized/codegen'd QueryExecution. Only plans
         #: whose construction is side-effect-free are cached (scan-route
-        #: searches, totals, aggregates, complex searches); see
-        #: :meth:`_cached_plan` for why reuse is sound.
+        #: searches, totals, aggregates, complex searches, status); see
+        #: :meth:`_cached_plan` for why reuse is sound. A transport
+        #: collects the cached frame itself: a ``.select`` on it is a new
+        #: Dataset that analyses and plans again, so any projection a
+        #: caller needs is a build argument and part of the key
+        #: (``columns=``).
         self._plan_cache: "OrderedDict[tuple, tuple]" = OrderedDict()
         self._plan_cache_lock = threading.Lock()
         #: fused frames aggregate() executed (drain_agg_plan_dfs)
@@ -1041,14 +1050,16 @@ class SearchTable:
         order: str = "desc",
         dedup_cols: Optional[Sequence[str]] = None,
         dialect: Optional[str] = None,
+        columns: Optional[Sequence[str]] = None,
     ) -> DataFrame:
         """Filter + order by (ts, rid) + offset/size pagination
         (reference `seq/qpr.go:417-494` merge/paginate,
         `proxy/search/ingestor.go:195-208`).
 
-        Returns the matching rows (all columns; apply pipes/projection on
-        top). ``size=None`` returns every match (export mode,
-        `proxyapi/grpc_export.go:27-77`).
+        Returns the matching rows: every public column, or ``columns``
+        when given (selected after the pipes, part of the plan-cache key,
+        so a caller collects the cached frame itself). ``size=None``
+        returns every match (export mode, `proxyapi/grpc_export.go:27-77`).
         """
         if size is not None and size > MAX_SEARCH_DOCS:
             raise ValueError(f"size {size} exceeds max-search-docs {MAX_SEARCH_DOCS}")
@@ -1062,13 +1073,13 @@ class SearchTable:
         )
         if routed is not None:
             self.route = "two_phase"
-            return routed
+            return _project(routed, columns)
         self.route = "scan"
 
         def build() -> DataFrame:
             df, pipes = self._filtered(q, from_ms, to_ms, dedup_cols, dialect)
             df = self._paginate(df, size, offset, order)
-            return self.apply_pipes(self._public(df), pipes)
+            return _project(self.apply_pipes(self._public(df), pipes), columns)
 
         if not cacheable:
             return build()
@@ -1077,6 +1088,7 @@ class SearchTable:
             tuple(dedup_cols) if dedup_cols is not None else None,
             tuple(self.default_dedup) if self.default_dedup else None,
             dialect or self.dialect,
+            tuple(columns) if columns is not None else None,
         )
         return self._cached_plan(key, build)
 
@@ -1671,12 +1683,13 @@ class SearchTable:
     def status(self) -> Dict[str, object]:
         """Store status — doc count + time bounds, the Status endpoint
         analog (`proxyapi/grpc_status.go:12`, `proxy/search/ingestor.go:
-        644-700` reports per-store oldest time). One aggregate scan."""
-        row = self.df.agg(
+        644-700` reports per-store oldest time). One aggregate scan of a
+        plan-cached frame."""
+        row = self._cached_plan(("status",), lambda: self.df.agg(
             F.count(F.lit(1)).alias("docs"),
             F.unix_millis(F.min(self.ts_col)).alias("oldest_ms"),
             F.unix_millis(F.max(self.ts_col)).alias("newest_ms"),
-        ).head()
+        )).collect()[0]
         return {
             "docs": row["docs"],
             "oldest_ms": row["oldest_ms"],
@@ -1747,7 +1760,13 @@ class SearchTable:
         construction would. That is also why re-executing a cached frame
         may reuse its already-written shuffle output instead of
         rescanning. Nothing mutates a published table — a changed store
-        or index yields a NEW table — so an entry never goes stale."""
+        or index yields a NEW table — so an entry never goes stale.
+
+        The returned frame is what the caller collects. Spark plans a
+        QueryExecution once per Dataset, so anything derived from it
+        (``.select``, ``.limit``, ``.head``) is a new Dataset that is
+        analysed and planned again on every call: a projection or
+        limit the caller needs belongs in ``build`` and in ``key``."""
         with self._plan_cache_lock:
             hit = self._plan_cache.get(key)
             if hit is not None:
@@ -1942,6 +1961,7 @@ class SearchTable:
         aggs: Sequence[AggQuery] = (),
         strict: bool = False,
         dialect: Optional[str] = None,
+        columns: Optional[Sequence[str]] = None,
     ) -> "ComplexSearchResult":
         """One request → docs + total + histogram + N aggregations
         (reference `proxyapi/grpc_complex_search.go:14-60`; the store
@@ -1954,7 +1974,8 @@ class SearchTable:
         single job (:meth:`_fused_build`). The fused job
         runs here, its guards (the module limits ``AGG_MAX_GROUP_TOKENS``
         and ``AGG_MAX_FIELD_TOKENS``) are checked on the driver and its
-        results come back as driver-side values; ``docs`` stays lazy.
+        results come back as driver-side values; ``docs`` stays lazy,
+        projected to ``columns`` when given (as in :meth:`search`).
         Nothing is persisted, so there is nothing to release.
 
         Validation mirrors `grpc_complex_search.go:20-22`: at least one of
@@ -1967,7 +1988,7 @@ class SearchTable:
             )
         docs, fused = self._complex_plan(
             q, from_ms, to_ms, size, offset, order, with_total,
-            hist_interval_ms, aggs, strict, dialect,
+            hist_interval_ms, aggs, strict, dialect, columns,
         )
         res = ComplexSearchResult(docs)
         if fused is None:
@@ -1983,28 +2004,30 @@ class SearchTable:
 
     def _complex_plan(
         self, q, from_ms, to_ms, size, offset, order, with_total,
-        hist_interval_ms, aggs, strict, dialect,
+        hist_interval_ms, aggs, strict, dialect, columns=None,
     ) -> tuple:
         """The plan-cached ``(docs, fused)`` construction of one complex
-        request, keyed on every request field, dialect and dedup: the lazy
-        docs top-k (``None`` when ``size`` is 0) and :meth:`_fused_build`'s
-        aggregate (``None`` without total, histogram or aggs)."""
+        request, keyed on every request field, dialect, dedup and the docs
+        projection: the lazy docs top-k (``None`` when ``size`` is 0) and
+        :meth:`_fused_build`'s aggregate (``None`` without total,
+        histogram or aggs)."""
         key = (
             "complex", q, from_ms, to_ms, size, offset, order,
             bool(with_total), hist_interval_ms,
             tuple(self._agg_key(aq) for aq in aggs), strict,
             dialect or self.dialect,
             tuple(self.default_dedup) if self.default_dedup else None,
+            tuple(columns) if columns is not None else None,
         )
 
         def build() -> tuple:
             base, pipes = self._filtered(q, from_ms, to_ms, dialect=dialect)
             docs = fused = None
             if size:
-                docs = self.apply_pipes(
+                docs = _project(self.apply_pipes(
                     self._public(self._paginate(base, size, offset, order)),
                     pipes,
-                )
+                ), columns)
             if with_total or hist_interval_ms or aggs:
                 fused = self._fused_build(
                     base, with_total, hist_interval_ms, aggs, strict)

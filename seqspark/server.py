@@ -63,6 +63,10 @@ MAX_INFLIGHT_SEARCHES = 30
 #: reference `consts/consts.go:44` MirrorRequestLimit
 MIRROR_REQUEST_LIMIT = 300
 
+#: the document columns /search and /complex serve; passed to the engine
+#: so the plan-cached frame is the one collected (no per-request select)
+_DOC_COLUMNS = ("mid", "rid", "raw")
+
 
 class SeqSparkServer:
     """Bind a DocStore + mapping to an HTTP endpoint."""
@@ -1339,7 +1343,8 @@ class SeqSparkServer:
             offset=self._int_or(req, "offset", 0),
             order=req.get("order", "desc"),
             dialect=req.get("dialect"),
-        ).select("mid", "rid", "raw")
+            columns=_DOC_COLUMNS,
+        )
         if st.route == "two_phase":
             self._count("two_phase_searches_total")
         out = {
@@ -1410,12 +1415,13 @@ class SeqSparkServer:
             hist_interval_ms=req.get("hist_interval_ms"),
             aggs=aggs,
             dialect=req.get("dialect"),
+            columns=_DOC_COLUMNS,
         )
         out: dict = {}
         if res.docs is not None:
             out["docs"] = [
                 {"mid": r["mid"], "rid": r["rid"], "data": r["raw"]}
-                for r in res.docs.select("mid", "rid", "raw").collect()
+                for r in res.docs.collect()
             ]
         if res.total_count is not None:
             out["total"] = res.total_count

@@ -9,10 +9,16 @@ produced, from ONE scan."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
-from seqspark import AggQuery, SearchTable
+from bench import _canon, _plan_str
+from seqspark import AggQuery, Mapping, SearchTable
+from seqspark.ingest import ingest_docs
+from seqspark.store import DocStore
+from test_two_phase_routing import _wide_table
 
 MAPPING = {"grp": "keyword", "value": "keyword", "event_id": "keyword"}
 
@@ -189,3 +195,74 @@ def test_concurrent_aggregate_execute(spark):
         t.join()
     assert not errors
     assert all(r == expected for r in results)
+
+
+DOC_COLUMNS = ("mid", "rid", "raw")
+
+
+def _doc_table(spark, tmp_path):
+    mapping = Mapping({"service": "keyword", "message": "text"})
+    docs = [{"timestamp": f"2024-01-01 {h:02d}:00:00.000", "service": svc,
+             "message": f"hello {svc} {h}"}
+            for h, svc in enumerate(["auth", "pay", "auth", "db", "auth"])]
+    store = DocStore(spark, str(tmp_path / "store"))
+    store.append(ingest_docs(
+        spark.createDataFrame([(json.dumps(d),) for d in docs], "raw string"),
+        mapping, allowed_drift_ms=10**15, future_drift_ms=10**15,
+    ))
+    return store.search_table(mapping)
+
+
+def _assert_same_frame(projected, select_on_top):
+    """Same rows in the same order, same canonical plan."""
+    assert ([tuple(r) for r in projected.collect()]
+            == [tuple(r) for r in select_on_top.collect()])
+    assert (_canon(_plan_str(projected))
+            == _canon(_plan_str(select_on_top)))
+
+
+@pytest.mark.parametrize("q", ["service:auth", "* | fields service"])
+def test_projected_search_matches_select_on_top(spark, tmp_path, q):
+    """``columns=`` is the cached twin of a ``select`` on the result: the
+    projection is its own cache entry, and the unprojected frame keeps
+    every public column."""
+    st = _doc_table(spark, tmp_path)
+    full = st.search(q, size=3, offset=1)
+    assert full.columns == st._public(st.df).columns
+    got = st.search(q, size=3, offset=1, columns=DOC_COLUMNS)
+    assert got is not full and got.columns == list(DOC_COLUMNS)
+    assert st.search(q, size=3, offset=1, columns=DOC_COLUMNS) is got
+    assert st.search(q, size=3, offset=1) is full
+    assert st.route == "scan"
+    _assert_same_frame(got, full.select(*DOC_COLUMNS))
+
+
+def test_projected_complex_docs_match_select_on_top(spark, tmp_path):
+    st = _doc_table(spark, tmp_path)
+    kw = dict(size=2, with_total=True, aggs=[AggQuery(func="count",
+                                                      group_by="service")])
+    full = st.complex_search("*", **kw)
+    got = st.complex_search("*", columns=DOC_COLUMNS, **kw)
+    assert full.docs.columns == st._public(st.df).columns
+    assert got.docs is not full.docs
+    assert st.complex_search("*", columns=DOC_COLUMNS, **kw).docs is got.docs
+    assert (got.total_count, got.agg_buckets) == (full.total_count,
+                                                  full.agg_buckets)
+    _assert_same_frame(got.docs, full.docs.select(*DOC_COLUMNS))
+
+
+def test_projected_two_phase_search_matches_select_on_top(spark, tmp_path):
+    """A routed two-phase frame gets the same projection and stays
+    uncached."""
+    df, idx, stats, m = _wide_table(spark, tmp_path)
+    st = SearchTable.from_typed(
+        df, m, ts_col="ts", rid_col="rid", assume_folded=True,
+    ).attach_index(idx, ["text", "kind"], ["mid", "rid"], stats=stats,
+                   two_phase_min_doc_bytes=64)
+    cols = ("mid", "rid", "text")
+    got = st.search("text:alpha", size=5, offset=1, columns=cols)
+    assert st.route == "two_phase" and got.columns == list(cols)
+    full = st.search("text:alpha", size=5, offset=1)
+    assert st.route == "two_phase"
+    _assert_same_frame(got, full.select(*cols))
+    assert not st._plan_cache

@@ -234,7 +234,9 @@ def test_cold_tier_recovery_serves_full_store(spark, tmp, monkeypatch):
 
 def test_status_replans_transient_read_failure(spark, tmp, monkeypatch):
     """A status read racing a compaction swap replans and reports the
-    real count, never ``docs: 0`` for a non-empty store."""
+    real count, never ``docs: 0`` for a non-empty store; the replanned
+    table's cached aggregate then serves the next call too (not a fresh
+    ``limit(1)`` Dataset per call)."""
     store = DocStore(spark, os.path.join(tmp, "store"))
     store.append(_docs_df(spark, [_doc(1, 1), _doc(1, 2)]))
     core = _server(spark, tmp, store)
@@ -248,15 +250,83 @@ def test_status_replans_transient_read_failure(spark, tmp, monkeypatch):
         return real(self)
 
     monkeypatch.setattr(SearchTable, "status", flaky)
+    collected, _ = _spy_frames(monkeypatch)
     assert core.status()["docs"] == 2
     assert calls["n"] == 2
+    assert core.status()["docs"] == 2
+    assert len(collected) == 2 and collected[0] is collected[1]
+    assert any(collected[0] is h for h in _held_frames(core._table()))
     core._httpd.server_close()
 
 
-def test_status_of_empty_store(spark, tmp):
+def test_status_of_empty_store(spark, tmp, monkeypatch):
     core = _server(spark, tmp, DocStore(spark, os.path.join(tmp, "empty")))
-    out = core.status()
-    assert out["docs"] == 0 and out["oldest_ms"] is None
+    collected, _ = _spy_frames(monkeypatch)
+    for _ in range(2):
+        out = core.status()
+        assert out["docs"] == 0 and out["oldest_ms"] is None
+    assert len(collected) == 2 and collected[0] is collected[1]
+    core._httpd.server_close()
+
+
+def _spy_frames(monkeypatch):
+    """Record every DataFrame collected and every ``select`` called."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    collected, selected = [], []
+    collect, select = DataFrame.collect, DataFrame.select
+
+    def spy_collect(df):
+        collected.append(df)
+        return collect(df)
+
+    def spy_select(df, *cols):
+        selected.append(cols)
+        return select(df, *cols)
+
+    monkeypatch.setattr(DataFrame, "collect", spy_collect)
+    monkeypatch.setattr(DataFrame, "select", spy_select)
+    return collected, selected
+
+
+def _held_frames(st):
+    """The frames held in ``st``'s plan cache: cached searches, totals
+    and status aggregates, and complex constructions' docs and fused
+    frames."""
+    held = []
+    for (built,) in st._plan_cache.values():
+        if isinstance(built, tuple):
+            docs, fused = built
+            held += [docs, getattr(fused, "frame", None)]
+        else:
+            held.append(built)
+    return [f for f in held if f is not None]
+
+
+@pytest.mark.parametrize("path,body", [
+    ("search", {"query": "service:auth", "size": 5, "with_total": True}),
+    ("complex", {"query": "*", "size": 3, "with_total": True,
+                 "aggs": [{"func": "count", "group_by": "service"}]}),
+])
+def test_repeated_request_collects_cached_frames(spark, tmp, monkeypatch,
+                                                 path, body):
+    """A repeated /search or /complex collects only frames held in the
+    memoized table's plan cache and builds no new Dataset on top of
+    them: a ``select`` on a cached frame would be analysed and planned
+    again on every request."""
+    store = DocStore(spark, os.path.join(tmp, "store"))
+    store.append(_docs_df(spark, [_doc(1, 1), _doc(1, 2, "pay"),
+                                  _doc(1, 3)]))
+    core = _server(spark, tmp, store)
+    first = getattr(core, path)(dict(body))
+    collected, selected = _spy_frames(monkeypatch)
+    second = getattr(core, path)(dict(body))
+    monkeypatch.undo()
+    assert second == first and second["docs"]
+    held = _held_frames(core._table())
+    assert collected and all(
+        any(df is h for h in held) for df in collected), collected
+    assert selected == []
     core._httpd.server_close()
 
 
