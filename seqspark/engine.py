@@ -38,7 +38,7 @@ import operator
 import threading
 from collections import OrderedDict
 from dataclasses import dataclass, field as dc_field
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import Dict, List, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -367,13 +367,6 @@ class SearchTable:
         listing. None of it is ever invalidated: a table's listing is a
         fixed snapshot (:meth:`from_store`), and :meth:`attach_index`
         returns a NEW table with fresh state."""
-        #: which plan served the LAST search() call — "two_phase" or
-        #: "scan"; observability for transports/explain (None before
-        #: any search). Backed by a thread-local (r18): the server
-        #: shares ONE memoized table across request handler threads,
-        #: and each must read the route of ITS OWN search, not whichever
-        #: ran last globally (see the `route` property below)
-        self._route_local = threading.local()
         #: memoized avg_doc_bytes() — () = not yet sampled
         self._avg_doc_bytes_cache: tuple = ()
         self._width_lock = threading.Lock()
@@ -382,9 +375,10 @@ class SearchTable:
         #: of py4j round trips (~60 ms a search, ~200 ms an aggregate,
         #: measured); a repeated query re-uses the constructed LAZY frame
         #: — the prepared-statement shape every engine has — and with it
-        #: the analyzed/optimized/codegen'd QueryExecution. Only plans
-        #: whose construction is side-effect-free are cached (scan-route
-        #: searches, totals, aggregates, complex searches, status); see
+        #: the analyzed/optimized/codegen'd QueryExecution. Every request
+        #: construction is cached (:meth:`_complex_plan` for searches,
+        #: complex searches and aggregates, with its route; totals;
+        #: status), routed two-phase frames included; see
         #: :meth:`_cached_plan` for why reuse is sound. A transport
         #: collects the cached frame itself: a ``.select`` on it is a new
         #: Dataset that analyses and plans again, so any projection a
@@ -394,19 +388,6 @@ class SearchTable:
         self._plan_cache_lock = threading.Lock()
         #: fused frames aggregate() executed (drain_agg_plan_dfs)
         self._agg_plan_dfs: List[DataFrame] = []
-
-    @property
-    def route(self) -> Optional[str]:
-        """Which plan served THIS THREAD's last :meth:`search` on this
-        table — "two_phase" or "scan"; None before any search. Request-
-        local by design: concurrent server threads sharing one table
-        each observe their own route (the metric/explain signal), never
-        a neighbor's."""
-        return getattr(self._route_local, "value", None)
-
-    @route.setter
-    def route(self, value: Optional[str]) -> None:
-        self._route_local.value = value
 
     def attach_index(
         self,
@@ -881,20 +862,19 @@ class SearchTable:
 
     def _filtered(
         self,
-        q: str = "*",
+        query: Query,
         from_ms: Optional[int] = None,
         to_ms: Optional[int] = None,
         dedup_cols: Optional[Sequence[str]] = None,
-        dialect: Optional[str] = None,
-    ) -> tuple[DataFrame, List[PipeFields]]:
-        """Filter by time + predicate, then collapse ID repetitions.
+    ) -> DataFrame:
+        """Filter by time + the parsed ``query``'s predicate, then collapse
+        ID repetitions (its pipes are the caller's to apply).
 
         Dedup happens HERE so that search, total, histogram and aggregate
         all see the same row set — the reference removes repetitions from
         the total count and the histogram too at merge
         (`seq/qpr.go:417-462` MergeQPRs → removeRepetitionsAdvanced:
         ``dst.Total -= repetitionsCount`` + removeHistogramRepetition)."""
-        query = self.parse(q, dialect)
         pred = compile_node(query.root, self.resolver)
         df = self.df
         tf = self._time_filter(from_ms, to_ms)
@@ -977,7 +957,7 @@ class SearchTable:
         dedup = dedup_cols if dedup_cols is not None else self.default_dedup
         if dedup:
             df = df.dropDuplicates(list(dedup))
-        return df, query.pipes
+        return df
 
     def _apply_bucket_bounds(
         self, df: DataFrame, from_ms: Optional[int], to_ms: Optional[int]
@@ -1060,37 +1040,13 @@ class SearchTable:
         when given (selected after the pipes, part of the plan-cache key,
         so a caller collects the cached frame itself). ``size=None``
         returns every match (export mode, `proxyapi/grpc_export.go:27-77`).
+        The docs of :meth:`_complex_plan`: one plan-cached construction,
+        routed or scanned; :meth:`complex_search` also reports the route.
         """
-        if size is not None and size > MAX_SEARCH_DOCS:
-            raise ValueError(f"size {size} exceeds max-search-docs {MAX_SEARCH_DOCS}")
-        # prepared-plan cache: only when index routing is fully off — a
-        # routed two_phase frame embeds an EXECUTED phase-1 id page; the
-        # un-indexed scan plan does not (and can never route:
-        # _route_two_phase needs an index)
-        cacheable = self._index is None and self._two_phase_min_bytes is None
-        routed = None if cacheable else self._route_two_phase(
-            q, from_ms, to_ms, size, offset, order, dedup_cols, dialect
-        )
-        if routed is not None:
-            self.route = "two_phase"
-            return _project(routed, columns)
-        self.route = "scan"
-
-        def build() -> DataFrame:
-            df, pipes = self._filtered(q, from_ms, to_ms, dedup_cols, dialect)
-            df = self._paginate(df, size, offset, order)
-            return _project(self.apply_pipes(self._public(df), pipes), columns)
-
-        if not cacheable:
-            return build()
-        key = (
-            "search", q, from_ms, to_ms, size, offset, order,
-            tuple(dedup_cols) if dedup_cols is not None else None,
-            tuple(self.default_dedup) if self.default_dedup else None,
-            dialect or self.dialect,
-            tuple(columns) if columns is not None else None,
-        )
-        return self._cached_plan(key, build)
+        return self._complex_plan(
+            q, from_ms, to_ms, size, offset, order, False, None, (), False,
+            dialect, columns, dedup_cols,
+        )[1]
 
     def avg_doc_bytes(self, sample_files: int = 16) -> Optional[float]:
         """Average stored bytes per document — compressed parquet file
@@ -1139,14 +1095,13 @@ class SearchTable:
 
     def _route_two_phase(
         self,
-        q: str,
+        query: Query,
         from_ms: Optional[int],
         to_ms: Optional[int],
         size: Optional[int],
         offset: int,
         order: str,
         dedup_cols: Optional[Sequence[str]],
-        dialect: Optional[str],
         after: Optional[Tuple[int, int]] = None,
     ) -> Optional[DataFrame]:
         """Width-aware scan-vs-two-phase router (r16, verdict #2): when
@@ -1178,10 +1133,6 @@ class SearchTable:
             # two_phase_search applies default_dedup; a caller-supplied
             # override must not be silently swapped for it
             return None
-        try:
-            query = self.parse(q, dialect)
-        except Exception:
-            return None  # the scan path re-parses and raises identically
         if not self._index_covers(query.root):
             return None
         pairs, wildcards, or_groups = self._index_conjuncts(query.root)
@@ -1201,8 +1152,8 @@ class SearchTable:
             return None
         try:
             return self.two_phase_search(
-                q, from_ms=from_ms, to_ms=to_ms, size=size, offset=offset,
-                order=order, dialect=dialect, after=after,
+                query, from_ms=from_ms, to_ms=to_ms, size=size, offset=offset,
+                order=order, after=after,
             )
         except ValueError:
             return None
@@ -1225,7 +1176,7 @@ class SearchTable:
 
     def two_phase_search(
         self,
-        q: str,
+        q: Union[str, Query],
         from_ms: Optional[int] = None,
         to_ms: Optional[int] = None,
         size: int = 100,
@@ -1294,6 +1245,9 @@ class SearchTable:
         so page N of a wide-corpus drain stays width-independent
         instead of re-scanning O(cursor) documents. Mutually exclusive
         with ``offset``; ms-granular exactly like the posting mids.
+
+        ``q`` may also be an already-parsed :class:`Query` (the router
+        passes its own), which ``dialect`` then does not affect.
         """
         if size is None or size + offset > MAX_SEARCH_DOCS:
             raise ValueError(
@@ -1321,7 +1275,7 @@ class SearchTable:
                 f"than id_cols {tuple(id_cols)}: search() dedups the full "
                 f"match set before paginating, a page-local dedup would "
                 f"underfill — use search()")
-        query = self.parse(q, dialect)
+        query = q if isinstance(q, Query) else self.parse(q, dialect)
         pairs, wildcards, or_groups = self._index_conjuncts(query.root)
         if not (pairs or wildcards or or_groups):
             raise ValueError(
@@ -1487,16 +1441,15 @@ class SearchTable:
         of re-scanning wide documents. Same silent-fallback contract as
         :meth:`search`.
         """
+        query = self.parse(q, dialect)
         if last_ts_ms is not None and last_rid is not None:
             routed = self._route_two_phase(
-                q, from_ms, to_ms, size, 0, order, None, dialect,
+                query, from_ms, to_ms, size, 0, order, None,
                 after=(last_ts_ms, last_rid),
             )
             if routed is not None:
-                self.route = "two_phase"
                 return routed
-        self.route = "scan"
-        df, pipes = self._filtered(q, from_ms, to_ms, dialect=dialect)
+        df = self._filtered(query, from_ms, to_ms)
         if last_ts_ms is not None:
             # bare ts comparisons (not unix_millis(ts) wrappers) so the
             # cursor actually reaches PushedFilters — the whole point of
@@ -1525,7 +1478,7 @@ class SearchTable:
         df = df.orderBy(*self._sort_cols(order))
         if size is not None:  # None = unbounded (export-resume mode)
             df = df.limit(size)
-        return self.apply_pipes(self._public(df), pipes)
+        return self.apply_pipes(self._public(df), query.pipes)
 
     def apply_pipes(self, df: DataFrame, pipes: List[PipeFields]) -> DataFrame:
         """`fields a,b` / `fields except a,b` projection
@@ -1567,7 +1520,7 @@ class SearchTable:
         )
 
         def build() -> DataFrame:
-            df, _ = self._filtered(q, from_ms, to_ms, dialect=dialect)
+            df = self._filtered(self.parse(q, dialect), from_ms, to_ms)
             return df.agg(F.count(F.lit(1)).alias("total"))
 
         return self._cached_plan(key, build)
@@ -1604,7 +1557,7 @@ class SearchTable:
         shows whether predicates reached PushedFilters and whether the
         inverted index routed the query (LeftSemi)."""
         query = self.parse(q, dialect)
-        df, _ = self._filtered(q, from_ms, to_ms, dialect=dialect)
+        df = self._filtered(query, from_ms, to_ms)
         # canonical echo: the normalized seq-ql form of the query, like the
         # server's SeqQLString round-trip (`parser/seqql.go:18-26`) — shows
         # the user exactly how both dialects were understood
@@ -1656,7 +1609,7 @@ class SearchTable:
         )
 
         t0 = _time.perf_counter()
-        df, _ = self._filtered(q, from_ms, to_ms, dialect=dialect)
+        df = self._filtered(query, from_ms, to_ms)
         children.append(
             {
                 "message": "compile predicates + logical plan",
@@ -1710,7 +1663,7 @@ class SearchTable:
         """Date histogram: doc count per time bucket, bucket = MID - MID %
         interval (reference `frac/processor/search.go:169-179`,
         `seq/qpr.go:113-136`). Output: (bucket_ms BIGINT, cnt BIGINT)."""
-        df, _ = self._filtered(q, from_ms, to_ms, dialect=dialect)
+        df = self._filtered(self.parse(q, dialect), from_ms, to_ms)
         ts_ms = F.unix_millis(F.col(self.ts_col))
         bucket = (ts_ms - ts_ms % F.lit(interval_ms)).alias("bucket_ms")
         return df.groupBy(bucket).agg(F.count(F.lit(1)).alias("cnt"))
@@ -1760,7 +1713,11 @@ class SearchTable:
         construction would. That is also why re-executing a cached frame
         may reuse its already-written shuffle output instead of
         rescanning. Nothing mutates a published table — a changed store
-        or index yields a NEW table — so an entry never goes stale.
+        or index yields a NEW table — so an entry never goes stale. A
+        routed two-phase frame holds the id page its phase 1 collected
+        while building; the index is as fixed as the listing, so the
+        page is too, and the ``inFilterThreshold`` raise that build made
+        is sticky, so it still holds when the cached frame runs.
 
         The returned frame is what the caller collects. Spark plans a
         QueryExecution once per Dataset, so anything derived from it
@@ -1828,9 +1785,9 @@ class SearchTable:
         the construction is built. The buckets come back in the reference
         order (`seq/qpr.go:216-253`) as a LocalRelation.
         """
-        _, fused = self._complex_plan(
+        _, _, fused = self._complex_plan(
             q, from_ms, to_ms, 0, 0, "desc", False, None, (aggq,), strict,
-            dialect,
+            dialect, None, None,
         )
         # the LocalRelation hides the executed plan: keep the fused frame
         # so diagnostics (bench.py plan-digest pinning) can fingerprint it
@@ -1927,7 +1884,7 @@ class SearchTable:
         fieldname = aggq.field
         if func in ("count", "unique") and group_by is None:
             group_by, fieldname = fieldname, None
-        df, _ = self._filtered(q, from_ms, to_ms, dialect=dialect)
+        df = self._filtered(self.parse(q, dialect), from_ms, to_ms)
         if func in ("count", "unique"):
             if group_by is None:
                 return df.limit(0).agg(F.count(F.lit(1)).alias("not_exists"))
@@ -1969,14 +1926,15 @@ class SearchTable:
         `frac/processor/search.go:71-85,196-204`).
 
         ONE plan-cached construction (:meth:`_complex_plan`, which
-        :meth:`aggregate` shares) holds the lazy docs top-k and a fused
-        aggregate computing total, histogram and every aggregation in a
-        single job (:meth:`_fused_build`). The fused job
-        runs here, its guards (the module limits ``AGG_MAX_GROUP_TOKENS``
-        and ``AGG_MAX_FIELD_TOKENS``) are checked on the driver and its
-        results come back as driver-side values; ``docs`` stays lazy,
-        projected to ``columns`` when given (as in :meth:`search`).
-        Nothing is persisted, so there is nothing to release.
+        :meth:`search` and :meth:`aggregate` share) holds the route, the
+        lazy docs top-k and a fused aggregate computing total, histogram
+        and every aggregation in a single job (:meth:`_fused_build`). The
+        fused job runs here, its guards (the module limits
+        ``AGG_MAX_GROUP_TOKENS`` and ``AGG_MAX_FIELD_TOKENS``) are checked
+        on the driver and its results come back as driver-side values;
+        ``docs`` stays lazy, projected to ``columns`` when given (as in
+        :meth:`search`). Nothing is persisted, so there is nothing to
+        release.
 
         Validation mirrors `grpc_complex_search.go:20-22`: at least one of
         docs (size>0), with_total, histogram or aggs must be requested.
@@ -1986,11 +1944,11 @@ class SearchTable:
                 "complex search requires size > 0, with_total, a histogram "
                 "interval or at least one aggregation"
             )
-        docs, fused = self._complex_plan(
+        route, docs, fused = self._complex_plan(
             q, from_ms, to_ms, size, offset, order, with_total,
-            hist_interval_ms, aggs, strict, dialect, columns,
+            hist_interval_ms, aggs, strict, dialect, columns, None,
         )
-        res = ComplexSearchResult(docs)
+        res = ComplexSearchResult(docs, route)
         if fused is None:
             return res
         for br, out in zip(fused.branches, self._fused_execute(fused)):
@@ -2004,34 +1962,52 @@ class SearchTable:
 
     def _complex_plan(
         self, q, from_ms, to_ms, size, offset, order, with_total,
-        hist_interval_ms, aggs, strict, dialect, columns=None,
+        hist_interval_ms, aggs, strict, dialect, columns, dedup_cols,
     ) -> tuple:
-        """The plan-cached ``(docs, fused)`` construction of one complex
+        """The plan-cached ``(route, docs, fused)`` construction of one
         request, keyed on every request field, dialect, dedup and the docs
-        projection: the lazy docs top-k (``None`` when ``size`` is 0) and
-        :meth:`_fused_build`'s aggregate (``None`` without total,
-        histogram or aggs)."""
+        projection. The query is parsed once per construction, and a hit
+        parses nothing.
+
+        ``docs`` is the lazy top-k (every match for ``size=None``),
+        served two-phase when :meth:`_route_two_phase` takes it, else by
+        the scan; ``route`` names which ("two_phase" or "scan"). Both are
+        ``None`` when ``size`` is 0 and another branch is requested.
+        ``fused`` is :meth:`_fused_build`'s aggregate (``None`` without
+        total, histogram or aggs). A routed frame embeds the id page
+        phase 1 collected while building; it is cached like the rest,
+        because a table's listing and index never change."""
+        if size is not None and size > MAX_SEARCH_DOCS:
+            raise ValueError(f"size {size} exceeds max-search-docs {MAX_SEARCH_DOCS}")
         key = (
             "complex", q, from_ms, to_ms, size, offset, order,
             bool(with_total), hist_interval_ms,
             tuple(self._agg_key(aq) for aq in aggs), strict,
             dialect or self.dialect,
+            tuple(dedup_cols) if dedup_cols is not None else None,
             tuple(self.default_dedup) if self.default_dedup else None,
             tuple(columns) if columns is not None else None,
         )
+        want_fused = bool(with_total or hist_interval_ms or aggs)
 
         def build() -> tuple:
-            base, pipes = self._filtered(q, from_ms, to_ms, dialect=dialect)
-            docs = fused = None
-            if size:
-                docs = _project(self.apply_pipes(
-                    self._public(self._paginate(base, size, offset, order)),
-                    pipes,
-                ), columns)
-            if with_total or hist_interval_ms or aggs:
+            query = self.parse(q, dialect)
+            route = docs = base = fused = None
+            if size != 0 or not want_fused:
+                docs = self._route_two_phase(
+                    query, from_ms, to_ms, size, offset, order, dedup_cols)
+                route = "scan" if docs is None else "two_phase"
+            if route == "scan" or want_fused:
+                base = self._filtered(query, from_ms, to_ms, dedup_cols)
+            if route == "scan":
+                docs = self.apply_pipes(self._public(
+                    self._paginate(base, size, offset, order)), query.pipes)
+            if docs is not None:
+                docs = _project(docs, columns)
+            if want_fused:
                 fused = self._fused_build(
                     base, with_total, hist_interval_ms, aggs, strict)
-            return docs, fused
+            return route, docs, fused
 
         return self._cached_plan(key, build)
 
@@ -2230,14 +2206,17 @@ class SearchTable:
 
 @dataclass
 class ComplexSearchResult:
-    """Branches of one ComplexSearch request. ``docs`` is the lazy top-k;
-    total, histogram and aggregations came from one fused job and are
-    held driver-side: ``histogram_rows`` as ascending ``(bucket_ms,
-    cnt)``, ``agg_buckets`` as one list of bucket dicts per agg in
-    reference bucket order (the columns of :meth:`SearchTable.aggregate`).
-    Unrequested branches stay ``None``/empty."""
+    """Branches of one ComplexSearch request. ``docs`` is the lazy top-k
+    and ``route`` the plan that serves it ("two_phase" or "scan", a value
+    of this request alone); total, histogram and aggregations came from
+    one fused job and are held driver-side: ``histogram_rows`` as
+    ascending ``(bucket_ms, cnt)``, ``agg_buckets`` as one list of bucket
+    dicts per agg in reference bucket order (the columns of
+    :meth:`SearchTable.aggregate`). Unrequested branches stay
+    ``None``/empty."""
 
     docs: Optional[DataFrame]
+    route: Optional[str]
     total_count: Optional[int] = None
     histogram_rows: Optional[List[Tuple[Optional[int], int]]] = None
     agg_buckets: List[List[Dict[str, object]]] = dc_field(default_factory=list)

@@ -312,8 +312,11 @@ class SeqProxyGrpc:
         }
         if out.get("histogram") is not None:
             resp["hist"] = cls._hist_proto(out["histogram"])
-        if out.get("explain"):
-            resp["explain"] = {"message": out["explain"], "children": []}
+        explain = out.get("explain")
+        if isinstance(explain, dict):  # the core's span tree
+            resp["explain"] = cls._explain_proto(explain)
+        elif explain:
+            resp["explain"] = {"message": explain, "children": []}
         return _apply_partial(resp, out)
 
     # -------------------------------------------------- admission control
@@ -425,10 +428,10 @@ class SeqProxyGrpc:
                 raise GrpcError(
                     INVALID_ARGUMENT, f"failed to parse 'interval': {e}"
                 ) from None
-        # the gRPC surface carries a STRUCTURED span tree (complex_search
-        # attaches it itself); the HTTP core's string explain would be
-        # computed and thrown away — one full parse+plan pass per request
-        hreq.pop("explain", None)
+        # the gRPC surface carries the STRUCTURED span tree, built by the
+        # core on the request's own table instead of the HTTP string
+        if "explain" in hreq:
+            hreq["explain"] = "tree"
         return hreq
 
     @staticmethod
@@ -460,31 +463,14 @@ class SeqProxyGrpc:
                 'one of "size", "hist" or "aggs" must be provided',
             )
         hreq = self._complex_req(req, metadata)
-        want_explain = bool((req.get("query") or {}).get("explain"))
-
-        def run():
-            out = self.core.complex(hreq)
-            if want_explain:
-                # structured span tree with real phase timings, not the
-                # flat string the HTTP surface carries; computed INSIDE the
-                # admission window so the planning pass counts against
-                # --search-requests-limit like the search it describes
-                out["__explain_tree"] = self.core._table().explain_tree(
-                    hreq.get("query", "*"),
-                    from_ms=hreq.get("from_ms"),
-                    to_ms=hreq.get("to_ms"),
-                    dialect=hreq.get("dialect"),
-                )
-            return out
-
         try:
-            out = self._admitted("/complex", hreq, run)
+            # the explain tree is built inside the admission window, so its
+            # planning pass counts against --search-requests-limit too
+            out = self._admitted("/complex", hreq,
+                                 lambda: self.core.complex(hreq))
         except TooManyFractionsHit as e:
             return {"error": self._fractions_error(e)}
-        resp = self._complex_proto(out)
-        if want_explain:
-            resp["explain"] = self._explain_proto(out["__explain_tree"])
-        return resp
+        return self._complex_proto(out)
 
     def get_aggregation(self, req: dict, metadata: dict) -> dict:
         self._require_query_window(req)

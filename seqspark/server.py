@@ -140,9 +140,9 @@ class SeqSparkServer:
             "bulk_flushed_bulks_total": 0,
             "search_total": 0,
             "search_errors_total": 0,
-            # searches served by the width-routed two-phase
-            # (search→fetch) plan — the reference's wire architecture;
-            # stays 0 without an attached index (r16)
+            # /search and /complex requests whose docs the width-routed
+            # two-phase (search→fetch) plan served — the reference's wire
+            # architecture; stays 0 without an attached index (r16)
             "two_phase_searches_total": 0,
             "partial_responses_total": 0,
             "rate_limited_total": 0,
@@ -1281,8 +1281,8 @@ class SeqSparkServer:
         (a new object) and with the index arm state (append staleness
         disarms; refresh_index re-arms). A hit serves exactly the listing
         a fresh build would read. Request-local state stays request-local:
-        ``partial`` comes from the request's snapshot, ``st.route`` is
-        thread-local in the engine, and a transient read failure
+        ``partial`` comes from the request's snapshot, the route from the
+        request's own complex_search result, and a transient read failure
         invalidates the memo before the replan (:meth:`_retry_transient`)
         so external/raced file changes can never pin a stale listing."""
         if snap is None:
@@ -1333,52 +1333,59 @@ class SeqSparkServer:
         return self._retry_transient(lambda: self._search_impl(req))
 
     def _search_impl(self, req: dict) -> dict:
+        """Docs, plus the total when asked for: the docs and total
+        branches of one plan-cached :meth:`SearchTable.complex_search`."""
         snap = self._snapshot(req)
         st = self._table(snap)
-        docs = st.search(
-            req.get("query", "*"),
+        q, dialect = req.get("query", "*"), req.get("dialect")
+        size = self._int_or(req, "size", 100)
+        with_total = bool(req.get("with_total"))
+        if not (size or with_total):
+            st.parse(q, dialect)  # nothing to compute; a bad query is a 400
+            return self._flag_partial({"docs": []}, snap)
+        res = st.complex_search(
+            q,
             from_ms=req.get("from_ms"),
             to_ms=req.get("to_ms"),
-            size=self._int_or(req, "size", 100),
+            size=size,
             offset=self._int_or(req, "offset", 0),
             order=req.get("order", "desc"),
-            dialect=req.get("dialect"),
+            with_total=with_total,
+            dialect=dialect,
             columns=_DOC_COLUMNS,
         )
-        if st.route == "two_phase":
-            self._count("two_phase_searches_total")
-        out = {
-            "docs": [
-                {"mid": r["mid"], "rid": r["rid"], "data": r["raw"]}
-                for r in docs.collect()
-            ]
-        }
-        if req.get("with_total"):
-            out["total"] = st.total(
-                req.get("query", "*"),
-                from_ms=req.get("from_ms"),
-                to_ms=req.get("to_ms"),
-                dialect=req.get("dialect"),
-            ).collect()[0]["total"]
+        out = {"docs": self._docs_of(res)}
+        if with_total:
+            out["total"] = res.total_count
         if req.get("explain"):
-            out["explain"] = self._explain_of(st, req)
+            out["explain"] = self._explain_of(st, req, res.route)
         return self._flag_partial(out, snap)
 
+    def _docs_of(self, res) -> list:
+        """The wire docs of a complex_search result (``[]`` when it has
+        none), counting a request whose docs the two-phase route served."""
+        if res.route == "two_phase":
+            self._count("two_phase_searches_total")
+        if res.docs is None:
+            return []
+        return [{"mid": r["mid"], "rid": r["rid"], "data": r["raw"]}
+                for r in res.docs.collect()]
+
     @staticmethod
-    def _explain_of(st: SearchTable, req: dict) -> str:
+    def _explain_of(st: SearchTable, req: dict, route: Optional[str]):
         """Per-request explain (`proxyapi/grpc_v1.go:228`,
-        `grpc_complex_search.go:34-60` attach an explain tree): the parsed
-        AST + Spark's logical→physical trace, prefixed with which plan
-        actually served THIS request (r16 — `st.route` was recorded by
-        the search that just ran on the same table; the trace below
-        always shows the scan-path plan)."""
-        route = f"Route: {st.route}\n" if st.route else ""
-        return route + st.explain(
-            req.get("query", "*"),
-            from_ms=req.get("from_ms"),
-            to_ms=req.get("to_ms"),
-            dialect=req.get("dialect"),
-        )
+        `grpc_complex_search.go:34-60` attach an explain tree) on the
+        request's own table: the parsed AST + Spark's logical→physical
+        trace of the scan-path plan, prefixed with ``route``, the plan
+        that served this request's docs (none without docs).
+        ``"explain": "tree"`` (the gRPC surface) asks for the structured
+        span tree of :meth:`SearchTable.explain_tree` instead."""
+        args = dict(from_ms=req.get("from_ms"), to_ms=req.get("to_ms"),
+                    dialect=req.get("dialect"))
+        if req["explain"] == "tree":
+            return st.explain_tree(req.get("query", "*"), **args)
+        prefix = f"Route: {route}\n" if route else ""
+        return prefix + st.explain(req.get("query", "*"), **args)
 
     def complex(self, req: dict) -> dict:
         return self._retry_transient(lambda: self._complex_impl(req))
@@ -1419,10 +1426,7 @@ class SeqSparkServer:
         )
         out: dict = {}
         if res.docs is not None:
-            out["docs"] = [
-                {"mid": r["mid"], "rid": r["rid"], "data": r["raw"]}
-                for r in res.docs.collect()
-            ]
+            out["docs"] = self._docs_of(res)
         if res.total_count is not None:
             out["total"] = res.total_count
         if res.histogram_rows is not None:
@@ -1436,7 +1440,7 @@ class SeqSparkServer:
             for buckets in res.agg_buckets
         ]
         if req.get("explain"):
-            out["explain"] = self._explain_of(st, req)
+            out["explain"] = self._explain_of(st, req, res.route)
         return self._flag_partial(out, snap)
 
     def fetch(self, req: dict) -> dict:

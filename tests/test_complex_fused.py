@@ -335,7 +335,7 @@ def test_group_guard_failure_ships_bounded_rows(plain, caps):
     # the guard cut keeps cap+1 real groups: a failure never ships the
     # whole bucket set to the driver
     assert len(built) == 2
-    assert [fused.frame.count() for _, fused in built] == [6, 6]
+    assert [fused.frame.count() for _, _, fused in built] == [6, 6]
 
 
 def _jobs(spark, fn):

@@ -95,7 +95,7 @@ def test_time_range_reaches_pushed_filters(events, tmp_path):
     rows = pq.select("ts").orderBy("ts").limit(50).collect()
     ms = lambda r: int(r["ts"].replace(tzinfo=datetime.timezone.utc).timestamp() * 1000)
     lo, hi = ms(rows[10]), ms(rows[40])
-    df, _ = st._filtered("*", from_ms=lo, to_ms=hi)
+    df = st._filtered(st.parse("*"), from_ms=lo, to_ms=hi)
     plan = physical_plan(df)
     assert "GreaterThanOrEqual(ts" in plan and "LessThan(ts" in plan
     assert "unix_millis" not in plan

@@ -370,6 +370,29 @@ def test_explain_entry(rig):
     assert 0 < child_ns <= root_ns
 
 
+def test_explain_entry_plans_the_request_snapshot(rig, monkeypatch):
+    """The ComplexSearch explain tree is planned on the table that served
+    the request: one store snapshot per request, explain included."""
+    _, _, ch = rig
+    snaps = []
+    real = DocStore.snapshot
+
+    def counted(self, *a, **k):
+        snaps.append(1)
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(DocStore, "snapshot", counted)
+    resp = ch.unary(
+        f"{SVC}/ComplexSearch",
+        {"query": {"query": "service:auth", "explain": True, **WIN},
+         "size": 1},
+        sp.COMPLEX_SEARCH_REQUEST, sp.COMPLEX_SEARCH_RESPONSE,
+    )
+    assert resp["explain"]["message"].startswith("explain:")
+    assert len(resp["docs"]) == 1
+    assert len(snaps) == 1
+
+
 def test_grpc_admission_control(rig, spark):
     """The gRPC path enforces the same rate limit and inflight-search cap
     the HTTP handler does (`proxyapi/grpc_v1.go:219-222`

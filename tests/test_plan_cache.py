@@ -160,7 +160,7 @@ def test_agg_built_schema_state_set_at_build(spark):
     aq = AggQuery(func="count", group_by="grp")
     out = st.aggregate(aq)
     (built,) = [v[0] for k, v in st._plan_cache.items() if k[0] == "complex"]
-    docs, fused = built
+    _route, docs, fused = built
     assert docs is None
     names = fused.branches[0].names
     assert names == out.columns
@@ -233,7 +233,8 @@ def test_projected_search_matches_select_on_top(spark, tmp_path, q):
     assert got is not full and got.columns == list(DOC_COLUMNS)
     assert st.search(q, size=3, offset=1, columns=DOC_COLUMNS) is got
     assert st.search(q, size=3, offset=1) is full
-    assert st.route == "scan"
+    res = st.complex_search(q, size=3, offset=1)
+    assert res.docs is full and res.route == "scan"
     _assert_same_frame(got, full.select(*DOC_COLUMNS))
 
 
@@ -251,18 +252,29 @@ def test_projected_complex_docs_match_select_on_top(spark, tmp_path):
     _assert_same_frame(got.docs, full.docs.select(*DOC_COLUMNS))
 
 
-def test_projected_two_phase_search_matches_select_on_top(spark, tmp_path):
-    """A routed two-phase frame gets the same projection and stays
-    uncached."""
+def test_projected_two_phase_search_matches_select_on_top(spark, tmp_path,
+                                                          monkeypatch):
+    """A routed two-phase frame gets the same projection and is cached
+    like a scanned one: a repeat is the same frame and runs no phase-1
+    id-page collect."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
     df, idx, stats, m = _wide_table(spark, tmp_path)
     st = SearchTable.from_typed(
         df, m, ts_col="ts", rid_col="rid", assume_folded=True,
     ).attach_index(idx, ["text", "kind"], ["mid", "rid"], stats=stats,
                    two_phase_min_doc_bytes=64)
     cols = ("mid", "rid", "text")
-    got = st.search("text:alpha", size=5, offset=1, columns=cols)
-    assert st.route == "two_phase" and got.columns == list(cols)
+    res = st.complex_search("text:alpha", size=5, offset=1, columns=cols)
+    got = res.docs
+    assert res.route == "two_phase" and got.columns == list(cols)
     full = st.search("text:alpha", size=5, offset=1)
-    assert st.route == "two_phase"
+    assert st.complex_search("text:alpha", size=5, offset=1).route == (
+        "two_phase")
     _assert_same_frame(got, full.select(*cols))
-    assert not st._plan_cache
+    collected = []
+    collect = DataFrame.collect
+    monkeypatch.setattr(DataFrame, "collect",
+                        lambda d: collected.append(d) or collect(d))
+    assert st.search("text:alpha", size=5, offset=1, columns=cols) is got
+    assert collected == []

@@ -550,6 +550,46 @@ def test_complex_explain_flag(server):
         json.dumps({"query": "*", "with_total": True, "explain": True}).encode(),
     )
     assert code == 200 and res["explain"].startswith("Query: *")
+    # with docs it leads with the route that served them, like /search
+    code, res = _post(server, "/complex", json.dumps(
+        {"query": "*", "size": 1, "explain": True}).encode())
+    assert code == 200 and res["explain"].startswith("Route: scan\nQuery: *")
+
+
+def test_complex_honours_max_search_docs(server):
+    from seqspark.engine import MAX_SEARCH_DOCS
+
+    _post(server, "/_bulk", BULK)
+    for path in ("/search", "/complex"):
+        code, res = _post(server, path, json.dumps(
+            {"query": "*", "size": MAX_SEARCH_DOCS + 1}).encode())
+        assert code == 400, path
+        assert "exceeds max-search-docs" in res["error"], path
+
+
+def test_search_and_complex_size_zero_shapes(server):
+    """/search with size 0 still answers docs (empty), plus the total
+    when asked for; /complex with nothing requested is still a 400."""
+    _post(server, "/_bulk", BULK)
+    code, res = _post(server, "/search", json.dumps(
+        {"query": "*", "size": 0}).encode())
+    assert (code, res) == (200, {"docs": []})
+    code, res = _post(server, "/search", json.dumps(
+        {"query": "*", "size": 0, "with_total": True}).encode())
+    assert (code, res) == (200, {"docs": [], "total": 2})
+    code, res = _post(server, "/search", json.dumps(
+        {"query": "service:auth", "size": 5, "with_total": True}).encode())
+    assert code == 200 and set(res) == {"docs", "total"}
+    assert res["total"] == len(res["docs"]) == 1
+    # a malformed query is a 400 even when nothing is computed
+    code, _ = _post(server, "/search", json.dumps(
+        {"query": "service:(", "size": 0}).encode())
+    assert code == 400
+    code, res = _post(server, "/complex", json.dumps({"query": "*"}).encode())
+    assert code == 400
+    assert res["error"] == (
+        "complex search requires size > 0, with_total, a histogram "
+        "interval or at least one aggregation")
 
 
 def test_use_seq_ql_go_parsebool_values(server):

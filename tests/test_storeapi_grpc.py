@@ -79,6 +79,14 @@ def test_bulk_then_search_roundtrip(rig):
         assert src["id"]["rid"] == rid & (1 << 64) - 1
 
 
+def test_search_size_zero_without_aggs_answers(rig):
+    _core, _srv, ch = rig
+    resp = _search(ch, size=0)
+    assert resp.get("id_sources", []) == []
+    resp = _search(ch, query="service:auth", size=0, with_total=True)
+    assert resp["total"] == 2 and resp.get("id_sources", []) == []
+
+
 def test_bulk_count_mismatch_and_bad_doc(rig):
     core, srv, ch = rig
     with pytest.raises(GrpcError) as ei:

@@ -12,7 +12,6 @@ import inspect
 import json
 import os
 import sys
-import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -140,25 +139,6 @@ def test_server_table_memo_transient_invalidate(spark, tmp):
     assert core._st_memo is None
     assert core._table() is not st
     core._httpd.server_close()
-
-
-def test_route_is_thread_local(spark, tmp):
-    store = DocStore(spark, os.path.join(tmp, "store"))
-    store.append(_docs_df(spark, [_doc(1, 1)]))
-    st = store.search_table(MAPPING)
-    st.search("service:auth", size=5)
-    assert st.route == "scan"
-    seen = {}
-
-    def other():
-        # a thread that never searched sees None, not this thread's route
-        seen["route"] = st.route
-
-    t = threading.Thread(target=other)
-    t.start()
-    t.join()
-    assert seen["route"] is None
-    assert st.route == "scan"
 
 
 def _server(spark, tmp, store, **kw):
@@ -296,7 +276,7 @@ def _held_frames(st):
     held = []
     for (built,) in st._plan_cache.values():
         if isinstance(built, tuple):
-            docs, fused = built
+            _route, docs, fused = built
             held += [docs, getattr(fused, "frame", None)]
         else:
             held.append(built)

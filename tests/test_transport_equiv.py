@@ -554,8 +554,11 @@ def test_three_transport_equivalence(rig, spec):
 # the ROUTED result equals the SCAN result row-for-row (routing toggled
 # by the operator's own width threshold, nothing else changed), and
 # that both routes are genuinely served across the run (read back from
-# `SearchTable.route`, the same signal the server's explain prints as
-# "Route: ..."). Anchor: proxy/search/ingestor.go:140-151.
+# `ComplexSearchResult.route`, the same signal the server's explain
+# prints as "Route: ..."; keyset pages through a two_phase_search spy).
+# A complex request with docs, total and an agg on the routed table
+# must equal the same request on the index-less table.
+# Anchor: proxy/search/ingestor.go:140-151.
 
 @pytest.fixture(scope="module")
 def routing_rig(spark, tmp_path_factory):
@@ -585,13 +588,17 @@ def routing_rig(spark, tmp_path_factory):
     idx = build_inverted_index(
         tok, {"text": "__tok_text", "svc": "__tok_svc"},
         id_cols=["mid", "rid"])
-    st = SearchTable.from_typed(
+    plain = SearchTable.from_typed(
         df, {"text": "text", "svc": "text", "code": "keyword",
              "body": "keyword"},
         ts_col="ts", rid_col="rid", assume_folded=True,
-    ).attach_index(idx, ["text", "svc"], ["mid", "rid"],
-                   two_phase_min_doc_bytes=64)
-    return st
+    )
+
+    def indexed(min_bytes):
+        return plain.attach_index(idx, ["text", "svc"], ["mid", "rid"],
+                                  two_phase_min_doc_bytes=min_bytes)
+
+    return plain, indexed
 
 
 def _routing_fuzz_query(rng):
@@ -617,10 +624,20 @@ def _routing_fuzz_query(rng):
     return " and ".join(leaves)
 
 
-def test_routing_parity_fuzz(routing_rig):
+def test_routing_parity_fuzz(routing_rig, monkeypatch):
     import random
 
-    st_tbl = routing_rig
+    from seqspark import AggQuery, SearchTable
+
+    plain_tbl, indexed = routing_rig
+    calls = []
+    orig = SearchTable.two_phase_search
+
+    def spy(self, *a, **k):
+        calls.append(1)
+        return orig(self, *a, **k)
+
+    monkeypatch.setattr(SearchTable, "two_phase_search", spy)
     rng = random.Random(20250817)
     served = {"two_phase": 0, "scan": 0}
     for trial in range(120):
@@ -635,31 +652,53 @@ def test_routing_parity_fuzz(routing_rig):
             t_ms = f_ms + rng.randint(10, 120) * 1000
         after = (EPOCH_MS + rng.randint(0, 180) * 1000,
                  rng.randint(0, 400)) if use_cursor else None
+        # fresh tables per trial, as the server builds one per snapshot:
+        # a plan cache pins every frame it holds, and 2 x 64 indexed
+        # frames do not fit the suite's 1 GiB driver heap
+        routed_tbl, scan_tbl = indexed(64), indexed(None)
 
-        def run():
+        def run(tbl):
             if after is not None:
-                out = st_tbl.search_after(
+                n = len(calls)
+                out = tbl.search_after(
                     q, last_ts_ms=after[0], last_rid=after[1],
                     size=size, order=order, from_ms=f_ms, to_ms=t_ms)
+                route = "two_phase" if len(calls) > n else "scan"
             else:
-                out = st_tbl.search(
+                res = tbl.complex_search(
                     q, from_ms=f_ms, to_ms=t_ms, size=size,
                     offset=offset, order=order)
-            return [tuple(r) for r in out.collect()], st_tbl.route
+                out, route = res.docs, res.route
+                # search() is the docs of the same construction
+                assert tbl.search(
+                    q, from_ms=f_ms, to_ms=t_ms, size=size, offset=offset,
+                    order=order) is out
+            return [tuple(r) for r in out.collect()], route
 
-        routed_rows, route = run()
+        routed_rows, route = run(routed_tbl)
         served[route] += 1
         # same request with routing disabled = the plain scan plan
-        saved = st_tbl._two_phase_min_bytes
-        st_tbl._two_phase_min_bytes = None
-        try:
-            scan_rows, scan_route = run()
-        finally:
-            st_tbl._two_phase_min_bytes = saved
+        scan_rows, scan_route = run(scan_tbl)
         assert scan_route == "scan"
         assert routed_rows == scan_rows, (
             trial, q, order, size, offset, f_ms, t_ms, after, route,
             routed_rows[:3], scan_rows[:3])
+        if after is not None:
+            continue
+        # the complex request with docs routes like the search and
+        # answers exactly what the index-less table answers
+        kw = dict(from_ms=f_ms, to_ms=t_ms, size=size, offset=offset,
+                  order=order, with_total=True,
+                  aggs=[AggQuery(func="count", group_by="svc")])
+        got = routed_tbl.complex_search(q, **kw)
+        want = plain_tbl.complex_search(q, **kw)
+        eligible = "code:" not in q  # every other leaf is index-covered
+        assert got.route == route == ("two_phase" if eligible else "scan")
+        assert want.route == "scan"
+        assert [tuple(r) for r in got.docs.collect()] == routed_rows
+        assert (got.total_count, got.agg_buckets) == (
+            want.total_count, want.agg_buckets), (trial, q)
+        assert routed_rows == [tuple(r) for r in want.docs.collect()]
     # both paths must actually exercise, many times each — a fuzz run
     # that never routes (or never falls back) validates nothing
     assert served["two_phase"] >= 20, served

@@ -219,17 +219,160 @@ def test_transports_reach_two_phase(spark, tmp_path, monkeypatch):
         want = [(r["mid"], r["rid"]) for r in st_plain.search_after(
             "message:login1", size=3, order="asc", **kw
         ).select("mid", "rid").collect()]
+        n_calls = len(calls)
         got = [(r["mid"], r["rid"]) for r in st_routed.search_after(
             "message:login1", size=3, order="asc", **kw
         ).select("mid", "rid").collect()]
         assert got == want, cursor
         if cursor is not None:
-            assert st_routed.route == "two_phase"
+            assert len(calls) == n_calls + 1  # this page routed
         walked += len(got)
         if not want:
             break
         cursor = want[-1]
     assert walked == 4 and calls, "cursor pages never routed"
+
+
+def _spy(monkeypatch, owner, name, calls):
+    """Wrap ``owner.name`` so every call appends to ``calls``."""
+    real = getattr(owner, name)
+
+    def counted(*a, **k):
+        calls.append(name)
+        return real(*a, **k)
+
+    monkeypatch.setattr(owner, name, counted)
+
+
+def _count_parses(monkeypatch):
+    """Count seq-ql and legacy parses (``seqspark.engine.parse*``)."""
+    from seqspark import engine
+
+    calls = []
+    for name in ("parse", "parse_legacy"):
+        _spy(monkeypatch, engine, name, calls)
+    return calls
+
+
+def _routed_wide_table(spark, tmp_path):
+    df, idx, stats, m = _wide_table(spark, tmp_path)
+    return SearchTable.from_typed(
+        df, m, ts_col="ts", rid_col="rid", assume_folded=True,
+    ).attach_index(idx, ["text", "kind"], ["mid", "rid"], stats=stats,
+                   two_phase_min_doc_bytes=64)
+
+
+def test_uncached_entry_points_parse_once(spark, tmp_path, monkeypatch):
+    """explain(), explain_tree() and a routed search_after() parse their
+    query once: the router, the two-phase build and the filter share
+    the parsed Query."""
+    st = _routed_wide_table(spark, tmp_path)
+    routed = []
+    _spy(monkeypatch, SearchTable, "two_phase_search", routed)
+    parses = _count_parses(monkeypatch)
+    for call in (
+        lambda: st.explain("text:alpha"),
+        lambda: st.explain_tree("text:alpha"),
+        lambda: st.search_after("text:alpha", last_ts_ms=1_700_000_100_000,
+                                last_rid=100, size=3),
+    ):
+        parses.clear()
+        call()
+        assert len(parses) == 1
+    assert len(routed) == 1  # the search_after page was served two-phase
+
+
+def test_concurrent_requests_carry_their_own_route(spark, tmp_path):
+    """Two threads run requests of different routes on one shared table;
+    each result carries the route of its own request."""
+    import threading
+
+    st = _routed_wide_table(spark, tmp_path)
+    queries = {"two_phase": "text:alpha",
+               "scan": "text:alpha and not text:beta"}
+    barrier = threading.Barrier(len(queries))
+    seen = {want: [] for want in queries}
+    errors = []
+
+    def run(want, q):
+        try:
+            barrier.wait(timeout=60)
+            for size in (3, 4, 5):
+                seen[want].append(st.complex_search(q, size=size).route)
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=kv)
+               for kv in queries.items()]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+        assert not t.is_alive()
+    assert errors == []
+    assert seen == {want: [want] * 3 for want in queries}
+
+
+def _indexed_wide_server(spark, tmp_path):
+    """A server over a 40-doc wide store with an attached StoreIndex on
+    ``message`` and two-phase routing on."""
+    from seqspark.server import SeqSparkServer
+    from seqspark.store import DocStore
+
+    mapping = Mapping({"service": "keyword", "message": "text"})
+    store = DocStore(spark, str(tmp_path / "store"))
+    lines = []
+    for i in range(40):
+        body = " ".join(
+            hashlib.sha256(f"d{i}:{j}".encode()).hexdigest()
+            for j in range(24))
+        lines.append('{"index": {}}')
+        lines.append(json.dumps({
+            "timestamp": f"2024-01-01 10:00:{i:02d}.000",
+            "service": "auth" if i % 8 == 0 else "pay",
+            "message": f"login{i % 10} {body}"}))
+    seed = SeqSparkServer(spark, store, mapping, allowed_drift_ms=BIG,
+                          future_drift_ms=BIG)
+    seed.bulk("\n".join(lines).encode(), gzipped=False)
+    seed._httpd.server_close()
+    sidx = StoreIndex(store, str(tmp_path / "index"),
+                      {"message": F.col("tokens")["message"]})
+    sidx.refresh()
+    return SeqSparkServer(
+        spark, store, mapping, allowed_drift_ms=BIG, future_drift_ms=BIG,
+        index=sidx, two_phase_min_doc_bytes=64,
+        async_dir=str(tmp_path / "async"))
+
+
+@pytest.mark.parametrize("query,routed", [
+    ("service:auth", 0),      # no index-covered conjunct: the scan
+    ("message:login1", 1),    # fully covered on a wide store: two-phase
+])
+def test_indexed_server_search_is_one_cached_construction(
+        spark, tmp_path, monkeypatch, query, routed):
+    """On an indexed server a /search with with_total parses its query
+    once on a miss; the same body again parses nothing, builds no new
+    Dataset and collects only frames held in the table's plan cache
+    (for a two-phase body, no phase-1 id page either)."""
+    from test_table_memo import _held_frames, _spy_frames
+
+    core = _indexed_wide_server(spark, tmp_path)
+    body = {"query": query, "size": 10, "with_total": True}
+    parses = _count_parses(monkeypatch)
+    first = core.search(dict(body))
+    assert len(parses) == 1
+    assert core._counters["two_phase_searches_total"] == routed
+    assert first["total"] == len(first["docs"]) > 0
+    parses.clear()
+    collected, selected = _spy_frames(monkeypatch)
+    second = core.search(dict(body))
+    assert second == first
+    assert parses == [] and selected == []
+    held = _held_frames(core._table())
+    assert collected and all(
+        any(df is h for h in held) for df in collected), collected
+    assert core._counters["two_phase_searches_total"] == 2 * routed
+    core._httpd.server_close()
 
 
 def test_index_freshness_guard(spark, tmp_path):
