@@ -40,7 +40,7 @@ from collections import OrderedDict
 from dataclasses import dataclass, field as dc_field
 from typing import Dict, List, Optional, Sequence, Tuple, Union
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 from .compile import (
@@ -58,6 +58,10 @@ from .tokenize import DEFAULT_MAX_TOKEN_SIZE, keyword_tokens, tokens_for_type
 
 #: reference `conf/conf.go:24` MaxRequestedDocuments
 MAX_SEARCH_DOCS = 100_000
+
+#: the name scanned docs observe their match count under
+#: (:meth:`SearchTable._complex_plan`)
+_TOTAL_METRIC = "total"
 
 #: guardrails, reference `docs/en/02-flags.md`
 AGG_MAX_GROUP_TOKENS = 2_000
@@ -191,6 +195,21 @@ class _FusedBuilt:
     src: DataFrame                      # filtered rows (field-guard confirm)
     max_group_tokens: int
     max_field_tokens: int
+
+
+def _counts_each_match(docs: DataFrame) -> bool:
+    """True when ``docs`` runs as one ``TakeOrderedAndProject`` over the
+    rows its ``observe`` counts, so every match passes the count once.
+
+    Two shapes break that. The optimizer folds a page to an empty
+    relation when it knows the row count (an offset past the rows of a
+    local relation), which drops the observation. It drops the limit when
+    that count fits the page, and so does ``size=None``; the page is then
+    a global sort, whose range shuffle samples its input in a job of its
+    own and counts every row twice. The check plans the frame now; its
+    collect reuses that plan."""
+    plan = docs._jdf.queryExecution().executedPlan().toString()
+    return "CollectMetrics" in plan and "TakeOrderedAndProject" in plan
 
 
 def _bucket_names(n_quantiles: int, grouped: bool) -> List[str]:
@@ -1046,7 +1065,7 @@ class SearchTable:
         return self._complex_plan(
             q, from_ms, to_ms, size, offset, order, False, None, (), False,
             dialect, columns, dedup_cols,
-        )[1]
+        )[0][1]
 
     def avg_doc_bytes(self, sample_files: int = 16) -> Optional[float]:
         """Average stored bytes per document — compressed parquet file
@@ -1523,7 +1542,7 @@ class SearchTable:
             df = self._filtered(self.parse(q, dialect), from_ms, to_ms)
             return df.agg(F.count(F.lit(1)).alias("total"))
 
-        return self._cached_plan(key, build)
+        return self._cached_plan(key, build)[0]
 
     def fetch(self, ids_df: DataFrame, id_cols: Sequence[str]) -> DataFrame:
         """Fetch-by-ID as a broadcast left-semi join (reference
@@ -1642,7 +1661,7 @@ class SearchTable:
             F.count(F.lit(1)).alias("docs"),
             F.unix_millis(F.min(self.ts_col)).alias("oldest_ms"),
             F.unix_millis(F.max(self.ts_col)).alias("newest_ms"),
-        )).collect()[0]
+        ))[0].collect()[0]
         return {
             "docs": row["docs"],
             "oldest_ms": row["oldest_ms"],
@@ -1723,18 +1742,26 @@ class SearchTable:
         QueryExecution once per Dataset, so anything derived from it
         (``.select``, ``.limit``, ``.head``) is a new Dataset that is
         analysed and planned again on every call: a projection or
-        limit the caller needs belongs in ``build`` and in ``key``."""
+        limit the caller needs belongs in ``build`` and in ``key``.
+
+        The entry is ``(built, lock)``. The lock belongs to that one
+        construction: a frame that observes a metric (the scanned docs of
+        :meth:`complex_search` with a total) keeps it in an accumulator
+        that every execution of the cached Dataset resets and fills, so
+        concurrent executions of one entry would read each other's
+        counts. Its collector holds the lock from the collect until it has
+        read the metric; other entries never wait on it."""
         with self._plan_cache_lock:
             hit = self._plan_cache.get(key)
             if hit is not None:
                 self._plan_cache.move_to_end(key)
-                return hit[0]
-        built = build()
+                return hit
+        entry = (build(), threading.Lock())
         with self._plan_cache_lock:
-            self._plan_cache[key] = (built,)
+            self._plan_cache[key] = entry
             while len(self._plan_cache) > self._PLAN_CACHE_CAP:
                 self._plan_cache.popitem(last=False)
-        return built
+        return entry
 
     @staticmethod
     def _agg_key(aggq: AggQuery) -> tuple:
@@ -1785,7 +1812,7 @@ class SearchTable:
         the construction is built. The buckets come back in the reference
         order (`seq/qpr.go:216-253`) as a LocalRelation.
         """
-        _, _, fused = self._complex_plan(
+        (_, _, fused), _ = self._complex_plan(
             q, from_ms, to_ms, 0, 0, "desc", False, None, (aggq,), strict,
             dialect, None, None,
         )
@@ -1928,13 +1955,18 @@ class SearchTable:
         ONE plan-cached construction (:meth:`_complex_plan`, which
         :meth:`search` and :meth:`aggregate` share) holds the route, the
         lazy docs top-k and a fused aggregate computing total, histogram
-        and every aggregation in a single job (:meth:`_fused_build`). The
-        fused job runs here, its guards (the module limits
-        ``AGG_MAX_GROUP_TOKENS`` and ``AGG_MAX_FIELD_TOKENS``) are checked
-        on the driver and its results come back as driver-side values;
-        ``docs`` stays lazy, projected to ``columns`` when given (as in
-        :meth:`search`). Nothing is persisted, so there is nothing to
-        release.
+        and every aggregation in a single job (:meth:`_fused_build`). Both run here and every branch comes
+        back as a driver-side value: ``docs`` as the collected rows,
+        projected to ``columns`` when given (as in :meth:`search`). The
+        fused guards (the module limits ``AGG_MAX_GROUP_TOKENS`` and
+        ``AGG_MAX_FIELD_TOKENS``) are checked on the driver. Nothing is
+        persisted, so there is nothing to release.
+
+        Scanned docs whose total would be the fused job's only branch
+        observe their match count instead (:meth:`_complex_plan`): the
+        total is read from the docs execution under the construction's
+        lock (:meth:`_cached_plan`), so identical concurrent requests take
+        turns and no other request waits.
 
         Validation mirrors `grpc_complex_search.go:20-22`: at least one of
         docs (size>0), with_total, histogram or aggs must be requested.
@@ -1944,20 +1976,37 @@ class SearchTable:
                 "complex search requires size > 0, with_total, a histogram "
                 "interval or at least one aggregation"
             )
-        route, docs, fused = self._complex_plan(
+        (route, docs, fused), lock = self._complex_plan(
             q, from_ms, to_ms, size, offset, order, with_total,
             hist_interval_ms, aggs, strict, dialect, columns, None,
         )
-        res = ComplexSearchResult(docs, route)
-        if fused is None:
+        res = ComplexSearchResult(None, route)
+        if fused is not None:
+            for br, out in zip(fused.branches, self._fused_execute(fused)):
+                if br.func == "total":
+                    res.total_count = out
+                elif br.func == "hist":
+                    res.histogram_rows = out
+                else:
+                    res.agg_buckets.append(
+                        [dict(zip(br.names, t)) for t in out])
+        if docs is None:
             return res
-        for br, out in zip(fused.branches, self._fused_execute(fused)):
-            if br.func == "total":
-                res.total_count = out
-            elif br.func == "hist":
-                res.histogram_rows = out
-            else:
-                res.agg_buckets.append([dict(zip(br.names, t)) for t in out])
+        if with_total and res.total_count is None:  # the docs observe it
+            with lock:
+                res.docs = docs.collect()
+                n = docs._jdf.queryExecution().observedMetrics().apply(
+                    _TOTAL_METRIC).getLong(0)
+            rows = len(res.docs)
+            if rows and (n < offset + rows or (rows < size
+                                               and n != offset + rows)):
+                # a count its own page contradicts (seen once: 0 for a
+                # full page over a cached table, cause unknown): count
+                # again
+                n = self.total(q, from_ms, to_ms, dialect).head()["total"]
+            res.total_count = n
+        else:
+            res.docs = docs.collect()
         return res
 
     def _complex_plan(
@@ -1966,17 +2015,33 @@ class SearchTable:
     ) -> tuple:
         """The plan-cached ``(route, docs, fused)`` construction of one
         request, keyed on every request field, dialect, dedup and the docs
-        projection. The query is parsed once per construction, and a hit
-        parses nothing.
+        projection, with its lock (the :meth:`_cached_plan` entry). The
+        query is parsed once per construction, and a hit parses nothing.
 
         ``docs`` is the lazy top-k (every match for ``size=None``),
         served two-phase when :meth:`_route_two_phase` takes it, else by
         the scan; ``route`` names which ("two_phase" or "scan"). Both are
         ``None`` when ``size`` is 0 and another branch is requested.
-        ``fused`` is :meth:`_fused_build`'s aggregate (``None`` without
-        total, histogram or aggs). A routed frame embeds the id page
-        phase 1 collected while building; it is cached like the rest,
-        because a table's listing and index never change."""
+        ``fused`` is :meth:`_fused_build`'s aggregate (``None`` when no
+        branch is left for it). A routed frame embeds the id page phase 1
+        collected while building; it is cached like the rest, because a
+        table's listing and index never change.
+
+        When the total is the only fused branch and the scan serves the
+        docs, the docs execution counts it instead: ``observe`` puts a
+        count on the filtered, deduplicated rows below the top-k, and no
+        fused aggregate is built. The total stays a fused branch when
+        that removes no job or the docs cannot count it:
+
+        - a histogram or an aggregation: the fused job runs anyway, and a
+          branch on it costs less than the observation (a cached
+          dashboard-shaped ``/complex`` with docs, 4-core host: ~15 ms
+          more CPU per request observed);
+        - routed docs: the fetch reads only the id page, not every match;
+        - ``size=0``: there are no docs (``limit(0)`` would fold the
+          observation away);
+        - a physical plan that is not one top-k over the observed rows
+          (:func:`_counts_each_match`)."""
         if size is not None and size > MAX_SEARCH_DOCS:
             raise ValueError(f"size {size} exceeds max-search-docs {MAX_SEARCH_DOCS}")
         key = (
@@ -1999,14 +2064,25 @@ class SearchTable:
                 route = "scan" if docs is None else "two_phase"
             if route == "scan" or want_fused:
                 base = self._filtered(query, from_ms, to_ms, dedup_cols)
+
+            def page(df: DataFrame) -> DataFrame:
+                return _project(self.apply_pipes(self._public(
+                    self._paginate(df, size, offset, order)), query.pipes),
+                    columns)
+
+            fused_total = with_total
             if route == "scan":
-                docs = self.apply_pipes(self._public(
-                    self._paginate(base, size, offset, order)), query.pipes)
-            if docs is not None:
+                if with_total and not (hist_interval_ms or aggs):
+                    docs = page(base.observe(
+                        _TOTAL_METRIC, F.count(F.lit(1)).alias("total")))
+                    fused_total = not _counts_each_match(docs)
+                if docs is None or fused_total:
+                    docs = page(base)
+            elif docs is not None:
                 docs = _project(docs, columns)
-            if want_fused:
+            if fused_total or hist_interval_ms or aggs:
                 fused = self._fused_build(
-                    base, with_total, hist_interval_ms, aggs, strict)
+                    base, fused_total, hist_interval_ms, aggs, strict)
             return route, docs, fused
 
         return self._cached_plan(key, build)
@@ -2206,16 +2282,18 @@ class SearchTable:
 
 @dataclass
 class ComplexSearchResult:
-    """Branches of one ComplexSearch request. ``docs`` is the lazy top-k
-    and ``route`` the plan that serves it ("two_phase" or "scan", a value
-    of this request alone); total, histogram and aggregations came from
-    one fused job and are held driver-side: ``histogram_rows`` as
-    ascending ``(bucket_ms, cnt)``, ``agg_buckets`` as one list of bucket
-    dicts per agg in reference bucket order (the columns of
+    """Branches of one ComplexSearch request, every one a driver-side
+    value. ``docs`` holds the collected top-k rows and ``route`` the plan
+    that served them ("two_phase" or "scan", a value of this request
+    alone). ``total_count`` was counted by the fused job or, when it was
+    that job's only branch, by the scanned docs execution. The fused job
+    gave ``histogram_rows`` as ascending
+    ``(bucket_ms, cnt)`` and ``agg_buckets`` as one list of bucket dicts
+    per agg in reference bucket order (the columns of
     :meth:`SearchTable.aggregate`). Unrequested branches stay
     ``None``/empty."""
 
-    docs: Optional[DataFrame]
+    docs: Optional[List[Row]]
     route: Optional[str]
     total_count: Optional[int] = None
     histogram_rows: Optional[List[Tuple[Optional[int], int]]] = None

@@ -281,6 +281,10 @@ class StoreIndex:
         #: job per read(), so the frame is built once and invalidated when
         #: refresh()/prune() change the files underneath
         self._frame: Optional[DataFrame] = None
+        #: the schema the first read() inferred: the index columns never
+        #: change, so later reads pass it and run no inference job
+        #: (DocStore.read()'s ``_schema_cache``)
+        self._schema = None
         #: memoized merged IndexStats ((value,) once computed) — same
         #: lifecycle as the frame cache
         self._stats_cache: Optional[tuple] = None
@@ -478,7 +482,11 @@ class StoreIndex:
 
     def read(self) -> DataFrame:
         if self._frame is None:
-            self._frame = self.store.spark.read.parquet(self.path)
+            reader = self.store.spark.read
+            if self._schema is not None:
+                reader = reader.schema(self._schema)
+            self._frame = reader.parquet(self.path)
+            self._schema = self._frame.schema
         return self._frame
 
     def search(self, field: str, tokens: Sequence[str]) -> DataFrame:

@@ -1362,14 +1362,13 @@ class SeqSparkServer:
         return self._flag_partial(out, snap)
 
     def _docs_of(self, res) -> list:
-        """The wire docs of a complex_search result (``[]`` when it has
-        none), counting a request whose docs the two-phase route served."""
+        """The wire docs of a complex_search result's collected rows
+        (``[]`` when it has none), counting a request whose docs the
+        two-phase route served."""
         if res.route == "two_phase":
             self._count("two_phase_searches_total")
-        if res.docs is None:
-            return []
         return [{"mid": r["mid"], "rid": r["rid"], "data": r["raw"]}
-                for r in res.docs.collect()]
+                for r in res.docs or ()]
 
     @staticmethod
     def _explain_of(st: SearchTable, req: dict, route: Optional[str]):

@@ -130,6 +130,9 @@ def _model_docs(which, q, from_ms, to_ms):
         "*": lambda d: True,
         "svc:auth or svc:pay": lambda d: d.get("svc") in ("auth", "pay"),
         "msg:alpha": lambda d: "alpha" in _toks(d, "msg"),
+        "svc:auth": lambda d: d.get("svc") == "auth",
+        "msg:alpha and not svc:pay": lambda d: (
+            "alpha" in _toks(d, "msg") and d.get("svc") != "pay"),
     }[q]
     return [d for d in docs if match(d) and (from_ms is None or (
         d["ms"] is not None and from_ms <= d["ms"] <= to_ms))]
@@ -219,7 +222,7 @@ def test_complex_branches_equal_standalone(request, which, q, from_ms, to_ms):
     assert res.histogram_rows == hist
     if which == "plain" and from_ms is None:
         assert hist[0] == (None, 1)
-    assert len(res.docs.collect()) == min(5, total)
+    assert len(res.docs) == min(5, total)
     docs = _model_docs(which, q, from_ms, to_ms)
     assert total == len(docs)
     for aq, buckets in zip(AGGS, res.agg_buckets):
@@ -251,7 +254,7 @@ def test_complex_empty_result_set(request, which):
     )
     assert res.total_count == 0 and res.histogram_rows == []
     assert res.agg_buckets == [[], [], []]
-    assert res.docs.collect() == []
+    assert res.docs == []
 
 
 @pytest.mark.parametrize("which", ["plain", "indexed"])
@@ -375,11 +378,8 @@ def test_complex_reuses_cached_construction_and_job_budget(spark, plain):
         assert again.histogram_rows == first.histogram_rows
         # with docs: the top-k is the second job
         plain.complex_search("svc:auth", size=5, **kw)
-
-        def with_docs():
-            plain.complex_search("svc:auth", size=5, **kw).docs.collect()
-
-        assert _jobs(spark, with_docs) <= 2
+        assert _jobs(spark, lambda: plain.complex_search(
+            "svc:auth", size=5, **kw)) <= 2
         assert len(builds) == 2
     finally:
         del plain._fused_build
@@ -389,3 +389,178 @@ def test_total_uses_plan_cache(plain):
     a = plain.total("svc:pay")
     assert plain.total("svc:pay") is a
     assert plain.total("svc:auth") is not a
+
+
+# --- the observed total: scanned docs count their own matches
+
+
+def _construction(st, q, size, offset=0, from_ms=None, to_ms=None):
+    """The cached ``(route, docs, fused)`` of ``complex_search(q, size,
+    offset, with_total=True)`` (a plan-cache hit after that call)."""
+    (built, _lock) = st._complex_plan(
+        q, from_ms, to_ms, size, offset, "desc", True, None, (), False, None,
+        None, None)
+    return built
+
+
+def _assert_total_parity(st, q, offset=0, observed=True, **win):
+    """A with_total request with docs answers SearchTable.total() and the
+    size=0 fused total. Scanned docs count it themselves (no fused job at
+    all) unless ``observed`` is False; size=0 keeps the fused total."""
+    res = st.complex_search(q, size=5, offset=offset, with_total=True, **win)
+    want = st.total(q, **win).head()["total"]
+    fused_only = st.complex_search(q, size=0, with_total=True, **win)
+    assert res.total_count == want == fused_only.total_count, (q, offset, win)
+    route, docs, fused = _construction(st, q, 5, offset, **win)
+    assert res.route == route and docs is not None
+    if route == "scan" and observed:
+        assert fused is None, (q, offset, win)
+    else:
+        assert [b.func for b in fused.branches] == ["total"], (q, offset, win)
+    route0, docs0, fused0 = _construction(st, q, 0, **win)
+    assert route0 is None and docs0 is None
+    assert [b.func for b in fused0.branches] == ["total"]
+    return res, docs
+
+
+@pytest.mark.parametrize("which", ["plain", "indexed"])
+def test_observed_total_parity(request, which):
+    st = request.getfixturevalue(which)
+    for q in ("*", "svc:auth or svc:pay", "msg:alpha"):
+        res, _ = _assert_total_parity(st, q)
+        assert len(res.docs) == min(5, res.total_count)
+    piped, _ = _assert_total_parity(st, "svc:auth | fields svc")
+    assert piped.docs and all(
+        list(r.asDict()) == ["svc"] if which == "plain"
+        else r["raw"] == '{"svc":"auth"}' for r in piped.docs)
+    # an empty time window
+    res, _ = _assert_total_parity(st, "*", from_ms=T0 - 10**7,
+                                  to_ms=T0 - 10**6)
+    assert res.total_count == 0 and res.docs == []
+    # offset past the last match: the docs page is empty, the total is not
+    res, _ = _assert_total_parity(st, "svc:auth", offset=1000)
+    assert res.docs == [] and res.total_count > 0
+
+
+def test_offset_past_a_known_row_count_keeps_the_fused_total(spark):
+    """Over a local relation the optimizer knows the row count (it even
+    evaluates the filter: 12 matches). An offset past it folds the page to
+    an empty relation and drops the observation with it, so the fused
+    total answers instead."""
+    import pyarrow as pa
+
+    rows = [(d["id"], d.get("svc"), d["ms"]) for d in _docs()]
+    df = spark.createDataFrame(pa.table(
+        {k: [r[i] for r in rows] for i, k in enumerate(("id", "svc", "ms"))},
+        schema=pa.schema([("id", pa.int64()), ("svc", pa.string()),
+                          ("ms", pa.int64())]),
+    )).withColumn("ts", F.timestamp_millis("ms")).drop("ms")
+    st = SearchTable.from_typed(df, {"svc": "keyword", "id": "keyword"},
+                                ts_col="ts", rid_col="id")
+    res, docs = _assert_total_parity(st, "svc:auth", offset=1000,
+                                     observed=False)
+    assert res.docs == [] and res.total_count == 12
+    assert "LocalRelation <empty>" in (
+        docs._jdf.queryExecution().optimizedPlan().toString())
+    # an offset that leaves less than a page (12 - 10 < 5): the limit is
+    # dropped and the page becomes a global sort, whose range shuffle
+    # would count the observed rows twice
+    res, _ = _assert_total_parity(st, "svc:auth", offset=10, observed=False)
+    assert len(res.docs) == 2 and res.total_count == 12
+    # an offset that leaves more than a page keeps its top-k: observed
+    res, _ = _assert_total_parity(st, "svc:auth", offset=3)
+    assert len(res.docs) == 5 and res.total_count == 12
+
+
+def test_observed_total_of_a_folded_predicate(plain):
+    """A non-integer literal on the integral ``id`` keyword column compiles
+    to a false filter that the optimizer folds to an empty relation. Its
+    row count (0) fits the page, so the limit goes and the page is a
+    global sort: the fused total answers."""
+    res, docs = _assert_total_parity(plain, "id:1.5 or id:x", observed=False)
+    assert res.total_count == 0 and res.docs == []
+    plan = docs._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation <empty>" in plan and "Limit" not in plan
+
+
+@pytest.mark.parametrize("threshold,join", [
+    (None, "BroadcastHashJoin"), ("-1", "SortMergeJoin")])
+def test_observed_total_over_index_semi_join(spark, indexed, threshold, join):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    indexed._plan_cache.clear()
+    try:
+        if threshold is not None:
+            spark.conf.set(key, threshold)
+        for q in ("svc:auth", "msg:alpha and not svc:pay"):
+            res, docs = _assert_total_parity(indexed, q)
+            assert res.total_count == len(
+                _model_docs("indexed", q, None, None))
+            plan = docs._jdf.queryExecution().executedPlan().toString()
+            assert "LeftSemi" in plan and join in plan, plan
+    finally:
+        spark.conf.set(key, old)
+        indexed._plan_cache.clear()
+
+
+def test_observed_total_with_nested_dedup(spark):
+    """A nested mapping stores one row per nested element, all sharing
+    the document's (mid, rid): default_dedup collapses them before the
+    top-k, and the observed count sits above that dedup."""
+    mapping = Mapping.from_yaml_obj({"mapping-list": [
+        {"name": "svc", "type": "keyword"},
+        {"name": "items", "type": "nested",
+         "mapping-list": [{"name": "kind", "type": "keyword"}]},
+    ]})
+    raws = [(json.dumps({
+        "timestamp": f"2024-01-01 10:00:{i:02d}.000", "svc": SVCS[i % 2],
+        "items": [{"kind": k} for k in ("a", "b", "c")[:1 + i % 3]],
+    }),) for i in range(30)]
+    docs = ingest_docs(spark.createDataFrame(raws, "raw string"), mapping,
+                       allowed_drift_ms=10**15, future_drift_ms=10**15)
+    st = SearchTable.from_docs(docs, mapping)
+    assert st.default_dedup == ["mid", "rid"]
+    assert docs.count() > 30  # one row per nested element
+    res, _ = _assert_total_parity(st, "svc:auth")
+    assert res.total_count == 15
+    res, _ = _assert_total_parity(st, "items.kind:b")
+    assert res.total_count == 20
+    # fewer matches than the page: the top-k is kept at runtime too
+    for size, offset in ((5, 0), (10, 0), (3, 4)):
+        res = st.complex_search("svc:auth and items.kind:c", size=size,
+                                offset=offset, with_total=True)
+        assert res.total_count == 5 and len(res.docs) == min(size, 5 - offset)
+
+
+def test_total_is_observed_only_when_it_removes_the_fused_job(
+        plain, monkeypatch):
+    """size=0 has no docs to count with; a histogram or an aggregation
+    runs the fused job anyway, so the total stays one of its branches."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    observed = []
+    observe = DataFrame.observe
+    monkeypatch.setattr(DataFrame, "observe",
+                        lambda d, *a: observed.append(a) or observe(d, *a))
+    plain._plan_cache.clear()
+    want = plain.total("svc:pay").head()["total"]
+    for kw in (dict(size=0), dict(size=0, aggs=AGGS[:1]),
+               dict(size=2, aggs=AGGS[:1]),
+               dict(size=2, hist_interval_ms=60_000)):
+        res = plain.complex_search("svc:pay", with_total=True, **kw)
+        assert res.total_count == want, kw
+        assert res.docs is None if kw["size"] == 0 else len(res.docs) == 2
+    assert observed == []
+    res = plain.complex_search("svc:pay", size=2, with_total=True)
+    assert res.total_count == want and len(observed) == 1
+
+
+def test_export_size_keeps_the_fused_total(plain):
+    """``size=None`` (every match) sorts through a range shuffle whose
+    sampling job would count the observed rows a second time."""
+    res = plain.complex_search("svc:auth", size=None, with_total=True)
+    assert res.total_count == len(res.docs) == plain.total(
+        "svc:auth").head()["total"]
+    (built, _lock), = [v for k, v in plain._plan_cache.items()
+                       if k[:5] == ("complex", "svc:auth", None, None, None)]
+    assert [b.func for b in built[2].branches] == ["total"]

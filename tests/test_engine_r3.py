@@ -168,7 +168,7 @@ def test_complex_search_single_scan(events):
     )
     total = res.total_count
     assert total == st.total("event_type:click").collect()[0]["total"]
-    assert res.docs.count() == 10
+    assert len(res.docs) == 10
     assert sum(c for _, c in res.histogram_rows) == total
     counts = {r["name"]: r["value"] for r in res.agg_buckets[0]}
     assert counts == {"click": float(total)}
@@ -488,8 +488,7 @@ def test_complex_search_persists_nothing(spark, events):
             ),
         ],
     )
-    res.docs.collect()
-    assert len(res.agg_buckets) == 3
+    assert len(res.docs) == 5 and len(res.agg_buckets) == 3
     assert jsc.getPersistentRDDs().size() == before
     assert not hasattr(res, "unpersist")
 

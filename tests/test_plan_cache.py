@@ -18,6 +18,7 @@ from bench import _canon, _plan_str
 from seqspark import AggQuery, Mapping, SearchTable
 from seqspark.ingest import ingest_docs
 from seqspark.store import DocStore
+from test_table_memo import _collects
 from test_two_phase_routing import _wide_table
 
 MAPPING = {"grp": "keyword", "value": "keyword", "event_id": "keyword"}
@@ -222,7 +223,8 @@ def _assert_same_frame(projected, select_on_top):
 
 
 @pytest.mark.parametrize("q", ["service:auth", "* | fields service"])
-def test_projected_search_matches_select_on_top(spark, tmp_path, q):
+def test_projected_search_matches_select_on_top(spark, tmp_path, q,
+                                                monkeypatch):
     """``columns=`` is the cached twin of a ``select`` on the result: the
     projection is its own cache entry, and the unprojected frame keeps
     every public column."""
@@ -233,23 +235,37 @@ def test_projected_search_matches_select_on_top(spark, tmp_path, q):
     assert got is not full and got.columns == list(DOC_COLUMNS)
     assert st.search(q, size=3, offset=1, columns=DOC_COLUMNS) is got
     assert st.search(q, size=3, offset=1) is full
-    res = st.complex_search(q, size=3, offset=1)
-    assert res.docs is full and res.route == "scan"
+    res, collected = _collects(
+        monkeypatch, lambda: st.complex_search(q, size=3, offset=1))
+    assert len(collected) == 1 and collected[0] is full
+    assert res.route == "scan" and res.docs == full.collect()
     _assert_same_frame(got, full.select(*DOC_COLUMNS))
 
 
-def test_projected_complex_docs_match_select_on_top(spark, tmp_path):
+def test_projected_complex_docs_match_select_on_top(spark, tmp_path,
+                                                    monkeypatch):
     st = _doc_table(spark, tmp_path)
     kw = dict(size=2, with_total=True, aggs=[AggQuery(func="count",
                                                       group_by="service")])
-    full = st.complex_search("*", **kw)
-    got = st.complex_search("*", columns=DOC_COLUMNS, **kw)
-    assert full.docs.columns == st._public(st.df).columns
-    assert got.docs is not full.docs
-    assert st.complex_search("*", columns=DOC_COLUMNS, **kw).docs is got.docs
+
+    def complex_docs(**more):
+        """The result and the docs frame it collected (the last
+        collect; the fused aggregate runs first)."""
+        res, collected = _collects(
+            monkeypatch, lambda: st.complex_search("*", **kw, **more))
+        return res, collected[-1]
+
+    full, full_docs = complex_docs()
+    got, got_docs = complex_docs(columns=DOC_COLUMNS)
+    assert full_docs.columns == st._public(st.df).columns
+    assert got_docs is not full_docs
+    again, again_docs = complex_docs(columns=DOC_COLUMNS)
+    assert again_docs is got_docs and again.docs == got.docs
     assert (got.total_count, got.agg_buckets) == (full.total_count,
                                                   full.agg_buckets)
-    _assert_same_frame(got.docs, full.docs.select(*DOC_COLUMNS))
+    assert [tuple(r) for r in got.docs] == [
+        tuple(r[c] for c in DOC_COLUMNS) for r in full.docs]
+    _assert_same_frame(got_docs, full_docs.select(*DOC_COLUMNS))
 
 
 def test_projected_two_phase_search_matches_select_on_top(spark, tmp_path,
@@ -265,9 +281,11 @@ def test_projected_two_phase_search_matches_select_on_top(spark, tmp_path,
     ).attach_index(idx, ["text", "kind"], ["mid", "rid"], stats=stats,
                    two_phase_min_doc_bytes=64)
     cols = ("mid", "rid", "text")
-    res = st.complex_search("text:alpha", size=5, offset=1, columns=cols)
-    got = res.docs
+    res, collected = _collects(monkeypatch, lambda: st.complex_search(
+        "text:alpha", size=5, offset=1, columns=cols))
+    got = collected[-1]  # after phase 1's id page
     assert res.route == "two_phase" and got.columns == list(cols)
+    assert res.docs == got.collect()
     full = st.search("text:alpha", size=5, offset=1)
     assert st.complex_search("text:alpha", size=5, offset=1).route == (
         "two_phase")

@@ -1727,8 +1727,7 @@ def test_complex_search_differential(diff_rig, spec):
     rows_full = []
     want_ids = []
     if size > 0:
-        rows_full = res.docs.select(
-            "id", *_COMPLEX_PIPE_FIELDS).collect()
+        rows_full = res.docs
         got_ids = [r["id"] for r in rows_full]
         want_ids = _duck_page_ids(
             con, (filt, (f_ms, t_ms), order, size, offset))
@@ -1775,7 +1774,7 @@ def test_complex_search_differential(diff_rig, spec):
             from_ms=f_ms, to_ms=t_ms, size=size, offset=offset,
             order=order, with_total=True, hist_interval_ms=None, aggs=[],
         )
-        rows = piped.docs.collect()
+        rows = piped.docs
         assert set(rows[0].asDict().keys()) == set(pipe) if rows \
             else len(want_ids) == 0, (q, pipe)
         assert len(rows) == len(rows_full), (q, pipe)

@@ -269,12 +269,24 @@ def _spy_frames(monkeypatch):
     return collected, selected
 
 
+def _collects(monkeypatch, fn):
+    """``fn()``'s result and the DataFrames it collected, in order."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    collected = []
+    collect = DataFrame.collect
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "collect",
+                  lambda df: collected.append(df) or collect(df))
+        return fn(), collected
+
+
 def _held_frames(st):
     """The frames held in ``st``'s plan cache: cached searches, totals
     and status aggregates, and complex constructions' docs and fused
     frames."""
     held = []
-    for (built,) in st._plan_cache.values():
+    for built, _lock in st._plan_cache.values():
         if isinstance(built, tuple):
             _route, docs, fused = built
             held += [docs, getattr(fused, "frame", None)]
@@ -384,3 +396,68 @@ def test_perfbench_patch_points_resolve():
             assert callable(getattr(owner, attr)), point
     raw = inspect.getattr_static(SearchTable, "from_store")
     assert isinstance(raw, classmethod)
+
+
+@pytest.mark.parametrize("path,body", [
+    ("search", {"query": "service:auth", "size": 3, "with_total": True}),
+    ("complex", {"query": "service:auth", "size": 3, "with_total": True}),
+    ("complex", {"query": "service:auth", "size": 3, "with_total": True,
+                 "aggs": [{"func": "count", "group_by": "service"}]}),
+])
+def test_concurrent_identical_requests_count_exact_totals(spark, tmp, path,
+                                                          body):
+    """Scanned docs with a total and no other fused branch observe their
+    match count, and the accumulator behind it is shared by every
+    execution of the one cached frame: each execution resets and refills
+    it. Identical requests in flight together must each read their own,
+    exact count (with an agg the total is a fused branch)."""
+    import threading
+
+    store = DocStore(spark, os.path.join(tmp, "store"))
+    for k in range(6):  # six files in one bucket: six tasks per scan
+        store.append(_docs_df(spark, [
+            _doc(1, 1, "pay" if i % 3 == 0 else "auth", f"m{k} {i}")
+            for i in range(20)]))
+    assert len(store.partitions()) == 1
+    core = _server(spark, tmp, store)
+    handler = getattr(core, path)
+    first = handler(dict(body))  # one cached construction for all threads
+    assert first["total"] == 6 * 13 and len(first["docs"]) == 3
+    totals, errors = [], []
+
+    def run():
+        try:
+            for _ in range(5):
+                out = handler(dict(body))
+                totals.append((out["total"], len(out["docs"])))
+        except Exception as e:  # noqa: BLE001
+            errors.append(e)
+
+    threads = [threading.Thread(target=run) for _ in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors
+    assert totals == [(6 * 13, 3)] * 20
+    core._httpd.server_close()
+
+
+def test_observed_total_on_a_partial_tiered_snapshot(spark, tmp,
+                                                     monkeypatch):
+    """A table over a partial snapshot (cold tier dark) reads the hot
+    window only, and its observed total counts exactly that window."""
+    from test_complex_fused import _assert_total_parity
+
+    tiered, cold = _rotated_tiered(spark, tmp)
+    full = SearchTable.from_store(tiered, MAPPING)
+    res, _ = _assert_total_parity(full, "service:auth")
+    assert res.total_count == 3
+    _darken(monkeypatch, cold)
+    snap = tiered.snapshot()
+    assert snap.partial
+    st = SearchTable.from_store(snap, MAPPING)
+    res, _ = _assert_total_parity(st, "service:auth")
+    assert res.total_count == 2 and len(res.docs) == 2
+    res, _ = _assert_total_parity(st, "*", offset=5)
+    assert res.total_count == 2 and res.docs == []

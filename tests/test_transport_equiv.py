@@ -628,6 +628,7 @@ def test_routing_parity_fuzz(routing_rig, monkeypatch):
     import random
 
     from seqspark import AggQuery, SearchTable
+    from test_table_memo import _collects
 
     plain_tbl, indexed = routing_rig
     calls = []
@@ -662,18 +663,20 @@ def test_routing_parity_fuzz(routing_rig, monkeypatch):
                 n = len(calls)
                 out = tbl.search_after(
                     q, last_ts_ms=after[0], last_rid=after[1],
-                    size=size, order=order, from_ms=f_ms, to_ms=t_ms)
+                    size=size, order=order, from_ms=f_ms,
+                    to_ms=t_ms).collect()
                 route = "two_phase" if len(calls) > n else "scan"
             else:
-                res = tbl.complex_search(
-                    q, from_ms=f_ms, to_ms=t_ms, size=size,
-                    offset=offset, order=order)
+                res, collected = _collects(monkeypatch, lambda: (
+                    tbl.complex_search(
+                        q, from_ms=f_ms, to_ms=t_ms, size=size,
+                        offset=offset, order=order)))
                 out, route = res.docs, res.route
-                # search() is the docs of the same construction
+                # search() is the docs frame of the same construction
                 assert tbl.search(
                     q, from_ms=f_ms, to_ms=t_ms, size=size, offset=offset,
-                    order=order) is out
-            return [tuple(r) for r in out.collect()], route
+                    order=order) is collected[-1]
+            return [tuple(r) for r in out], route
 
         routed_rows, route = run(routed_tbl)
         served[route] += 1
@@ -695,10 +698,30 @@ def test_routing_parity_fuzz(routing_rig, monkeypatch):
         eligible = "code:" not in q  # every other leaf is index-covered
         assert got.route == route == ("two_phase" if eligible else "scan")
         assert want.route == "scan"
-        assert [tuple(r) for r in got.docs.collect()] == routed_rows
+        assert [tuple(r) for r in got.docs] == routed_rows
         assert (got.total_count, got.agg_buckets) == (
             want.total_count, want.agg_buckets), (trial, q)
-        assert routed_rows == [tuple(r) for r in want.docs.collect()]
+        assert routed_rows == [tuple(r) for r in want.docs]
+        # docs and total alone: scanned docs count the total themselves
+        # (no fused job), routed docs leave it to a fused total job. Both
+        # equal total() and the size=0 fused total
+        win = dict(from_ms=f_ms, to_ms=t_ms)
+        want_total = plain_tbl.total(q, **win).head()["total"]
+        assert want_total == want.total_count == plain_tbl.complex_search(
+            q, size=0, with_total=True, **win).total_count, (trial, q)
+        del kw["aggs"]
+        for tbl in (routed_tbl, plain_tbl):
+            res = tbl.complex_search(q, **kw)
+            assert res.route == (route if tbl is routed_tbl else "scan")
+            assert res.total_count == want_total, (trial, q, res.route)
+            assert [tuple(r) for r in res.docs] == routed_rows
+            (_, _, fused), _ = tbl._complex_plan(
+                q, f_ms, t_ms, size, offset, order, True, None, (), False,
+                None, None, None)
+            if res.route == "two_phase":
+                assert [b.func for b in fused.branches] == ["total"]
+            else:
+                assert fused is None, (trial, q)
     # both paths must actually exercise, many times each — a fuzz run
     # that never routes (or never falls back) validates nothing
     assert served["two_phase"] >= 20, served

@@ -532,3 +532,20 @@ def test_tiered_store_index_follows_ownership(spark, tmp_path):
     assert owner is cold  # tombstoned bucket stays cold-owned
     # the index itself lists all 4 docs (authoritative copies)
     assert sidx.read().filter(F.col("token") == "needle").count() == 4
+
+
+def test_index_read_after_refresh_infers_no_schema(spark, tmp_path):
+    """The first table after a bulk and refresh_index() reads the store
+    and the index with their known schemas: no inference job."""
+    from test_complex_fused import _jobs
+
+    core = _indexed_wide_server(spark, tmp_path)
+    core._table()
+    core.bulk(('{"index": {}}\n' + json.dumps({
+        "timestamp": "2024-01-01 10:01:00.000", "service": "auth",
+        "message": "login1 late"})).encode(), gzipped=False)
+    assert core.refresh_index() is True
+    assert _jobs(spark, core._table) == 0
+    assert core._table()._index is not None
+    assert core.search({"query": "message:late"})["docs"]
+    core._httpd.server_close()
