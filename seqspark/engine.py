@@ -35,6 +35,7 @@ import copy
 import functools
 import math
 import operator
+import re
 import threading
 from collections import OrderedDict
 from dataclasses import dataclass, field as dc_field
@@ -197,19 +198,51 @@ class _FusedBuilt:
     max_field_tokens: int
 
 
-def _counts_each_match(docs: DataFrame) -> bool:
-    """True when ``docs`` runs as one ``TakeOrderedAndProject`` over the
-    rows its ``observe`` counts, so every match passes the count once.
+#: the node name of each line of a physical plan's tree string
+_PLAN_NODE = re.compile(r"[\s:+-]*(?:\*\(\d+\) )?(\w+)")
 
-    Two shapes break that. The optimizer folds a page to an empty
-    relation when it knows the row count (an offset past the rows of a
-    local relation), which drops the observation. It drops the limit when
-    that count fits the page, and so does ``size=None``; the page is then
-    a global sort, whose range shuffle samples its input in a job of its
-    own and counts every row twice. The check plans the frame now; its
-    collect reuses that plan."""
-    plan = docs._jdf.queryExecution().executedPlan().toString()
-    return "CollectMetrics" in plan and "TakeOrderedAndProject" in plan
+
+def _counted_once(docs: DataFrame) -> bool:
+    """True when the execution of observed ``docs`` that just finished
+    counted every match once: its plan, as it ran, is one
+    ``TakeOrderedAndProject`` at the root whose own stage reads every row
+    through the ``CollectMetrics`` (only projections and filters between
+    them).
+
+    Read after the collect: adaptive execution re-plans the page once a
+    stage below it has finished, and the optimizer folds or rewrites a
+    page whose row count it knows. The shapes this rejects:
+
+    - a page that is not the root (a projection above it, as a ``|
+      fields`` pipe can leave): its top-k runs through a single-partition
+      shuffle, and executing the cached frame again reuses that shuffle's
+      output, so the counting stage is skipped and the count reads 0;
+    - no top-k at all: the optimizer dropped the limit of a page its row
+      count fits, and the global sort's range shuffle counts every row a
+      second time in its sampling job; or it folded a page it knows is
+      empty, and the count with it;
+    - a stage boundary between the top-k and the count;
+    - a top-k whose input is already in page order, which reads each
+      partition only up to the limit."""
+    plan = docs._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()  # the final plan, the one that ran
+        if plan.nodeName() == "ResultQueryStage":
+            plan = plan.plan()
+    if plan.nodeName() != "TakeOrderedAndProject":
+        return False
+    ordering = plan.child().outputOrdering()
+    if not ordering.isEmpty() and docs.sparkSession._jvm.org.apache.spark \
+            .sql.catalyst.expressions.SortOrder.orderingSatisfies(
+                ordering, plan.sortOrder()):
+        return False
+    for line in plan.toString().splitlines()[1:]:
+        node = _PLAN_NODE.match(line).group(1)
+        if node == "CollectMetrics":
+            return True
+        if node not in ("Project", "Filter"):
+            return False
+    return False
 
 
 def _bucket_names(n_quantiles: int, grouped: bool) -> List[str]:
@@ -1065,7 +1098,7 @@ class SearchTable:
         return self._complex_plan(
             q, from_ms, to_ms, size, offset, order, False, None, (), False,
             dialect, columns, dedup_cols,
-        )[0][1]
+        )[1]
 
     def avg_doc_bytes(self, sample_files: int = 16) -> Optional[float]:
         """Average stored bytes per document — compressed parquet file
@@ -1542,7 +1575,7 @@ class SearchTable:
             df = self._filtered(self.parse(q, dialect), from_ms, to_ms)
             return df.agg(F.count(F.lit(1)).alias("total"))
 
-        return self._cached_plan(key, build)[0]
+        return self._cached_plan(key, build)
 
     def fetch(self, ids_df: DataFrame, id_cols: Sequence[str]) -> DataFrame:
         """Fetch-by-ID as a broadcast left-semi join (reference
@@ -1661,7 +1694,7 @@ class SearchTable:
             F.count(F.lit(1)).alias("docs"),
             F.unix_millis(F.min(self.ts_col)).alias("oldest_ms"),
             F.unix_millis(F.max(self.ts_col)).alias("newest_ms"),
-        ))[0].collect()[0]
+        )).collect()[0]
         return {
             "docs": row["docs"],
             "oldest_ms": row["oldest_ms"],
@@ -1744,24 +1777,20 @@ class SearchTable:
         analysed and planned again on every call: a projection or
         limit the caller needs belongs in ``build`` and in ``key``.
 
-        The entry is ``(built, lock)``. The lock belongs to that one
-        construction: a frame that observes a metric (the scanned docs of
-        :meth:`complex_search` with a total) keeps it in an accumulator
-        that every execution of the cached Dataset resets and fills, so
-        concurrent executions of one entry would read each other's
-        counts. Its collector holds the lock from the collect until it has
-        read the metric; other entries never wait on it."""
+        Several requests may execute one cached frame at once. A frame
+        whose execution also counts (the observed docs of
+        :meth:`_complex_plan`) carries its own lock in what it built."""
         with self._plan_cache_lock:
             hit = self._plan_cache.get(key)
             if hit is not None:
                 self._plan_cache.move_to_end(key)
-                return hit
-        entry = (build(), threading.Lock())
+                return hit[0]
+        built = build()
         with self._plan_cache_lock:
-            self._plan_cache[key] = entry
+            self._plan_cache[key] = (built,)
             while len(self._plan_cache) > self._PLAN_CACHE_CAP:
                 self._plan_cache.popitem(last=False)
-        return entry
+        return built
 
     @staticmethod
     def _agg_key(aggq: AggQuery) -> tuple:
@@ -1812,7 +1841,7 @@ class SearchTable:
         the construction is built. The buckets come back in the reference
         order (`seq/qpr.go:216-253`) as a LocalRelation.
         """
-        (_, _, fused), _ = self._complex_plan(
+        _, _, fused, _ = self._complex_plan(
             q, from_ms, to_ms, 0, 0, "desc", False, None, (aggq,), strict,
             dialect, None, None,
         )
@@ -1955,18 +1984,22 @@ class SearchTable:
         ONE plan-cached construction (:meth:`_complex_plan`, which
         :meth:`search` and :meth:`aggregate` share) holds the route, the
         lazy docs top-k and a fused aggregate computing total, histogram
-        and every aggregation in a single job (:meth:`_fused_build`). Both run here and every branch comes
-        back as a driver-side value: ``docs`` as the collected rows,
-        projected to ``columns`` when given (as in :meth:`search`). The
-        fused guards (the module limits ``AGG_MAX_GROUP_TOKENS`` and
-        ``AGG_MAX_FIELD_TOKENS``) are checked on the driver. Nothing is
-        persisted, so there is nothing to release.
+        and every aggregation in a single job (:meth:`_fused_build`).
+        Both run here and every branch comes back as a driver-side value:
+        ``docs`` as the collected rows, projected to ``columns`` when given
+        (as in :meth:`search`). The fused guards (the module limits
+        ``AGG_MAX_GROUP_TOKENS`` and ``AGG_MAX_FIELD_TOKENS``) are checked
+        on the driver. Nothing is persisted, so there is nothing to
+        release.
 
         Scanned docs whose total would be the fused job's only branch
-        observe their match count instead (:meth:`_complex_plan`): the
-        total is read from the docs execution under the construction's
-        lock (:meth:`_cached_plan`), so identical concurrent requests take
-        turns and no other request waits.
+        count it themselves (:meth:`_complex_plan`). Every execution of
+        the cached docs frame resets and fills one count, so it is
+        collected and read under the construction's lock: identical
+        concurrent requests take turns, no other request waits. The count
+        is used only when the plan that ran counted each match once
+        (:func:`_counted_once`); otherwise the fused total of the same
+        request without docs answers.
 
         Validation mirrors `grpc_complex_search.go:20-22`: at least one of
         docs (size>0), with_total, histogram or aggs must be requested.
@@ -1976,7 +2009,7 @@ class SearchTable:
                 "complex search requires size > 0, with_total, a histogram "
                 "interval or at least one aggregation"
             )
-        (route, docs, fused), lock = self._complex_plan(
+        route, docs, fused, lock = self._complex_plan(
             q, from_ms, to_ms, size, offset, order, with_total,
             hist_interval_ms, aggs, strict, dialect, columns, None,
         )
@@ -1990,33 +2023,31 @@ class SearchTable:
                 else:
                     res.agg_buckets.append(
                         [dict(zip(br.names, t)) for t in out])
-        if docs is None:
-            return res
-        if with_total and res.total_count is None:  # the docs observe it
-            with lock:
+        if lock is None:
+            if docs is not None:
                 res.docs = docs.collect()
-                n = docs._jdf.queryExecution().observedMetrics().apply(
-                    _TOTAL_METRIC).getLong(0)
-            rows = len(res.docs)
-            if rows and (n < offset + rows or (rows < size
-                                               and n != offset + rows)):
-                # a count its own page contradicts (seen once: 0 for a
-                # full page over a cached table, cause unknown): count
-                # again
-                n = self.total(q, from_ms, to_ms, dialect).head()["total"]
-            res.total_count = n
-        else:
+            return res
+        with lock:
             res.docs = docs.collect()
+            if _counted_once(docs):
+                res.total_count = docs._jdf.queryExecution() \
+                    .observedMetrics().apply(_TOTAL_METRIC).getLong(0)
+        if res.total_count is None:
+            _, _, fused, _ = self._complex_plan(
+                q, from_ms, to_ms, 0, 0, "desc", True, None, (), strict,
+                dialect, None, None,
+            )
+            (res.total_count,) = self._fused_execute(fused)
         return res
 
     def _complex_plan(
         self, q, from_ms, to_ms, size, offset, order, with_total,
         hist_interval_ms, aggs, strict, dialect, columns, dedup_cols,
     ) -> tuple:
-        """The plan-cached ``(route, docs, fused)`` construction of one
-        request, keyed on every request field, dialect, dedup and the docs
-        projection, with its lock (the :meth:`_cached_plan` entry). The
-        query is parsed once per construction, and a hit parses nothing.
+        """The plan-cached ``(route, docs, fused, lock)`` construction of
+        one request, keyed on every request field, dialect, dedup and the
+        docs projection. The query is parsed once per construction, and a
+        hit parses nothing.
 
         ``docs`` is the lazy top-k (every match for ``size=None``),
         served two-phase when :meth:`_route_two_phase` takes it, else by
@@ -2027,11 +2058,13 @@ class SearchTable:
         collected while building; it is cached like the rest, because a
         table's listing and index never change.
 
-        When the total is the only fused branch and the scan serves the
-        docs, the docs execution counts it instead: ``observe`` puts a
-        count on the filtered, deduplicated rows below the top-k, and no
-        fused aggregate is built. The total stays a fused branch when
-        that removes no job or the docs cannot count it:
+        When the total is the only fused branch and the scan serves a
+        page of docs, the docs execution counts it instead: ``observe``
+        puts a count on the filtered, deduplicated rows below the top-k,
+        no fused aggregate is built, and ``lock`` (else ``None``) is the
+        lock :meth:`complex_search` collects and reads the count under.
+        The total stays a fused branch when that removes no job or the
+        docs do not read every match:
 
         - a histogram or an aggregation: the fused job runs anyway, and a
           branch on it costs less than the observation (a cached
@@ -2040,8 +2073,9 @@ class SearchTable:
         - routed docs: the fetch reads only the id page, not every match;
         - ``size=0``: there are no docs (``limit(0)`` would fold the
           observation away);
-        - a physical plan that is not one top-k over the observed rows
-          (:func:`_counts_each_match`)."""
+        - ``size=None``: every match is one global sort, whose range
+          shuffle samples its input in a job of its own and would count
+          every row twice."""
         if size is not None and size > MAX_SEARCH_DOCS:
             raise ValueError(f"size {size} exceeds max-search-docs {MAX_SEARCH_DOCS}")
         key = (
@@ -2057,33 +2091,28 @@ class SearchTable:
 
         def build() -> tuple:
             query = self.parse(q, dialect)
-            route = docs = base = fused = None
+            route = docs = base = fused = lock = None
             if size != 0 or not want_fused:
                 docs = self._route_two_phase(
                     query, from_ms, to_ms, size, offset, order, dedup_cols)
                 route = "scan" if docs is None else "two_phase"
             if route == "scan" or want_fused:
                 base = self._filtered(query, from_ms, to_ms, dedup_cols)
-
-            def page(df: DataFrame) -> DataFrame:
-                return _project(self.apply_pipes(self._public(
-                    self._paginate(df, size, offset, order)), query.pipes),
-                    columns)
-
             fused_total = with_total
             if route == "scan":
-                if with_total and not (hist_interval_ms or aggs):
-                    docs = page(base.observe(
-                        _TOTAL_METRIC, F.count(F.lit(1)).alias("total")))
-                    fused_total = not _counts_each_match(docs)
-                if docs is None or fused_total:
-                    docs = page(base)
-            elif docs is not None:
+                rows = base
+                if with_total and size and not (hist_interval_ms or aggs):
+                    rows = base.observe(
+                        _TOTAL_METRIC, F.count(F.lit(1)).alias("total"))
+                    fused_total, lock = False, threading.Lock()
+                docs = self.apply_pipes(self._public(
+                    self._paginate(rows, size, offset, order)), query.pipes)
+            if docs is not None:
                 docs = _project(docs, columns)
             if fused_total or hist_interval_ms or aggs:
                 fused = self._fused_build(
                     base, fused_total, hist_interval_ms, aggs, strict)
-            return route, docs, fused
+            return route, docs, fused, lock
 
         return self._cached_plan(key, build)
 

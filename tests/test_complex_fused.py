@@ -338,7 +338,7 @@ def test_group_guard_failure_ships_bounded_rows(plain, caps):
     # the guard cut keeps cap+1 real groups: a failure never ships the
     # whole bucket set to the driver
     assert len(built) == 2
-    assert [fused.frame.count() for _, _, fused in built] == [6, 6]
+    assert [fused.frame.count() for _, _, fused, _ in built] == [6, 6]
 
 
 def _jobs(spark, fn):
@@ -395,30 +395,45 @@ def test_total_uses_plan_cache(plain):
 
 
 def _construction(st, q, size, offset=0, from_ms=None, to_ms=None):
-    """The cached ``(route, docs, fused)`` of ``complex_search(q, size,
-    offset, with_total=True)`` (a plan-cache hit after that call)."""
-    (built, _lock) = st._complex_plan(
+    """The cached ``(route, docs, fused, lock)`` of ``complex_search(q,
+    size, offset, with_total=True)`` (a plan-cache hit after that call)."""
+    return st._complex_plan(
         q, from_ms, to_ms, size, offset, "desc", True, None, (), False, None,
         None, None)
-    return built
 
 
 def _assert_total_parity(st, q, offset=0, observed=True, **win):
     """A with_total request with docs answers SearchTable.total() and the
-    size=0 fused total. Scanned docs count it themselves (no fused job at
-    all) unless ``observed`` is False; size=0 keeps the fused total."""
-    res = st.complex_search(q, size=5, offset=offset, with_total=True, **win)
+    size=0 fused total, on its first execution and again from the plan
+    cache. Scanned docs count it themselves and no fused job runs, unless
+    ``observed`` is False: the plan that ran could not count each match
+    once, and the size=0 fused total answered each time (None: either).
+    Routed docs and size=0 keep the fused total."""
+    ran = []
+    st._fused_execute = lambda fused: ran.append(fused) or type(
+        st)._fused_execute(st, fused)
+    try:
+        res, again = (st.complex_search(
+            q, size=5, offset=offset, with_total=True, **win)
+            for _ in range(2))
+    finally:
+        del st._fused_execute
     want = st.total(q, **win).head()["total"]
     fused_only = st.complex_search(q, size=0, with_total=True, **win)
-    assert res.total_count == want == fused_only.total_count, (q, offset, win)
-    route, docs, fused = _construction(st, q, 5, offset, **win)
+    assert res.total_count == again.total_count == want \
+        == fused_only.total_count, (q, offset, win)
+    assert res.docs == again.docs
+    route, docs, fused, lock = _construction(st, q, 5, offset, **win)
     assert res.route == route and docs is not None
-    if route == "scan" and observed:
-        assert fused is None, (q, offset, win)
+    if route == "scan":
+        assert fused is None and lock is not None, (q, offset, win)
+        if observed is not None:
+            assert len(ran) == (0 if observed else 2), (q, offset, win)
     else:
         assert [b.func for b in fused.branches] == ["total"], (q, offset, win)
-    route0, docs0, fused0 = _construction(st, q, 0, **win)
-    assert route0 is None and docs0 is None
+        assert lock is None and len(ran) == 2
+    route0, docs0, fused0, lock0 = _construction(st, q, 0, **win)
+    assert route0 is None and docs0 is None and lock0 is None
     assert [b.func for b in fused0.branches] == ["total"]
     return res, docs
 
@@ -493,11 +508,19 @@ def test_observed_total_over_index_semi_join(spark, indexed, threshold, join):
         if threshold is not None:
             spark.conf.set(key, threshold)
         for q in ("svc:auth", "msg:alpha and not svc:pay"):
+            n = len(_model_docs("indexed", q, None, None))
             res, docs = _assert_total_parity(indexed, q)
-            assert res.total_count == len(
-                _model_docs("indexed", q, None, None))
+            assert res.total_count == n
             plan = docs._jdf.queryExecution().executedPlan().toString()
             assert "LeftSemi" in plan and join in plan, plan
+            # the last page exactly (matches == offset + size), an offset
+            # at the last match and one past it; the plan that runs after
+            # the join's stages may differ, the total may not
+            for offset in (n - 5, n, n + 3):
+                res, _ = _assert_total_parity(indexed, q, offset=offset,
+                                              observed=None)
+                assert res.total_count == n
+                assert len(res.docs) == min(5, max(0, n - offset))
     finally:
         spark.conf.set(key, old)
         indexed._plan_cache.clear()
@@ -561,6 +584,34 @@ def test_export_size_keeps_the_fused_total(plain):
     res = plain.complex_search("svc:auth", size=None, with_total=True)
     assert res.total_count == len(res.docs) == plain.total(
         "svc:auth").head()["total"]
-    (built, _lock), = [v for k, v in plain._plan_cache.items()
-                       if k[:5] == ("complex", "svc:auth", None, None, None)]
+    (built,), = [v for k, v in plain._plan_cache.items()
+                 if k[:5] == ("complex", "svc:auth", None, None, None)]
     assert [b.func for b in built[2].branches] == ["total"]
+    assert built[3] is None  # no lock: nothing observed
+
+
+def test_observed_total_over_a_cached_table(spark):
+    """A table over a ``.cache()``d frame with a text field. A ``| fields``
+    pipe there leaves a projection above the top-k (the token column the
+    table adds is dropped first), and the top-k then runs through a
+    single-partition shuffle: executing the cached frame again reuses
+    that shuffle and skips the counting stage (it read 0), so the fused
+    total answers. Without the pipe the top-k is the root and counts
+    every time."""
+    rows = [(d["id"], d.get("svc"), d.get("v"), d.get("msg"), d["ms"])
+            for d in _docs()]
+    df = spark.createDataFrame(
+        rows, "id long, svc string, v string, msg string, ms long",
+    ).withColumn("ts", F.timestamp_millis("ms")).drop("ms").cache()
+    try:
+        st = SearchTable.from_typed(df, MAPPING, ts_col="ts", rid_col="id")
+        res, docs = _assert_total_parity(st, "* | fields v, svc",
+                                         offset=3, observed=False)
+        assert res.total_count == 48
+        assert [list(r.asDict()) for r in res.docs] == [["v", "svc"]] * 5
+        root = docs._jdf.queryExecution().executedPlan().toString()
+        assert "Project" in root.splitlines()[0], root
+        res, _ = _assert_total_parity(st, "svc:auth", offset=3)
+        assert res.total_count == 12 and len(res.docs) == 5
+    finally:
+        df.unpersist()

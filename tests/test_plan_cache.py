@@ -161,8 +161,8 @@ def test_agg_built_schema_state_set_at_build(spark):
     aq = AggQuery(func="count", group_by="grp")
     out = st.aggregate(aq)
     (built,) = [v[0] for k, v in st._plan_cache.items() if k[0] == "complex"]
-    _route, docs, fused = built
-    assert docs is None
+    _route, docs, fused, lock = built
+    assert docs is None and lock is None
     names = fused.branches[0].names
     assert names == out.columns
     assert _bucket_schemas(tuple(names))[0] == out.schema

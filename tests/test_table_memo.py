@@ -286,9 +286,9 @@ def _held_frames(st):
     and status aggregates, and complex constructions' docs and fused
     frames."""
     held = []
-    for built, _lock in st._plan_cache.values():
+    for (built,) in st._plan_cache.values():
         if isinstance(built, tuple):
-            _route, docs, fused = built
+            _route, docs, fused, _lock = built
             held += [docs, getattr(fused, "frame", None)]
         else:
             held.append(built)
@@ -404,14 +404,20 @@ def test_perfbench_patch_points_resolve():
     ("complex", {"query": "service:auth", "size": 3, "with_total": True,
                  "aggs": [{"func": "count", "group_by": "service"}]}),
 ])
-def test_concurrent_identical_requests_count_exact_totals(spark, tmp, path,
-                                                          body):
+def test_concurrent_identical_requests_count_exact_totals(
+        spark, tmp, monkeypatch, path, body):
     """Scanned docs with a total and no other fused branch observe their
     match count, and the accumulator behind it is shared by every
     execution of the one cached frame: each execution resets and refills
     it. Identical requests in flight together must each read their own,
-    exact count (with an agg the total is a fused branch)."""
+    exact count, and the server's docs plan counts it without a fused job
+    (with an agg the total is a fused branch)."""
     import threading
+
+    ran = []
+    fused_execute = SearchTable._fused_execute
+    monkeypatch.setattr(SearchTable, "_fused_execute",
+                        lambda st, f: ran.append(f) or fused_execute(st, f))
 
     store = DocStore(spark, os.path.join(tmp, "store"))
     for k in range(6):  # six files in one bucket: six tasks per scan
@@ -440,6 +446,7 @@ def test_concurrent_identical_requests_count_exact_totals(spark, tmp, path,
         t.join()
     assert not errors
     assert totals == [(6 * 13, 3)] * 20
+    assert len(ran) == (21 if "aggs" in body else 0)
     core._httpd.server_close()
 
 

@@ -715,13 +715,14 @@ def test_routing_parity_fuzz(routing_rig, monkeypatch):
             assert res.route == (route if tbl is routed_tbl else "scan")
             assert res.total_count == want_total, (trial, q, res.route)
             assert [tuple(r) for r in res.docs] == routed_rows
-            (_, _, fused), _ = tbl._complex_plan(
+            _, _, fused, lock = tbl._complex_plan(
                 q, f_ms, t_ms, size, offset, order, True, None, (), False,
                 None, None, None)
             if res.route == "two_phase":
                 assert [b.func for b in fused.branches] == ["total"]
+                assert lock is None
             else:
-                assert fused is None, (trial, q)
+                assert fused is None and lock is not None, (trial, q)
     # both paths must actually exercise, many times each — a fuzz run
     # that never routes (or never falls back) validates nothing
     assert served["two_phase"] >= 20, served
