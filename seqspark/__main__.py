@@ -144,7 +144,7 @@ class Runtime:
 
     def stop(self) -> None:
         self._maint_stop.set()
-        # join: a compaction swap still in flight after stop() returned
+        # join: a compaction still in flight after stop() returned
         # would race the caller's cleanup (e.g. deleting the data dir)
         self._maint_thread.join(timeout=60)
         self.grpc.stop()
@@ -169,9 +169,9 @@ def _maintenance_loop(store, stop, period_ms, total_size, max_files,
                 store.maintain(max_files_per_partition=max_files)
                 store.retain(max_total_bytes=total_size)
             if (http is not None and http._store_index is not None
-                    and http._index_fresh_seq != http._index_append_seq):
-                # appends landed since the last index build: rebuild and
-                # re-arm index routing (seal-time indexing cadence)
+                    and http._store_index.stale_buckets()):
+                # the store changed since the last index build: rebuild
+                # and re-arm index routing (seal-time indexing cadence)
                 http.refresh_index()
         except Exception as e:  # noqa: BLE001 - loop must survive
             log.error("maintenance pass failed: %s", e)
@@ -254,9 +254,9 @@ def main(argv: Optional[list] = None, spark=None, block: bool = True):
             {f: F.col("tokens")[f] for f in text_fields},
         )
         # cover whatever the store already holds — incrementally: only
-        # signature-mismatched buckets rebuild (a restart over a current
-        # on-disk index is a no-op, not a full re-index under the store
-        # write locks), and dead buckets are pruned
+        # buckets built from other files than the store lists rebuild (a
+        # restart over a current on-disk index is a no-op, not a full
+        # re-index), and dead buckets are pruned
         index.refresh_stale()
 
     from .grpcapi import SeqProxyGrpc

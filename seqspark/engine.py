@@ -774,12 +774,16 @@ class SearchTable:
         the server passes its request's. The table reads exactly that
         snapshot: hot-only when it is partial (cold tier down). Wires the
         store's ``bucket_fmt`` so request time ranges prune whole bucket
-        directories (PartitionFilters)."""
+        directories (PartitionFilters). A store's snapshot is released
+        once the table is built: hold one yourself for a table that must
+        outlive maintenance."""
         from .store import StoreSnapshot
 
-        snap = store if isinstance(store, StoreSnapshot) else store.snapshot()
-        kw.setdefault("bucket_fmt", snap.store.bucket_fmt)
-        return cls.from_docs(snap.read(), mapping, **kw)
+        if not isinstance(store, StoreSnapshot):
+            with store.snapshot() as snap:
+                return cls.from_store(snap, mapping, **kw)
+        kw.setdefault("bucket_fmt", store.store.bucket_fmt)
+        return cls.from_docs(store.read(), mapping, **kw)
 
     @classmethod
     def from_docs(
@@ -1996,9 +2000,11 @@ class SearchTable:
         count it themselves (:meth:`_complex_plan`). Every execution of
         the cached docs frame resets and fills one count, so it is
         collected and read under the construction's lock: identical
-        concurrent requests take turns, no other request waits. The count
-        is used only when the plan that ran counted each match once
-        (:func:`_counted_once`); otherwise the fused total of the same
+        concurrent requests take turns, no other request waits. A page
+        shorter than ``size`` (with rows, or at offset 0) is its own
+        total: ``offset`` plus its rows. Otherwise the count is used only
+        when the plan that ran counted each match once
+        (:func:`_counted_once`), and else the fused total of the same
         request without docs answers.
 
         Validation mirrors `grpc_complex_search.go:20-22`: at least one of
@@ -2029,7 +2035,12 @@ class SearchTable:
             return res
         with lock:
             res.docs = docs.collect()
-            if _counted_once(docs):
+            n = len(res.docs)
+            if n < size and (n or not offset):
+                # a short page holds every match past the offset (its one
+                # pipe, `fields`, keeps the row count)
+                res.total_count = offset + n
+            elif _counted_once(docs):
                 res.total_count = docs._jdf.queryExecution() \
                     .observedMetrics().apply(_TOTAL_METRIC).getLong(0)
         if res.total_count is None:

@@ -577,6 +577,7 @@ class SeqProxyGrpc:
                         }
                     }
             finally:
+                rows.close()
                 self.core._searches.release()
 
         return docs()

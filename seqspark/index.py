@@ -23,6 +23,7 @@ match-heavy queries should fall back to the token-column scan.
 
 from __future__ import annotations
 
+import uuid
 from dataclasses import dataclass, field as dc_field
 from typing import Dict, List, Optional, Sequence, Tuple
 
@@ -261,78 +262,51 @@ class StoreIndex:
     rebuilds exactly that bucket's index, and retention that drops a data
     bucket drops its index with it. Queries read the whole index (or a
     time-pruned slice — ``ts_bucket`` is a partition column there too).
+
+    Like the store, the index is a versioned manifest over immutable files
+    (:class:`~seqspark.store.Manifest`); each version also records, per
+    bucket, the store files that bucket was built from, so whether the
+    index covers a store snapshot is a comparison of two manifests.
     """
 
     PARTITION_COL = "ts_bucket"  # same value space as DocStore's
 
-    #: per-bucket hot-token stats live here, underscore-prefixed so Spark's
-    #: partition discovery never sees them
-    STATS_DIR = "_stats"
-
     def __init__(self, store, path: str, token_cols: Dict[str, object],
                  id_cols: Sequence[str] = ("mid", "rid"),
                  stats_top_k: int = 4096):
+        from .store import _open_log
+
         self.store = store
         self.path = path
         self.token_cols = token_cols
         self.id_cols = tuple(id_cols)
         self.stats_top_k = stats_top_k
-        #: cached index frame — parquet partition discovery runs a listing
-        #: job per read(), so the frame is built once and invalidated when
-        #: refresh()/prune() change the files underneath
-        self._frame: Optional[DataFrame] = None
-        #: the schema the first read() inferred: the index columns never
-        #: change, so later reads pass it and run no inference job
-        #: (DocStore.read()'s ``_schema_cache``)
-        self._schema = None
-        #: memoized merged IndexStats ((value,) once computed) — same
-        #: lifecycle as the frame cache
+        self._log = _open_log(store.spark, path)
+        self._fs = self._log.fs
+        #: merged IndexStats of one version: (version, stats or None)
         self._stats_cache: Optional[tuple] = None
 
-    def _bucket_dir(self, bucket: str) -> str:
-        return f"{self.path}/{self.PARTITION_COL}={bucket}"
+    def manifest(self):
+        """The newest committed index version (unheld)."""
+        return self._log.current()
 
-    def _fs(self):
-        from .store import _HadoopFS
+    def pin(self) -> tuple:
+        """The newest version and the release of its hold: its files
+        outlive a refresh that replaces them until released."""
+        return self._log.pin()
 
-        return _HadoopFS(self.store.spark, self.path)
-
-    def _owner(self, bucket: str):
-        """The store whose copy of ``bucket`` this index must read —
-        the owning TIER for a TieredStore (tombstoned buckets belong to
-        cold even when a late append re-created them in hot), the store
-        itself otherwise."""
-        if hasattr(self.store, "owner_store"):
-            return self.store.owner_store(bucket)
-        return self.store
-
-    def _bucket_sig(self, bucket: str) -> str:
-        """Content signature of one STORE bucket: sha256 over the sorted
-        (name, length, mtime) of its files — driver-side listing only.
-        Recorded with the bucket's stats at build time; a differing live
-        signature marks the bucket stale (:meth:`stale_buckets`)."""
-        import hashlib as _hashlib
-
-        from .store import PARTITION_COL as STORE_PART, _HadoopFS
-
-        owner = self._owner(bucket)
-        sfs = _HadoopFS(self.store.spark, owner.path)
-        parts = sorted(
-            (s.getPath().getName(), s.getLen(), s.getModificationTime())
-            for s in sfs.list_file_status(
-                sfs.path(f"{STORE_PART}={bucket}"))
-        )
-        return _hashlib.sha256(repr(parts).encode()).hexdigest()[:24]
-
-    def _write_bucket_stats(self, fs, bucket: str, idx: DataFrame) -> None:
+    def _write_bucket_stats(self, bucket: str, idx: DataFrame,
+                            total: int) -> str:
         """Persist this bucket's hot-token doc frequencies + doc count at
         build time, so attaching the index later is a metadata read, not a
         full-index aggregation (VERDICT r6 #6). The doc count comes from
-        the store's parquet footers — no Spark job; the groupBy runs over
-        the ONE bucket that was just rebuilt anyway."""
+        the store manifest — no Spark job; the groupBy runs over the ONE
+        bucket that was just rebuilt anyway. Returns the file's name, new
+        per build: the version that commits the build names it."""
         import json as _json
 
-        total = self.store.bucket_row_count(bucket)
+        from .store import STATS_DIR
+
         s = collect_index_stats(idx, total, self.stats_top_k)
         truncated = len(s.df) == self.stats_top_k
         payload = {
@@ -340,154 +314,134 @@ class StoreIndex:
             "top_k": self.stats_top_k,
             "floor_count": min(s.df.values()) if truncated and s.df else 0,
             "df": [[f, t, n] for (f, t), n in s.df.items()],
-            # store-content signature at build time → incremental refresh
-            "sig": self._bucket_sig(bucket),
         }
-        fs.write_text(
-            fs.path(self.STATS_DIR, f"{bucket}.json"), _json.dumps(payload)
-        )
+        name = f"{bucket}-{uuid.uuid4().hex}.json"
+        self._fs.write_text(self._fs.path(STATS_DIR, name),
+                            _json.dumps(payload))
+        return name
 
-    def load_stats(self) -> Optional[IndexStats]:
-        """Merge the persisted per-bucket stats into one :class:`IndexStats`
-        WITHOUT touching the index data (driver-side metadata reads only).
+    def load_stats(self, manifest=None) -> Optional[IndexStats]:
+        """Merge the persisted per-bucket stats of an index version (the
+        newest by default) into one :class:`IndexStats` WITHOUT touching
+        the index data (driver-side metadata reads only).
 
         Merged doc frequencies are upper bounds: a pair listed in some
         buckets may also hide below other buckets' truncation floors, so
         those floors are added — conservative in the safe direction
         (overestimating df can only route a borderline token to the scan,
         never miss-route a hot token through the index). Returns None when
-        any live bucket lacks a stats file (stale/older index) — callers
-        fall back to live collection."""
+        any bucket lacks a stats file (an older index) — callers fall back
+        to live collection."""
         import json as _json
 
-        fs = self._fs()
-        live = self.store.partitions()
+        from .store import STATS_DIR
+
+        m = manifest or self.manifest()
         per_bucket = []
-        for b in live:
-            raw = fs.read_text(fs.path(self.STATS_DIR, f"{b}.json"))
-            if raw is None:
+        for b in sorted(m.buckets):
+            raw = b in m.stats and self._fs.read_text(
+                self._fs.path(STATS_DIR, m.stats[b]))
+            if not raw:
                 return None
             per_bucket.append(_json.loads(raw))
-        total = sum(p["total_docs"] for p in per_bucket)
-        listed: Dict[Tuple[str, str], int] = {}
-        bucket_pairs = []
-        for p in per_bucket:
-            pairs = {(f, t) for f, t, _ in p["df"]}
-            bucket_pairs.append(pairs)
-            for f, t, n in p["df"]:
-                listed[(f, t)] = listed.get((f, t), 0) + n
         merged: Dict[Tuple[str, str], int] = {}
-        for pair, n in listed.items():
-            ub = n
-            for p, pairs in zip(per_bucket, bucket_pairs):
-                if p["floor_count"] and pair not in pairs:
-                    ub += p["floor_count"]
-            merged[pair] = ub
+        for p in per_bucket:
+            for f, t, n in p["df"]:
+                merged[(f, t)] = merged.get((f, t), 0) + n
+        for p in per_bucket:  # hidden below this bucket's floor, at most
+            if p["floor_count"]:
+                for pair in merged.keys() - {(f, t) for f, t, _ in p["df"]}:
+                    merged[pair] += p["floor_count"]
+        total = sum(p["total_docs"] for p in per_bucket)
         floor_total = sum(p["floor_count"] for p in per_bucket)
-        return IndexStats(
-            total_docs=total,
-            df=merged,
-            floor=floor_total / max(1, total),
-        )
+        return IndexStats(total_docs=total, df=merged,
+                          floor=floor_total / max(1, total))
 
     def refresh(self, buckets: Optional[Sequence[str]] = None) -> List[str]:
         """(Re)build the index for the given store buckets (default: all).
         Call after append/compact for the touched buckets — the seal-time
         index build of `frac/active_sealer.go`. Each rebuilt bucket also
-        persists its hot-token stats (see :meth:`load_stats`).
+        persists its hot-token stats (see :meth:`load_stats`)."""
+        with self.store.snapshot() as snap:
+            return self._rebuild(
+                snap, snap.buckets if buckets is None else buckets, ())
 
-        The store write lock is held PER BUCKET (inside the loop), so a
-        full-corpus refresh blocks appends only for one bucket's rebuild
-        at a time — ingest interleaves between buckets; it never waits
-        for the whole refresh."""
-        done: List[str] = []
-        from .store import PARTITION_COL as STORE_PART, _write_lock
-
-        fs = self._fs()
-        for bucket in buckets if buckets is not None else self.store.partitions():
-            # under the store's per-path write lock: a compact swapping
-            # the bucket directory mid-read would fail the rebuild, and an
-            # append landing a file after this read would leave the index
-            # PERMANENTLY missing those docs — and a routed index is
-            # authoritative (left_semi drops what it doesn't list)
-            owner = self._owner(bucket)
-            with _write_lock(owner.path):
-                part = f"{owner.path}/{STORE_PART}={bucket}"
-                df = self.store.spark.read.parquet(part)
-                idx = build_inverted_index(df, self.token_cols, self.id_cols)
-                (
-                    idx.repartition("field")
-                    .sortWithinPartitions("token")
-                    .write.mode("overwrite")
-                    .parquet(self._bucket_dir(bucket))
-                )
-                self._write_bucket_stats(fs, bucket, idx)
-            done.append(bucket)
-        self._frame = None
-        self._stats_cache = None
-        return done
+    @staticmethod
+    def _stale(snap, m) -> List[str]:
+        return [b for b in snap.buckets
+                if m.built_from.get(b) != snap.files[b]]
 
     def stale_buckets(self) -> List[str]:
-        """Store buckets whose index build is missing or no longer
-        matches the store's files — the incremental-refresh work list
-        (r16): a maintenance pass then rebuilds ONLY what changed, so
-        the seal-time cadence costs O(appended buckets), not a
-        full-index rebuild per pass. Driver-side metadata reads only
-        (stats JSON + one listing per bucket; no Spark jobs). Buckets
-        indexed before signatures existed report stale ONCE and are
-        re-signed by the rebuild."""
-        import json as _json
-
-        fs = self._fs()
-        out: List[str] = []
-        for b in self.store.partitions():
-            raw = fs.read_text(fs.path(self.STATS_DIR, f"{b}.json"))
-            if raw is None:
-                out.append(b)
-                continue
-            try:
-                sig = _json.loads(raw).get("sig")
-            except ValueError:
-                sig = None
-            if sig is None or sig != self._bucket_sig(b):
-                out.append(b)
-        return out
+        """Store buckets whose index is missing or was built from other
+        files than the store now lists — the incremental-refresh work list
+        (r16): a maintenance pass then rebuilds ONLY what changed, so the
+        seal-time cadence costs O(appended buckets), not a full-index
+        rebuild per pass. Two manifest reads; no listing, no Spark job."""
+        with self.store.snapshot() as snap:
+            return self._stale(snap, self.manifest())
 
     def refresh_stale(self) -> List[str]:
-        """Incremental :meth:`refresh`: rebuild only
-        :meth:`stale_buckets` (plus :meth:`prune` of dead ones)."""
-        stale = self.stale_buckets()
-        done = self.refresh(stale) if stale else []
-        self.prune()
-        return done
+        """Incremental :meth:`refresh`: rebuild only :meth:`stale_buckets`
+        and drop the buckets the store no longer has, as one version. The
+        process's first call also sweeps what a crashed refresh left."""
+        self._log.sweep()
+        with self.store.snapshot() as snap:
+            m = self.manifest()
+            dead = [b for b in m.buckets if b not in snap.files]
+            return self._rebuild(snap, self._stale(snap, m), dead)
 
     def prune(self) -> List[str]:
         """Drop index buckets (and their stats) whose data bucket was
         retained away."""
-        fs = self._fs()
-        live = set(self.store.partitions())
-        dropped: List[str] = []
-        for p in fs.list_dirs(fs.path()):
-            name = p.getName()
-            if name.startswith(f"{self.PARTITION_COL}="):
-                bucket = name.split("=", 1)[1]
-                if bucket not in live:
-                    fs.delete(p)
-                    fs.delete(fs.path(self.STATS_DIR, f"{bucket}.json"))
-                    dropped.append(bucket)
-        if dropped:
-            self._frame = None
-            self._stats_cache = None
-        return dropped
+        with self.store.snapshot() as snap:
+            dead = [b for b in self.manifest().buckets
+                    if b not in snap.files]
+            self._rebuild(snap, (), dead)
+        return dead
+
+    def _rebuild(self, snap, buckets: Sequence[str],
+                 dead: Sequence[str]) -> List[str]:
+        """Index ``buckets`` from exactly ``snap``'s files, and commit them
+        together with dropping the ``dead`` buckets as one version. The
+        held snapshot keeps the files it reads; an append meanwhile just
+        leaves the bucket stale for the next pass."""
+        from .store import _place, _widened
+
+        if snap.partial:
+            raise RuntimeError(
+                "index refresh needs the full store: cold tier unreachable")
+        built, sources, stats, fields = {}, {}, {}, []
+
+        def keep(old: dict, new: dict) -> dict:
+            return {**{b: v for b, v in old.items() if b not in dead}, **new}
+
+        with self._log.write_lock, self._fs.staging() as staged:
+            for b in buckets:
+                idx = build_inverted_index(
+                    snap.frame([b]), self.token_cols, self.id_cols)
+                out = self._fs._Path(staged, b)
+                idx.repartition("field").sortWithinPartitions(
+                    "token").write.parquet(out.toString())
+                built[b] = _place(self._fs, out, b)
+                sources[b] = snap.files[b]
+                fields = idx.schema.fields
+                stats[b] = self._write_bucket_stats(
+                    b, idx, snap.owners[b][1].rows(b))
+            if built or dead:
+                self._log.commit(lambda m: m.next(
+                    schema=_widened(m.schema, fields) if fields else m.schema,
+                    buckets=keep(m.buckets, built),
+                    built_from=keep(m.built_from, sources),
+                    stats=keep(m.stats, stats)))
+        return list(built)
+
+    def frame(self, manifest) -> DataFrame:
+        """The index rows of one version: exactly its files."""
+        return manifest.frame(self.store.spark, self.path,
+                              sorted(manifest.buckets))
 
     def read(self) -> DataFrame:
-        if self._frame is None:
-            reader = self.store.spark.read
-            if self._schema is not None:
-                reader = reader.schema(self._schema)
-            self._frame = reader.parquet(self.path)
-            self._schema = self._frame.schema
-        return self._frame
+        return self.frame(self.manifest())
 
     def search(self, field: str, tokens: Sequence[str]) -> DataFrame:
         return search_tokens(
@@ -502,38 +456,34 @@ class StoreIndex:
         max_selectivity: float = 0.1,
         broadcast_max_docs: int = 200_000,
         two_phase_min_doc_bytes: Optional[int] = None,
+        manifest=None,
     ):
-        """Attach this index to a :class:`~seqspark.engine.SearchTable`
-        with selectivity routing. Stats come from the per-bucket metadata
+        """Attach this index (the version ``manifest``, default the
+        newest) to a :class:`~seqspark.engine.SearchTable` with
+        selectivity routing. Stats come from the per-bucket metadata
         persisted at :meth:`refresh` time — NO Spark job runs here; only
-        when a live bucket predates the stats files (or ``total_docs`` /
+        when a bucket predates the stats files (or ``total_docs`` /
         ``top_k`` force a live collection) does it fall back to the
         TakeOrdered aggregation over the index. The merged stats are
-        memoized alongside the frame (a server attaches per request;
-        re-reading every bucket's stats JSON each time is pure waste) and
-        invalidated when :meth:`refresh`/:meth:`prune` change the files.
+        memoized per version (a server attaches per table build;
+        re-reading every bucket's stats JSON each time is pure waste).
         ``two_phase_min_doc_bytes`` forwards to
         :meth:`~seqspark.engine.SearchTable.attach_index` — width-aware
         search→fetch routing. Returns the table for chaining.
 
-        An index that has never been refreshed (no data on disk yet —
-        e.g. a server starting against an empty store) attaches NOTHING
-        and returns the table as-is: there are no postings to
-        accelerate with, and reading the absent parquet path would fail
-        every search until the first refresh (caught by the r16 indexed
-        soak)."""
-        fs = self._fs()
-        if not fs.exists(fs.path()) or not any(
-            p.getName().startswith(f"{self.PARTITION_COL}=")
-            for p in fs.list_dirs(fs.path())
-        ):
+        An index with no bucket yet (e.g. a server starting against an
+        empty store) attaches NOTHING and returns the table as-is: there
+        are no postings to accelerate with."""
+        m = manifest or self.manifest()
+        if not m.buckets:
             return table
-        idx = self.read()
+        idx = self.frame(m)
         stats = None
         if total_docs is None:
-            if self._stats_cache is None:
-                self._stats_cache = (self.load_stats(),)
-            stats = self._stats_cache[0]
+            cached = self._stats_cache
+            if cached is None or cached[0] != m.version:
+                cached = self._stats_cache = (m.version, self.load_stats(m))
+            stats = cached[1]
         if stats is None:
             total = (
                 total_docs
@@ -542,7 +492,7 @@ class StoreIndex:
             )
             stats = collect_index_stats(idx, total, top_k)
             if total_docs is None:
-                self._stats_cache = (stats,)
+                self._stats_cache = (m.version, stats)
         return table.attach_index(
             idx,
             list(self.token_cols),

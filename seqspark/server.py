@@ -29,6 +29,7 @@ import logging
 import threading
 import time
 import urllib.request
+from contextlib import contextmanager
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Optional
 
@@ -188,16 +189,6 @@ class SeqSparkServer:
         #: see :meth:`_table`. Tuple assignment is atomic under the GIL;
         #: two racing builders both build lazy state and one wins.
         self._st_memo: Optional[tuple] = None
-        # FRESHNESS: an attached index is AUTHORITATIVE (the semi-join
-        # drops docs it doesn't list), so serving with an index that
-        # predates an append would silently hide fresh docs. The caller
-        # hands over a refreshed index (seq 0 == trusted); every append
-        # flush bumps the sequence, searches attach the index only while
-        # fresh_seq == append_seq, and refresh_index() re-arms (the
-        # CLI's maintenance loop calls it — the reference's seal-time
-        # index build cadence, frac/active_sealer.go).
-        self._index_append_seq = 0
-        self._index_fresh_seq = 0
         # lazily-built, reused across bulks (guarded by self._lock)
         self._ingest_transform = None
         # async search jobs (`proxyapi/grpc_async_search.go:15-62` over
@@ -236,6 +227,38 @@ class SeqSparkServer:
                 self.send_header("Content-Length", str(len(body)))
                 self.end_headers()
                 self.wfile.write(body)
+
+            def _gw_error(self, e) -> None:
+                """A gateway GrpcError as grpc-gateway's JSON error."""
+                return self._json(outer._GW_HTTP_STATUS.get(e.code, 500),
+                                  {"code": e.code, "message": e.message})
+
+            def _ndjson_head(self) -> None:
+                """The head of a streamed NDJSON drain: its end is the
+                connection's close."""
+                self.send_response(200)
+                self.send_header("Content-Type", "application/x-ndjson")
+                self.send_header("Connection", "close")
+                self.end_headers()
+
+            def _admit(self, path: str, req: dict) -> bool:
+                """Resolve the request's dialect, count it, and apply the
+                rate limit: False once a 429 is sent (the gRPC
+                ResourceExhausted analog, `proxyapi/grpc_v1.go:220-222`)."""
+                outer._apply_dialect(self.headers, req)
+                outer._count("search_total")
+                if outer._rate_check(path, req):
+                    return True
+                outer._count("rate_limited_total")
+                self._json(429, {"error": "request was rate limited"})
+                return False
+
+            @staticmethod
+            def _body_json(body: bytes) -> dict:
+                req = json.loads(body.decode() or "{}")
+                if not isinstance(req, dict):
+                    raise ValueError("request body must be a JSON object")
+                return req
 
             def do_GET(self):
                 if self.path == "/":
@@ -277,10 +300,7 @@ class SeqSparkServer:
                             sp.FETCH_ASYNC_SEARCH_RESULT_RESPONSE,
                             g.fetch_async(req, md)))
                     except GrpcError as e:
-                        return self._json(
-                            outer._GW_HTTP_STATUS.get(e.code, 500),
-                            {"code": e.code, "message": e.message},
-                        )
+                        return self._gw_error(e)
                     except ValueError as e:
                         # non-integer size/offset query params and the
                         # like are request-shaped: 400, not a dropped
@@ -370,10 +390,7 @@ class SeqSparkServer:
                         return self._json(200, gw.proto_to_json(
                             sp.CANCEL_ASYNC_SEARCH_RESPONSE, out))
                     except GrpcError as e:
-                        return self._json(
-                            outer._GW_HTTP_STATUS.get(e.code, 500),
-                            {"code": e.code, "message": e.message},
-                        )
+                        return self._gw_error(e)
                 if self.path == "/log/level":
                     return self._log_level_405()
                 return self._json(404, {"error": "not found"})
@@ -410,20 +427,14 @@ class SeqSparkServer:
                     )
                 except GrpcError as e:
                     outer._gw_count_error(e.code)
-                    return self._json(
-                        outer._GW_HTTP_STATUS.get(e.code, 500),
-                        {"code": e.code, "message": e.message},
-                    )
+                    return self._gw_error(e)
                 except Exception as e:
                     # transcode/validation-shaped: counted like the
                     # native 400 path (a search_total/search_errors pair)
                     outer._count("search_total")
                     outer._count("search_errors_total")
                     return self._json(400, {"error": str(e)})
-                self.send_response(200)
-                self.send_header("Content-Type", "application/x-ndjson")
-                self.send_header("Connection", "close")
-                self.end_headers()
+                self._ndjson_head()
                 n = 0
                 try:
                     for frame in frames:
@@ -521,11 +532,7 @@ class SeqSparkServer:
                     # served through the shared Export RPC handler
                     # (validation, caps, admission and metrics included)
                     try:
-                        req = json.loads(body.decode() or "{}")
-                        if not isinstance(req, dict):
-                            raise ValueError(
-                                "request body must be a JSON object"
-                            )
+                        req = self._body_json(body)
                     except Exception as e:
                         outer._count("search_errors_total")
                         return self._json(400, {"error": str(e)})
@@ -539,23 +546,13 @@ class SeqSparkServer:
                         # clean 400 (the mid-stream path below has its
                         # own handling)
                         try:
-                            outer._apply_dialect(self.headers, req)
-                            outer._count("search_total")
-                            if not outer._rate_check("/search", req):
-                                outer._count("rate_limited_total")
-                                return self._json(
-                                    429, {"error": "request was rate limited"}
-                                )
+                            if not self._admit("/search", req):
+                                return
                             lines = outer.export_lines(req)
                         except Exception as e:
                             outer._count("search_errors_total")
                             return self._json(400, {"error": str(e)})
-                        self.send_response(200)
-                        self.send_header(
-                            "Content-Type", "application/x-ndjson"
-                        )
-                        self.send_header("Connection", "close")
-                        self.end_headers()
+                        self._ndjson_head()
                         # mid-stream failure after the 200 must be
                         # distinguishable from a complete drain: a complete
                         # stream always ends with an explicit
@@ -584,10 +581,7 @@ class SeqSparkServer:
                     # no search semaphore: fetching a finished result is a
                     # metadata + tiny parquet read, not a new search
                     try:
-                        req = json.loads(body.decode() or "{}")
-                        if not isinstance(req, dict):
-                            raise ValueError("request body must be a JSON object")
-                        resp = outer.async_fetch(req)
+                        resp = outer.async_fetch(self._body_json(body))
                     except KeyError as e:
                         return self._json(404, {"error": str(e.args[0])})
                     except Exception as e:
@@ -603,11 +597,7 @@ class SeqSparkServer:
                              "/histogram", "/async-search")
                 if self.path in gw_routes or self.path in handlers:
                     try:
-                        req = json.loads(body.decode() or "{}")
-                        if not isinstance(req, dict):
-                            raise ValueError(
-                                "request body must be a JSON object"
-                            )
+                        req = self._body_json(body)
                     except Exception as e:
                         outer._count("search_errors_total")
                         return self._json(400, {"error": str(e)})
@@ -631,10 +621,7 @@ class SeqSparkServer:
                         ))
                     except GrpcError as e:
                         outer._gw_count_error(e.code)
-                        return self._json(
-                            outer._GW_HTTP_STATUS.get(e.code, 500),
-                            {"code": e.code, "message": e.message},
-                        )
+                        return self._gw_error(e)
                     except Exception as e:  # noqa: BLE001 - shaped → 400
                         outer._count("search_total")
                         outer._count("search_errors_total")
@@ -644,15 +631,8 @@ class SeqSparkServer:
                         # `--search-requests-limit` exceeded
                         return self._json(429, {"error": "too many requests"})
                     try:
-                        outer._apply_dialect(self.headers, req)
-                        outer._count("search_total")
-                        if not outer._rate_check(self.path, req):
-                            # gRPC ResourceExhausted analog
-                            # (`proxyapi/grpc_v1.go:220-222`)
-                            outer._count("rate_limited_total")
-                            return self._json(
-                                429, {"error": "request was rate limited"}
-                            )
+                        if not self._admit(self.path, req):
+                            return
                         # mirror the RESOLVED request (dialect applied from
                         # the use-seq-ql header) — re-sending the raw bytes
                         # would make the mirror parse a legacy query as
@@ -781,14 +761,16 @@ class SeqSparkServer:
 
         threading.Thread(target=run, daemon=True).start()
 
-    def _snapshot(self, req: dict) -> StoreSnapshot:
-        """The request's one store snapshot, admitted against
-        `--search-fraction-limit` on its own listing."""
-        snap = self.store.snapshot()
-        snap.check_fraction_hits(
-            req.get("from_ms"), req.get("to_ms"), self._max_fraction_hits
-        )
-        return snap
+    @contextmanager
+    def _view(self, req: Optional[dict] = None):
+        """The request's one store snapshot — admitted against
+        `--search-fraction-limit` on its own bucket list when ``req`` is
+        given — and its table, both held until the block ends."""
+        with self.store.snapshot() as snap:
+            if req is not None:
+                snap.check_fraction_hits(req.get("from_ms"), req.get("to_ms"),
+                                         self._max_fraction_hits)
+            yield snap, self._table(snap)
 
     def _flag_partial(self, out: dict, snap: StoreSnapshot) -> dict:
         """Mark a response served from a partial snapshot (cold tier
@@ -799,56 +781,6 @@ class SeqSparkServer:
             out["partial_response"] = True
             self._count("partial_responses_total")
         return out
-
-    #: exception markers for reads that raced a compaction swap or
-    #: retention delete mid-task. ignoreMissingFiles covers clean
-    #: FileNotFoundException at task start, but the local-fs footer path
-    #: throws java.nio NoSuchFileException (NOT a FileNotFoundException
-    #: subclass) wrapped as FAILED_READ_FILE — transient by construction:
-    #: the same query replanned sees the post-swap listing.
-    _TRANSIENT_READ = (
-        "FAILED_READ_FILE",
-        "FileNotFoundException",
-        "NoSuchFileException",
-    )
-
-    #: bounded replan attempts: a missing-file failure after a FRESH
-    #: listing is always a live-maintenance race (a fresh listing never
-    #: includes truly-deleted files), so one retry is not enough under
-    #: sustained compaction — the second attempt can collide with the
-    #: NEXT swap (soak: 8 client-visible errors in 1200 searches with
-    #: single-retry). Four attempts with a short growing backoff outlive
-    #: any swap cadence; genuinely broken files (corrupt footer) still
-    #: surface after the bounded loop.
-    _TRANSIENT_ATTEMPTS = 4
-
-    #: export no-progress stall bound (r13): a MULTI-partition `maintain`
-    #: burst swaps partitions sequentially for >1s, and the export
-    #: drain's old 4×(0.05s·n) stall window (~0.3s total) could land a
-    #: replan inside the same burst every time — the r13 closing soak
-    #: caught exactly one such exhaustion (1 error in 162 drains under a
-    #: 1s-period compactor). Six attempts with exponential backoff
-    #: (0.1→1.6s, ~3s total) outlast any burst; a genuinely broken file
-    #: at the cursor still propagates after ~3s — noise against a drain
-    #: that runs minutes at scale.
-    _EXPORT_STALL_ATTEMPTS = 6
-
-    def _retry_transient(self, fn):
-        """Replan ``fn`` (bounded) while it fails on files maintenance
-        swapped/deleted under it; anything else propagates immediately."""
-        for attempt in range(self._TRANSIENT_ATTEMPTS):
-            try:
-                return fn()
-            except Exception as e:  # noqa: BLE001 - filtered by marker below
-                if attempt == self._TRANSIENT_ATTEMPTS - 1 or not any(
-                    t in str(e) for t in self._TRANSIENT_READ
-                ):
-                    raise
-                # the failing frame may be the memoized table's (files
-                # changed without an observed generation bump): rebuild
-                # from a fresh listing on the replan
-                self._invalidate_table()
-                time.sleep(0.05 * (attempt + 1))
 
     @staticmethod
     def _int_or(req: dict, key: str, default: int) -> int:
@@ -863,144 +795,73 @@ class SeqSparkServer:
     def export_docs(self, req: dict):
         """Export row iterator — (mid, rid, raw) tuples in stream order
         (`docs/en/10-public-api.md` /Export — Search's streaming twin).
-        ``size`` absent/null drains the full match set via keyset
-        pagination; rows stream through ``toLocalIterator`` so the driver
-        never holds the result set. Both transports build on this: the
-        HTTP surface JSON-encodes each row, the gRPC surface
-        protobuf-encodes — neither pays the other's serialization."""
+        ``size`` absent/null drains the full match set; rows stream
+        through ``toLocalIterator`` so the driver never holds the result
+        set. Both transports build on this: the HTTP surface JSON-encodes
+        each row, the gRPC surface protobuf-encodes — neither pays the
+        other's serialization.
+
+        The drain reads ONE snapshot, held until the iterator is
+        exhausted or closed, so maintenance running meanwhile deletes no
+        file it reads. The plan is built eagerly: request-shaped errors
+        (seq-ql parse, size cap, bad dialect) raise here, and the
+        transports turn them into a clean 400 / INVALID_ARGUMENT before
+        any byte of the stream is sent."""
         size = req.get("size")
-        size = None if size is None else int(size)
-        offset = self._int_or(req, "offset", 0)
-        order = req.get("order", "desc")
-        q = req.get("query", "*")
-        kw = dict(
-            from_ms=req.get("from_ms"),
-            to_ms=req.get("to_ms"),
-            dialect=req.get("dialect"),
-        )
-
-        # the first plan is built EAGERLY so request-shaped errors (seq-ql
-        # parse, size cap, bad dialect) raise here — the transports turn
-        # those into a clean 400 / INVALID_ARGUMENT before any bytes of
-        # the stream are sent. The build goes through _retry_transient:
-        # a compaction swap renames a bucket directory away for an
-        # instant, and a concurrent parquet LISTING of it throws
-        # FileNotFoundException at plan-build time (r13 stress catch) —
-        # transient by construction, exactly like a mid-task read race.
-        def _first_plan():
-            snap = self._snapshot(req)
-            if snap.partial:
-                # search degrades to partial results; an EXPORT is a
-                # completeness contract (backup/ETL) — a drain that would
-                # silently omit the entire cold history must fail loudly
-                raise RuntimeError(
-                    "export requires the full store: cold tier unreachable "
-                    "(search still serves partial results)"
-                )
-            return self._table(snap).search(
-                q, size=size, offset=offset, order=order, **kw
-            ).select("mid", "rid", "raw")
-
-        first = self._retry_transient(_first_plan)
 
         def rows():
-            # Resume-on-transient-failure drain: an export is a LONG read
-            # (minutes at scale), and retention/compaction deleting files
-            # under it mid-stream escapes both ignoreMissingFiles (the
-            # local-fs nio path) and _retry_transient (which only guards
-            # call-shaped work). On a transient read failure, replan
-            # against the post-swap listing and resume strictly after the
-            # last yielded (mid, rid) via keyset search_after — no
-            # duplicates, no loss, O(remaining) cost. Transient failures
-            # with NO progress retry a BOUNDED number of times with a
-            # short backoff (sustained compaction can collide with
-            # several consecutive replans — soak-observed); exhausting
-            # the bound (a genuinely broken file at the cursor)
-            # propagates.
-            docs = first
-            yielded = 0
-            cursor = None  # (mid, rid) of the last row handed out
-            failed_at: object = object()  # sentinel ≠ any cursor
-            stalls = 0
-            while True:
-                try:
-                    if docs is None:
-                        # replan against the post-swap file listing —
-                        # INSIDE the guard: the listing itself can race
-                        # the NEXT swap (a bucket dir is briefly absent
-                        # between compaction's two renames, r13 stress
-                        # catch) and must count as a stall, not escape
-                        snap = self.store.snapshot()
-                        if snap.partial:
-                            # cold tier went dark MID-DRAIN: resuming
-                            # would silently omit its rows — abort (the
-                            # missing end sentinel / stream error marks
-                            # the truncation). No transient marker in
-                            # the message, so the filter below re-raises.
-                            raise RuntimeError(
-                                "export aborted: cold tier became "
-                                "unreachable mid-drain"
-                            )
-                        st = self._table(snap)
-                        if cursor is None:
-                            docs = st.search(
-                                q, size=size, offset=offset, order=order,
-                                **kw
-                            )
-                        else:
-                            remaining = (
-                                None if size is None else size - yielded
-                            )
-                            if remaining == 0:
-                                return
-                            docs = st.search_after(
-                                q, last_ts_ms=cursor[0], last_rid=cursor[1],
-                                size=remaining, order=order, **kw
-                            )
-                        docs = docs.select("mid", "rid", "raw")
-                    for r in docs.toLocalIterator(prefetchPartitions=True):
-                        yield r["mid"], r["rid"], r["raw"]
-                        yielded += 1
-                        cursor = (r["mid"], r["rid"])
-                    return
-                except Exception as e:  # noqa: BLE001 - filtered below
-                    if not any(t in str(e) for t in self._TRANSIENT_READ):
-                        raise
-                    docs = None  # next iteration replans from a new listing
-                    self._invalidate_table()  # never resume on a stale memo
-                    if cursor == failed_at:
-                        stalls += 1
-                        if stalls >= self._EXPORT_STALL_ATTEMPTS - 1:
-                            raise
-                        time.sleep(min(0.1 * (2 ** (stalls - 1)), 2.0))
-                    else:
-                        failed_at = cursor
-                        stalls = 0
+            with self._view(req) as (snap, st):
+                if snap.partial:
+                    # search degrades to partial results; an EXPORT is a
+                    # completeness contract (backup/ETL) — a drain that
+                    # would silently omit the entire cold history must
+                    # fail loudly
+                    raise RuntimeError(
+                        "export requires the full store: cold tier "
+                        "unreachable (search still serves partial results)"
+                    )
+                docs = st.search(
+                    req.get("query", "*"),
+                    size=None if size is None else int(size),
+                    offset=self._int_or(req, "offset", 0),
+                    order=req.get("order", "desc"),
+                    from_ms=req.get("from_ms"),
+                    to_ms=req.get("to_ms"),
+                    dialect=req.get("dialect"),
+                ).select("mid", "rid", "raw")
+                yield  # planned: from here on close() releases the view
+                for r in docs.toLocalIterator(prefetchPartitions=True):
+                    yield r["mid"], r["rid"], r["raw"]
 
-        return rows()
+        it = rows()
+        next(it)  # request-shaped errors raise here, before any row
+        return it
 
     def export_lines(self, req: dict):
         """One JSON line per export doc (the HTTP NDJSON drain)."""
         rows = self.export_docs(req)
 
         def lines():
-            for mid, rid, raw in rows:
-                # format from epoch millis (mid) so the label is truly UTC
-                # regardless of the Spark session / server timezone
-                t = _dt.datetime.fromtimestamp(
-                    mid / 1000.0, tz=_dt.timezone.utc
-                )
-                yield json.dumps(
-                    {
-                        "doc": {
-                            "id": f"{mid}-{rid}",
-                            "data": raw,
-                            "time": t.isoformat(
-                                timespec="milliseconds"
-                            ).replace("+00:00", "Z"),
+            try:
+                for mid, rid, raw in rows:
+                    # format from epoch millis (mid) so the label is truly
+                    # UTC regardless of the Spark session / server timezone
+                    t = _dt.datetime.fromtimestamp(
+                        mid / 1000.0, tz=_dt.timezone.utc
+                    )
+                    yield json.dumps(
+                        {
+                            "doc": {
+                                "id": f"{mid}-{rid}",
+                                "data": raw,
+                                "time": t.isoformat(
+                                    timespec="milliseconds"
+                                ).replace("+00:00", "Z"),
+                            }
                         }
-                    }
-                )
+                    )
+            finally:
+                rows.close()
 
         return lines()
 
@@ -1222,9 +1083,6 @@ class SeqSparkServer:
                         out = out.unionByName(e[0])
                     with self._lock:
                         self.store.append(self._transform()(out))
-                        # new durable docs the index doesn't list yet:
-                        # index routing disarms until refresh_index()
-                        self._index_append_seq += 1
                     # flush count + group size expose the group-commit
                     # amortization (flushes_total << bulk_total under load)
                     with self._metrics_lock:
@@ -1270,26 +1128,36 @@ class SeqSparkServer:
 
     def _table(self, snap: Optional[StoreSnapshot] = None) -> SearchTable:
         """The serving SearchTable for ``snap`` (default: a snapshot taken
-        now), memoized on (snapshot key, mapping identity, index arm
-        state). Building one costs ~100+ ms of file listing + py4j, and a
-        per-request rebuild would also keep the engine's prepared-plan
-        cache from ever engaging (a fresh instance each time). The key
-        moves with every visible mutation (the store bumps its generation
-        after append, compact swap, retention drop and tier rotation, so a
-        bulk acked before this request is ALWAYS visible), with cold-tier
-        reachability (the snapshot probes it), with live mapping reloads
-        (a new object) and with the index arm state (append staleness
-        disarms; refresh_index re-arms). A hit serves exactly the listing
-        a fresh build would read. Request-local state stays request-local:
-        ``partial`` comes from the request's snapshot, the route from the
-        request's own complex_search result, and a transient read failure
-        invalidates the memo before the replan (:meth:`_retry_transient`)
-        so external/raced file changes can never pin a stale listing."""
+        now), memoized on (snapshot key, index version, mapping
+        identity). Building one costs ~100+ ms of file listing + py4j,
+        and a per-request rebuild would also keep the engine's
+        prepared-plan cache from ever engaging (a fresh instance each
+        time). The snapshot key is the store's manifest version(s), so
+        any committed append, compaction, retention or rotation — from
+        this process or another — moves it, and a bulk acked before this
+        request is ALWAYS visible; it also carries cold-tier
+        reachability, and a live mapping reload is a new object.
+
+        An attached index is AUTHORITATIVE (the semi-join drops docs it
+        doesn't list), so it routes only while its newest version was
+        built from exactly the snapshot's files in every bucket: an
+        append from any process disarms it until :meth:`refresh_index`.
+        The routed index version is held with ``snap``. Request-local
+        state stays request-local: ``partial`` comes from the request's
+        snapshot, the route from the request's own complex_search
+        result."""
         if snap is None:
-            snap = self.store.snapshot()
-        armed = (self._store_index is not None
-                 and self._index_fresh_seq == self._index_append_seq)
-        key = (snap.key, armed, self._index_fresh_seq if armed else None)
+            with self.store.snapshot() as snap:
+                return self._table(snap)
+        index = None
+        if self._store_index is not None:
+            im, release = self._store_index.pin()
+            if im.built_from == snap.files:
+                snap.pins.append(release)  # released with the snapshot
+                index = im
+            else:
+                release()
+        key = (snap.key, index and index.version)
         m = self.mapping
         cached = self._st_memo
         if cached is not None and cached[0] == key and cached[1] is m:
@@ -1297,69 +1165,59 @@ class SeqSparkServer:
         st = SearchTable.from_store(
             snap, m, case_sensitive=self._case_sensitive
         )
-        if armed:
+        if index is not None:
             st = self._store_index.attach_to(
                 st,
                 two_phase_min_doc_bytes=self._two_phase_min_doc_bytes,
+                manifest=index,
             )
         self._st_memo = (key, m, st)
         return st
 
-    def _invalidate_table(self) -> None:
-        """Drop the memoized SearchTable so the next :meth:`_table`
-        rebuilds from a fresh listing — called on transient read
-        failures, where the files changed without a generation bump this
-        process observed (or a cold tier went dark mid-frame)."""
-        self._st_memo = None
-
     def refresh_index(self) -> bool:
-        """Rebuild the attached StoreIndex's stale buckets and re-arm
-        index routing. Appends landing DURING the rebuild keep the index
-        marked stale (the sequence is captured before the rebuild
-        starts), so a search can never be served from an index missing
-        durable docs. Returns True when routing is armed afterwards."""
+        """Rebuild the attached StoreIndex's stale buckets (only buckets
+        whose store files changed since their last build, r16 — the
+        maintenance cadence costs O(appended buckets), not a full-index
+        rebuild per pass). Returns True when the index then covers the
+        store, i.e. routing is armed; an append landing during the
+        rebuild leaves it disarmed until the next call."""
         if self._store_index is None:
             return False
-        seq = self._index_append_seq
-        # incremental: only buckets whose store files changed since
-        # their last build are rebuilt (signature match, r16) — the
-        # maintenance cadence costs O(appended buckets), not a
-        # full-index rebuild per pass
         self._store_index.refresh_stale()
-        self._index_fresh_seq = seq
-        return self._index_fresh_seq == self._index_append_seq
+        return not self._store_index.stale_buckets()
 
     def search(self, req: dict) -> dict:
-        return self._retry_transient(lambda: self._search_impl(req))
-
-    def _search_impl(self, req: dict) -> dict:
         """Docs, plus the total when asked for: the docs and total
         branches of one plan-cached :meth:`SearchTable.complex_search`."""
-        snap = self._snapshot(req)
-        st = self._table(snap)
-        q, dialect = req.get("query", "*"), req.get("dialect")
-        size = self._int_or(req, "size", 100)
-        with_total = bool(req.get("with_total"))
-        if not (size or with_total):
-            st.parse(q, dialect)  # nothing to compute; a bad query is a 400
-            return self._flag_partial({"docs": []}, snap)
-        res = st.complex_search(
-            q,
+        with self._view(req) as (snap, st):
+            size = self._int_or(req, "size", 100)
+            with_total = bool(req.get("with_total"))
+            if not (size or with_total):
+                # nothing to compute; a bad query is a 400
+                st.parse(req.get("query", "*"), req.get("dialect"))
+                return self._flag_partial({"docs": []}, snap)
+            res = self._complex_search(st, req, size=size,
+                                       with_total=with_total)
+            out = {"docs": self._docs_of(res)}
+            if with_total:
+                out["total"] = res.total_count
+            if req.get("explain"):
+                out["explain"] = self._explain_of(st, req, res.route)
+            return self._flag_partial(out, snap)
+
+    def _complex_search(self, st: SearchTable, req: dict, **kw):
+        """The request's :meth:`SearchTable.complex_search` over its
+        query, time window, page offset and order, plus ``kw``."""
+        return st.complex_search(
+            req.get("query", "*"),
             from_ms=req.get("from_ms"),
             to_ms=req.get("to_ms"),
-            size=size,
             offset=self._int_or(req, "offset", 0),
             order=req.get("order", "desc"),
-            with_total=with_total,
-            dialect=dialect,
+            dialect=req.get("dialect"),
             columns=_DOC_COLUMNS,
+            **kw,
         )
-        out = {"docs": self._docs_of(res)}
-        if with_total:
-            out["total"] = res.total_count
-        if req.get("explain"):
-            out["explain"] = self._explain_of(st, req, res.route)
-        return self._flag_partial(out, snap)
 
     def _docs_of(self, res) -> list:
         """The wire docs of a complex_search result's collected rows
@@ -1387,9 +1245,6 @@ class SeqSparkServer:
         return prefix + st.explain(req.get("query", "*"), **args)
 
     def complex(self, req: dict) -> dict:
-        return self._retry_transient(lambda: self._complex_impl(req))
-
-    def _complex_impl(self, req: dict) -> dict:
         """ComplexSearch over HTTP (`proxyapi/grpc_complex_search.go:14-60`):
         ``{"query", "from_ms", "to_ms", "size", "with_total",
         "hist_interval_ms", "aggs": [{"func", "field", "group_by",
@@ -1398,54 +1253,44 @@ class SeqSparkServer:
         from the table's plan cache (:meth:`SearchTable.complex_search`)."""
         from .engine import AggQuery
 
-        snap = self._snapshot(req)
-        st = self._table(snap)
-        aggs = [
-            AggQuery(
-                func=a["func"],
-                field=a.get("field"),
-                group_by=a.get("group_by"),
-                quantiles=a.get("quantiles", ()),
-                interval_ms=a.get("interval_ms"),
-            )
-            for a in req.get("aggs", [])
-        ]
-        res = st.complex_search(
-            req.get("query", "*"),
-            from_ms=req.get("from_ms"),
-            to_ms=req.get("to_ms"),
-            size=self._int_or(req, "size", 0),
-            offset=self._int_or(req, "offset", 0),
-            order=req.get("order", "desc"),
-            with_total=req.get("with_total", False),
-            hist_interval_ms=req.get("hist_interval_ms"),
-            aggs=aggs,
-            dialect=req.get("dialect"),
-            columns=_DOC_COLUMNS,
-        )
-        out: dict = {}
-        if res.docs is not None:
-            out["docs"] = self._docs_of(res)
-        if res.total_count is not None:
-            out["total"] = res.total_count
-        if res.histogram_rows is not None:
-            out["histogram"] = {str(b): c for b, c in res.histogram_rows}
-        out["aggs"] = [
-            [
-                {k: (None if v != v else v) if isinstance(v, float) else v
-                 for k, v in bucket.items()}
-                for bucket in buckets
+        with self._view(req) as (snap, st):
+            aggs = [
+                AggQuery(
+                    func=a["func"],
+                    field=a.get("field"),
+                    group_by=a.get("group_by"),
+                    quantiles=a.get("quantiles", ()),
+                    interval_ms=a.get("interval_ms"),
+                )
+                for a in req.get("aggs", [])
             ]
-            for buckets in res.agg_buckets
-        ]
-        if req.get("explain"):
-            out["explain"] = self._explain_of(st, req, res.route)
-        return self._flag_partial(out, snap)
+            res = self._complex_search(
+                st, req,
+                size=self._int_or(req, "size", 0),
+                with_total=req.get("with_total", False),
+                hist_interval_ms=req.get("hist_interval_ms"),
+                aggs=aggs,
+            )
+            out: dict = {}
+            if res.docs is not None:
+                out["docs"] = self._docs_of(res)
+            if res.total_count is not None:
+                out["total"] = res.total_count
+            if res.histogram_rows is not None:
+                out["histogram"] = {str(b): c for b, c in res.histogram_rows}
+            out["aggs"] = [
+                [
+                    {k: (None if v != v else v) if isinstance(v, float) else v
+                     for k, v in bucket.items()}
+                    for bucket in buckets
+                ]
+                for buckets in res.agg_buckets
+            ]
+            if req.get("explain"):
+                out["explain"] = self._explain_of(st, req, res.route)
+            return self._flag_partial(out, snap)
 
     def fetch(self, req: dict) -> dict:
-        return self._retry_transient(lambda: self._fetch_impl(req))
-
-    def _fetch_impl(self, req: dict) -> dict:
         """Fetch-by-ID (`proxyapi/grpc_fetch.go:21`): ``{"ids": [[mid, rid],
         ...]}`` → docs in store order. An optional ``fields`` list with
         ``except`` flag filters each doc's top-level JSON fields — the
@@ -1453,39 +1298,33 @@ class SeqSparkServer:
         default, block-list with ``"except": true``)."""
         from .seqql.ast import PipeFields
 
-        snap = self.store.snapshot()
-        st = self._table(snap)
-        ids = req.get("ids", [])
-        spark = self.spark
-        ids_df = spark.createDataFrame(
-            [(int(m), int(r)) for m, r in ids], "mid long, rid long"
-        )
-        docs = st.fetch(ids_df, ["mid", "rid"]).select("mid", "rid", "raw")
-        if req.get("fields"):
-            docs = st.apply_pipes(
-                docs,
-                [PipeFields(list(req["fields"]), bool(req.get("except")))],
+        with self._view() as (snap, st):
+            ids = req.get("ids", [])
+            spark = self.spark
+            ids_df = spark.createDataFrame(
+                [(int(m), int(r)) for m, r in ids], "mid long, rid long"
             )
-        out = {
-            "docs": [
-                {"mid": r["mid"], "rid": r["rid"], "data": r["raw"]}
-                for r in docs.collect()
-            ]
-        }
-        # a fetched id whose doc lives in the dark cold tier is missing
-        # from the result — mark it, like search
-        return self._flag_partial(out, snap)
+            docs = st.fetch(ids_df, ["mid", "rid"]).select("mid", "rid", "raw")
+            if req.get("fields"):
+                docs = st.apply_pipes(
+                    docs,
+                    [PipeFields(list(req["fields"]), bool(req.get("except")))],
+                )
+            out = {
+                "docs": [
+                    {"mid": r["mid"], "rid": r["rid"], "data": r["raw"]}
+                    for r in docs.collect()
+                ]
+            }
+            # a fetched id whose doc lives in the dark cold tier is missing
+            # from the result — mark it, like search
+            return self._flag_partial(out, snap)
 
     def status(self) -> dict:
         """Doc count + time bounds of the request's snapshot (an empty
-        store reads as an empty frame: ``docs: 0``). A transient read
-        race with maintenance replans; any other failure propagates
-        rather than reporting a non-empty store as empty."""
-        def run():
-            snap = self.store.snapshot()
-            return self._flag_partial(self._table(snap).status(), snap)
-
-        return self._retry_transient(run)
+        store reads as an empty frame: ``docs: 0``)."""
+        with self._view() as (snap, st):
+            return self._flag_partial(st.status(), snap)
 
     # --------------------------------------------------------- async search
 

@@ -264,14 +264,17 @@ class GrpcServer:
                 return False
 
             def all_chunks():
-                if first is not None:
-                    if expired():
-                        return
-                    yield first
-                for c in gen:
-                    if expired():
-                        return
-                    yield c
+                try:
+                    if first is not None:
+                        if expired():
+                            return
+                        yield first
+                    for c in gen:
+                        if expired():
+                            return
+                        yield c
+                finally:
+                    gen.close()
 
             return resp_headers, all_chunks(), trailers
         try:

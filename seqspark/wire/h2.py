@@ -819,6 +819,9 @@ class _Conn:
             pass
         finally:
             self._streams.pop(sid, None)
+            # a stream the peer cancelled ends its handler's iterator now
+            # (an export holds a store snapshot until then)
+            getattr(chunks, "close", lambda: None)()
 
 
 class H2Server:

@@ -479,8 +479,9 @@ def test_offset_past_a_known_row_count_keeps_the_fused_total(spark):
         docs._jdf.queryExecution().optimizedPlan().toString())
     # an offset that leaves less than a page (12 - 10 < 5): the limit is
     # dropped and the page becomes a global sort, whose range shuffle
-    # would count the observed rows twice
-    res, _ = _assert_total_parity(st, "svc:auth", offset=10, observed=False)
+    # would count the observed rows twice — but a short page is its own
+    # total (offset + rows), so no fused job runs
+    res, _ = _assert_total_parity(st, "svc:auth", offset=10)
     assert len(res.docs) == 2 and res.total_count == 12
     # an offset that leaves more than a page keeps its top-k: observed
     res, _ = _assert_total_parity(st, "svc:auth", offset=3)
@@ -491,8 +492,9 @@ def test_observed_total_of_a_folded_predicate(plain):
     """A non-integer literal on the integral ``id`` keyword column compiles
     to a false filter that the optimizer folds to an empty relation. Its
     row count (0) fits the page, so the limit goes and the page is a
-    global sort: the fused total answers."""
-    res, docs = _assert_total_parity(plain, "id:1.5 or id:x", observed=False)
+    global sort, which cannot count; the empty first page is its own
+    total (0), so no fused job runs either."""
+    res, docs = _assert_total_parity(plain, "id:1.5 or id:x")
     assert res.total_count == 0 and res.docs == []
     plan = docs._jdf.queryExecution().optimizedPlan().toString()
     assert "LocalRelation <empty>" in plan and "Limit" not in plan
@@ -524,6 +526,21 @@ def test_observed_total_over_index_semi_join(spark, indexed, threshold, join):
     finally:
         spark.conf.set(key, old)
         indexed._plan_cache.clear()
+
+
+def test_short_page_is_its_own_total(spark, indexed):
+    """A page shorter than ``size`` holds every match past its offset, so
+    its total is offset + rows and no fused job runs, also where the plan
+    that ran cannot count: an index semi-join whose id side is empty
+    (AQE folds the page to an empty relation), and an offset that leaves
+    less than a page."""
+    q = "msg:nosuchtoken and svc:auth"
+    res, docs = _assert_total_parity(indexed, q)
+    assert res.total_count == 0 and res.docs == []
+    assert "LeftSemi" in docs._jdf.queryExecution().optimizedPlan().toString()
+    n = len(_model_docs("indexed", "svc:auth", None, None))
+    res, _ = _assert_total_parity(indexed, "svc:auth", offset=n - 2)
+    assert res.total_count == n and len(res.docs) == 2
 
 
 def test_observed_total_with_nested_dedup(spark):

@@ -736,11 +736,11 @@ def test_two_phase_conf_ownership_knob(spark, tmp_path):
 
 
 def test_incremental_refresh_rebuilds_only_stale_buckets(spark, tmp_path):
-    """r16: per-bucket store-content signatures make refresh
-    incremental — a maintenance pass rebuilds O(appended buckets), not
-    the whole index (the 100 TB seal-time cadence). Also: pre-signature
-    stats report stale exactly once, and a compaction (same rows, new
-    files) is detected."""
+    """r16: the index manifest records the store files each bucket was
+    built from, which makes refresh incremental — a maintenance pass
+    rebuilds O(appended buckets), not the whole index (the 100 TB
+    seal-time cadence). A compaction (same rows, new files) is
+    detected."""
     import json
 
     from seqspark import Mapping
@@ -776,17 +776,9 @@ def test_incremental_refresh_rebuilds_only_stale_buckets(spark, tmp_path):
     st = idx.attach_to(store.search_table(m))
     assert st.search("message:extra").count() == 1
     assert st.search("message:alpha").count() == 4
-    # compaction rewrites files without changing rows: sig must differ
+    # compaction rewrites files without changing rows: the built-from
+    # files differ
     if store.maintain(max_files_per_partition=1):
         assert idx.stale_buckets() != []
         idx.refresh_stale()
         assert idx.stale_buckets() == []
-    # pre-signature stats (old format): stale once, re-signed by rebuild
-    fs = idx._fs()
-    b = stale[0]
-    raw = json.loads(fs.read_text(fs.path(idx.STATS_DIR, f"{b}.json")))
-    raw.pop("sig")
-    fs.write_text(fs.path(idx.STATS_DIR, f"{b}.json"), json.dumps(raw))
-    assert idx.stale_buckets() == [b]
-    idx.refresh_stale()
-    assert idx.stale_buckets() == []

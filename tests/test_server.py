@@ -3,7 +3,6 @@ search with totals, status, per-item error statuses."""
 
 import gzip
 import json
-import time
 import urllib.request
 
 import pytest
@@ -1105,58 +1104,6 @@ def test_bulk_malformed_action_with_blank_stays_per_item():
     assert len(res.docs) == 1
 
 
-def test_retry_transient_semantics(server):
-    """One replan for maintenance-raced reads; real errors (and a repeat
-    of the same transient error — genuine corruption) propagate."""
-    calls = {"n": 0}
-
-    def flaky():
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise RuntimeError("[FAILED_READ_FILE.NO_HINT] part-0001")
-        return "ok"
-
-    assert server._retry_transient(flaky) == "ok" and calls["n"] == 2
-
-    # sustained-maintenance shape: several attempts collide with swaps
-    # before one lands — the bounded loop absorbs up to
-    # _TRANSIENT_ATTEMPTS-1 collisions
-    calls["n"] = 0
-
-    def thrice():
-        calls["n"] += 1
-        if calls["n"] < server._TRANSIENT_ATTEMPTS:
-            raise RuntimeError("[FAILED_READ_FILE.FILE_NOT_EXIST] part-0009")
-        return "ok"
-
-    assert server._retry_transient(thrice) == "ok"
-    assert calls["n"] == server._TRANSIENT_ATTEMPTS
-
-    calls["n"] = 0
-
-    def always():
-        calls["n"] += 1
-        raise RuntimeError("java.nio.file.NoSuchFileException: part-0002")
-
-    with pytest.raises(RuntimeError):
-        server._retry_transient(always)  # persistent -> surfaces, bounded
-    assert calls["n"] == server._TRANSIENT_ATTEMPTS
-
-    def real():
-        raise ValueError("field 'x' is not indexed")
-
-    calls["n"] = 0
-
-    def count_real():
-        calls["n"] += 1
-        real()
-
-    with pytest.raises(ValueError):
-        server._retry_transient(count_real)
-    assert calls["n"] == 1  # non-transient: no second attempt
-
-
-
 def test_complex_persists_nothing_under_identical_concurrency(spark, server):
     """/complex persists no RDD (the fused job needs no cache), so
     concurrent identical requests cannot evict each other's blocks: four
@@ -1174,32 +1121,20 @@ def test_complex_persists_nothing_under_identical_concurrency(spark, server):
     }).encode()
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
-    attempts = []
-    impl = server._complex_impl
-
-    def counted(req):
-        attempts.append(1)
-        return impl(req)
-
-    server._complex_impl = counted
-    try:
-        first = _post(server, "/complex", body)
-        assert first[0] == 200 and first[1]["total"] == 2
-        answers = []
-        threads = [
-            threading.Thread(target=lambda: answers.append(
-                _post(server, "/complex", body)))
-            for _ in range(4)
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(timeout=300)
-        assert not any(t.is_alive() for t in threads)
-    finally:
-        del server._complex_impl
+    first = _post(server, "/complex", body)
+    assert first[0] == 200 and first[1]["total"] == 2
+    answers = []
+    threads = [
+        threading.Thread(target=lambda: answers.append(
+            _post(server, "/complex", body)))
+        for _ in range(4)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
     assert answers == [first] * 4
-    assert len(attempts) == 5  # no transient retry taken
     assert jsc.getPersistentRDDs().size() == before
 
 def _flaky_rig(spark, tmp_path, n_docs=6):
@@ -1222,8 +1157,8 @@ def _flaky_rig(spark, tmp_path, n_docs=6):
 
 
 class _FlakyDF:
-    """Wraps a DataFrame; its local iterator dies with a transient-read
-    marker after ``fail_after`` rows."""
+    """Wraps a DataFrame; its local iterator dies after ``fail_after``
+    rows."""
 
     def __init__(self, df, fail_after):
         self._df, self._fail_after = df, fail_after
@@ -1235,82 +1170,34 @@ class _FlakyDF:
         def gen():
             for i, r in enumerate(self._df.toLocalIterator(**kw)):
                 if i == self._fail_after:
-                    raise RuntimeError(
-                        "injected: FAILED_READ_FILE mid-compaction swap"
-                    )
+                    raise RuntimeError("injected read failure")
                 yield r
         return gen()
 
 
-def test_export_resumes_after_transient_read_failure(spark, tmp_path,
-                                                     monkeypatch):
-    """A compaction/retention swap failing an export mid-stream must not
-    truncate it: the drain replans and RESUMES via keyset search_after
-    strictly after the last yielded (mid, rid) — same rows, same order,
-    no duplicates, no loss."""
+def _drain_with_maintenance(srv, req, at):
+    """Drain an export, compacting every bucket once ``at`` rows have
+    been read."""
+    rows = srv.export_docs(req)
+    got = [r for _, r in zip(range(at), rows)]
+    assert srv.store.maintain(max_files_per_partition=0)
+    return got + list(rows)
+
+
+def test_export_resume_respects_size_budget(spark, tmp_path):
+    """A sized drain yields exactly ``size`` rows of its one pinned
+    frame, also when maintenance rewrites every bucket mid-stream."""
     srv, expected = _flaky_rig(spark, tmp_path)
-    real_table = srv._table
-    searches = {"n": 0}
-
-    class FlakyTable:
-        def __init__(self, real):
-            self._real = real
-
-        def search(self, *a, **k):
-            searches["n"] += 1
-            df = self._real.search(*a, **k)
-            # first plan dies after 2 rows; the resume path must then go
-            # through search_after, not a fresh search
-            return _FlakyDF(df, 2) if searches["n"] == 1 else df
-
-        def search_after(self, *a, **k):
-            searches["after"] = (a, k)
-            return self._real.search_after(*a, **k)
-
-    monkeypatch.setattr(srv, "_table",
-                        lambda snap=None: FlakyTable(real_table(snap)))
-    got = list(srv.export_docs({"query": "*", "order": "asc"}))
-    assert got == expected  # ordered, complete, no dup/loss
-    assert "after" in searches  # resumed with the keyset cursor
-    assert searches["after"][1]["last_ts_ms"] == expected[1][0]
-    assert searches["after"][1]["last_rid"] == expected[1][1]
-
-
-def test_export_resume_respects_size_budget(spark, tmp_path, monkeypatch):
-    """The resume must only drain the REMAINING budget when the request
-    carried a size."""
-    srv, expected = _flaky_rig(spark, tmp_path)
-    real_table = srv._table
-    searches = {"n": 0}
-
-    class FlakyTable:
-        def __init__(self, real):
-            self._real = real
-
-        def search(self, *a, **k):
-            searches["n"] += 1
-            df = self._real.search(*a, **k)
-            return _FlakyDF(df, 3) if searches["n"] == 1 else df
-
-        def search_after(self, *a, **k):
-            searches["after"] = k
-            return self._real.search_after(*a, **k)
-
-    monkeypatch.setattr(srv, "_table",
-                        lambda snap=None: FlakyTable(real_table(snap)))
-    got = list(srv.export_docs({"query": "*", "order": "asc", "size": 5}))
-    assert got == expected[:5]
-    assert searches["after"]["size"] == 2  # 5 requested - 3 yielded
+    req = {"query": "*", "order": "asc", "size": 5}
+    assert _drain_with_maintenance(srv, req, 3) == expected[:5]
 
 
 def test_export_gives_up_without_progress(spark, tmp_path, monkeypatch):
-    """Sustained transient failures at the SAME cursor are real
-    corruption, not a swap race — the drain must propagate after the
-    bounded stall window, not loop forever. (Backoffs shrunk so the
-    test doesn't sleep through the real ~3s production window.)"""
+    """A read failing mid-drain propagates at once — there is no replan
+    loop: the drain's files are held, so a failing read is a real fault
+    — and the drain's snapshot is released."""
     srv, _ = _flaky_rig(spark, tmp_path)
     real_table = srv._table
-    monkeypatch.setattr(time, "sleep", lambda s: None)
 
     class AlwaysFlaky:
         def __init__(self, real):
@@ -1319,56 +1206,20 @@ def test_export_gives_up_without_progress(spark, tmp_path, monkeypatch):
         def search(self, *a, **k):
             return _FlakyDF(self._real.search(*a, **k), 0)
 
-        def search_after(self, *a, **k):
-            return _FlakyDF(self._real.search_after(*a, **k), 0)
-
     monkeypatch.setattr(srv, "_table",
                         lambda snap=None: AlwaysFlaky(real_table(snap)))
-    with pytest.raises(RuntimeError, match="FAILED_READ_FILE"):
+    with pytest.raises(RuntimeError, match="injected"):
         list(srv.export_docs({"query": "*", "order": "asc"}))
+    assert srv.store._log.holds == {}
 
 
-def test_export_survives_compaction_burst_at_one_cursor(spark, tmp_path,
-                                                        monkeypatch):
-    """r13 soak catch: a MULTI-partition `maintain` burst swaps
-    partitions sequentially for over a second, so SEVERAL consecutive
-    replans can land mid-burst with zero progress. The old 4-attempt /
-    ~0.3s stall window exhausted exactly once in 162 drains; the
-    exponential-backoff bound must absorb a burst of
-    ``_EXPORT_STALL_ATTEMPTS - 2`` consecutive no-progress failures and
-    still drain completely."""
+def test_export_survives_compaction_burst_at_one_cursor(spark, tmp_path):
+    """A multi-partition ``maintain`` burst compacts every bucket while
+    the drain sits at one cursor: the drain completes with exactly the
+    rows of its pinned snapshot — ordered, no duplicate, no loss."""
     srv, expected = _flaky_rig(spark, tmp_path)
-    real_table = srv._table
-    burst = {"left": srv._EXPORT_STALL_ATTEMPTS - 2}
-    slept = []
-    monkeypatch.setattr(time, "sleep", lambda s: slept.append(s))
-
-    class BurstFlaky:
-        def __init__(self, real):
-            self._real = real
-
-        def _wrap(self, df):
-            if burst["left"] > 0:
-                burst["left"] -= 1
-                return _FlakyDF(df, 0)
-            return df
-
-        def search(self, *a, **k):
-            return self._wrap(self._real.search(*a, **k))
-
-        def search_after(self, *a, **k):
-            return self._wrap(self._real.search_after(*a, **k))
-
-    monkeypatch.setattr(srv, "_table",
-                        lambda snap=None: BurstFlaky(real_table(snap)))
-    got = list(srv.export_docs({"query": "*", "order": "asc"}))
-    assert got == expected  # complete, ordered, no dup/loss
-    assert burst["left"] == 0
-    # backoff grew exponentially across the burst (outlasting it); the
-    # global sleep patch also records unrelated 1s+ waits from other
-    # engine threads — the drain's backoffs are the sub-second ones
-    backoffs = [s for s in slept if s < 1]
-    assert backoffs == [0.1, 0.2, 0.4], backoffs
+    got = _drain_with_maintenance(srv, {"query": "*", "order": "asc"}, 1)
+    assert got == expected
 
 
 def test_export_bad_query_still_raises_eagerly(server):
@@ -1396,48 +1247,26 @@ def test_es_version_flag(spark, tmp_path):
         srv.stop()
 
 
-def test_export_resume_exhaustive_fail_points(spark, tmp_path, monkeypatch):
-    """Sweep the fail point across every position, including a SECOND
-    failure mid-resume (progress between failures → must still succeed):
-    every drain equals the clean drain exactly."""
+def test_export_resume_exhaustive_fail_points(spark, tmp_path):
+    """Sweep the point where maintenance runs across every position of
+    the drain, both orders, plus a retention of the oldest bucket
+    mid-drain: every drain equals the clean drain of its snapshot, and
+    only a later export sees the retention."""
     srv, expected = _flaky_rig(spark, tmp_path)
-    real_table = srv._table
     n = len(expected)
-
-    state = {}
-
-    class Flaky:
-        def __init__(self, real):
-            self._real = real
-
-        def _wrap(self, df):
-            if state["fails"]:
-                return _FlakyDF(df, state["fails"].pop(0))
-            return df
-
-        def search(self, *a, **k):
-            return self._wrap(self._real.search(*a, **k))
-
-        def search_after(self, *a, **k):
-            return self._wrap(self._real.search_after(*a, **k))
-
-    monkeypatch.setattr(srv, "_table",
-                        lambda snap=None: Flaky(real_table(snap)))
-    # single failure after k rows, for every k (k=n never fires: clean)
     for k in range(n + 1):
-        state["fails"] = [k]
-        got = list(srv.export_docs({"query": "*", "order": "asc"}))
-        assert got == expected, f"fail@{k}"
-    # double failure: first drain dies after 2, the RESUME dies after 1
-    # more row (cursor moved → retry allowed), second resume finishes
-    state["fails"] = [2, 1]
-    got = list(srv.export_docs({"query": "*", "order": "asc"}))
-    assert got == expected
-    # desc order takes the same machinery through the other sort
+        got = _drain_with_maintenance(srv, {"query": "*", "order": "asc"}, k)
+        assert got == expected, f"maintenance@{k}"
     clean = list(srv.export_docs({"query": "*", "order": "desc"}))
-    state["fails"] = [3]
-    got = list(srv.export_docs({"query": "*", "order": "desc"}))
+    got = _drain_with_maintenance(srv, {"query": "*", "order": "desc"}, 3)
     assert got == clean
+    rows = srv.export_docs({"query": "*", "order": "asc"})
+    got = [next(rows), next(rows)]
+    oldest, *rest = srv.store.partitions()
+    assert srv.store.retain(min_bucket=rest[0]) == [oldest]
+    assert got + list(rows) == expected
+    after = list(srv.export_docs({"query": "*", "order": "asc"}))
+    assert after == expected[len(expected) - len(after):] and len(after) < n
 
 
 def test_reference_quickstart_curl_shapes_work_verbatim(server):

@@ -370,19 +370,38 @@ def test_mapping_evolution_old_store_new_field(spark, tmp):
 
 
 def test_compact_crash_recovery(spark, tmp):
-    """A crash between the two swap renames leaves the live partition parked
-    in _compact_tmp/old-*; the next DocStore startup restores it."""
+    """A crash leaves files no manifest version names: an append's
+    staged output under ``_staging/`` and a compaction's sealed file
+    already moved into its bucket but never committed. Neither is ever
+    read; the reopened store's first maintenance pass sweeps both, and
+    committed rows, the store meta and async-job files remain."""
+    import shutil
+
     store = streamed_store(spark, tmp)
     bucket = store.partitions()[0]
     before = store.read().count()
-    # simulate: live partition parked in scratch, new copy never swapped in
-    fs = store._fs
-    fs._fs.mkdirs(fs.path("_compact_tmp"))
-    fs.rename(fs.path(f"ts_bucket={bucket}"), fs.path("_compact_tmp", f"old-{bucket}"))
-    assert bucket not in store.partitions()
-    store2 = DocStore(spark, store.path)  # restart runs recovery
-    assert bucket in store2.partitions()
-    assert store2.read().count() == before
+    bdir = os.path.join(store.path, f"ts_bucket={bucket}")
+    live = sorted(f for f in os.listdir(bdir) if f.endswith(".parquet"))
+    staged = os.path.join(store.path, "_staging", "crashed",
+                          f"ts_bucket={bucket}")
+    os.makedirs(staged)
+    shutil.copy(os.path.join(bdir, live[0]),
+                os.path.join(staged, "part-staged.parquet"))
+    sealed = os.path.join(bdir, "part-uncommitted.parquet")
+    shutil.copy(os.path.join(bdir, live[0]), sealed)
+    job = os.path.join(store.path, "_async_search", "job.json")
+    os.makedirs(os.path.dirname(job))
+    with open(job, "w") as f:
+        f.write("{}")
+    reopened = DocStore(spark, store.path)
+    assert reopened.read().count() == before  # leftovers are never read
+    assert reopened.maintain(max_files_per_partition=10**6) == []
+    assert os.listdir(os.path.join(store.path, "_staging")) == []
+    assert sorted(f for f in os.listdir(bdir)
+                  if f.endswith(".parquet")) == live
+    assert os.path.exists(os.path.join(store.path, "_store_meta.json"))
+    assert os.path.exists(job)
+    assert DocStore(spark, store.path).read().count() == before
 
 
 def test_fields_pipe_projects_raw_json(spark):
@@ -1104,17 +1123,12 @@ def test_concurrent_append_and_compact_lose_nothing(spark, tmp):
     assert DocStore(spark, path).read().count() == expected
 
 
-def test_retention_under_running_query_fails_transient_then_replans(spark, tmp):
-    """Maintenance deleting files between a query's planning and its tasks
-    reading them must fail LOUDLY with a transient-classified error — a
-    silent skip (ignoreMissingFiles) would also swallow a compaction
-    swap's old files and serve 0 rows for a bucket that still has data.
-    The caller's one-shot replan (`_retry_transient`) then re-lists:
-    correctly-fewer rows after retention, correct data after compaction."""
-    import shutil
-
-    from seqspark.server import SeqSparkServer
-
+def test_retention_under_running_query_reads_pinned_rows(spark, tmp):
+    """Retention committed while a query holds its snapshot deletes none
+    of the query's files: the pinned frame still reads every row it
+    listed, with no error and no replan, while the next snapshot reads
+    correctly-fewer rows. The dropped bucket goes when the snapshot is
+    released."""
     path = os.path.join(tmp, "rot_store")
     store = DocStore(spark, path)
     for h in (10, 11):
@@ -1127,14 +1141,16 @@ def test_retention_under_running_query_fails_transient_then_replans(spark, tmp):
             spark.createDataFrame(rows, "raw string"),
             MAPPING, allowed_drift_ms=BIG, future_drift_ms=BIG,
         ))
-    df = store.read()  # plan lists both partitions
+    snap = store.snapshot()
+    df = snap.read()
     assert df.count() == 40
-    victim = store.partitions()[0]
-    shutil.rmtree(os.path.join(path, f"ts_bucket={victim}"))
-    with pytest.raises(Exception) as exc:
-        df.count()  # the stale plan fails, never silently under-counts
-    assert any(m in str(exc.value) for m in SeqSparkServer._TRANSIENT_READ)
-    assert store.read().count() == 20  # the replanned read sees the rest
+    victim, kept = store.partitions()
+    assert store.retain(min_bucket=kept) == [victim]
+    assert df.count() == 40  # the pinned files are still on disk
+    assert store.read().count() == 20
+    assert os.path.exists(os.path.join(path, f"ts_bucket={victim}"))
+    snap.release()
+    assert not os.path.exists(os.path.join(path, f"ts_bucket={victim}"))
 
 
 def test_async_search_concurrency_capped(spark, tmp):

@@ -1,5 +1,5 @@
 """Store snapshots + the server's snapshot-keyed SearchTable memo: each
-request takes one store snapshot (mutation generation, bucket listing,
+request takes one store snapshot (manifest version, bucket list,
 cold-tier reachability) and the serving layer reuses one table across
 requests with equal snapshot keys, rebuilding exactly when the store
 changed — append, compact, retention, rotation, index arm/disarm,
@@ -42,47 +42,63 @@ def _doc(day, hour, service="auth", msg="hello world"):
             "service": service, "message": msg}
 
 
+def _key(store):
+    with store.snapshot() as snap:
+        return snap.key
+
+
 def test_generation_bumps_on_every_mutation(spark, tmp):
+    """The snapshot key is the manifest version: every mutation commits
+    a new one."""
     store = DocStore(spark, os.path.join(tmp, "store"))
-    g0 = store.generation
+    g0 = _key(store)
     store.append(_docs_df(spark, [_doc(1, 1), _doc(1, 2)]))
-    g1 = store.generation
+    g1 = _key(store)
     assert g1 > g0
     # second append to the same bucket so compact has >1 file
     store.append(_docs_df(spark, [_doc(1, 1, "pay")]))
-    g2 = store.generation
+    g2 = _key(store)
     assert g2 > g1
     bucket = store.partitions()[0]
     store.compact(bucket)
-    g3 = store.generation
+    g3 = _key(store)
     assert g3 > g2
     store.retain(min_bucket="2024-01-01-02")
-    g4 = store.generation
+    g4 = _key(store)
     assert g4 > g3
+    assert os.listdir(os.path.join(tmp, "store", "_manifest")) == [
+        f"{g4[0]}.json"]  # superseded versions are deleted
 
 
 def test_generation_is_shared_across_instances_on_one_path(spark, tmp):
     path = os.path.join(tmp, "store")
     a = DocStore(spark, path)
     b = DocStore(spark, path)
-    before = b.generation
+    before = _key(b)
     a.append(_docs_df(spark, [_doc(2, 3)]))
-    # instance b observes instance a's append (same-path counter, like
-    # the write locks: a streaming ingest + a server over one path)
-    assert b.generation > before
+    # instance b observes instance a's append: the version is on disk
+    # (another process's append moves it the same way)
+    assert _key(b) > before
 
 
 def test_tiered_generation_and_rotation(spark, tmp):
+    """A tiered key moves with either tier's version; rotation records
+    its tombstones in the same hot version that drops the buckets."""
     hot = DocStore(spark, os.path.join(tmp, "hot"))
     cold = DocStore(spark, os.path.join(tmp, "cold"))
     tiered = TieredStore(hot, cold)
-    g0 = tiered.generation
+    g0 = _key(tiered)
     tiered.append(_docs_df(spark, [_doc(1, h) for h in range(3)]))
-    g1 = tiered.generation
-    assert g1 > g0  # both tiers bumped
+    g1 = _key(tiered)
+    assert g1[0][0] > g0[0][0] and g1[0][1] > g0[0][1]  # both tiers
     out = tiered.maintain(hot_min_bucket="2024-01-01-01")
-    assert out["hot_dropped"]
-    assert tiered.generation > g1  # retention + tombstone persist
+    assert out["hot_dropped"] == ["2024-01-01-00"]
+    g2 = _key(tiered)
+    assert g2[0][0] == g1[0][0] + 1  # one version: drop + tombstone
+    assert hot.manifest().rotated == ["2024-01-01-00"]
+    with tiered.snapshot() as snap:
+        assert snap.buckets == ("2024-01-01-00", "2024-01-01-01",
+                                "2024-01-01-02")  # cold serves hour 0
 
 
 def test_server_table_memo_hits_and_rebuilds(spark, tmp):
@@ -115,32 +131,6 @@ def test_server_table_memo_hits_and_rebuilds(spark, tmp):
     core._httpd.server_close()
 
 
-def test_server_table_memo_transient_invalidate(spark, tmp):
-    store = DocStore(spark, os.path.join(tmp, "store"))
-    store.append(_docs_df(spark, [_doc(1, 1)]))
-    core = SeqSparkServer(
-        spark, store, MAPPING,
-        allowed_drift_ms=BIG, future_drift_ms=BIG,
-        async_dir=os.path.join(tmp, "async"),
-    )
-    st = core._table()
-    assert core._st_memo is not None
-    # a transient read failure must drop the memo before the replan:
-    # the retried build then pins a FRESH listing
-    calls = {"n": 0}
-
-    def flaky():
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise RuntimeError("FAILED_READ_FILE: raced a compaction swap")
-        return "ok"
-
-    assert core._retry_transient(flaky) == "ok"
-    assert core._st_memo is None
-    assert core._table() is not st
-    core._httpd.server_close()
-
-
 def _server(spark, tmp, store, **kw):
     return SeqSparkServer(
         spark, store, MAPPING, allowed_drift_ms=BIG, future_drift_ms=BIG,
@@ -163,6 +153,7 @@ def _darken(monkeypatch, cold):
     def dark(*a, **k):
         raise IOError("cold storage unreachable")
 
+    monkeypatch.setattr(cold, "snapshot", dark)  # the partial probe
     monkeypatch.setattr(cold, "partitions", dark)
     monkeypatch.setattr(cold, "read", dark)
 
@@ -209,33 +200,6 @@ def test_cold_tier_recovery_serves_full_store(spark, tmp, monkeypatch):
     out = core.search({"query": "*", "with_total": True})
     assert "partial_response" not in out
     assert out["total"] == 3
-    core._httpd.server_close()
-
-
-def test_status_replans_transient_read_failure(spark, tmp, monkeypatch):
-    """A status read racing a compaction swap replans and reports the
-    real count, never ``docs: 0`` for a non-empty store; the replanned
-    table's cached aggregate then serves the next call too (not a fresh
-    ``limit(1)`` Dataset per call)."""
-    store = DocStore(spark, os.path.join(tmp, "store"))
-    store.append(_docs_df(spark, [_doc(1, 1), _doc(1, 2)]))
-    core = _server(spark, tmp, store)
-    real = SearchTable.status
-    calls = {"n": 0}
-
-    def flaky(self):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise RuntimeError("FAILED_READ_FILE: raced a compaction swap")
-        return real(self)
-
-    monkeypatch.setattr(SearchTable, "status", flaky)
-    collected, _ = _spy_frames(monkeypatch)
-    assert core.status()["docs"] == 2
-    assert calls["n"] == 2
-    assert core.status()["docs"] == 2
-    assert len(collected) == 2 and collected[0] is collected[1]
-    assert any(collected[0] is h for h in _held_frames(core._table()))
     core._httpd.server_close()
 
 
@@ -335,23 +299,27 @@ def _count_calls(monkeypatch, obj, name):
 
 
 def test_memo_hit_lists_each_tier_once(spark, tmp, monkeypatch):
-    """One request = one snapshot = one root LIST per tier: a memo-hit
-    /search lists a DocStore once and a tiered store's hot and cold tiers
-    once each (the fraction check reads the snapshot's listing)."""
+    """One request = one snapshot = one ``_manifest/`` LIST per tier: a
+    memo-hit /search lists a DocStore's versions once and a tiered
+    store's hot and cold tiers once each (the fraction check reads the
+    snapshot's bucket list), and reads no manifest it already holds."""
+    from seqspark.store import _HadoopFS
+
     store = DocStore(spark, os.path.join(tmp, "store"))
     store.append(_docs_df(spark, [_doc(1, 1)]))
     core = _server(spark, tmp, store)
     core.search({"query": "*"})  # builds and memoizes the table
-    listed = _count_calls(monkeypatch, store, "partitions")
+    listed = _count_calls(monkeypatch, store._log, "current")
+    reads = _count_calls(monkeypatch, _HadoopFS, "read_text")
     core.search({"query": "*"})
-    assert len(listed) == 1
+    assert (len(listed), len(reads)) == (1, 0)
     core._httpd.server_close()
 
     tiered, _ = _rotated_tiered(spark, os.path.join(tmp, "t"))
     core = _server(spark, tmp, tiered)
     core.search({"query": "*"})
-    hot = _count_calls(monkeypatch, tiered.hot, "partitions")
-    cold = _count_calls(monkeypatch, tiered.cold, "partitions")
+    hot = _count_calls(monkeypatch, tiered.hot._log, "current")
+    cold = _count_calls(monkeypatch, tiered.cold._log, "current")
     core.search({"query": "*"})
     assert (len(hot), len(cold)) == (1, 1)
     core._httpd.server_close()

@@ -262,6 +262,7 @@ def test_cold_tier_down_serves_partial_response(spark, tmp_path, monkeypatch):
     def dark(*a, **k):
         raise IOError("cold storage unreachable")
 
+    monkeypatch.setattr(cold, "snapshot", dark)  # the partial probe
     monkeypatch.setattr(cold, "partitions", dark)
     monkeypatch.setattr(cold, "read", dark)
 
@@ -320,6 +321,7 @@ def test_cold_tier_down_fails_export_loudly(spark, tmp_path, monkeypatch):
     def dark(*a, **k):
         raise IOError("cold storage unreachable")
 
+    monkeypatch.setattr(cold, "snapshot", dark)  # the partial probe
     monkeypatch.setattr(cold, "partitions", dark)
     monkeypatch.setattr(cold, "read", dark)
     srv = SeqSparkServer(spark, tiered, MAPPING,

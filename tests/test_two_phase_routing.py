@@ -413,7 +413,7 @@ def test_index_freshness_guard(spark, tmp_path):
                             "size": 50})["docs"]) == 6
     # a bulk through THIS server disarms routing until refresh...
     core.bulk(bulk_lines(7).encode(), gzipped=False)
-    assert core._index_fresh_seq != core._index_append_seq
+    assert sidx.stale_buckets()
     assert core._table()._index is None
     # ...and the new doc is searchable immediately (scan plan)
     assert len(core.search({"query": "message:needle",
@@ -469,10 +469,10 @@ def test_cli_index_flag_end_to_end(spark, tmp_path):
         # the maintenance loop re-arms index routing within a few periods
         deadline = time.time() + 30
         while time.time() < deadline:
-            if rt.http._index_fresh_seq == rt.http._index_append_seq:
+            if not rt.http._store_index.stale_buckets():
                 break
             time.sleep(0.5)
-        assert rt.http._index_fresh_seq == rt.http._index_append_seq
+        assert not rt.http._store_index.stale_buckets()
         out = post("/search", json.dumps(
             {"query": "message:clineedle", "size": 10}).encode())
         assert len(out["docs"]) == 5
@@ -528,8 +528,8 @@ def test_tiered_store_index_follows_ownership(spark, tmp_path):
     assert core.refresh_index() is True
     docs = core.search({"query": "message:needle", "size": 10})["docs"]
     assert len(docs) == 4  # 3 old + 1 late; nothing vanished
-    owner = store.owner_store(store.partitions()[0])
-    assert owner is cold  # tombstoned bucket stays cold-owned
+    with store.snapshot() as snap:  # tombstoned bucket stays cold-owned
+        assert snap.owners[store.partitions()[0]][0] is cold
     # the index itself lists all 4 docs (authoritative copies)
     assert sidx.read().filter(F.col("token") == "needle").count() == 4
 

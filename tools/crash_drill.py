@@ -4,14 +4,19 @@ mid-async-search, restart on the same store, and prove zero acked-doc loss.
 The reference replays its WAL on restart (`docs/en/internal/fractions.md`
 "Replaying"); this engine's equivalents under a hard kill are:
 
-- **bulk durability**: an ACKED bulk is already parquet on disk (Spark's
-  committer publishes part files atomically per job); a bulk killed
-  mid-write leaves only ``_temporary`` scratch, which parquet readers
-  ignore — at-least-once means acked docs MUST all survive, unacked ones
-  may or may not;
-- **compaction crash-safety**: ``DocStore.maintain`` swaps partitions via
-  ``_compact_tmp`` + two renames; ``_cleanup_stale_tmp`` on reopen parks
-  any half-swapped partition back live (`seqspark/store.py:417-430`);
+- **bulk durability**: an ACKED bulk is committed — its files are
+  listed by a manifest version (``_manifest/<version>.json``, written
+  create-if-absent) before the bulk returns; a bulk killed mid-write
+  leaves only files no version names (under ``_staging/``, or moved into
+  a bucket but uncommitted), which no read ever lists — at-least-once
+  means acked docs MUST all survive, unacked ones may or may not;
+- **compaction crash-safety**: ``DocStore.compact`` writes the sealed
+  file under a new name and commits a version that lists it in place of
+  the files it read; no live file is renamed or overwritten, so a kill
+  at any point leaves the last committed version intact. The restarted
+  store's first ``maintain()`` sweeps every file no version names
+  (``_Log.sweep`` in `seqspark/store.py`), once no write in any process
+  holds ``_staging/`` (a write in flight is not a crash);
 - **async-search resume**: persisted jobs still pending/running at the
   kill are re-executed by ``SeqSparkServer.resume_async()`` on restart
   (`seqspark/streaming.py:516`, the reference's `async_searcher.go:77-82`

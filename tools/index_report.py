@@ -17,6 +17,11 @@ section is one Spark aggregation over the index parquet:
   tells you which fields need hot-token routing.
 - *Uniq LIDs Stats*: posting entries vs distinct docs per bucket.
 
+A ``StoreIndex`` directory is read through its newest manifest version
+(exactly the files it lists; the directory can also hold staged and
+superseded files); a plain partitioned index without ``_manifest/`` is
+read whole.
+
 Usage:  python tools/index_report.py <index_path> [--json]
 """
 
@@ -24,12 +29,13 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _spark():
-    import os
-
     from pyspark.sql import SparkSession
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
@@ -47,7 +53,11 @@ def report(spark, index_path: str) -> dict:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    idx = spark.read.parquet(index_path)
+    from seqspark.store import _HadoopFS, _Log
+
+    m = _Log(_HadoopFS(spark, index_path), None).current()
+    idx = (m.frame(spark, index_path, sorted(m.buckets)) if m.version >= 0
+           else spark.read.parquet(index_path))
     bucket_col = "ts_bucket" if "ts_bucket" in idx.columns else None
     if bucket_col is None:
         idx = idx.withColumn("ts_bucket", F.lit("all"))

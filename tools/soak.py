@@ -314,12 +314,11 @@ def main() -> None:
 
     def indexer():
         # the seal-time cadence under load: re-arm index routing
-        # whenever appends have landed; races hunted here — refresh's
-        # per-bucket write locks vs compaction swaps vs per-request
-        # attach_to reading the frame/stats caches
+        # whenever the store changed; races hunted here — refresh's
+        # held snapshot vs compaction commits vs per-request index pins
         while not stop.is_set():
             try:
-                if core._index_fresh_seq != core._index_append_seq:
+                if sidx.stale_buckets():
                     core.refresh_index()
                     bump("index_refresh")
             except Exception as e:  # noqa: BLE001
