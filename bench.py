@@ -24,6 +24,10 @@ committed `bench_plans.json`. A slow bench with `plan_mismatches: []` is
 machine load; any non-empty list is a real plan regression to diagnose.
 Regenerate expectations after an INTENDED plan change with:
   python bench.py --write-plans
+
+The harness every ``tools/`` script shares lives here too: the session
+(:func:`spark_session`), the CPU timer (:func:`proc_cpu_seconds`) and the
+capture of the frames an aggregate executed (:func:`collected_frames`).
 """
 
 from __future__ import annotations
@@ -58,7 +62,33 @@ EVENTS_MAPPING = {
 }
 
 
-def _proc_cpu_seconds() -> float:
+def spark_session(cpus: int = CPUS, conf: dict | None = None) -> SparkSession:
+    """The one session bench.py and every ``tools/`` script run on:
+    ``local[cpus]`` with as many shuffle partitions, AQE on, no UI, UTC,
+    ERROR logging, and PySpark's call-site capture off (r17: PySpark 4
+    wraps every DataFrame API call with a Python stack walk and an extra
+    py4j round trip for error decoration; measured A/B, that doubled the
+    driver CPU of query construction, and production sessions in
+    seqspark/__main__.py turn it off too). ``conf`` adds settings, e.g.
+    ``spark.driver.memory``; static ones take effect only in a process
+    whose session this call creates."""
+    builder = (
+        SparkSession.builder.master(f"local[{cpus}]")
+        .appName("seqspark-bench")
+        .config("spark.sql.shuffle.partitions", str(cpus))
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+    )
+    for key, value in (conf or {}).items():
+        builder = builder.config(key, value)
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def proc_cpu_seconds() -> float:
     """CPU seconds burned so far by this Python process PLUS its child
     JVM (local-mode executors live inside that one java child) — read
     from /proc, no dependencies. Wall time swings ±2x with host load
@@ -105,6 +135,27 @@ def _canon(plan: str) -> str:
     return plan
 
 
+def collected_frames(build) -> list:
+    """Run ``build()`` and return every DataFrame it collected, in order.
+    An aggregate answers with a LocalRelation of its buckets, which hides
+    the plan that ran: the frames it collected are that plan."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    frames = []
+    collect = DataFrame.collect
+
+    def spy(df):
+        frames.append(df)
+        return collect(df)
+
+    DataFrame.collect = spy
+    try:
+        build()
+    finally:
+        DataFrame.collect = collect
+    return frames
+
+
 def plan_digest(dfs) -> str:
     txt = "\n---\n".join(_plan_str(df) for df in dfs)
     return hashlib.sha256(_canon(txt).encode()).hexdigest()[:16]
@@ -112,26 +163,7 @@ def plan_digest(dfs) -> str:
 
 def main() -> None:
     write_plans = "--write-plans" in sys.argv
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("seqspark-bench")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        # r17 (guide §1/§4): PySpark 4 wraps every DataFrame API call with
-        # a Python stack walk + an extra py4j round trip to record the
-        # user call site for error decoration. Measured A/B on this host:
-        # it DOUBLES driver-side Python CPU of query construction (search
-        # build 21→10 ms CPU, aggregate build 123→42 ms CPU). Static conf,
-        # so it must be set at builder time. Not a scale knob — pure
-        # driver overhead; production sessions (seqspark/__main__.py) set
-        # the same value.
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session(conf={"spark.driver.memory": "16g"})
 
     events = load_table(spark, SF_DIR, "events")
     docs = load_table(spark, SF_DIR, "documents").withColumn(
@@ -208,26 +240,11 @@ def main() -> None:
         # aggregation COUNT by keyword field, size=0 (seq-db-aggs.js)
         return [st.aggregate(AggQuery(func="count", field="event_type"))]
 
-    def d5():
-        # aggregate() runs its fused job and returns a LocalRelation —
-        # digest the plans the engine actually executed, not the local
-        # result frame. drain-before / drain-after so EVERY aggregate the
-        # query ran is fingerprinted (a multi-agg query would otherwise
-        # silently pin only its last one)
-        st.drain_agg_plan_dfs()
-        b5()
-        return st.drain_agg_plan_dfs()
-
     def b6():
         # aggregation MIN group-by (seq-db-aggs-min-by-status.js)
         return [
             st.aggregate(AggQuery(func="min", field="value", group_by="event_type"))
         ]
-
-    def d6():
-        st.drain_agg_plan_dfs()
-        b6()
-        return st.drain_agg_plan_dfs()
 
     def b7():
         # scan-heavy pricing summary (TPC-H Q1 shape) on lineitem
@@ -248,7 +265,10 @@ def main() -> None:
         ("q1", b1), ("q2", b2), ("q3", b3), ("q4", b4),
         ("q5", b5), ("q6", b6), ("q7", b7),
     ]
-    digest_builders = {"q5": d5, "q6": d6}
+    # an aggregate's digest pins the plans it executed behind its
+    # LocalRelation result, every one of them
+    digest_builders = {"q5": lambda: collected_frames(b5),
+                       "q6": lambda: collected_frames(b6)}
 
     digests = {
         name: plan_digest(digest_builders.get(name, b)())
@@ -273,12 +293,12 @@ def main() -> None:
         runs = []
         cpu_runs = []
         for _ in range(RUNS):
-            c0 = _proc_cpu_seconds()
+            c0 = proc_cpu_seconds()
             t0 = time.perf_counter()
             for df in b():
                 df.collect()
             runs.append(time.perf_counter() - t0)
-            cpu_runs.append(_proc_cpu_seconds() - c0)
+            cpu_runs.append(proc_cpu_seconds() - c0)
         timings[name] = round(statistics.median(runs), 4)
         timings_min[name] = round(min(runs), 4)
         timings_cpu[name] = round(statistics.median(cpu_runs), 4)

@@ -438,8 +438,6 @@ class SearchTable:
         #: (``columns=``).
         self._plan_cache: "OrderedDict[tuple, tuple]" = OrderedDict()
         self._plan_cache_lock = threading.Lock()
-        #: fused frames aggregate() executed (drain_agg_plan_dfs)
-        self._agg_plan_dfs: List[DataFrame] = []
 
     def attach_index(
         self,
@@ -1108,8 +1106,8 @@ class SearchTable:
         """Average stored bytes per document — compressed parquet file
         size over footer record count, sampled over at most
         ``sample_files`` files spread across the table. Driver-side
-        metadata reads only (Hadoop FileStatus + parquet footers, the
-        same channel as DocStore's footer row counts): ZERO Spark jobs,
+        metadata reads only (Hadoop FileStatus + parquet footers, read as
+        the store reads a file's manifest entry): ZERO Spark jobs,
         works on any Hadoop filesystem. ``None`` when the frame is not
         file-backed (nothing to sample) or the metadata read fails —
         callers must treat that as "width unknown", never as narrow.
@@ -1121,33 +1119,19 @@ class SearchTable:
             return self._avg_doc_bytes_cache[0]
 
     def _sample_doc_bytes(self, sample_files: int) -> Optional[float]:
+        from .store import _HadoopFS
+
         try:
             files = [f for f in self.df.inputFiles()
                      if f.endswith(".parquet")]
-            if files:
-                step = max(1, len(files) // sample_files)
-                sample = files[::step][:sample_files]
-                spark = self.df.sparkSession
-                jvm = spark._jvm
-                conf = spark._jsc.hadoopConfiguration()
-                total_b = total_r = 0
-                for p in sample:
-                    jpath = jvm.org.apache.hadoop.fs.Path(p)
-                    fs = jpath.getFileSystem(conf)
-                    total_b += fs.getFileStatus(jpath).getLen()
-                    inf = (jvm.org.apache.parquet.hadoop.util
-                           .HadoopInputFile.fromPath(jpath, conf))
-                    reader = (jvm.org.apache.parquet.hadoop
-                              .ParquetFileReader.open(inf))
-                    try:
-                        total_r += reader.getRecordCount()
-                    finally:
-                        reader.close()
-                if total_r:
-                    return total_b / total_r
+            if not files:
+                return None
+            sample = files[::max(1, len(files) // sample_files)][:sample_files]
+            fs = _HadoopFS(self.df.sparkSession, sample[0])
+            sizes, rows = zip(*(fs.file_entry(p) for p in sample))
+            return sum(sizes) / sum(rows) if sum(rows) else None
         except Exception:
-            pass
-        return None
+            return None
 
     def _route_two_phase(
         self,
@@ -1735,30 +1719,9 @@ class SearchTable:
             return df.withColumn(out, spec.scalar())
         return df.withColumn(out, F.explode_outer(spec.tokens()))
 
-    #: bounded plan buffer: a long-running server that never drains must
-    #: not accumulate DataFrame handles without bound
-    _AGG_PLAN_BUFFER_CAP = 32
     #: prepared-plan cache entries per table (search + aggregate shapes);
     #: LRU-evicted, never invalidated
     _PLAN_CACHE_CAP = 64
-    #: class-level lock: append (aggregate) and drain race under the
-    #: server's concurrent searchers — an unsynchronized read-modify-write
-    #: could resurrect drained frames or drop fresh ones. Shared across
-    #: instances; the critical sections are tiny list ops.
-    _agg_plan_lock = threading.Lock()
-
-    def drain_agg_plan_dfs(self) -> List[DataFrame]:
-        """ALL fused frames :meth:`aggregate` executed since the last
-        drain, oldest first — and resets the buffer. bench.py drains
-        around each agg bench query so a multi-aggregate query
-        fingerprints EVERY executed plan, not silently just the last
-        one. The buffer keeps the most recent 32 frames; a server that
-        never drains stays bounded."""
-        with self._agg_plan_lock:
-            out = self._agg_plan_dfs
-            self._agg_plan_dfs = []
-        return out
-
     def _cached_plan(self, key: tuple, build):
         """The prepared-plan cache: the cached construction for ``key``,
         else ``build()``'s.
@@ -1804,14 +1767,6 @@ class SearchTable:
             bool(aggq.exact_quantiles),
         )
 
-    def _note_agg_plan(self, frame: DataFrame) -> None:
-        """Record the frame an aggregate executed behind its LocalRelation
-        result (see :meth:`drain_agg_plan_dfs`)."""
-        with self._agg_plan_lock:
-            buf = self._agg_plan_dfs
-            buf.append(frame)
-            self._agg_plan_dfs = buf[-self._AGG_PLAN_BUFFER_CAP:]
-
     def aggregate(
         self,
         aggq: AggQuery,
@@ -1849,9 +1804,6 @@ class SearchTable:
             q, from_ms, to_ms, 0, 0, "desc", False, None, (aggq,), strict,
             dialect, None, None,
         )
-        # the LocalRelation hides the executed plan: keep the fused frame
-        # so diagnostics (bench.py plan-digest pinning) can fingerprint it
-        self._note_agg_plan(fused.frame)
         (data,) = self._fused_execute(fused)
         return _bucket_frame(
             fused.frame.sparkSession, fused.branches[0].names, data)

@@ -295,6 +295,10 @@ class _HadoopFS:
         return [status.getLen(), sum(blocks.get(i).getRowCount()
                                      for i in range(blocks.size()))]
 
+    def file_entry(self, path: str) -> list:
+        """:meth:`entry` of the file at ``path``, on this filesystem."""
+        return self.entry(self._fs.getFileStatus(self._Path(path)))
+
 
 @dataclass(frozen=True, eq=False)
 class Manifest:

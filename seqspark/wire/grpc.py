@@ -311,6 +311,11 @@ class GrpcChannel:
     def close(self) -> None:
         self._client.close()
 
+    @property
+    def closed(self) -> bool:
+        """The connection is gone: every later call on it fails."""
+        return self._client._closed
+
     def _call(self, path: str, request: dict, req_desc: dict,
               metadata: Optional[List[Tuple[str, str]]] = None) -> "H2ClientStream":
         headers = [

@@ -185,18 +185,22 @@ def test_complex_search_agg_error_persists_nothing(spark, events_table):
     assert jsc.getPersistentRDDs().size() == before
 
 
-def test_drain_agg_plan_dfs_captures_every_probe(events_table):
+def test_collected_frames_captures_every_aggregate(events_table):
     # bench plan pinning must fingerprint EVERY aggregate a query ran:
-    # two aggregates between drains -> two executed frames, oldest
-    # first, and the drain resets the buffer (r10 verdict: keeping only
-    # the last frame would silently half-pin a multi-agg bench query)
-    events_table.drain_agg_plan_dfs()
-    events_table.aggregate(AggQuery(func="count", field="event_type"))
-    events_table.aggregate(
-        AggQuery(func="min", field="value", group_by="event_type")
-    )
-    probes = events_table.drain_agg_plan_dfs()
+    # two aggregates -> the two frames they executed, in order, not the
+    # LocalRelations they answer with (r10 verdict: keeping only the last
+    # frame would silently half-pin a multi-agg bench query)
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from bench import collected_frames
+
+    collect = DataFrame.collect
+    probes = collected_frames(lambda: [
+        events_table.aggregate(AggQuery(func="count", field="event_type")),
+        events_table.aggregate(
+            AggQuery(func="min", field="value", group_by="event_type")),
+    ])
     assert len(probes) == 2
     plans = [p._jdf.queryExecution().executedPlan().toString() for p in probes]
     assert all("LocalTableScan" not in pl for pl in plans)
-    assert events_table.drain_agg_plan_dfs() == []
+    assert DataFrame.collect is collect  # the spy is gone

@@ -6,14 +6,16 @@ request."""
 import dataclasses
 import json
 import os
+import signal
 import subprocess
 import sys
 import threading
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
-from seqspark import Mapping
+from seqspark import Mapping, SearchTable
 from seqspark.index import StoreIndex
 from seqspark.ingest import ingest_docs
 from seqspark.server import SeqSparkServer
@@ -159,13 +161,21 @@ def _wait_for(path, deadline_s=600):
     return os.path.exists(path)
 
 
-def test_second_process_append_is_seen(spark, tmp_path):
+@pytest.mark.parametrize("end", ["commit", "kill"])
+def test_second_process_append_is_seen(spark, tmp_path, end):
     """Another OS process appends to the store the server serves. While
     its files sit in their buckets uncommitted, the server's first
     maintenance pass (the sweep and a compaction of every bucket) and an
-    index refresh run: the sweep leaves the writer in flight alone, and
-    its commit then lands on top of the compacted versions. The server's next /search returns those docs, and index
-    routing is disarmed until the index is refreshed."""
+    index refresh run: the sweep leaves the writer in flight alone.
+
+    ``commit``: the writer's commit then lands on top of the compacted
+    versions. The server's next /search returns those docs, and index
+    routing is disarmed until the index is refreshed.
+
+    ``kill``: the writer is SIGKILLed before its commit. The kernel drops
+    its flock on ``_staging/``, the server still answers with exactly the
+    committed docs, and the next maintenance pass sweeps the files the
+    killed writer placed and staged."""
     store = _two_bucket_store(spark, tmp_path, files_per_bucket=1)
     idx = StoreIndex(store, str(tmp_path / "index"),
                      {"message": F.col("tokens")["message"]})
@@ -180,31 +190,40 @@ def test_second_process_append_is_seen(spark, tmp_path):
     child = subprocess.Popen(
         [sys.executable, "-c", _CHILD.format(root=ROOT, docs=docs,
                                              path=store.path, pause=pause)])
+    staging = os.path.join(store.path, "_staging")
     try:
         assert _wait_for(os.path.join(pause, "placed"))
         placed = _parquet(store.path) - _named(store)
         assert len(placed) == 2  # one file in each of two buckets
-        staged = os.listdir(os.path.join(store.path, "_staging"))
+        staged = os.listdir(staging)
+        assert staged
         assert store.maintain(max_files_per_partition=0) == store.partitions()
         assert placed <= _parquet(store.path)
-        assert set(staged) <= set(os.listdir(
-            os.path.join(store.path, "_staging")))
+        assert set(staged) <= set(os.listdir(staging))
         assert core.refresh_index() is True
         assert core.search(req)["total"] == 6
-        open(os.path.join(pause, "go"), "w").close()
-        assert child.wait(timeout=600) == 0
+        if end == "kill":
+            child.send_signal(signal.SIGKILL)
+            assert child.wait(timeout=60) == -signal.SIGKILL
+        else:
+            open(os.path.join(pause, "go"), "w").close()
+            assert child.wait(timeout=600) == 0
     finally:
         child.kill()
-    assert placed <= _named(store)
+    total = 9 if end == "commit" else 6
+    assert (placed <= _named(store)) == (end == "commit")
+    assert core.search(req)["total"] == total
     store.maintain(max_files_per_partition=10**6)  # the sweep runs now
+    assert os.listdir(staging) == []
     assert _parquet(store.path) == _named(store)
     out = core.search(req)
-    assert out["total"] == 9 and len(out["docs"]) == 9
-    assert core._table()._index is None  # disarmed: stale buckets
-    assert idx.stale_buckets() == ["2024-01-01-11", "2024-01-01-12"]
-    assert core.refresh_index() is True
+    assert out["total"] == total and len(out["docs"]) == total
+    if end == "commit":
+        assert core._table()._index is None  # disarmed: stale buckets
+        assert idx.stale_buckets() == ["2024-01-01-11", "2024-01-01-12"]
+        assert core.refresh_index() is True
+        assert core.search(req)["total"] == 9
     assert core._table()._index is not None
-    assert core.search(req)["total"] == 9
     core._httpd.server_close()
 
 
@@ -431,3 +450,16 @@ def test_concurrent_snapshots_under_maintenance(spark, tmp_path):
     assert store._log.holds == {}
     assert _parquet(store.path) == _named(store)
     assert store.read().count() == 12 + 8
+
+
+def test_width_is_the_manifest_width(spark, tmp_path):
+    """A store-built table samples its doc width with the store's footer
+    reader: over at most 16 files (so every one is sampled) it is the
+    manifest's bytes over its rows."""
+    store = _two_bucket_store(spark, tmp_path, files_per_bucket=3)
+    entries = [e for files in store.manifest().buckets.values()
+               for e in files.values()]
+    assert 1 < len(entries) <= 16
+    st = SearchTable.from_store(store, MAPPING)
+    assert st.avg_doc_bytes() == (sum(b for b, _ in entries)
+                                  / sum(r for _, r in entries))

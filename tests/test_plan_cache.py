@@ -14,7 +14,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from bench import _canon, _plan_str
+from bench import _canon, _plan_str, collected_frames
 from seqspark import AggQuery, Mapping, SearchTable
 from seqspark.ingest import ingest_docs
 from seqspark.store import DocStore
@@ -76,20 +76,21 @@ def test_search_plan_cache_lru_bound(spark):
 
 def test_aggregate_cache_reexecutes_per_call(spark):
     st = _table(spark)
-    a1 = st.aggregate(AggQuery(func="count", field="grp"))
-    before = len(st.drain_agg_plan_dfs())
-    a2 = st.aggregate(AggQuery(func="count", field="grp"))
-    after = len(st.drain_agg_plan_dfs())
-    # eager agg executed BOTH times (probe appended per call), results equal
-    assert before == after == 1
-    assert sorted(map(tuple, a1.collect())) == sorted(map(tuple, a2.collect()))
+    aggq = AggQuery(func="count", field="grp")
+    a1 = st.aggregate(aggq)
+    ((built,),) = st._plan_cache.values()
+    out = []
+    frames = collected_frames(lambda: out.append(st.aggregate(aggq)))
+    # the hit runs the cached construction's fused frame again: equal rows
+    assert len(frames) == 1 and frames[0] is built[2].frame
+    assert sorted(map(tuple, a1.collect())) == sorted(map(tuple, out[0].collect()))
 
 
 def test_count_group_not_exists_single_scan_plan(spark):
     st = _table(spark)
-    st.drain_agg_plan_dfs()
     st.aggregate(AggQuery(func="count", field="grp"))
-    (probe,) = st.drain_agg_plan_dfs()
+    ((built,),) = st._plan_cache.values()
+    probe = built[2].frame  # the fused frame the aggregate executed
     jvm = spark._jvm
     plan = probe._jdf.queryExecution().explainString(
         jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")

@@ -5,6 +5,9 @@ caller-supplied async search ids, Fetch streaming in request order with
 FieldsFilter, Status oldest_time."""
 
 import json
+import socket
+import time
+import urllib.request
 
 import pytest
 
@@ -202,22 +205,46 @@ def test_status_oldest_time(rig):
 
 
 def test_bulk_acked_means_durable(spark, tmp_path):
-    # the drill's core claim, in-process: an acked Bulk's docs are
-    # parquet on disk — a NEW core over the same dir sees all of them
+    # an acked bulk is committed before it returns, over gRPC and over
+    # HTTP: a NEW store and core over the same dir see all of its docs
     store = DocStore(spark, str(tmp_path / "store"))
     core = SeqSparkServer(spark, store, MAPPING, allowed_drift_ms=BIG,
-                          future_drift_ms=BIG)
+                          future_drift_ms=BIG).start()
     srv = StoreGrpc(core).start()
     ch = GrpcChannel("127.0.0.1", srv.port)
     try:
-        ch.unary(f"{SVC}/Bulk", {"count": 4, "docs": _ndjson(DOCS)},
+        ch.unary(f"{SVC}/Bulk", {"count": 3, "docs": _ndjson(DOCS[:3])},
                  sa.BULK_REQUEST, sa.EMPTY)
+        body = b'{"index": {}}\n' + _ndjson(DOCS[3:]) + b"\n"
+        with urllib.request.urlopen(urllib.request.Request(
+                f"http://127.0.0.1:{core.port}/_bulk", data=body)) as r:
+            assert json.loads(r.read())["errors"] is False
     finally:
         ch.close()
         srv.stop()
+        core.stop()
     core2 = SeqSparkServer(spark, DocStore(spark, str(tmp_path / "store")),
                            MAPPING, allowed_drift_ms=BIG, future_drift_ms=BIG)
     out = core2.search({"query": "*", "from_ms": 0,
                         "to_ms": 4102444800000, "size": 100,
                         "with_total": True})
     assert out["total"] == 4
+
+
+def test_channel_reports_a_dropped_connection(rig):
+    """A channel whose connection dropped says so, and a new channel to
+    the same server works: the soak's StoreApi worker reopens its channel
+    on that signal instead of failing every later op."""
+    _, srv, _ = rig
+    ch = GrpcChannel("127.0.0.1", srv.port)
+    total = _search(ch, with_total=True)["total"]
+    assert total >= 4 and not ch.closed
+    ch._client._sock.shutdown(socket.SHUT_RDWR)
+    deadline = time.time() + 10
+    while not ch.closed and time.time() < deadline:
+        time.sleep(0.01)
+    assert ch.closed
+    ch.close()
+    ch = GrpcChannel("127.0.0.1", srv.port)
+    assert _search(ch, with_total=True)["total"] == total
+    ch.close()

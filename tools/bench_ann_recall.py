@@ -25,7 +25,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
+from bench import spark_session  # noqa: E402
 
 
 def main() -> None:
@@ -35,16 +35,9 @@ def main() -> None:
     ap.add_argument("--k", type=int, default=10)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session()
     from seqspark.data import load_table
     from seqspark.pipeline import ann
 

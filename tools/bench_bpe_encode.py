@@ -27,17 +27,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from bench import spark_session
 from seqspark.data import load_table
 from seqspark.pipeline.bpe import (
     bpe_encoded,
     bpe_encoded_via_dict,
     train_bpe,
 )
-
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def pad_merges(real, n):
@@ -60,15 +58,7 @@ def main() -> None:
                     help="skip larger sizes once a chain build+run exceeds this")
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("seqspark-bpe-bench")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session(conf={"spark.driver.memory": "16g"})
     docs = load_table(spark, args.sf_dir, "documents").cache()
     n_docs = docs.count()
 

@@ -34,6 +34,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import spark_session  # noqa: E402
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -48,21 +50,10 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from seqspark.data import load_table
     from seqspark.pipeline.bpe import bpe_word_counts, train_bpe_from_counts
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("seqspark-bpe-train")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session()
 
     if args.synth:
         import random

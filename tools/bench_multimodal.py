@@ -21,6 +21,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import CPUS, spark_session  # noqa: E402
+
 
 def _big_asset_rows(n: int):
     """Realistic-size assets for --big: 640x480 JPEGs (q85 4:2:0 —
@@ -75,18 +77,9 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session()
 
     from seqspark.pipeline.multimodal import (
         audio_features,
@@ -109,7 +102,7 @@ def main() -> None:
         rows = _big_asset_rows(n)
         big = (
             spark.createDataFrame(rows, ASSET_SCHEMA)
-            .repartition(int(cpus))
+            .repartition(CPUS)
             .cache()
         )
         big.count()
@@ -119,7 +112,7 @@ def main() -> None:
         mpix_frames = videos * 8 * 320 * 240 / 1e6
         res = {
             "metric": "seqspark_multimodal_big_throughput",
-            "assets": n, "cpus": int(cpus),
+            "assets": n, "cpus": CPUS,
             "image_px": "640x480", "video": "8f 320x240 MJPEG",
         }
 
@@ -206,13 +199,13 @@ def main() -> None:
     }
     # repartition so the Arrow batches spread over the executor threads
     fixtures = {
-        k: v.repartition(int(cpus)).cache() for k, v in fixtures.items()
+        k: v.repartition(CPUS).cache() for k, v in fixtures.items()
     }
     for v in fixtures.values():
         v.count()
 
     res = {"metric": "seqspark_multimodal_throughput", "assets": n,
-           "cpus": int(cpus)}
+           "cpus": CPUS}
 
     def rate(name, fn, unit_count):
         t0 = time.perf_counter()

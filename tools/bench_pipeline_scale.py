@@ -24,19 +24,16 @@ import argparse
 import json
 import os
 import shutil
-import statistics
 import sys
 import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from bench import spark_session
 from seqspark.data import load_table
-
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def timed(fn, runs: int) -> float:
@@ -108,17 +105,7 @@ def main() -> None:
     ap.add_argument("--factor", type=int, default=10)
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("seqspark-pipeline-scale")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session(conf={"spark.driver.memory": "16g"})
 
     base_dir = tempfile.mkdtemp(prefix="seqspark-pipescale-")
     big_path = os.path.join(base_dir, f"documents_x{args.factor}")

@@ -38,14 +38,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+import bench
 from seqspark import AggQuery, SearchTable
 from seqspark.data import load_table
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 EVENTS_MAPPING = {
     "event_type": "keyword",
@@ -142,15 +141,12 @@ def query_set(st, lineitem, window=None):
 def digest_set(st, lineitem, window):
     """Same query shapes as :func:`query_set`, as digest-frame builders
     (lists of DataFrames whose canonicalized physical plans get hashed).
-    The agg queries drain the engine's buffer of executed aggregate
-    frames so EVERY executed plan is fingerprinted (bench.py's d5/d6
-    pattern)."""
+    The agg queries digest every frame the aggregate collected
+    (:func:`bench.collected_frames`), the plans it executed."""
     f, t = window
 
     def agg_plans(aggq):
-        st.drain_agg_plan_dfs()
-        st.aggregate(aggq)
-        return st.drain_agg_plan_dfs()
+        return bench.collected_frames(lambda: st.aggregate(aggq))
 
     return {
         "q8_time_window": lambda: [
@@ -337,28 +333,20 @@ def main() -> None:
     ap.add_argument("--write-plans", action="store_true")
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("seqspark-scale-bench")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        # split sizing proportional to the scale MODEL (r18): the ×100
-        # fixture is a few hundred MB standing in for 100 TB, so the
-        # default 128 MB/4 MB split/open-cost geometry collapses its
-        # hundreds of files and row groups into ~a dozen scan tasks —
-        # the core-count curve then measures the task floor, not the
-        # plan. 16 MiB splits + 256 KiB open cost keep scan task counts
-        # in the hundreds at ×100, the shape a real at-rest corpus has
-        # with default confs. Same conf at every core count, so
-        # 8c-vs-32c comparisons stay apples-to-apples.
-        .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
-        .config("spark.sql.files.openCostInBytes", str(256 * 1024))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # split sizing proportional to the scale MODEL (r18): the ×100
+    # fixture is a few hundred MB standing in for 100 TB, so the default
+    # 128 MB/4 MB split/open-cost geometry collapses its hundreds of files
+    # and row groups into ~a dozen scan tasks — the core-count curve then
+    # measures the task floor, not the plan. 16 MiB splits + 256 KiB open
+    # cost keep scan task counts in the hundreds at ×100, the shape a real
+    # at-rest corpus has with default confs. Same conf at every core
+    # count, so 8c-vs-32c comparisons stay apples-to-apples. The plan pins
+    # depend on the core count: they were written at the default 32.
+    spark = bench.spark_session(bench.CPUS, conf={
+        "spark.driver.memory": "16g",
+        "spark.sql.files.maxPartitionBytes": str(16 * 1024 * 1024),
+        "spark.sql.files.openCostInBytes": str(256 * 1024),
+    })
 
     base_dir = args.keep_dir or tempfile.mkdtemp(prefix="seqspark-scale-")
     # factor in the path: a kept dir from a different --factor must not be
@@ -608,8 +596,6 @@ def main() -> None:
     ratio = {k: round(big[k] / small[k], 2) if small[k] else None for k in small}
 
     # plan digests at BOTH scales, pinned against bench_plans_scale.json
-    import bench
-
     digests = {}
     for scale, s_t, s_li in (("x1", st, lineitem), (f"x{args.factor}", st_x, lineitem_x)):
         for name, builder in digest_set(s_t, s_li, window).items():

@@ -22,6 +22,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import spark_session  # noqa: E402
+
 
 def timed(fn) -> float:
     t0 = time.perf_counter()
@@ -51,7 +53,6 @@ def main() -> None:
     def want(name: str) -> bool:
         return only is None or name in only
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from seqspark.data import load_table
@@ -62,18 +63,7 @@ def main() -> None:
     )
     from seqspark.pipeline.sessions import sessionize, sessionize_scalable
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("seqspark-skew")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session(conf={"spark.driver.memory": "16g"})
 
     ev = load_table(spark, args.sf_dir, "events")
     if args.mult > 1:

@@ -2,10 +2,9 @@
 hot INTERNAL proxy→store path (`proxy/search/ingestor.go:595-607` ships
 bulks to stores over `api/storeapi/store_api.proto`) measured here as
 docs/s and search latency over the stdlib h2/proto3 stack, side by side
-with the ES-bulk HTTP path on an identical store — the r7 transport
-bench (tools/bench_tls.py) covers the EXTERNAL seqproxy surface; this
-closes the internal one (it had correctness via the gRPC crash drill
-but no throughput numbers).
+with the ES-bulk HTTP path on an identical store. perfbench drives the
+EXTERNAL seqproxy surface; `seqspark/storegrpc.py` is on its "Not
+measured" list, and this bench covers it.
 
 Both transports drive the SAME core (`SeqSparkServer.bulk` group-commit
 append + engine search), so the delta is pure transport: HTTP/1.1 JSON
@@ -34,17 +33,16 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
+from bench import SF_DIR, spark_session
 from seqspark import Mapping
+from seqspark.data import load_table
 from seqspark.server import SeqSparkServer
 from seqspark.store import DocStore
 from seqspark.storegrpc import StoreGrpc
 from seqspark.wire import storeapi as sa
 from seqspark.wire.grpc import GrpcChannel
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 MAPPING = Mapping(
     {
@@ -57,6 +55,23 @@ MAPPING = Mapping(
 )
 BIG = 10**15
 WIN = {"from": 0, "to": 4102444800000}
+
+
+def raw_docs_df(spark):
+    """The sf events rendered to raw JSON docs, timestamps in a format
+    ``ingest_docs`` parses."""
+    return load_table(spark, SF_DIR, "events").select(
+        F.to_json(
+            F.struct(
+                F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSS").alias("timestamp"),
+                F.col("event_id").cast("string").alias("event_id"),
+                F.col("event_type"),
+                F.col("user_id").cast("string").alias("user_id"),
+                F.col("value").cast("string").alias("value"),
+                F.col("props"),
+            )
+        ).alias("raw")
+    )
 
 
 def _core(spark, tmp):
@@ -193,23 +208,12 @@ def main() -> None:
     ap.add_argument("--searches", type=int, default=30)
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # same corpus builder as tools/bench_ingest.py (events → raw JSON)
-    from bench_ingest import raw_docs_df
+    spark = spark_session()
 
     docs = [r["raw"] for r in raw_docs_df(spark).limit(args.docs).collect()]
 
     # throwaway warm-up ingest into a scratch store: JVM + ingest-path
     # warmup otherwise bills ~2x onto whichever transport runs first
-    # (the tools/bench_fetch.py pattern)
     wtmp = tempfile.mkdtemp(prefix="storeapi_warm_")
     wstore, wcore = _core(spark, wtmp)
     wlines = []

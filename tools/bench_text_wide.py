@@ -40,7 +40,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from bench import spark_session  # noqa: E402
 
 #: fixed base sentence: the narrow-fixture vocabulary, so tokenization
 #: is boring and the WIDTH (not token exotica) is the variable
@@ -86,22 +86,13 @@ def main() -> None:
     ap.add_argument("--keep-dir", default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("seqspark-text-wide-bench")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        # r16: the In-threshold conf is deliberately NOT set here —
-        # two_phase_search owns it (raises the session threshold to
-        # cover its own id page, verdict r15 #1); this bench doubles as
-        # the self-sufficiency proof at scale
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # r16: the In-threshold conf is deliberately NOT set here —
+    # two_phase_search owns it (raises the session threshold to cover its
+    # own id page, verdict r15 #1); this bench doubles as the
+    # self-sufficiency proof at scale
+    spark = spark_session(conf={"spark.driver.memory": "16g"})
 
     from seqspark import SearchTable
     from seqspark.engine import materialize_tokens

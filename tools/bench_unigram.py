@@ -16,7 +16,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from bench import CPUS, spark_session  # noqa: E402
 
 
 def main() -> None:
@@ -25,15 +25,7 @@ def main() -> None:
     ap.add_argument("--vocab", type=int, default=400)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session()
     from seqspark.data import load_table
     from seqspark.pipeline import unigram
     from seqspark.pipeline.bpe import bpe_word_counts

@@ -34,18 +34,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _spark():
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+from bench import spark_session  # noqa: E402
 
 
 def report(spark, index_path: str) -> dict:
@@ -147,8 +136,7 @@ def main() -> int:
     ap.add_argument("index_path")
     ap.add_argument("--json", action="store_true")
     args = ap.parse_args()
-    spark = _spark()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session()
     rep = report(spark, args.index_path)
     if args.json:
         print(json.dumps(rep))

@@ -20,11 +20,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 import __spark_entry__ as entrymod
-
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from bench import spark_session
 
 NODES = {
     "exchange": r"\bExchange\b",
@@ -48,18 +45,7 @@ def main() -> int:
     ap.add_argument("--json", default=None)
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("seqspark-plan-audit")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session(conf={"spark.driver.memory": "16g"})
 
     qs = entrymod.queries()
     if args.only:

@@ -24,16 +24,14 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
-from seqspark import Mapping, MappingProvider
+from bench import spark_session
+from seqspark import MappingProvider
 from seqspark.grpcapi import SeqProxyGrpc
 from seqspark.server import SeqSparkServer
 from seqspark.store import DocStore
 from seqspark.wire import seqproxy as sp
 from seqspark.wire.grpc import GrpcChannel, GrpcError
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 BIG = 10**15
 WIN = {"from": sp.ms_to_ts(0), "to": sp.ms_to_ts(4102444800000)}
 
@@ -49,14 +47,7 @@ def main() -> None:
                          "compaction, and width-routed two-phase serves")
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session()
     tmp = tempfile.mkdtemp(prefix="soak_")
     store = DocStore(spark, os.path.join(tmp, "store"))
     # live mapping reload under load: the provider swaps between a base
@@ -111,7 +102,8 @@ def main() -> None:
               "search_grpc_tls": 0, "search_storeapi": 0,
               "search_gateway": 0, "export_gateway": 0,
               "export": 0, "async": 0, "compact": 0, "mapping_flips": 0,
-              "index_refresh": 0, "search_routed": 0}
+              "index_refresh": 0, "search_routed": 0,
+              "storeapi_reconnects": 0}
     lock = threading.Lock()
 
     def bump(k, v=1):
@@ -200,6 +192,12 @@ def main() -> None:
         try:
             while not stop.is_set():
                 try:
+                    if ch.closed:
+                        # one transport flake must not fail every later
+                        # op: the op that met it counted as an error
+                        ch.close()
+                        ch = GrpcChannel("127.0.0.1", srv.port)
+                        bump("storeapi_reconnects")
                     docs = [json.dumps({
                         "timestamp": f"2024-01-01 {10 + (k % 6):02d}"
                                      f":00:{(k * 13) % 60:02d}.000",
@@ -219,8 +217,6 @@ def main() -> None:
                                    "func": 0}]},
                         sa.SEARCH_REQUEST, sa.SEARCH_RESPONSE)
                     bump("search_storeapi")
-                except GrpcError as e:
-                    record_err("storeapi", e)
                 except Exception as e:  # noqa: BLE001
                     record_err("storeapi", e)
                 k += 1

@@ -22,11 +22,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 import __spark_entry__ as entrymod
-
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from bench import proc_cpu_seconds, spark_session
 
 
 def main() -> int:
@@ -37,18 +34,7 @@ def main() -> int:
     ap.add_argument("--json", default=None)
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("seqspark-time-entries")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session(conf={"spark.driver.memory": "16g"})
 
     qs = entrymod.queries()
     if args.only:
@@ -73,21 +59,19 @@ def main() -> int:
         cpu_runs = []
         try:
             for _ in range(args.runs):
-                c0 = time.process_time()
+                c0 = proc_cpu_seconds()
                 t0 = time.perf_counter()
                 df = fn(spark, args.sf_dir)
                 df.write.format("noop").mode("overwrite").save()
                 runs.append(time.perf_counter() - t0)
-                cpu_runs.append(time.process_time() - c0)
+                cpu_runs.append(proc_cpu_seconds() - c0)
         except Exception as e:  # noqa: BLE001 — record and continue
             errors[name] = f"{type(e).__name__}: {e}"[:200]
             continue
         timings[name] = round(statistics.median(runs), 4)
-        # driver-process CPU median (r18): wall swings ±2-3x with host
-        # load on this box; the CPU medians make per-entry deltas
-        # attributable (Python build + py4j + local execution share the
-        # driver process; executor CPU in local mode is JVM-side and
-        # shows up in neither, but tracks wall when the host is idle)
+        # CPU median (Python plus the local-mode JVM, bench.py's timer):
+        # wall swings ±2-3x with host load, so the CPU medians are what
+        # make per-entry deltas attributable
         cpu_timings[name] = round(statistics.median(cpu_runs), 4)
         print(f"{timings[name]:9.3f} {cpu_timings[name]:8.3f}  {name}",
               file=sys.stderr, flush=True)
