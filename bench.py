@@ -40,7 +40,8 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -51,7 +52,7 @@ from seqspark.data import load_table
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 RUNS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "9")))
-PLANS_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_plans.json")
+PLANS_PATH = os.path.join(ROOT, "bench_plans.json")
 
 EVENTS_MAPPING = {
     "event_type": "keyword",
@@ -60,6 +61,22 @@ EVENTS_MAPPING = {
     "event_id": "keyword",
     "props": "text",
 }
+
+
+def session_conf(cpus: int, conf: dict | None = None) -> dict:
+    """The settings of :func:`spark_session`, ``conf`` last. Spark's
+    Python workers import ``seqspark`` from their own environment, not
+    from the driver's ``sys.path``, so the repo root goes on their
+    ``PYTHONPATH``: a script started from any directory runs its UDFs."""
+    return {
+        "spark.sql.shuffle.partitions": str(cpus),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.ui.enabled": "false",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
+        "spark.executorEnv.PYTHONPATH": ROOT,
+        **(conf or {}),
+    }
 
 
 def spark_session(cpus: int = CPUS, conf: dict | None = None) -> SparkSession:
@@ -72,16 +89,9 @@ def spark_session(cpus: int = CPUS, conf: dict | None = None) -> SparkSession:
     seqspark/__main__.py turn it off too). ``conf`` adds settings, e.g.
     ``spark.driver.memory``; static ones take effect only in a process
     whose session this call creates."""
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("seqspark-bench")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-    )
-    for key, value in (conf or {}).items():
+    builder = SparkSession.builder.master(f"local[{cpus}]").appName(
+        "seqspark-bench")
+    for key, value in session_conf(cpus, conf).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -108,12 +108,16 @@ def build_parser() -> argparse.ArgumentParser:
                         "built over the startup mapping's text fields, "
                         "refreshed by the maintenance loop after appends "
                         "(the reference's seal-time index build); wires "
-                        "posting-list routing AND width-aware two-phase "
-                        "search→fetch into every transport")
+                        "index routing (posting semi-join or two-phase "
+                        "search→fetch, by --two-phase-min-doc-bytes) "
+                        "into every transport")
     p.add_argument("--two-phase-min-doc-bytes", type=int, default=1024,
-                   help="average stored doc width (parquet footer "
-                        "bytes/rows) above which bounded, fully "
-                        "index-covered searches take the two-phase plan")
+                   help="the width rule of index routing, in average "
+                        "stored doc bytes (parquet footer bytes/rows): "
+                        "at or above it, bounded, fully index-covered "
+                        "searches take the two-phase plan and other "
+                        "selective text filters the posting semi-join; "
+                        "below it, every search is the plain column scan")
     p.add_argument("--spark-master", default=None,
                    help="override (default local[$SPARK_GRAFT_CPUS])")
     p.add_argument("--arrow-max-bytes-per-batch", type=size_bytes,

@@ -409,9 +409,12 @@ class SearchTable:
         #: must not see any session mutation set this False and own the
         #: threshold themselves
         self.own_in_filter_threshold = True
-        #: optional (partition_col, bucket_fmt) for time-bucket directory
-        #: pruning (set by from_docs(bucket_fmt=...))
+        #: optional (partition_col, bucket_fmt, column type) for
+        #: time-bucket directory pruning (set by from_docs(bucket_fmt=...))
         self._partition_hint: Optional[tuple] = None
+        #: the attached index frame's own partition-column type (read
+        #: once by attach_index); None = no column to prune on
+        self._index_pdtype: Optional[str] = None
         self._init_caches()
 
     def _init_caches(self) -> None:
@@ -458,7 +461,9 @@ class SearchTable:
         semi-join against the index id set — one pruned index scan sized by
         posting-list length, not corpus size — and the full predicate is
         then applied on the surviving rows, so results are identical for
-        every query shape (the index only ever shrinks the scan).
+        every query shape (the index only ever shrinks the scan). On a
+        narrow table (see ``two_phase_min_doc_bytes``) no semi-join is
+        built at all.
 
         With ``stats`` (:func:`seqspark.index.collect_index_stats`), routing
         becomes SELECTIVE — the dictionary-narrowing heuristic of
@@ -481,17 +486,30 @@ class SearchTable:
         scale. Prefix wildcards have no bounded posting estimate and
         never broadcast. 0 disables the hint.
 
-        ``two_phase_min_doc_bytes`` (r16) enables WIDTH-AWARE two-phase
-        routing — the reference's search→fetch wire architecture
-        (`proxy/search/ingestor.go:140-151`) picked by a cost signal: a
-        bounded, fully index-covered :meth:`search` whose average stored
-        doc width (parquet footer bytes/rows, driver-side metadata only,
-        zero Spark jobs) is at least this many bytes is served by
-        :meth:`two_phase_search`, whose phase-1 I/O is independent of
-        document width (measured crossover ≈3 KB bodies from ×10,
-        BASELINE.md §r15). Any precondition failure falls back silently
-        to the scan plan; results are identical either way. ``None``
-        (default) disables routing.
+        ``two_phase_min_doc_bytes`` is the ONE width rule for both index
+        routes, read against the average stored doc width
+        (:meth:`avg_doc_bytes`: parquet footer bytes/rows, driver-side
+        metadata only, zero Spark jobs):
+
+        - at or above it (a WIDE table), a bounded, fully index-covered
+          :meth:`search` is served by :meth:`two_phase_search` — the
+          reference's search→fetch wire architecture
+          (`proxy/search/ingestor.go:140-151`), whose phase-1 I/O is
+          independent of document width (measured crossover ≈3 KB
+          bodies from ×10, BASELINE.md §r15); every other request
+          takes the semi-join above;
+        - below it (a NARROW table), every request is the plain column
+          scan with the full predicate: no semi-join, no posting scan.
+          The semi-join lost to the scan on narrow docs at every
+          measured scale (×1/×10/×100, BASELINE.md §r14: 1.9×–2.5× the
+          scan's time), and its id side costs 2–3 extra Spark jobs a
+          read.
+
+        ``None`` (default), or a width that cannot be read, keeps the
+        semi-join for every selective conjunct and never routes
+        two-phase. Any precondition failure falls back silently to a
+        plan that gives the same results: the rule picks the plan,
+        never the answer.
 
         Returns a NEW table with an empty plan cache and width memo; the
         receiver is left untouched (its cached plans embed its own
@@ -508,6 +526,11 @@ class SearchTable:
             broadcast_max_docs,
         )
         new._two_phase_min_bytes = two_phase_min_doc_bytes
+        if self._partition_hint is not None:
+            # partition type inference can differ between store and index
+            # directories: bucket bounds compare in the index's own type
+            new._index_pdtype = dict(index_df.dtypes).get(
+                self._partition_hint[0])
         return new
 
     def _index_leaf(self, node) -> Optional[tuple]:
@@ -928,21 +951,25 @@ class SearchTable:
         all see the same row set — the reference removes repetitions from
         the total count and the histogram too at merge
         (`seq/qpr.go:417-462` MergeQPRs → removeRepetitionsAdvanced:
-        ``dst.Total -= repetitionsCount`` + removeHistogramRepetition)."""
+        ``dst.Total -= repetitionsCount`` + removeHistogramRepetition).
+
+        With an index attached, selective text conjuncts prefilter the
+        scan by a semi-join against their posting ids — unless the width
+        rule calls the table narrow (:meth:`attach_index`
+        ``two_phase_min_doc_bytes``): then the scan applies the full
+        predicate alone, which on narrow docs costs less than the
+        semi-join's extra jobs. Same rows either way: the semi-join only
+        ever shrinks the rows the predicate then checks."""
         pred = compile_node(query.root, self.resolver)
         df = self.df
         tf = self._time_filter(from_ms, to_ms)
         if tf is not None:
-            df = df.filter(tf)
-        df = self._apply_bucket_bounds(df, from_ms, to_ms)
+            # one filter: each is analysed eagerly, a py4j round trip
+            bounds = self._bucket_bounds(from_ms, to_ms)
+            df = df.filter(tf if bounds is None else tf & bounds)
         if self._index is not None:
             pairs, wildcards, or_groups = self._index_conjuncts(query.root)
             index_df, _, id_cols, stats, max_sel, bcast_max = self._index
-            # the index is time-partitioned like the store (one directory
-            # per ts_bucket, index.py) — apply the SAME bucket bounds to
-            # the posting scan, or a 1-hour query over a month-old corpus
-            # reads every index bucket before the semi-join
-            index_df = self._apply_bucket_bounds(index_df, from_ms, to_ms)
             if stats is not None:
                 # selectivity routing: hot tokens (df ratio > max_sel) match
                 # most of the corpus — the semi-join would not shrink the
@@ -954,12 +981,20 @@ class SearchTable:
                     for g in or_groups
                     if self._or_group_ratio(g, stats) <= max_sel
                 ]
-            if pairs or wildcards or or_groups:
+            if (pairs or wildcards or or_groups) and self._width() != "narrow":
                 from .index import (
                     matching_ids_multi,
                     matching_ids_or,
                     matching_ids_wildcard,
                 )
+
+                # the index is time-partitioned like the store (one
+                # directory per ts_bucket, index.py) — apply the SAME
+                # bucket bounds to the posting scan, or a 1-hour query
+                # over a month-old corpus reads every index bucket
+                bounds = self._bucket_bounds(from_ms, to_ms, index=True)
+                if bounds is not None:
+                    index_df = index_df.filter(bounds)
 
                 def sized(ids, est_docs):
                     # stats-driven join strategy: a provably-small id set
@@ -1013,25 +1048,28 @@ class SearchTable:
             df = df.dropDuplicates(list(dedup))
         return df
 
-    def _apply_bucket_bounds(
-        self, df: DataFrame, from_ms: Optional[int], to_ms: Optional[int]
-    ) -> DataFrame:
-        """Redundant-but-prunable time-bucket partition bounds on any
-        frame that carries the store's partition column (store scan OR
-        posting index): lexicographic compare is valid because
-        date_format patterns like yyyy-MM-dd-HH order fields
-        most-significant first; bucket granularity ⊇ the ts window, so
-        the bounds are conservative (never drop matches). Bucket labels
-        follow the session timezone, same as DocStore.append wrote
-        them. No-op without a partition hint, a window, or the column."""
+    def _bucket_bounds(
+        self, from_ms: Optional[int], to_ms: Optional[int], index: bool = False
+    ) -> Optional[Column]:
+        """Redundant-but-prunable time-bucket partition bounds, as one
+        condition, for a frame that carries the store's partition
+        column: the store scan, or the posting index when ``index``.
+        Lexicographic compare is valid because date_format patterns
+        like yyyy-MM-dd-HH order fields most-significant first; bucket
+        granularity ⊇ the ts window, so the bounds are conservative
+        (never drop matches). Bucket labels follow the session timezone,
+        same as DocStore.append wrote them. The column's type comes from
+        the table (read once when it was built, or when the index was
+        attached), never from the frame: a derived frame's schema is a
+        py4j fetch per request. None without a partition hint, a
+        window, or the column."""
         if self._partition_hint is None or (from_ms is None and to_ms is None):
-            return df
-        pcol, fmt, _pdtype = self._partition_hint
-        if pcol not in df.columns:
-            return df
-        # partition type inference can differ between store and index
-        # directories — compare in THIS frame's own column type
-        pdtype = dict(df.dtypes).get(pcol)
+            return None
+        pcol, fmt, pdtype = self._partition_hint
+        if index:
+            pdtype = self._index_pdtype
+            if pdtype is None:
+                return None
 
         def bound(ms: int) -> Column:
             label = F.date_format(F.timestamp_millis(F.lit(ms)), fmt)
@@ -1041,11 +1079,13 @@ class SearchTable:
                 return label.cast(pdtype)
             return label
 
+        cond = None
         if from_ms is not None:
-            df = df.filter(F.col(pcol) >= bound(from_ms))
+            cond = F.col(pcol) >= bound(from_ms)
         if to_ms is not None:
-            df = df.filter(F.col(pcol) <= bound(to_ms))
-        return df
+            hi = F.col(pcol) <= bound(to_ms)
+            cond = hi if cond is None else (cond & hi)
+        return cond
 
     def _sort_cols(self, order: str) -> List[Column]:
         """Result order is (MID, RID) = (millisecond timestamp, rid) — the
@@ -1133,6 +1173,18 @@ class SearchTable:
         except Exception:
             return None
 
+    def _width(self) -> Optional[str]:
+        """The one width rule of both index routes (:meth:`attach_index`
+        ``two_phase_min_doc_bytes``): ``"wide"`` at or above the
+        threshold, ``"narrow"`` below it, ``None`` when no threshold is
+        set or the width is unknown — never read as narrow."""
+        if self._two_phase_min_bytes is None:
+            return None
+        width = self.avg_doc_bytes()
+        if width is None:
+            return None
+        return "wide" if width >= self._two_phase_min_bytes else "narrow"
+
     def _route_two_phase(
         self,
         query: Query,
@@ -1158,7 +1210,7 @@ class SearchTable:
         (pinned by the parity suite); EVERY precondition failure returns
         None and the caller falls back to the scan plan, so the router
         can never turn a servable query into an error."""
-        if self._two_phase_min_bytes is None or self._index is None:
+        if self._index is None:
             return None
         if size is None or size + offset > MAX_SEARCH_DOCS:
             return None
@@ -1187,8 +1239,7 @@ class SearchTable:
                     ests.append(bound / max(1, stats.total_docs))
             if not ests or min(ests) > max_sel:
                 return None
-        width = self.avg_doc_bytes()
-        if width is None or width < self._two_phase_min_bytes:
+        if self._width() != "wide":
             return None
         try:
             return self.two_phase_search(
@@ -1330,7 +1381,9 @@ class SearchTable:
 
         # same bucket-directory pruning as search(): a windowed query
         # must not list every time bucket of the index or the store
-        index_df = self._apply_bucket_bounds(index_df, from_ms, to_ms)
+        bounds = self._bucket_bounds(from_ms, to_ms, index=True)
+        if bounds is not None:
+            index_df = index_df.filter(bounds)
         if from_ms is not None:
             index_df = index_df.filter(F.col("mid") >= F.lit(from_ms))
         if to_ms is not None:
@@ -1383,7 +1436,10 @@ class SearchTable:
         def fetch(rid_page: list) -> DataFrame:
             # phase 2: one pushed-In fetch — rid blooms / dictionary
             # pages skip whole row groups; then <= page rows remain
-            df = self._apply_bucket_bounds(self.df, from_ms, to_ms)
+            df = self.df
+            bounds = self._bucket_bounds(from_ms, to_ms)
+            if bounds is not None:
+                df = df.filter(bounds)
             df = df.filter(F.col(self.rid_col).isin(rid_page))
             if from_ms is not None or to_ms is not None:
                 mid = self._mid_col()

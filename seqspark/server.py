@@ -96,7 +96,7 @@ class SeqSparkServer:
         case_sensitive: bool = False,
         use_seq_ql_by_default: bool = True,
         index: Optional[object] = None,
-        two_phase_min_doc_bytes: int = 1024,
+        two_phase_min_doc_bytes: Optional[int] = 1024,
     ):
         self.spark = spark
         self.store = store
@@ -176,11 +176,14 @@ class SeqSparkServer:
         # match the reference binary's default (legacy unless opted in)
         self._default_dialect = "seqql" if use_seq_ql_by_default else "legacy"
         # optional StoreIndex (seqspark.index.StoreIndex): attaching it
-        # per request wires BOTH the in-plan posting semi-join and the
-        # width-aware two-phase (search→fetch) router into every
-        # transport — HTTP here, gRPC + the gateway through this core
-        # (the reference's wire architecture IS search→fetch,
-        # `proxy/search/ingestor.go:140-151`). The width signal is a
+        # per request wires index routing into every transport — HTTP
+        # here, gRPC + the gateway through this core. One width rule
+        # picks the route (SearchTable.attach_index): docs at least
+        # two_phase_min_doc_bytes wide take the two-phase (search→fetch)
+        # plan (the reference's wire architecture,
+        # `proxy/search/ingestor.go:140-151`) or the in-plan posting
+        # semi-join; narrower docs take the plain scan; None keeps the
+        # semi-join whatever the width. The width signal is a
         # driver-side footer read, sampled once per table: a stale width
         # only flips a plan heuristic, never a result.
         self._store_index = index

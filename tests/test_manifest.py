@@ -77,7 +77,9 @@ def test_pinned_snapshot_survives_maintenance(spark, tmp_path):
     idx = StoreIndex(store, str(tmp_path / "index"),
                      {"message": F.col("tokens")["message"]})
     idx.refresh()
-    core = _server(spark, tmp_path, store, index=idx)
+    # no width rule: the semi-join serves these narrow docs
+    core = _server(spark, tmp_path, store, index=idx,
+                   two_phase_min_doc_bytes=None)
     cols = ("mid", "rid", "raw")
     rows = sorted(store.read().select(*cols).collect())
     postings = sorted(idx.read().collect())
@@ -179,7 +181,8 @@ def test_second_process_append_is_seen(spark, tmp_path, end):
     store = _two_bucket_store(spark, tmp_path, files_per_bucket=1)
     idx = StoreIndex(store, str(tmp_path / "index"),
                      {"message": F.col("tokens")["message"]})
-    core = _server(spark, tmp_path, store, index=idx)
+    core = _server(spark, tmp_path, store, index=idx,
+                   two_phase_min_doc_bytes=None)
     assert core.refresh_index() is True
     req = {"query": "message:needle", "size": 100, "with_total": True}
     assert core.search(req)["total"] == 6

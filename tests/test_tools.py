@@ -36,6 +36,16 @@ def test_bench_builds_the_one_session():
     assert owners == ["spark_session"]
 
 
+def test_session_puts_the_root_on_the_workers_path():
+    """Python workers import seqspark from their own environment: a
+    script started outside the repo finds it only through this conf."""
+    import bench
+
+    conf = bench.session_conf(4, {"spark.driver.memory": "2g"})
+    assert conf["spark.executorEnv.PYTHONPATH"] == ROOT
+    assert conf["spark.driver.memory"] == "2g"
+
+
 #: the README and the repo's skill notes (hidden ``skills/*/SKILL.md``)
 DOCS = ["README.md"] + sorted(
     os.path.relpath(p, ROOT)

@@ -127,6 +127,58 @@ def test_router_falls_back_silently(spark, tmp_path):
             == st_scan.search("text:alpha and not text:beta", size=5).count())
 
 
+def _semi_join(df) -> bool:
+    plan = _plan(df)
+    return "LeftSemi" in plan or "BroadcastExchange" in plan
+
+
+def test_narrow_table_scans_without_semi_join(spark, tmp_path):
+    """The width rule: on a table narrower than two_phase_min_doc_bytes
+    no index route runs. Every request is the plain column scan with the
+    full predicate (no LeftSemi, no broadcast id side), and its rows are
+    the index-less table's, bounded, unbounded and counted."""
+    df, idx, stats, m = _wide_table(spark, tmp_path)
+    st_scan = SearchTable.from_typed(
+        df, m, ts_col="ts", rid_col="rid", assume_folded=True)
+    st = st_scan.attach_index(idx, ["text", "kind"], ["mid", "rid"],
+                              stats=stats, two_phase_min_doc_bytes=10**9)
+    assert st.avg_doc_bytes() < 10**9
+    for q in ("text:alpha", "text:alph*", "text:alpha and not text:beta",
+              "text:alpha and kind:even"):
+        for kw in ({"size": 5, "offset": 2}, {"size": None}):
+            got = st.search(q, **kw)
+            assert not _semi_join(got), (q, kw, _plan(got))
+            want = st_scan.search(q, **kw)
+            assert got.collect() == want.collect(), (q, kw)
+        res = st.complex_search(q, size=5, with_total=True)
+        plain = st_scan.complex_search(q, size=5, with_total=True)
+        assert res.route == "scan"
+        assert (res.docs, res.total_count) == (plain.docs, plain.total_count)
+
+
+def test_wide_or_unknown_width_keeps_routing(spark, tmp_path):
+    """Above the threshold, with no threshold, or when the width cannot
+    be read, routing is what it was before the width rule: two-phase for
+    bounded fully covered searches on a wide table, the semi-join for
+    every other selective request."""
+    df, idx, stats, m = _wide_table(spark, tmp_path)
+
+    def table(frame, **kw):
+        return SearchTable.from_typed(
+            frame, m, ts_col="ts", rid_col="rid", assume_folded=True,
+        ).attach_index(idx, ["text", "kind"], ["mid", "rid"],
+                       stats=stats, **kw)
+
+    wide = table(df, two_phase_min_doc_bytes=64)
+    assert wide.complex_search("text:alpha", size=5).route == "two_phase"
+    assert _semi_join(wide.search("text:alpha and not text:beta", size=5))
+    assert _semi_join(wide.search("text:alpha"))  # unbounded
+    assert _semi_join(table(df).search("text:alpha", size=5))
+    unknown = table(df.limit(50).cache(), two_phase_min_doc_bytes=10**9)
+    assert unknown.avg_doc_bytes() is None
+    assert _semi_join(unknown.search("text:alpha", size=5))
+
+
 def test_transports_reach_two_phase(spark, tmp_path, monkeypatch):
     """HTTP and gRPC search must hit the two-phase plan on a wide corpus
     — and return exactly what an index-less server returns."""
@@ -313,22 +365,24 @@ def test_concurrent_requests_carry_their_own_route(spark, tmp_path):
     assert seen == {want: [want] * 3 for want in queries}
 
 
-def _indexed_wide_server(spark, tmp_path):
-    """A server over a 40-doc wide store with an attached StoreIndex on
-    ``message`` and two-phase routing on."""
+def _indexed_server(spark, tmp_path, wide=True):
+    """A server over a store with an attached StoreIndex on ``message``:
+    40 wide docs (~1.5 KB bodies) with two-phase routing from 64 bytes,
+    or 400 narrow ones (enough that the parquet footers and blooms do
+    not make the files wide) under the server's default width rule."""
     from seqspark.server import SeqSparkServer
     from seqspark.store import DocStore
 
     mapping = Mapping({"service": "keyword", "message": "text"})
     store = DocStore(spark, str(tmp_path / "store"))
     lines = []
-    for i in range(40):
+    for i in range(40 if wide else 400):
         body = " ".join(
             hashlib.sha256(f"d{i}:{j}".encode()).hexdigest()
-            for j in range(24))
+            for j in range(24 if wide else 0))
         lines.append('{"index": {}}')
         lines.append(json.dumps({
-            "timestamp": f"2024-01-01 10:00:{i:02d}.000",
+            "timestamp": f"2024-01-01 10:{i // 60:02d}:{i % 60:02d}.000",
             "service": "auth" if i % 8 == 0 else "pay",
             "message": f"login{i % 10} {body}"}))
     seed = SeqSparkServer(spark, store, mapping, allowed_drift_ms=BIG,
@@ -340,8 +394,8 @@ def _indexed_wide_server(spark, tmp_path):
     sidx.refresh()
     return SeqSparkServer(
         spark, store, mapping, allowed_drift_ms=BIG, future_drift_ms=BIG,
-        index=sidx, two_phase_min_doc_bytes=64,
-        async_dir=str(tmp_path / "async"))
+        index=sidx, async_dir=str(tmp_path / "async"),
+        **({"two_phase_min_doc_bytes": 64} if wide else {}))
 
 
 @pytest.mark.parametrize("query,routed", [
@@ -356,7 +410,7 @@ def test_indexed_server_search_is_one_cached_construction(
     (for a two-phase body, no phase-1 id page either)."""
     from test_table_memo import _held_frames, _spy_frames
 
-    core = _indexed_wide_server(spark, tmp_path)
+    core = _indexed_server(spark, tmp_path)
     body = {"query": query, "size": 10, "with_total": True}
     parses = _count_parses(monkeypatch)
     first = core.search(dict(body))
@@ -505,9 +559,11 @@ def test_tiered_store_index_follows_ownership(spark, tmp_path):
 
     sidx = StoreIndex(store, str(tmp_path / "index"),
                       {"message": F.col("tokens")["message"]})
+    # no width rule: the semi-join serves these narrow docs, so every
+    # search below reads the index
     core = SeqSparkServer(spark, store, mapping, allowed_drift_ms=BIG,
                           future_drift_ms=BIG, index=sidx,
-                          two_phase_min_doc_bytes=10**12)
+                          two_phase_min_doc_bytes=None)
     for d in (1, 2, 3):
         bulk(core, d, f"needle old{d}")
     assert core.refresh_index() is True
@@ -539,7 +595,7 @@ def test_index_read_after_refresh_infers_no_schema(spark, tmp_path):
     and the index with their known schemas: no inference job."""
     from test_complex_fused import _jobs
 
-    core = _indexed_wide_server(spark, tmp_path)
+    core = _indexed_server(spark, tmp_path)
     core._table()
     core.bulk(('{"index": {}}\n' + json.dumps({
         "timestamp": "2024-01-01 10:01:00.000", "service": "auth",
@@ -549,3 +605,25 @@ def test_index_read_after_refresh_infers_no_schema(spark, tmp_path):
     assert core._table()._index is not None
     assert core.search({"query": "message:late"})["docs"]
     core._httpd.server_close()
+
+
+def test_narrow_indexed_server_search_is_one_job(spark, tmp_path):
+    """Under the server's default width rule a narrow indexed store is
+    served by the scan: a text-filtered /search with a total is one
+    Spark job (the semi-join's id side added 2-3) and answers exactly
+    what an index-less server answers."""
+    from seqspark.server import SeqSparkServer
+    from test_complex_fused import _jobs
+
+    core = _indexed_server(spark, tmp_path, wide=False)
+    st = core._table()
+    assert st._index is not None and st.avg_doc_bytes() < 1024
+    plain = SeqSparkServer(spark, core.store, core.mapping,
+                           allowed_drift_ms=BIG, future_drift_ms=BIG)
+    for query in ("message:login1", "message:login1*"):
+        req = {"query": query, "size": 3, "with_total": True}
+        out = {}
+        assert _jobs(spark, lambda: out.update(core.search(dict(req)))) == 1
+        assert out == plain.search(dict(req)) and out["total"] == 40
+    core._httpd.server_close()
+    plain._httpd.server_close()
